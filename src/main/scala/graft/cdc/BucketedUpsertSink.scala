@@ -3,24 +3,20 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** K1 at scale: the upsert sink over a state table PARTITIONED BY a pk-hash
-  * bucket, so one micro-batch rewrites only the buckets its pks land in —
-  * O(changed buckets), never the whole state. This is the "state is never
-  * rewritten wholesale" posture from SCALE.md made concrete without a table
-  * format: bucket dirs play the role of Delta/Iceberg file groups, and the
-  * write uses dynamic partition overwrite (only partitions present in the
-  * batch output are replaced; all other bucket dirs are untouched — the
-  * spec asserts their files' timestamps don't move).
+/** K1 at scale: the upsert sink over a state table BUCKETED by pk hash, so
+  * one micro-batch rewrites only the buckets its pks land in — O(changed
+  * buckets), never the whole state. This is the "state is never rewritten
+  * wholesale" posture from SCALE.md made concrete without a table format.
+  * The physical layout is [[ManifestStore]]'s: a batch writes the touched
+  * buckets' new content into a fresh immutable commit dir and ONE atomic
+  * manifest rename publishes data + per-bucket zone-map stats together, so
+  * a batch is either fully visible or not at all, and no file a concurrent
+  * reader pinned is deleted inside the vacuum retention window.
   *
   * Scale notes:
   *  - the batch shuffles once on the pk (inside [[UpsertSink.applyBatch]]);
-  *    the state side reads ONLY the affected bucket partitions (partition
-  *    pruning on [[BucketCol]] — the `.isin` literal list is bounded by
-  *    `numBuckets`, a config, never by data volume).
-  *  - per-bucket overwrite is atomic per partition dir but not across
-  *    buckets; a real deployment gets cross-bucket atomicity from a table
-  *    format's commit protocol (Delta/Iceberg MERGE), which this layout
-  *    maps onto directly.
+  *    the state side reads ONLY the touched buckets' dirs — the touched-set
+  *    collect is bounded by `numBuckets`, a config, never by data volume.
   *  - idempotent like the flat sink: replaying a batch yields the same
   *    buckets with the same contents.
   */
@@ -28,7 +24,7 @@ object BucketedUpsertSink {
 
   val BucketCol = "_bucket"
 
-  /** The optimistic merge closure shared by the sink's manifest batch path,
+  /** The optimistic merge closure shared by the sink's batch path,
     * [[graft.ops.Maintenance.repairUpsert]], and the OCC spec: given a base
     * manifest, read the CURRENT state of the `touched` buckets, LWW-merge
     * the op-columned `changes` into it, and re-bucket — the new full
@@ -54,14 +50,14 @@ object BucketedUpsertSink {
   def bucketOf(pk: Column, numBuckets: Int): Column =
     pmod(xxhash64(pk), lit(numBuckets.toLong))
 
-  /** Layout-marker file name encoding the store's bucket MODULUS (review
-    * r11): `pmod(hash, n)` decides which dir a pk lives in, so pruning an
-    * n'-bucketed store with a different configured n would miss existing
-    * rows in the merge and write DUPLICATE pk rows into new buckets. The
-    * modulus is a property of the STORE; the underscore prefix keeps the
-    * marker out of parquet reads and partition discovery (the _SUCCESS
-    * discipline), and encoding the value in the NAME makes detection ride
-    * the directory listing the layout probe already pays. */
+  /** Layout-marker file name encoding a bucket-partitioned store's MODULUS
+    * (review r11), used by the watermark sidecar ([[OffsetWatermark]]):
+    * `pmod(hash, n)` decides which dir a pk lives in, so pruning an
+    * n'-bucketed store with a different n would miss existing rows and
+    * write DUPLICATE pk rows. The underscore prefix keeps the marker out of
+    * parquet reads and partition discovery (the _SUCCESS discipline), and
+    * encoding the value in the NAME makes detection ride the directory
+    * listing the layout probe already pays. */
   private[cdc] def layoutMarkerName(n: Int): String = s"_nbuckets-$n"
 
   private[cdc] def storedBuckets(names: Array[String]): Option[Int] =
@@ -76,18 +72,8 @@ object BucketedUpsertSink {
     fs.create(p, true).close() // empty file: the NAME is the payload
   }
 
-  /** Materialize an initial state table partitioned by pk-hash bucket. */
-  def init(state: DataFrame, statePath: String, pk: String, numBuckets: Int): Unit = {
-    state
-      .withColumn(BucketCol, bucketOf(col(pk), numBuckets))
-      .write.mode("overwrite")
-      .partitionBy(BucketCol)
-      .parquet(statePath)
-    writeLayoutMarker(state.sparkSession, statePath, numBuckets)
-  }
-
   private def listNames(spark: SparkSession, statePath: String): Array[String] = {
-    // Heal an interrupted evolution swap FIRST (live moved to '.old', next
+    // Heal an interrupted legacy swap FIRST (live moved to '.old', next
     // never moved in): without this, a crash in that window makes the state
     // look absent, the next batch bootstraps an empty table, and once a new
     // live dir exists the '.old' full state is stranded forever — silent
@@ -99,178 +85,50 @@ object BucketedUpsertSink {
     else fs.listStatus(p).map(_.getPath.getName)
   }
 
-  private def bucketed(names: Array[String]): Boolean =
-    names.exists(_.startsWith(BucketCol + "="))
-  private def flatFiles(names: Array[String]): Boolean =
-    names.exists(_.endsWith(".parquet"))
+  /** Entry names of a pre-manifest layout at a store's root: the retired
+    * in-place layout's `_bucket=<id>` dirs and `_nbuckets-<n>` modulus
+    * file, or a flat store's parquet part files, plus their `_SUCCESS`. */
+  private[cdc] def isLegacyEntry(name: String): Boolean =
+    name.startsWith(BucketCol + "=") || name.endsWith(".parquet") ||
+      name.startsWith("_nbuckets-") || name == "_SUCCESS"
 
-  private def hasBuckets(spark: SparkSession, statePath: String): Boolean =
-    bucketed(listNames(spark, statePath))
+  /** True iff a root listing holds legacy DATA (bucket dirs or part
+    * files) — `_SUCCESS` or a modulus file alone does not count. */
+  private def legacyData(names: Array[String]): Boolean =
+    names.exists(n => n.startsWith(BucketCol + "=") || n.endsWith(".parquet"))
 
   /** Current state (without the bucket column). The payload schema makes a
-    * fully-emptied or not-yet-created state readable. A FLAT store under a
-    * bucketed config (state.buckets flipped on — review r11) reads as the
-    * full flat state, never as absent: the pre-fix empty-read silently
-    * dropped every pre-flip row from the next merge. A manifest-layout
-    * store ([[ManifestStore]]) resolves its current version — the layout is
-    * a property of the store, honored regardless of caller config. */
+    * fully-emptied or not-yet-created state readable. A legacy store — the
+    * retired in-place bucket-dir layout, or a FLAT store under a bucketed
+    * config (state.buckets flipped on — review r11) — reads as its full
+    * legacy state, never as absent, until its first batch or refresh
+    * migrates it. */
   def currentState(spark: SparkSession, statePath: String,
                    schema: org.apache.spark.sql.types.StructType): DataFrame = {
     if (ManifestStore.isManifestStore(spark, statePath))
       return ManifestStore.readState(spark, statePath, schema).drop(BucketCol)
-    val names = listNames(spark, statePath)
-    if (bucketed(names)) spark.read.parquet(statePath).drop(BucketCol)
-    else if (flatFiles(names)) spark.read.parquet(statePath)
+    if (legacyData(listNames(spark, statePath)))
+      spark.read.parquet(statePath).drop(BucketCol)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
   /** Apply one compacted micro-batch: read ONLY the buckets the batch
     * touches, merge with [[UpsertSink.applyBatch]] semantics (presence
-    * mask, create-replaces, delete-removes), overwrite ONLY those bucket
-    * partitions. */
-  def applyBatch(spark: SparkSession, statePath: String, changes: DataFrame,
-                 pk: String, numBuckets: Int): Unit =
-    applyBatch(spark, statePath, changes, pk, numBuckets, schema = None)
-
-  /** As [[applyBatch]]; `schema` makes the very first batch work against a
-    * not-yet-created state (bootstrap without a separate [[init]]). */
+    * mask, create-replaces, delete-removes), and publish the touched
+    * buckets' new content as the next manifest version. `schema` makes the
+    * very first batch work against a not-yet-created state (bootstrap
+    * without a separate init). `statCols` are the zone-map stat columns the
+    * manifest carries per bucket — a property of the store, like the
+    * modulus: empty adopts the store's, different ones fail loud. */
   def applyBatch(spark: SparkSession, statePath: String, changes: DataFrame,
                  pk: String, numBuckets: Int,
-                 schema: Option[org.apache.spark.sql.types.StructType]): Unit =
-    applyBatch(spark, statePath, changes, pk, numBuckets, schema,
-      manifest = false, statCols = Seq.empty)
-
-  /** As [[applyBatch]]; `manifest = true` selects the manifest-versioned
-    * immutable-file layout ([[ManifestStore]]) for new stores, and a store
-    * that already IS manifest-layout uses it regardless (layout is a
-    * property of the store, like the bucket modulus). `statCols` are the
-    * zone-map stat columns the manifest carries per bucket — published
-    * atomically with the data, so manifest mode needs none of the
-    * [[StateCommit]] marker protocol. */
-  def applyBatch(spark: SparkSession, statePath: String, changes: DataFrame,
-                 pk: String, numBuckets: Int,
-                 schema: Option[org.apache.spark.sql.types.StructType],
-                 manifest: Boolean, statCols: Seq[String]): Unit = {
-    if (manifest || ManifestStore.isManifestStore(spark, statePath)) {
-      applyBatchManifest(spark, statePath, changes, pk, numBuckets, schema,
-        statCols)
-      return
-    }
-    val withBucket = changes.withColumn(BucketCol, bucketOf(col(pk), numBuckets))
-    val names = listNames(spark, statePath)
-    // Bucket-modulus fence (review r11): a store laid out with a different
-    // modulus must not be pruned with this one — existing pk rows would be
-    // missed by the merge and duplicated into new buckets. Marker-less
-    // bucketed stores predate the marker and were only ever written with
-    // one modulus; they adopt the configured one and gain the marker.
-    if (bucketed(names)) storedBuckets(names) match {
-      case Some(m) if m != numBuckets =>
-        throw new IllegalStateException(
-          s"bucketed state at $statePath was laid out with $m buckets; " +
-            s"the configuration now says $numBuckets — run `refresh` to " +
-            "re-bucket (the rebuild carries the configured layout)")
-      case Some(_) => ()
-      case None => writeLayoutMarker(spark, statePath, numBuckets)
-    }
-    // Flat store under a bucketed config (state.buckets flipped on —
-    // review r11): one-time full merge + bucketed rewrite through the
-    // atomic swap, the watermark sidecar's ADVICE-r9 migration discipline.
-    // Pre-fix the flat rows read as "no state": the merge ran against
-    // empty and the bucketed write landed BESIDE the stranded flat files —
-    // silent loss, then a mixed-depth read error.
-    if (!bucketed(names) && flatFiles(names)) {
-      val merged = UpsertSink
-        .applyBatch(spark.read.parquet(statePath), changes, pk)
-        .withColumn(BucketCol, bucketOf(col(pk), numBuckets))
-      StateCommit.stageSwap(spark, statePath) { tmp =>
-        merged.write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
-        writeLayoutMarker(spark, tmp, numBuckets)
-      }
-      return
-    }
-    // Schema evolution guard: a batch carrying a column the stored state
-    // lacks — or an existing column under a CHANGED TYPE (review r11: the
-    // name-only check let a widened column write mixed physical types
-    // across bucket dirs, the exact inconsistent-table state this guard
-    // exists to prevent) — cannot use the per-bucket path. Evolution is
-    // rare, so pay a one-time full-state merge + rewrite through the
-    // atomic dir swap; afterwards every bucket carries the new schema and
-    // the incremental path resumes.
-    // One reader serves the evolution check (schema only — a footer read,
-    // no data scan) and, if evolution fires, the full-state merge; the
-    // exists/bucket-dir probe runs once per batch.
-    val stored =
-      if (bucketed(names)) Some(spark.read.parquet(statePath))
-      else None
-    stored.foreach { full =>
-      val storedTypes = full.schema.filterNot(_.name == BucketCol)
-        .map(f => f.name -> f.dataType).toMap
-      val evolved = changes.schema
-        .filterNot(f => f.name == "op" || f.name == UpsertSink.PresentCol)
-        .exists(f => !storedTypes.get(f.name).contains(f.dataType))
-      if (evolved) {
-        val merged = UpsertSink.applyBatch(full.drop(BucketCol), changes, pk)
-          .withColumn(BucketCol, bucketOf(col(pk), numBuckets))
-        StateCommit.stageSwap(spark, statePath) { tmp =>
-          merged.write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
-          writeLayoutMarker(spark, tmp, numBuckets)
-        }
-        return
-      }
-    }
-    // bounded by numBuckets (config), so collecting the DISTINCT bucket ids
-    // is O(buckets), not O(data) — it exists to make the state read a
-    // partition-PRUNED scan
-    val touched = withBucket.select(BucketCol).distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (touched.isEmpty) return
-    val state = stored match {
-      case Some(full) =>
-        full.filter(col(BucketCol).isin(touched: _*)).drop(BucketCol)
-      case None =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schema.getOrElse(throw new IllegalStateException(
-            s"no state at $statePath and no bootstrap schema given")))
-    }
-    val merged = UpsertSink.applyBatch(state, withBucket.drop(BucketCol), pk)
-      .withColumn(BucketCol, bucketOf(col(pk), numBuckets))
-      .persist()
-    // Collect the written-bucket set BEFORE the overwrite: after the commit
-    // the old files are gone, so any recompute of `merged` (cache eviction)
-    // would re-list a replaced directory and fail. Pre-write, a recompute
-    // only re-reads still-live files.
-    val written = merged.select(BucketCol).distinct().collect().map(_.getLong(0)).toSet
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BucketCol)
-      .parquet(statePath)
-    // dynamic overwrite replaces only partitions PRESENT in the output: a
-    // touched bucket whose last row was deleted writes nothing, so its stale
-    // dir must be dropped explicitly
-    merged.unpersist()
-    val fsPath = new org.apache.hadoop.fs.Path(statePath)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(written).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/$BucketCol=$b"), true); ()
-    }
-  }
-
-  /** The manifest-layout batch apply: identical MERGE semantics to the
-    * bucket-dir path above, different physics — touched buckets' new
-    * content lands in a fresh immutable commit dir and ONE atomic manifest
-    * rename publishes data + zone-map stats together. No file a concurrent
-    * reader pinned is ever deleted inside the vacuum retention window, so
-    * the bucket-dir layout's one retryable read class (FAILED_READ_FILE on
-    * an overwritten pinned part file — r12 TwoJvmConcurrencySpec) cannot
-    * occur. */
-  private def applyBatchManifest(spark: SparkSession, statePath: String,
-                                 changes: DataFrame, pk: String,
-                                 numBuckets: Int,
-                                 schema: Option[org.apache.spark.sql.types.StructType],
-                                 statCols: Seq[String]): Unit = {
+                 schema: Option[org.apache.spark.sql.types.StructType] = None,
+                 statCols: Seq[String] = Seq.empty): Unit = {
     val m = ManifestStore.currentManifest(spark, statePath)
-    // same modulus fence as the bucket-dir layout: the store's layout wins
+    // modulus fence (review r11): `pmod(hash, n)` decides which bucket a pk
+    // lives in, so merging under a different modulus would miss existing
+    // rows and duplicate pks — the store's layout wins
     m.foreach { mm =>
       if (mm.nbuckets != numBuckets)
         throw new IllegalStateException(
@@ -279,9 +137,9 @@ object BucketedUpsertSink {
             "`refresh` to re-bucket (the rebuild carries the configured layout)")
     }
     // stat columns are a property of the STORE like the modulus: a caller
-    // that passes none (the layout-honoring legacy signature) adopts the
-    // store's; a caller that passes DIFFERENT ones has changed config and
-    // must refresh (the rebuild re-lays the stats out)
+    // that passes none adopts the store's; a caller that passes DIFFERENT
+    // ones has changed config and must refresh (the rebuild re-lays the
+    // stats out)
     val effStatCols = m match {
       case Some(mm) =>
         if (statCols.nonEmpty && statCols != mm.statCols)
@@ -301,38 +159,17 @@ object BucketedUpsertSink {
         numBuckets, effStatCols)
       ManifestStore.publishFull(spark, statePath, staged)
     }
-    // one-time migration from a legacy layout (bucket-dir or flat store,
-    // no manifest yet): full merge + full publish, then drop the legacy
-    // files — superseded and invisible to manifest readers, they would
-    // only leak disk (the migration is the documented cutover point; a
-    // reader pinned to the legacy layout across it retries, once). A
-    // crash between the publish and the legacy deletes leaves the stale
-    // legacy files behind harmlessly (manifest readers never touch them);
-    // re-running the migration is not possible (a manifest now exists), so
-    // that rare window costs disk until an operator removes them — never
-    // correctness.
-    if (m.isEmpty) {
-      val names = listNames(spark, statePath)
-      if (bucketed(names) || flatFiles(names)) {
-        val legacy =
-          if (bucketed(names)) spark.read.parquet(statePath).drop(BucketCol)
-          else spark.read.parquet(statePath)
-        fullRewrite(legacy)
-        val p = new org.apache.hadoop.fs.Path(statePath)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        names.filter(n => n.startsWith(BucketCol + "=") ||
-            n.endsWith(".parquet") || n.startsWith("_nbuckets-") ||
-            n == "_SUCCESS")
-          .foreach { n =>
-            try { fs.delete(new org.apache.hadoop.fs.Path(statePath, n), true); () }
-            catch { case _: java.io.IOException => () }
-          }
-        return
-      }
+    // one-time migration from a legacy layout (in-place bucket-dir or flat
+    // store, no manifest yet): full merge + full publish; the publish drops
+    // the superseded legacy files (ManifestStore.publishFull — the same
+    // cutover a refresh or backfill over a legacy store takes)
+    if (m.isEmpty && legacyData(listNames(spark, statePath))) {
+      fullRewrite(spark.read.parquet(statePath).drop(BucketCol))
+      return
     }
-    // schema-evolution guard — same contract as the bucket-dir path: a new
-    // column or a changed type pays a one-time full merge + full publish so
-    // no two live bucket dirs ever disagree on physical types. The resolved
+    // schema-evolution guard: a new column or a changed type pays a
+    // one-time full merge + full publish so no two live bucket dirs ever
+    // disagree on physical types. The resolved
     // manifest `m` is threaded through every read and the commit — ONE
     // manifest parse per batch (review r13 #6). The check itself probes ONE
     // bucket dir's footer: the invariant this guard enforces is that every

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Fail-loud single-driver lease on a sink state path (r9 verdict #1).
   *
-  * The sink's concurrency protocols (state lock, mutation stamp, swap
-  * monitor, marker ownership) serialize writers within ONE driver JVM;
+  * The sink's concurrency protocols (state lock, swap monitor) serialize
+  * writers within ONE driver JVM;
   * cross-process racers are merely tolerated by rename-retry with
   * last-copy-wins semantics — a second driver process streaming to the same
   * state path is OUTSIDE the deployment contract, but until this lease
@@ -125,7 +125,7 @@ object DriverLease {
   }
 
   // the shared cdc (FileSystem, Path) resolver — one discipline with the
-  // swap/marker file protocols (review r10)
+  // swap file protocol (review r10)
   private def hfs(spark: SparkSession, p: String) = StateCommit.hfs(spark, p)
 
   /** The lease file's protocol-visible state, from ONE stat (review r10:

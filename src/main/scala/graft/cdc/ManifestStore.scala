@@ -4,13 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Manifest-versioned IMMUTABLE-FILE layout for the bucketed upsert sink —
-  * the at-scale close of the one retryable read class the r12 two-JVM
-  * concurrency spec surfaced (r12 verdict #1): under the bucket-dir layout
-  * a live writer's dynamic-partition overwrite DELETES the replaced part
-  * files, so a concurrent reader that pinned them at scan planning dies
-  * with a loud retryable FAILED_READ_FILE. Loud-never-wrong, but at 100 TB
-  * with many readers that is constant operational pain.
+/** Manifest-versioned IMMUTABLE-FILE layout — the one physical layout of
+  * the bucketed upsert sink ([[BucketedUpsertSink]]). It replaced an
+  * in-place bucket-dir layout (r12 verdict #1) whose dynamic-partition
+  * overwrite DELETED replaced part files, so a concurrent reader that
+  * pinned them at scan planning died with a loud retryable
+  * FAILED_READ_FILE — loud-never-wrong, but at 100 TB with many readers
+  * constant operational pain.
   *
   * This layout is the lakehouse shape (the commit protocol Delta/Iceberg
   * give you, reduced to what the sink needs — no library, zero new deps):
@@ -27,11 +27,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    deletes only what the last `keepVersions` manifests no longer
   *    reference AND is older than `minAgeMs`).
   *  - the manifest ALSO carries the per-bucket zone-map stats (row count,
-  *    min/max per stat column). Under the bucket-dir layout the sink write
-  *    and the zone-map refresh are two non-atomic steps guarded by the
-  *    whole write-ahead-marker / claim / quiesced-clear protocol
-  *    ([[StateCommit]]); here data and stats publish in ONE atomic rename,
-  *    so that crash window — and the marker dance — does not exist.
+  *    min/max per stat column). Data and stats publish in ONE atomic
+  *    rename, so there is no window in which the stats describe a state
+  *    the data no longer has, and pruned reads need no staleness guard.
   *
   * Crash windows, all self-healing with no recoverSwap analog:
   * a crash before the manifest rename leaves an orphan commit dir (never
@@ -860,7 +858,26 @@ object ManifestStore {
       nbuckets = staged.nbuckets, statCols = staged.statCols,
       buckets = staged.buckets))
     finally { activeStaging.remove(staged.commitDirAbs); () }
+    if (prev.isEmpty) dropLegacyLayout(spark, statePath)
     vacuum(spark, statePath)
+  }
+
+  /** The upgrade cutover of a pre-manifest store (the retired in-place
+    * `_bucket=` layout, or flat parquet): once the first manifest is
+    * published over it — by the first batch's migration, a refresh or a
+    * backfill — the legacy files are superseded and invisible to manifest
+    * readers, so drop them rather than leak disk. A reader pinned to the
+    * legacy layout across the cutover retries, once. A crash between the
+    * publish and these deletes leaves the legacy files behind harmlessly
+    * (manifest readers never touch them) until an operator removes them. */
+  private def dropLegacyLayout(spark: SparkSession, statePath: String): Unit = {
+    val (fs, root) = hfs(spark, statePath)
+    fs.listStatus(root).map(_.getPath)
+      .filter(p => BucketedUpsertSink.isLegacyEntry(p.getName))
+      .foreach { p =>
+        try { fs.delete(p, true); () }
+        catch { case _: java.io.IOException => () }
+      }
   }
 
   /** Delete data no retained manifest references. The reader-safety rule
@@ -992,12 +1009,15 @@ object ManifestStore {
     case _: java.io.FileNotFoundException => ()
   }
 
-  /** Manifest-resolved pruned read — [[graft.ops.Maintenance.prunedRead]]'s
-    * shape with the stats coming from the SAME atomic publish as the data:
-    * no marker to probe, no fallback mode, no mutable file anywhere in the
-    * plan. Returns exactly what the unpruned exact filter would. A stat
-    * column the manifest does not carry falls back to the exact filter
-    * over the full (still immutable) current state. */
+  /** Manifest-driven pruned read: consult the O(buckets) per-bucket stats
+    * for the buckets whose [min,max] window on `statCol` intersects
+    * [lo, hi], then read ONLY those buckets' dirs and apply the exact
+    * predicate — at 100 TB a selective range predicate touches a handful
+    * of buckets instead of the full state. The stats come from the SAME
+    * atomic publish as the data, and no file in the plan is mutable, so
+    * the result is a consistent snapshot that returns exactly what the
+    * unpruned exact filter would. A stat column the manifest does not
+    * carry falls back to the exact filter over the full current state. */
   def prunedRead(spark: SparkSession, statePath: String, schema: StructType,
                  statCol: String, lo: Long, hi: Long): DataFrame = {
     val exact = col(statCol) >= lo && col(statCol) <= hi

@@ -84,8 +84,8 @@ object OffsetWatermark {
     * data probe and the layout probe so an advance pays a single
     * listStatus RPC (review r10: a separate layout listing per batch paid
     * a second RPC forever to detect a once-per-deployment config flip).
-    * Heals an interrupted atomic swap first (the [[BucketedUpsertSink]]
-    * hasBuckets discipline). */
+    * Heals an interrupted atomic swap first (the heal-first discipline of
+    * every swapped store, [[StateCommit.recoverSwap]]). */
   private def entryNames(spark: SparkSession, dir: String): Array[String] = {
     StateCommit.recoverSwap(spark, dir)
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -195,7 +195,7 @@ object OffsetWatermark {
         } else {
           // prune the stored read to the touched buckets; the distinct
           // collect is O(buckets) (config-bounded), the house pattern
-          // from BucketedUpsertSink.applyBatch
+          // of BucketedUpsertSink.applyBatch
           val touched = withBucket.select(BucketedUpsertSink.BucketCol)
             .distinct().collect().map(_.getLong(0)).sorted
           val slice = normalizeStored(

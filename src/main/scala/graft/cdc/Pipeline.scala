@@ -97,10 +97,9 @@ object PluginHooks {
   *
   * ==Deployment contract: one driver process per sink state path==
   *
-  * Every concurrency protocol below — the per-path state lock, the mutation
-  * stamp, the swap monitor, the zone-map marker ownership — serializes
-  * writers within ONE driver JVM (refreshAsync tasks, a replay racing a
-  * micro-batch). A SECOND driver process mutating the same state path is
+  * Every concurrency protocol below — the per-path state lock, the swap
+  * monitor — serializes writers within ONE driver JVM (refreshAsync
+  * tasks, a replay racing a micro-batch). A SECOND driver process mutating the same state path is
   * outside the contract: the swap machinery would still only ever install
   * complete copies, but simultaneous cross-process read-merge-writes are
   * last-copy-wins and silently drop the loser's rows. That premise is
@@ -125,7 +124,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   /** Syncs whose NEXT micro-batch must be fenced against the per-pk
     * watermark + snapshot floor: exactly the first batch of each query
     * run — the only batch that can be a checkpoint REPLAY. Re-armed by
-    * every [[start]]. See the fence in [[applySyncLocked]]. */
+    * every [[start]]. See the fence in [[applySync]]. */
   private val replayFencePending =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -215,33 +214,11 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     s"$sinkRoot/_dead_letter/${sync.indexName}"
 
   /** Apply one micro-batch for one sync: dead-letter split, B1 compaction,
-    * then K1 upsert, committed via atomic directory swap. Idempotent —
-    * replaying a batch yields the same state (at-least-once -> effectively
-    * exactly-once; dead-letter rows carry `offset` so replays dedupe there). */
-  private def applySync(batch: DataFrame, sync: SyncConfig, batchId: Long,
-                        lineage: String): Unit = {
-    applySyncLocked(batch, sync, batchId, lineage)
-    // orphaned-marker self-heal (ADVICE r9), OUTSIDE the state lock: after
-    // enough consecutive batches could not claim the marker FRESH (a
-    // crashed refresh/batch/replay's orphan — see writeCompacted), run the
-    // quiesced full rebuild. Its clear is quiesce-gated, so racing a
-    // genuinely live refresh is safe (the refresh's commit bumps the stamp
-    // and forces a re-scan); the cost of a false positive is one manifest
-    // scan. The stream pays the scan inline — bounded, and strictly better
-    // than pruning staying disabled forever.
-    if (StateCommit.orphanHealDue(statePath(sync))) {
-      Pipeline.log.warn(
-        s"zone-map marker for ${statePath(sync)} not claimable fresh for " +
-          s"${StateCommit.OrphanMarkerHealStreak}+ batches over " +
-          s"${StateCommit.orphanMarkerHealMinMs / 1000}+ s — an orphan from " +
-          "a crashed refresh/batch/replay; running a quiesced full zone-map " +
-          "rebuild to restore pruned reads")
-      rebuildZoneMap(sync)
-    }
-  }
-
-  private def applySyncLocked(batch: DataFrame, sync: SyncConfig, batchId: Long,
-                              lineage: String): Unit =
+    * then K1 upsert, committed via the sink's atomic publish (or directory
+    * swap for the flat sink). Idempotent — replaying a batch yields the
+    * same state (at-least-once -> effectively exactly-once; dead-letter
+    * rows carry `offset` so replays dedupe there). */
+  private def applySync(batch: DataFrame, sync: SyncConfig, batchId: Long): Unit =
     StateCommit.stateLock(statePath(sync)).synchronized {
     // fail-loud single-driver fence (see the class scaladoc); also the
     // per-batch heartbeat refresh
@@ -291,34 +268,23 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     // leaking table/offset/_ridx here would evolve them INTO the sink table
     val compacted = Transforms.lastWriteWins(fenced, col(pk), Seq(col("_ridx")))
       .drop("table", "offset", "_ridx")
-    try {
-      writeCompacted(sync, compacted, batchId, lineage)
-      // advance the per-pk applied-offset watermark so a later dead-letter
-      // replay can detect (and discard) quarantined payloads this batch —
-      // or any newer one — has superseded. Idempotent under checkpoint
-      // replay.
-      OffsetWatermark.advance(spark, statePath(sync),
-        fenced.select(col(pk), col("offset"), col("_ridx")), pk, config.stateBuckets)
-    } finally {
-      // in a FINALLY: a failure after the sink write landed (splice,
-      // marker clear, watermark advance) must still bump, or a concurrent
-      // rebuild's quiesce check would miss the committed mutation and
-      // clear over a stale scan; over-bumping on a pre-commit failure
-      // only forces a harmless re-scan (r9 review)
-      StateCommit.mutationStamp(statePath(sync)).incrementAndGet(); ()
-    }
+    writeCompacted(sync, compacted)
+    // advance the per-pk applied-offset watermark so a later dead-letter
+    // replay can detect (and discard) quarantined payloads this batch — or
+    // any newer one — has superseded. Idempotent under checkpoint replay.
+    OffsetWatermark.advance(spark, statePath(sync),
+      fenced.select(col(pk), col("offset"), col("_ridx")), pk, config.stateBuckets)
     hooks.postBatch.foreach(_(sync.table, batchId))
     } finally { full.unpersist(); () }
   }
 
-  /** Commit one compacted change set to the sync's sink — the shared write
-    * tail of the live micro-batch path and the dead-letter replay. */
-  /** True iff `sync`'s sink uses the manifest-versioned immutable layout —
-    * configured on, or the store already IS one (layout is a property of
-    * the store; a restarted driver with a stale config must keep the
-    * store's protocol, exactly like the bucket modulus). */
+  /** True iff `sync`'s sink uses the bucketed manifest layout
+    * ([[ManifestStore]]) — `state.buckets` is configured, or the store
+    * already IS one (layout is a property of the store; a restarted driver
+    * with a stale config must keep the store's protocol, exactly like the
+    * bucket modulus). */
   private def manifestModeFor(sync: SyncConfig): Boolean =
-    config.manifestSink ||
+    config.stateBuckets.isDefined ||
       ManifestStore.isManifestStore(spark, statePath(sync))
 
   /** Loud config-drift fence (review r13 #5): a manifest-layout store
@@ -327,125 +293,29 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     * parquet-footer read of manifest text files. */
   private def requireBucketsFor(sync: SyncConfig): Int =
     config.stateBuckets.getOrElse(throw new IllegalStateException(
-      s"state at ${statePath(sync)} is manifest-layout (state.manifest) " +
+      s"state at ${statePath(sync)} is manifest-layout " +
         "but state.buckets is unset — restore state.buckets (the layout " +
         "requires a bucket modulus; run refresh to re-lay the store out " +
         "under a different one)"))
 
-  private def writeCompacted(sync: SyncConfig, compacted: DataFrame,
-                             batchId: Long, lineage: String): Unit = {
-    val pk = pkOut(sync)
-    config.stateBuckets match {
-      case _ if manifestModeFor(sync) =>
-        // manifest layout: data and per-bucket zone-map stats publish in
-        // ONE atomic manifest rename, so the whole write-ahead-marker /
-        // claim / quiesced-clear protocol of the branch below has no crash
-        // window to guard — a batch is either fully visible (data + stats)
-        // or not at all. requireBucketsFor fails LOUD if the store is
-        // manifest-layout but state.buckets was dropped from the config.
-        BucketedUpsertSink.applyBatch(spark, statePath(sync), compacted, pk,
-          requireBucketsFor(sync), schema = Some(sinkSchema(sync)),
-          manifest = true, statCols = zoneMapColsFor(sync))
-      case Some(n) =>
-        // write-ahead staleness marker: the sink write and the zone-map
-        // refresh are two non-atomic steps; marking BEFORE the write means
-        // a crash anywhere in the window leaves a visible marker (pruned
-        // reads fall back to the exact unpruned filter) rather than a
-        // silently-stale manifest, and the at-least-once batch replay
-        // re-runs the refresh and clears it (r6 ADVICE fix).
-        // zoneMapActiveFor, not raw config.zoneMapCols: a sync whose
-        // schema carries none of the stat columns maintains no manifest,
-        // so it must not pay marker round-trips and empty-stats splices
-        // per batch (r9 review)
-        val zoneMapActive = zoneMapActiveFor(sync)
-        // ownership-aware (r9 review): if a refresh's full rebuild already
-        // holds the marker, this batch SKIPS the manifest work below
-        // entirely — reads ignore the manifest while marked, a splice
-        // could be overwritten by the rebuild's already-materialized
-        // stats, and the batch's own crash window is covered because the
-        // rebuild's quiesce check (the mutation stamp this batch bumps)
-        // forces a re-scan that includes this batch before any clear.
-        // Same-id re-marking (the at-least-once replay) still owns.
-        // The splice-and-release fast path below is licensed by a FRESH
-        // claim, or a RE-OWNED one whose orphan window provably guarded no
-        // foreign write (StateCommit.MarkerClaim + the foreign-write
-        // sidecar, review r10): a marker orphaned by a crash can guard a
-        // foreign writer (a dead-letter replay under a batch's orphan)
-        // that wrote buckets and skipped its splice — a re-owner that
-        // spliced only its own buckets and released would leave those
-        // buckets stale under NO marker, the silent-row-loss case. Foreign
-        // writers therefore mark the sidecar WRITE-AHEAD; a re-owner that
-        // finds it keeps the marker and the quiesced heal below is the
-        // only way down, while the common transient-crash replay (sidecar
-        // absent) still heals instantly.
-        val claim =
-          if (zoneMapActive)
-            StateCommit.claimMarkerDetailed(spark, zoneMapPath(sync), batchId,
-              lineage)
-          else StateCommit.ForeignClaim
-        // the re-own fast path additionally requires batchId >= 0 (a
-        // checkpoint-replayed micro-batch): the checkpoint contract makes
-        // a batch retry's write set IDENTICAL to its crashed attempt's, so
-        // splicing the retry's buckets covers the orphan window. A
-        // dead-letter replay (-2) has NO such contract — the operator can
-        // edit the quarantine between attempts, so a retried replay's set
-        // can be SMALLER than its crashed predecessor's and the
-        // predecessor's extra buckets would go unspliced under no marker
-        // (review r10). A DISCARDED/reset checkpoint reuses batch ids too,
-        // against orphans whose write sets were entirely different — the
-        // claim itself closes that (ADVICE r10): the marker records the
-        // checkpoint LINEAGE (the checkpoint's persistent query id)
-        // alongside the batch id, and a same-id claim from a different
-        // lineage reads FOREIGN, deferring to the quiesced heal.
-        val ownsMarker = zoneMapActive &&
-          (claim == StateCommit.FreshClaim ||
-            (claim == StateCommit.ReOwnedClaim && batchId >= 0L &&
-              !StateCommit.hasForeignWrite(spark, zoneMapPath(sync))))
-        // EVERY write that will not splice-and-release leaves sidecar
-        // evidence WRITE-AHEAD — foreign claimers AND deferring re-owners
-        // (review r10): the kept marker is otherwise the only record of
-        // the unspliced buckets, and a marker torn or lost out-of-protocol
-        // would let a later fresh claimer release over them; the sidecar
-        // makes releaseMarker refuse regardless.
-        if (zoneMapActive && !ownsMarker)
-          StateCommit.markForeignWrite(spark, zoneMapPath(sync))
-        // orphan-marker detection (ADVICE r9): ANY marker a batch cannot
-        // claim fresh is an orphan or a live rebuild's — crashed refreshes
-        // mint never-reused negative ids, crashed batches/replays now KEEP
-        // their re-owned markers (above), and live same-JVM writers are
-        // serialized by the state lock while cross-process ones are fenced
-        // by the lease, so no healthy foreign marker can persist. Count
-        // consecutive non-fresh observations; applySync escalates to a
-        // quiesced full rebuild after the streak threshold AND a 60 s
-        // continuous-observation age (a healthy refresh's brief window
-        // never trips it; a spurious heal racing a live rebuild is still
-        // CORRECT — both clears are quiesce-gated — just wasted work).
-        if (zoneMapActive)
-          StateCommit.observeMarkerClaim(statePath(sync), ownsMarker)
-        BucketedUpsertSink.applyBatch(spark, statePath(sync), compacted, pk, n,
-          schema = Some(sinkSchema(sync)))
-        // incremental zone-map maintenance: stats recompute only for the
-        // buckets this batch touched — same O(changed data) bound as the
-        // sink write itself. The touched-set collect is O(buckets) (the
-        // same bounded collect applyBatch does).
-        if (ownsMarker) {
-          val touched = compacted
-            .select(BucketedUpsertSink.bucketOf(col(pk), n)).distinct()
-            .collect().map(_.getLong(0)).toSeq
-          if (touched.nonEmpty)
-            graft.ops.Maintenance.refreshZoneMap(spark, statePath(sync),
-              zoneMapPath(sync), touched, zoneMapColsFor(sync))
-          StateCommit.releaseMarker(spark, zoneMapPath(sync), batchId)
-        }
-      case None =>
-        val state = UpsertSink.currentState(spark, statePath(sync), sinkSchema(sync))
-        val next = UpsertSink.applyBatch(state, compacted, pk)
-        // invocation-unique staging with failure cleanup: a live batch and
-        // a dead-letter replay can stage for the same sync concurrently
-        StateCommit.stageSwap(spark, statePath(sync))(tmp =>
-          next.write.mode("overwrite").parquet(tmp))
+  /** Commit one compacted change set to the sync's sink — the shared write
+    * tail of the live micro-batch path and the dead-letter replay. The
+    * manifest layout publishes data and per-bucket zone-map stats in ONE
+    * atomic manifest rename, so a batch is either fully visible or not at
+    * all; the flat sink rewrites the whole state through a staged swap. */
+  private def writeCompacted(sync: SyncConfig, compacted: DataFrame): Unit =
+    if (manifestModeFor(sync))
+      BucketedUpsertSink.applyBatch(spark, statePath(sync), compacted,
+        pkOut(sync), requireBucketsFor(sync), schema = Some(sinkSchema(sync)),
+        statCols = zoneMapColsFor(sync))
+    else {
+      val state = UpsertSink.currentState(spark, statePath(sync), sinkSchema(sync))
+      val next = UpsertSink.applyBatch(state, compacted, pkOut(sync))
+      // invocation-unique staging with failure cleanup: a live batch and
+      // a dead-letter replay can stage for the same sync concurrently
+      StateCommit.stageSwap(spark, statePath(sync))(tmp =>
+        next.write.mode("overwrite").parquet(tmp))
     }
-  }
 
   /** Re-apply REPAIRED dead-letter rows (the operational close of the
     * quarantine path [[deadLetterPath]] opens): rows whose pk is now
@@ -522,18 +392,10 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
             val compacted = Transforms
               .lastWriteWins(fresh, col(pk), Seq(col("_ridx")))
               .drop("table", "offset", "_ridx")
-            try {
-              // lineage: a fixed label — replays have no checkpoint; the
-              // -2 id never takes the fast path anyway (see writeCompacted)
-              writeCompacted(s, compacted, batchId = -2L,
-                lineage = Pipeline.ReplayLineage)
-              OffsetWatermark.advance(spark, statePath(s),
-                fresh.select(col(pk), col("offset"), col("_ridx")), pk,
-                config.stateBuckets)
-            } finally {
-              // see applySync: the bump must survive a post-commit failure
-              StateCommit.mutationStamp(statePath(s)).incrementAndGet(); ()
-            }
+            writeCompacted(s, compacted)
+            OffsetWatermark.advance(spark, statePath(s),
+              fresh.select(col(pk), col("offset"), col("_ridx")), pk,
+              config.stateBuckets)
           }
           if (nFresh > 0 || nStale > 0) {
             // keep only the still-null rows (superseded rows are resolved —
@@ -548,19 +410,12 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         }
       }}.toMap
 
-  /** Zone-map manifest path for a sync's sink state. */
-  def zoneMapPath(sync: SyncConfig): String = statePath(sync) + ".zonemap"
-
   // only stat columns the sink schema actually carries: a configured column
   // missing from one sync's payload must not fail that sync's batches
   private def zoneMapColsFor(sync: SyncConfig): Seq[String] = {
     val have = sinkSchema(sync).fieldNames.toSet
     config.zoneMapCols.filter(have)
   }
-
-  /** True iff this pipeline maintains a zone-map manifest for `sync`. */
-  private def zoneMapActiveFor(sync: SyncConfig): Boolean =
-    config.stateBuckets.isDefined && zoneMapColsFor(sync).nonEmpty
 
   /** A staged-but-uncommitted full snapshot: the swap layout stages a
     * sibling dir the commit atomically renames live; the manifest layout
@@ -584,19 +439,14 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         zoneMapColsFor(sync))
       (StagedManifest(sc), sc.count)
     } else {
-      val (st, n) = SwapRefresh.stage(source.fullScan(sync), statePath(sync),
-        config.stateBuckets.map(nb => (pkOut(sync), nb)))
+      val (st, n) = SwapRefresh.stage(source.fullScan(sync), statePath(sync))
       (StagedSwapDir(st), n)
     }
 
   /** The shared locked COMMIT of every snapshot-rebuild path (refresh,
-    * refreshAsync, backfill): force-own the zone-map marker (stealing an
-    * orphan so a crashed batch's replay cannot re-own and clear it
-    * mid-rebuild — r9 review), swap the staged snapshot live, record the
-    * floor, bump the mutation stamp. One definition so the three paths
-    * cannot drift. The manifest layout commits by PUBLISHING the staged
-    * manifest instead of a dir swap — no marker to own (stats ride the
-    * same atomic rename as the data). */
+    * refreshAsync, backfill): publish the staged manifest (or swap the
+    * staged flat dir) live and record the snapshot floor. One definition
+    * so the three paths cannot drift. */
   private def commitRefreshSwap(sync: SyncConfig, staged: StagedSnapshot,
                                 floor: Long,
                                 precondition: () => Boolean = () => true): Boolean =
@@ -620,40 +470,26 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
           false
         } else {
           staged match {
-            case StagedSwapDir(_) if zoneMapActiveFor(sync) =>
-              StateCommit.forceMarker(spark, zoneMapPath(sync),
-                Pipeline.freshOwnerId())
-            case _ => () // manifest layout: stats ride the publish itself
+            case StagedSwapDir(dir) =>
+              StateCommit.atomicSwapDirs(spark, dir, statePath(sync))
+            case StagedManifest(sc) =>
+              ManifestStore.publishFull(spark, statePath(sync), sc)
           }
-          try {
-            staged match {
-              case StagedSwapDir(dir) =>
-                StateCommit.atomicSwapDirs(spark, dir, statePath(sync))
-              case StagedManifest(sc) =>
-                ManifestStore.publishFull(spark, statePath(sync), sc)
-            }
-            // a floor-record failure AFTER the swap landed leaves the
-            // snapshot live but unfenced: a stale dead-letter replay for a
-            // snapshot-only pk could then apply over the refreshed value
-            // (the r9 hazard the floor exists for). The failure is loud
-            // and names the heal — re-running refresh records the floor —
-            // but it cannot be made atomic with the dir swap in this
-            // harness (a table format's single commit would carry both).
-            try OffsetWatermark.recordSnapshotFloor(spark, statePath(sync), floor)
-            catch { case t: Throwable =>
-              Pipeline.log.error(
-                s"snapshot floor for ${statePath(sync)} FAILED to record " +
-                  s"after the swap committed: stale dead-letter replays " +
-                  s"are not fenced for snapshot-only pks until a refresh " +
-                  s"succeeds — re-run refresh before replaying (${t.getMessage})")
-              throw t
-            }
-          } finally {
-            // in a FINALLY, like applySync: a floor-record failure after
-            // the swap landed must still stamp the committed mutation, or
-            // a concurrent rebuild's quiesce check would clear over a
-            // scan that missed the new snapshot (r9 review)
-            StateCommit.mutationStamp(statePath(sync)).incrementAndGet(); ()
+          // a floor-record failure AFTER the swap landed leaves the
+          // snapshot live but unfenced: a stale dead-letter replay for a
+          // snapshot-only pk could then apply over the refreshed value
+          // (the r9 hazard the floor exists for). The failure is loud and
+          // names the heal — re-running refresh records the floor — but it
+          // cannot be made atomic with the publish in this harness (a
+          // table format's single commit would carry both).
+          try OffsetWatermark.recordSnapshotFloor(spark, statePath(sync), floor)
+          catch { case t: Throwable =>
+            Pipeline.log.error(
+              s"snapshot floor for ${statePath(sync)} FAILED to record " +
+                s"after the swap committed: stale dead-letter replays " +
+                s"are not fenced for snapshot-only pks until a refresh " +
+                s"succeeds — re-run refresh before replaying (${t.getMessage})")
+            throw t
           }
           true
         }
@@ -661,12 +497,6 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         StateCommit.dropStaging(spark, staged.abortPath); throw t }
     }
 
-  /** Full zone-map rebuild for one sync — the non-incremental path used
-    * after [[refresh]]/backfill rebuilds where every bucket may have
-    * changed: a full manifest scan whose marker clear is gated on the
-    * mutation-stamp quiesce check, with starvation escalation —
-    * [[StateCommit.quiescedClear]] (the state table and the full argument
-    * live there). */
   /** Layout-aware sink liveness: in manifest mode the state dir EXISTS as
     * soon as an (unpublished, invisible) staging commit is written, so
     * "live" must mean "a manifest version is published" — a dir-existence
@@ -676,18 +506,6 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     if (manifestModeFor(sync))
       ManifestStore.liveExists(spark, statePath(sync))
     else UpsertSink.liveExists(spark, statePath(sync))
-
-  private def rebuildZoneMap(sync: SyncConfig): Unit =
-    if (manifestModeFor(sync)) () // stats ride every manifest commit itself
-    else (config.stateBuckets, zoneMapColsFor(sync)) match {
-      case (Some(_), cols) if cols.nonEmpty =>
-        StateCommit.quiescedClear(spark, statePath(sync), zoneMapPath(sync))(
-          () => graft.ops.Maintenance.computeFullZoneMap(
-            spark, statePath(sync), cols))(
-          m => graft.ops.Maintenance.publishZoneMap(
-            spark, zoneMapPath(sync), m))
-      case _ => ()
-    }
 
   /** Max source offset this pipeline has OBSERVED for a sync — applied
     * (per-pk watermark) or quarantined (dead-letter envelopes). A full
@@ -739,9 +557,8 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
       // re-probe under the lock: a live batch may have bootstrapped the
       // sink during our scan; K3 is bootstrap-only, and the stream is
       // already building on ITS copy — drop our staging, don't clobber
-      val committed = commitRefreshSwap(sync, staging, floor,
+      commitRefreshSwap(sync, staging, floor,
         precondition = () => !sinkLive(sync))
-      if (committed) rebuildZoneMap(sync)
     }
   }
 
@@ -821,21 +638,10 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         graft.streaming.KeyedLastWrite
           .latestPerKey(source.changes.as[ChangeEvent], pkOfEvent).toDF()
       }
-    // checkpoint lineage for the zone-map marker (ADVICE r10): resolved
-    // LAZILY on the first batch — the checkpoint's metadata file (holding
-    // the persistent query id) is written by StreamExecution at start,
-    // before any batch runs, but AFTER this closure is built. One value
-    // per query run; stable across restarts of the same checkpoint;
-    // fresh after a checkpoint reset — exactly the re-own scope.
-    val lineageRef = new java.util.concurrent.atomic.AtomicReference[String]()
     val q = changes.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (lineageRef.get() == null)
-          lineageRef.compareAndSet(null,
-            Pipeline.checkpointLineage(spark, checkpointDir))
-        val lineage = lineageRef.get()
         val cached = batch.persist()
         try {
           // reference main.py:103-104: `if settings.debug:
@@ -847,7 +653,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
             cached.toJSON.take(20).foreach(e =>
               DebugLog.record(s"batch $batchId event: $e"))
           }
-          config.syncs.foreach(applySync(cached, _, batchId, lineage))
+          config.syncs.foreach(applySync(cached, _, batchId))
         } finally { cached.unpersist(); () }
       }
       .start()
@@ -1000,10 +806,6 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         // asserted the snapshot superseded everything below it (r9 review)
         val (staging, n) = stageSnapshot(s)
         commitRefreshSwap(s, staging, floor)
-        // every bucket may have changed under the swap — rebuild, don't
-        // splice. Outside the lock (the stream keeps flowing); clears the
-        // marker only after a quiesced scan, retries a swap-broken one
-        rebuildZoneMap(s)
         s.table -> n
       }
       .toMap
@@ -1011,9 +813,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   /** Async [[refresh]]: fire each sync's rebuild as a [[SinkTasks]] task
     * and return the ids — the reference's fire-then-gather refresh
     * (`meili.py:56-63`); pair with [[SinkTasks.waitForTask]] and a
-    * timeout (its `wait_for_task_timeout`). The zone-map rebuild runs
-    * INSIDE each task, after its swap, so an awaited task implies a
-    * fresh manifest. */
+    * timeout (its `wait_for_task_timeout`). */
   def refreshAsync(tables: Seq[String] = Seq.empty): Map[String, Long] =
     config.syncs
       .filter(s => tables.isEmpty || tables.contains(s.table))
@@ -1021,28 +821,14 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         s.table -> SinkTasks.submit(s"refresh:${s.table}") {
           // ceiling captured inside the task but BEFORE its scan — same
           // conservative ordering as the synchronous refresh; commit
-          // (marker + swap + floor) under the state lock, scans outside it
+          // (publish + floor) under the state lock, scans outside it
           val floor = observedOffsetCeiling(s)
           val (staging, _) = stageSnapshot(s)
           commitRefreshSwap(s, staging, floor)
-          rebuildZoneMap(s)
+          ()
         }
       }
       .toMap
-
-  /** Zone-map marker status per table: `Some(ownerId)` when a pending
-    * marker is up (pruned reads are falling back to exact unpruned
-    * filters), `None` when the manifest is clean or the sync maintains no
-    * zone map. An owner that persists across `check` runs with no refresh
-    * in flight is an orphan from a crashed refresh/batch/replay — the
-    * live stream self-heals it after [[StateCommit.OrphanMarkerHealStreak]]
-    * batches over [[StateCommit.orphanMarkerHealMinMs]], or re-running
-    * `refresh` clears it immediately (ADVICE r9). */
-  def zoneMapStatus(): Map[String, Option[Long]] = config.syncs.map { s =>
-    s.table -> (if (zoneMapActiveFor(s))
-      StateCommit.markerOwner(spark, zoneMapPath(s))
-    else None)
-  }.toMap
 
   /** Lease status per sync (the `check` surface — r10 verdict #7): the
     * lease path, and the holder's identity + heartbeat age (ms) if held.
@@ -1068,22 +854,15 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   }.toMap
 
   /** Read one sync's current sink state (test/inspection helper); the
-    * bucketed layout's partition column is internal and dropped. */
+    * manifest layout's bucket column is internal and dropped. */
   def sinkState(sync: SyncConfig): DataFrame =
     if (manifestModeFor(sync))
       ManifestStore.readState(spark, statePath(sync), sinkSchema(sync))
         .drop(BucketedUpsertSink.BucketCol)
-    else
-      spark.read.parquet(statePath(sync)).drop(BucketedUpsertSink.BucketCol)
+    else spark.read.parquet(statePath(sync))
 }
 
 object Pipeline {
-  // zone-map marker owner ids for refresh/backfill rebuilds: strictly
-  // negative (never colliding with micro-batch ids >= 0 or the replay's
-  // -2) and unique per invocation
-  private val ownerSeq = new java.util.concurrent.atomic.AtomicLong(-100L)
-  private[cdc] def freshOwnerId(): Long = ownerSeq.decrementAndGet()
-
   private[cdc] val log = org.slf4j.LoggerFactory.getLogger("graft.pipeline")
 
   // Active streaming queries per state path (this JVM): the lease
@@ -1155,39 +934,6 @@ object Pipeline {
       } else false
     } finally l.unlock()
   }
-
-  /** Lineage label for dead-letter replays (no checkpoint — the constant
-    * -2 owner id never takes the re-own fast path regardless). */
-  private[cdc] val ReplayLineage = "replay"
-
-  /** The checkpoint LINEAGE token recorded in zone-map markers (ADVICE
-    * r10): the persistent streaming-query id from the checkpoint's
-    * `metadata` file — stable across restarts of the SAME checkpoint
-    * (where the batch-id write-set contract holds) and fresh after a
-    * checkpoint discard/reset (where replayed ids 0,1,2,… carry no
-    * relation to an old orphan's write set). Unreadable metadata falls
-    * back to a fresh UUID — conservative: same-id re-owns then read
-    * foreign and defer to the quiesced heal, never splice-and-release. */
-  private[graft] def checkpointLineage(spark: SparkSession,
-                                       checkpointDir: String): String =
-    try {
-      val p = new org.apache.hadoop.fs.Path(checkpointDir, "metadata")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(p)
-      val body = try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(0, bytes); new String(bytes, "UTF-8")
-      } finally in.close()
-      val id = JsonMapper.mapper.readTree(body).get("id")
-      require(id != null && !id.isNull && id.asText().nonEmpty)
-      id.asText()
-    } catch { case scala.util.control.NonFatal(e) =>
-      val fallback = java.util.UUID.randomUUID().toString
-      log.warn(s"cannot read streaming-query id from $checkpointDir/metadata " +
-        s"(${e.getMessage}) — using a fresh lineage token; crashed-batch " +
-        "markers will heal via the quiesced rebuild instead of the fast path")
-      fallback
-    }
 
   /** Extract a top-level field from a JSON object string as a stable string
     * key (executor-side; uses Spark's shaded-in Jackson). */

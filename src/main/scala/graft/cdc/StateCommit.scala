@@ -2,108 +2,57 @@ package graft.cdc
 
 import org.apache.spark.sql.SparkSession
 
-/** THE state-commit protocol: every primitive that decides how a sink
-  * state path and its zone-map manifest move between consistent states —
-  * the per-path mutation locks and stamps, the staged-write/atomic-swap
-  * machinery with its crash healing and staging janitor, and the
-  * staleness-marker (ownership) discipline with the quiesced clear. One
-  * module (r9 verdict #2): the protocol converged over ~20 review commits
-  * while spread across `UpsertSink`/`Pipeline`/`Maintenance`, and the
-  * conclusion was that concurrency protocols must be read — and changed —
-  * in one place. The transitional thin forwarders at the old names
-  * (`UpsertSink.atomicSwapDirs`, `Maintenance.markZoneMapPending`,
-  * `Pipeline.stateLock`, …) were retired in r11 (verdict #5): every call
-  * site names StateCommit directly, so the protocol has ONE name in the
-  * codebase and grep finds every caller.
+/** THE state-commit protocol for directory-swapped state: the per-path
+  * mutation and swap locks, and the staged-write/atomic-swap machinery
+  * with its crash healing and staging janitor. One module (r9 verdict #2):
+  * concurrency protocols must be read — and changed — in one place, and
+  * every call site names StateCommit directly so grep finds every caller.
   *
-  * ==Protocol state machine==
+  * Bucketed sinks are NOT swapped: the manifest store ([[ManifestStore]])
+  * publishes data and per-bucket zone-map stats in one atomic manifest
+  * rename, so it needs none of this beyond [[stateLock]]. What swaps here
+  * is every directory-rewritten state: the flat sink (`stateBuckets =
+  * None`), the dead-letter quarantine, the watermark sidecar, SCD2 and
+  * incremental-dedup state, and compaction's rewrite.
   *
-  * Per state path, the protocol-visible state is (marker, manifest, stamp)
-  * where marker ∈ {ABSENT, OWNED(id)} guards the manifest's accuracy and
-  * stamp is a JVM-local monotone counter of committed mutations. Writers:
-  * a micro-BATCH (id ≥ 0, at-least-once replayable), a dead-letter REPLAY
-  * (id = −2), a REBUILD (refresh/backfill commit, fresh id < −100, never
-  * reused). All writer sequences below run under [[stateLock]] except the
-  * rebuild's scan.
+  * ==Swap state machine==
+  *
+  * Per live path `L`, the on-disk state is which of `L`, `L.old` and
+  * invocation-unique `L.next-<id>` staging dirs exist.
   *
   * {{{
-  * state          | event                        | action / next state
-  * ---------------+------------------------------+------------------------------------
-  * marker ABSENT  | batch/replay starts          | claim(id) -> OWNED(id); sink write;
-  *                |                              | splice touched buckets; release(id)
-  *                |                              | -> ABSENT; stamp++ (in FINALLY)
-  * OWNED(same id, | batch replay (crash retry)   | claim RE-OWNS; the fast path is
-  * same lineage)  |                              | kept ONLY for a MICRO-BATCH retry
-  *                |                              | (id >= 0 AND the marker's lineage
-  *                |                              | equals the claimer's checkpoint
-  *                |                              | lineage — only then does the
-  *                |                              | checkpoint contract make its
-  *                |                              | write set identical to the
-  *                |                              | crashed attempt's; a same id from
-  *                |                              | a RESET checkpoint's new lineage
-  *                |                              | reads FOREIGN — ADVICE r10) with the
-  *                |                              | foreign-write sidecar ABSENT
-  *                |                              | (review r10): while orphaned, a
-  *                |                              | FOREIGN writer may have written
-  *                |                              | buckets and skipped its splice, and
-  *                |                              | a DEAD-LETTER replay retry (-2) may
-  *                |                              | carry a SMALLER write set than its
-  *                |                              | crashed predecessor (the quarantine
-  *                |                              | is operator-editable) — either way
-  *                |                              | splice-and-release would leave
-  *                |                              | unspliced buckets stale under NO
-  *                |                              | marker, so those re-owners mark the
-  *                |                              | sidecar write-ahead and KEEP the
-  *                |                              | marker for the quiesced heal
-  * OWNED(foreign) | batch/replay starts          | markForeignWrite (write-ahead) ->
-  *                |                              | SKIP all manifest work (safety
-  *                |                              | rides the pending guard: reads are
-  *                |                              | unpruned while marked); sink write
-  *                |                              | + stamp++ only
-  * any            | rebuild commit               | force(freshId) -> OWNED(freshId);
-  *                |                              | swap snapshot live; floor; stamp++
-  * OWNED(any)     | rebuild scan + quiesce clear | s1 = stamp; full manifest scan
-  *                |                              | (UNLOCKED); then under stateLock:
-  *                |                              | stamp == s1 ? clear -> ABSENT
-  *                |                              | : re-scan (≤ 3), then ONE final
-  *                |                              | LOCKED scan+clear (starvation cap)
-  * OWNED(any)     | crash before clear           | marker survives (write-ahead);
-  *                |                              | reads stay exact via the unpruned
-  *                |                              | fallback; healed by the next
-  *                |                              | rebuild (force + quiesced clear) or
-  *                |                              | the orphan streak heal (3
-  *                |                              | consecutive foreign-marker batches
-  *                |                              | over 60+ s -> quiesced full
-  *                |                              | rebuild)
-  * mid-swap crash | any reader                   | recoverSwap: live absent + .old
-  *                |                              | complete -> rename .old back
+  * state             | event                   | action / next state
+  * ------------------+-------------------------+-------------------------------
+  * L                 | writer stages           | stagingDir(L) -> L + next-<id>
+  *                   |                         | (registered with the janitor
+  *                   |                         | before any file exists)
+  * L + next-<id>     | staged write throws     | dropStaging -> L
+  * L + next-<id>     | atomicSwapDirs          | L -> L.old; next-<id> -> L;
+  *                   |                         | delete L.old -> L (deregistered)
+  * L.old, no L       | crash between renames   | recoverSwap (every reader and
+  *                   |                         | writer calls it first): rename
+  *                   |                         | L.old back -> L (pre-swap copy)
+  * next-<id> stale   | every 32nd swap of L    | janitor reaps unregistered
+  *                   |                         | staging dirs older than
+  *                   |                         | stagingReapHorizonMs
   * }}}
   *
-  * Invariant the table preserves: ''marker ABSENT ⇒ manifest describes the
-  * live state exactly''; while OWNED, readers use the exact unpruned
-  * filter, so pruned reads NEVER return wrong rows — only slower ones.
-  * Clears happen exactly twice in the codebase: the fast-path owner's
-  * release after its own splice (a FRESH claim — the state lock is held
-  * from claim to release and the marker did not pre-exist, so nothing
-  * else can have written under it — or a deterministic micro-batch
-  * re-own with the sidecar absent, whose write set equals its crashed
-  * attempt's), and the quiesced clear after a full rebuild scan — and
-  * both verify their premise (ownership + sidecar absence; stamp
-  * quiescence) atomically with the clear. [[StateCommitScheduleSpec]] enumerates the
-  * schedule space of these atoms exhaustively and checks the invariant at
-  * every step, including the foreign-write-under-orphan family that
-  * forced the re-own rule.
+  * Invariant the table preserves: a reader that heals first always finds a
+  * COMPLETE copy at `L` — the pre-swap one or the post-swap one, never a
+  * torn mix. A crash between the renames reverts to the pre-swap copy; the
+  * streaming checkpoint replays the uncommitted batch and the idempotent
+  * apply makes the replay safe.
   *
   * LOCK ORDER (deadlock discipline): [[stateLock]] is the OUTERMOST —
-  * holders may take [[swapLock]] (via swap/heal/marker ops),
-  * OffsetWatermark's floorLock, and [[DriverLease]]'s per-path lock (via
-  * acquire); none of those ever takes stateLock or each other. Keep any
-  * new acquisition consistent with that order.
+  * holders may take [[swapLock]] (via swap/heal), OffsetWatermark's
+  * floorLock, and [[DriverLease]]'s per-path lock (via acquire); none of
+  * those ever takes stateLock or each other. Keep any new acquisition
+  * consistent with that order.
   *
-  * Same-JVM premise: locks and stamps are JVM-local. Every advertised
-  * concurrent shape is in-JVM (refreshAsync tasks, replay vs batch);
-  * cross-PROCESS exclusion is [[DriverLease]]'s job — the rename-retry
-  * tolerance below is a last line of defense, not a serialization.
+  * Same-JVM premise: locks are JVM-local. Every advertised concurrent shape
+  * is in-JVM (refreshAsync tasks, replay vs batch); cross-PROCESS exclusion
+  * is [[DriverLease]]'s job — the rename-retry tolerance below is a last
+  * line of defense, not a serialization.
   */
 object StateCommit {
 
@@ -125,28 +74,13 @@ object StateCommit {
   // `.old` (r9 review).
   private val swapLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  def swapLock(live: String): Object =
+  private def swapLock(live: String): Object =
     swapLocks.computeIfAbsent(live, _ => new Object)
-
-  // --------------------------------------------------------------- stamps
-
-  // Per-state-path MUTATION STAMP, bumped (under stateLock, in a FINALLY
-  // adjacent to each commit — post-commit failures must still stamp) by
-  // every committed state mutation. The quiesced clear below is the only
-  // consumer. JVM-local: a refresh run in a DIFFERENT process from the
-  // live stream cannot observe the stream's mutations — DriverLease is
-  // what excludes that shape.
-  private val mutationStamps = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicLong]()
-  def mutationStamp(statePath: String): java.util.concurrent.atomic.AtomicLong =
-    mutationStamps.computeIfAbsent(statePath,
-      _ => new java.util.concurrent.atomic.AtomicLong())
 
   // ------------------------------------------------------- staged swaps
 
   /** (FileSystem, Path) resolution against the session's Hadoop conf —
-    * shared by the cdc file protocols (swap, marker, lease) so remote
-    * filesystems resolve one way everywhere. */
+    * shared with [[DriverLease]] so remote filesystems resolve one way. */
   private[cdc] def hfs(spark: SparkSession, p: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
     val path = new org.apache.hadoop.fs.Path(p)
     (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
@@ -338,359 +272,4 @@ object StateCommit {
         }
       }
     } catch { case scala.util.control.NonFatal(_) => () }
-
-  // ------------------------------------------------- staleness marker
-
-  /** Path of the staleness marker guarding `zmPath`: present while a sink
-    * write has committed whose zone-map refresh has not. */
-  def markerPath(zmPath: String): String = zmPath + ".pending"
-
-  /** Result of a write-ahead marker claim — the distinction matters
-    * (review r10): only a FRESH claim proves nothing else wrote under the
-    * marker, because the claimer holds the state lock from claim to
-    * release and the marker did not pre-exist. A RE-OWNED claim means the
-    * marker survived a CRASH of an earlier attempt with the same id — and
-    * while it lay orphaned, OTHER writers (a dead-letter replay under a
-    * batch's orphan; a later replay under a crashed replay's constant -2)
-    * may have written buckets and skipped their splice per the
-    * OWNED(foreign) rule. A re-owner that spliced only its own buckets and
-    * released would leave those foreign buckets stale with NO marker —
-    * pruned reads silently dropping rows — so a re-owner must NOT take the
-    * splice-and-release fast path; it keeps the marker up and the quiesced
-    * full rebuild (the orphan streak heal, or the next refresh) is the
-    * only way down. */
-  sealed trait MarkerClaim
-  /** Created the marker now — the fast splice-and-release path is sound. */
-  case object FreshClaim extends MarkerClaim
-  /** Re-owned an orphaned marker from a crashed same-id, SAME-LINEAGE
-    * attempt (the claim itself verifies the lineage — a matching id from a
-    * reset checkpoint's new lineage reads [[ForeignClaim]], ADVICE r10).
-    * The fast path survives ONLY for a checkpoint-replayed micro-batch
-    * (id ≥ 0, identical write set by the checkpoint contract within one
-    * lineage) with the foreign-write sidecar absent — the caller enforces
-    * both (see the state table); every other re-owner writes and LEAVES
-    * the marker for the quiesced heal. */
-  case object ReOwnedClaim extends MarkerClaim
-  /** A different owner holds it (or the marker is TORN — see below) —
-    * skip all manifest work. */
-  case object ForeignClaim extends MarkerClaim
-
-  /** Claim the marker write-ahead of `ownerId`'s sink write — see
-    * [[MarkerClaim]] for what each outcome licenses. A TORN marker (a
-    * crash inside [[forceMarker]]'s overwrite, or out-of-protocol damage)
-    * reads as FOREIGN, not claimable (review r10): the torn file may be
-    * the remains of an orphan that GUARDED real unspliced writes — a
-    * rebuild crashing mid-force truncates the previous owner's marker —
-    * and letting the next batch claim it fresh would launder that guard
-    * into a splice-and-release over stale buckets. Torn markers come down
-    * only via the quiesced heal's full publish.
-    *
-    * `lineage` scopes re-ownership to a CHECKPOINT LINEAGE (ADVICE r10):
-    * the numeric batch id alone identifies a write set only within one
-    * checkpoint's life — after an operator discards/resets the checkpoint,
-    * the replayed ids (0, 1, 2, …) restart and would match a stale orphan
-    * from the OLD lineage whose write set was entirely different; a
-    * splice-and-release on that false match leaves the old orphan's
-    * buckets stale under no marker. A claimer with a checkpoint therefore
-    * passes its lineage (the checkpoint's persistent query id —
-    * [[Pipeline.checkpointLineage]]) and re-owns ONLY a marker recording
-    * the SAME id and the SAME lineage; a same-id marker from another
-    * lineage reads FOREIGN and comes down via the quiesced heal. */
-  def claimMarkerDetailed(spark: SparkSession, zmPath: String,
-                          ownerId: Long, lineage: String = ""): MarkerClaim =
-    swapLock(zmPath).synchronized {
-      val (fs, p) = hfs(spark, markerPath(zmPath))
-      readMarkerRaw(fs, p) match {
-        case Some((v, l)) if v == ownerId && l == lineage => ReOwnedClaim
-        case Some(_) => ForeignClaim
-        case None => writeMarkerOwner(fs, p, ownerId, lineage); FreshClaim
-      }
-    }
-
-  /** Boolean form (owns at all — fresh or re-owned), for callers with no
-    * fast-path decision to make: [[graft.ops.Maintenance.compactApply]]'s
-    * single-writer claim and the specs that orphan/probe markers. */
-  def claimMarker(spark: SparkSession, zmPath: String, ownerId: Long,
-                  lineage: String = ""): Boolean =
-    claimMarkerDetailed(spark, zmPath, ownerId, lineage) != ForeignClaim
-
-  /** FORCE ownership of the marker (unconditional overwrite) — the
-    * rebuild-commit path: a marker orphaned by a crashed batch must not be
-    * re-ownable by that batch's checkpoint replay mid-rebuild (the replay
-    * would splice its buckets and CLEAR while every other bucket's stats
-    * still describe pre-rebuild data — r9 review). */
-  def forceMarker(spark: SparkSession, zmPath: String, ownerId: Long): Unit =
-    swapLock(zmPath).synchronized {
-      val (fs, p) = hfs(spark, markerPath(zmPath))
-      writeMarkerOwner(fs, p, ownerId)
-    }
-
-  /** Marker file format: `<ownerId>` (no lineage — rebuild force-markers,
-    * legacy) or `<ownerId>:<lineage>`. The lineage token never contains
-    * ':' (it is a UUID or a fixed label), so the FIRST ':' splits. */
-  private def writeMarkerOwner(fs: org.apache.hadoop.fs.FileSystem,
-                               p: org.apache.hadoop.fs.Path, ownerId: Long,
-                               lineage: String = ""): Unit = {
-    val body = if (lineage.isEmpty) ownerId.toString else s"$ownerId:$lineage"
-    val out = fs.create(p, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Sidecar recording that ANY NON-OWNING writer wrote under the current
-    * marker (write-ahead, before its sink write) — a foreign claimer, or
-    * a deferring re-owner whose own write set carries no determinism
-    * contract (the -2 replay): a later RE-OWNER consults it — absent, the
-    * orphan window provably guarded no splice-skipped buckets and the
-    * fast splice-and-release path stays sound (the common transient-crash
-    * batch replay heals instantly); present, the re-owner must keep the
-    * marker for the quiesced heal (review r10: unconditional pessimism
-    * cost every routine crash 3 batches + 60 s of unpruned reads plus an
-    * inline full scan). The sidecar also makes [[releaseMarker]] REFUSE,
-    * so unspliced buckets stay guarded even if the marker itself is torn
-    * or lost out-of-protocol. Removed only by [[clearMarker]] after a
-    * full recompute-and-publish. */
-  def foreignWritePath(zmPath: String): String = zmPath + ".pending.foreign"
-
-  def markForeignWrite(spark: SparkSession, zmPath: String): Unit =
-    swapLock(zmPath).synchronized {
-      val (fs, p) = hfs(spark, foreignWritePath(zmPath))
-      if (!fs.exists(p)) {
-        val out = fs.create(p, true)
-        out.close()
-      }
-    }
-
-  def hasForeignWrite(spark: SparkSession, zmPath: String): Boolean =
-    swapLock(zmPath).synchronized {
-      val (fs, p) = hfs(spark, foreignWritePath(zmPath))
-      fs.exists(p)
-    }
-
-  private def dropForeignWrite(fs: org.apache.hadoop.fs.FileSystem,
-                               zmPath: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(foreignWritePath(zmPath))
-    try { if (fs.exists(p)) { fs.delete(p, false); () } }
-    catch { case _: java.io.IOException => () }
-  }
-
-  /** Clear the marker iff `ownerId` still owns it AND no foreign-write
-    * sidecar is present (the owner's release after its own splice — see
-    * the state table). A sidecar here means a foreign write landed under
-    * OUR marker — impossible within the advertised premises (the state
-    * lock serializes in-JVM writers; the lease fences processes) but
-    * cheap to survive their violation (review r10: a GC-paused holder
-    * whose lease was usurped must not destroy the usurper's sidecar
-    * evidence and release over its unspliced buckets). The refusal keeps
-    * BOTH files; the streak heal or the next rebuild's quiesced clear
-    * takes it down — one wasted scan, never a silent stale manifest. */
-  def releaseMarker(spark: SparkSession, zmPath: String, ownerId: Long): Unit =
-    swapLock(zmPath).synchronized {
-      val (fs, p) = hfs(spark, markerPath(zmPath))
-      val sidecar = new org.apache.hadoop.fs.Path(foreignWritePath(zmPath))
-      if (!fs.exists(sidecar) &&
-          readMarkerOwner(fs, p).contains(ownerId)) { fs.delete(p, false); () }
-    }
-
-  /** Unconditional clear — ONLY for callers that just recomputed and
-    * published the whole manifest from live state (the quiesced clear;
-    * compactApply's single-writer rewrite): THAT full publish is what
-    * makes removing both files sound. Sidecar first — a crash between
-    * the deletes leaves the MARKER standing (sidecar gone), which still
-    * reads safe because any reader falls back to exact unpruned filters
-    * while a marker is up, and the marker's eventual clear again requires
-    * a full publish. (A marker-first order would instead leave a
-    * sidecar-without-marker leftover that wedges later releases.) */
-  def clearMarker(spark: SparkSession, zmPath: String): Unit =
-    swapLock(zmPath).synchronized {
-      val (fs, p) = hfs(spark, markerPath(zmPath))
-      dropForeignWrite(fs, zmPath)
-      if (fs.exists(p)) { fs.delete(p, false); () }
-    }
-
-  /** Owner id of the marker, if up: `Some(id)` live, `Some(Long.MinValue)`
-    * torn (unreadable — reads FOREIGN to claimers, heal-only), `None`
-    * clean. */
-  def markerOwner(spark: SparkSession, zmPath: String): Option[Long] =
-    swapLock(zmPath).synchronized {
-      val (fs, p) = hfs(spark, markerPath(zmPath))
-      readMarkerOwner(fs, p)
-    }
-
-  def markerExists(spark: SparkSession, zmPath: String): Boolean = {
-    val (fs, p) = hfs(spark, markerPath(zmPath))
-    fs.exists(p)
-  }
-
-  private def readMarkerOwner(fs: org.apache.hadoop.fs.FileSystem,
-                              p: org.apache.hadoop.fs.Path): Option[Long] =
-    readMarkerRaw(fs, p).map(_._1)
-
-  /** (ownerId, lineage) of the marker; lineage "" when the marker carries
-    * none. Torn (empty/unparseable) reads as (Long.MinValue, "") —
-    * matching no claimer, heal-only. */
-  private def readMarkerRaw(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): Option[(Long, String)] = {
-    if (!fs.exists(p)) return None
-    val len = fs.getFileStatus(p).getLen.toInt
-    if (len == 0) return Some((Long.MinValue, "")) // torn marker: heal-only
-    val bytes = new Array[Byte](len)
-    val in = fs.open(p)
-    try in.readFully(0, bytes) finally in.close()
-    val body = new String(bytes, "UTF-8").trim
-    val cut = body.indexOf(':')
-    val (idPart, lineage) =
-      if (cut < 0) (body, "") else (body.substring(0, cut), body.substring(cut + 1))
-    scala.util.Try(idPart.toLong).toOption match {
-      case Some(id) => Some((id, lineage))
-      case None => Some((Long.MinValue, "")) // torn: heal-only
-    }
-  }
-
-  // ------------------------------------------------ orphan-heal streak
-
-  /** Consecutive not-claimable-FRESH marker observations before a live
-    * batch MAY escalate to the quiesced full zone-map rebuild (the
-    * orphaned-marker self-heal — ADVICE r9; widened to any orphan in r10,
-    * since re-owned crash markers are now KEPT rather than released).
-    * Batch count alone is cadence-dependent (sub-second triggers would
-    * reach any count during a healthy refresh's scan — review r10), so
-    * the heal additionally requires the marker to have been unclaimable
-    * CONTINUOUSLY for [[orphanMarkerHealMinMs]]. A false positive still
-    * costs only one manifest scan (both clears are quiesce-gated), never
-    * correctness. Moved here from Pipeline in r11 (verdict #6): the
-    * streak is marker lifecycle, and the marker lives in this module. */
-  val OrphanMarkerHealStreak = 3L
-
-  /** Minimum continuous foreign-observation age before the streak heal
-    * fires — comfortably past any healthy refresh's commit→clear window
-    * (its full manifest scan); spec-settable. */
-  @volatile private[graft] var orphanMarkerHealMinMs: Long = 60L * 1000L
-
-  // Per-state-path count of consecutive batches that could not take the
-  // marker fast path (foreign owner of ANY sign or lineage, or a re-own
-  // over a foreign-write sidecar), and the wall time of the streak's
-  // first observation. JVM-local, same premise as mutationStamp.
-  private val foreignMarkerStreaks = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicLong]()
-  private val foreignMarkerSince =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Record one writer's marker-claim outcome: `owned` resets the streak
-    * (the marker discipline is healthy); a denied fast path extends it and
-    * pins the streak's first-observation time. */
-  def observeMarkerClaim(statePath: String, owned: Boolean): Unit =
-    if (owned) resetOrphanStreak(statePath)
-    else {
-      foreignMarkerStreaks.computeIfAbsent(statePath,
-        _ => new java.util.concurrent.atomic.AtomicLong()).incrementAndGet()
-      foreignMarkerSince.putIfAbsent(statePath,
-        java.lang.Long.valueOf(System.currentTimeMillis()))
-      ()
-    }
-
-  /** True iff the streak AND continuous-age thresholds both fire — and
-    * then resets the streak, so the caller runs exactly one quiesced heal
-    * per escalation instead of one per subsequent batch. */
-  def orphanHealDue(statePath: String): Boolean = {
-    val streak = foreignMarkerStreaks.get(statePath)
-    val since = foreignMarkerSince.get(statePath)
-    if (streak != null && streak.get() >= OrphanMarkerHealStreak &&
-        since != null &&
-        System.currentTimeMillis() - since >= orphanMarkerHealMinMs) {
-      resetOrphanStreak(statePath)
-      true
-    } else false
-  }
-
-  private def resetOrphanStreak(statePath: String): Unit = {
-    val streak = foreignMarkerStreaks.get(statePath)
-    if (streak != null) streak.set(0L)
-    foreignMarkerSince.remove(statePath)
-    ()
-  }
-
-  // --------------------------------------------------- quiesced clear
-
-  /** The quiesced full-rebuild clear (the state table's rebuild-scan row):
-    * run `compute` (a full manifest recompute from live state, returning a
-    * MATERIALIZED but UNPUBLISHED manifest) OUTSIDE the state lock — the
-    * stream keeps flowing — then, under [[stateLock]] and only if the
-    * path's mutation stamp is UNCHANGED across the compute, PUBLISH the
-    * manifest and clear the marker atomically. Publishing only on a
-    * quiesced compute matters as much as clearing on one (review r10):
-    * two concurrent rebuilds — the stream's orphan heal racing a
-    * refresh's — used to each publish their scan's manifest BEFORE the
-    * quiesce check, so the slower, staler scan could land its manifest
-    * after the faster one had already cleared the marker, leaving a stale
-    * manifest live with NO marker up. With publish inside the quiesce
-    * gate, a stale compute is simply discarded and re-run.
-    *
-    * The clear is UNCONDITIONAL on ownership: a quiesced compute covered
-    * every bucket of live state, so whatever marker is up — this
-    * rebuild's, a crashed batch's, an earlier rebuild's orphan — the
-    * published manifest is accurate (this is what heals orphaned
-    * markers). Computes broken by a concurrent swap (vanished files)
-    * retry on their own bounded budget; correctness never depends on the
-    * retry, only availability. A starved quiesce (a stream hot enough to
-    * land a mutation during every lock-free compute) escalates to ONE
-    * final compute+publish UNDER the state lock — bounded and
-    * deterministic, instead of pruning staying disabled indefinitely
-    * (r9 review). */
-  def quiescedClear(spark: SparkSession, statePath: String, zmPath: String)
-                   (compute: () => org.apache.spark.sql.DataFrame)
-                   (publish: org.apache.spark.sql.DataFrame => Unit): Unit = {
-    val stamp = mutationStamp(statePath)
-    var fnfRetries = 0
-    var quiesceTries = 0
-    var done = false
-    while (!done && quiesceTries < 3) {
-      val s1 = stamp.get()
-      try {
-        val manifest = compute()
-        done = stateLock(statePath).synchronized {
-          // no locked writer is mid-flight here; a stamp match means the
-          // compute saw every committed mutation
-          if (stamp.get() == s1) {
-            publish(manifest)
-            clearMarker(spark, zmPath)
-            true
-          } else false
-        }
-        // only a FAILED quiesce consumes the budget: a transient
-        // vanished-file race gets its own separately-bounded retries
-        // instead of eating quiesce tries (r9 review)
-        if (!done) quiesceTries += 1
-      } catch {
-        case e: Throwable if fnfRetries < 3 && causedByVanishedFile(e) =>
-          fnfRetries += 1
-      }
-    }
-    if (!done) stateLock(statePath).synchronized {
-      publish(compute())
-      clearMarker(spark, zmPath)
-    }
-  }
-
-  /** True iff the failure chain bottoms out in a vanished file OR path —
-    * the signatures of a scan racing a concurrent directory swap:
-    * FileNotFoundException (a listed file renamed away mid-job) and
-    * AnalysisException PATH_NOT_FOUND (the whole dir resolved inside the
-    * swap's two-rename window). Bounded retries make a genuinely
-    * misconfigured path still fail, just not on the first scan. */
-  def causedByVanishedFile(t: Throwable): Boolean = {
-    var c: Throwable = t
-    var depth = 0
-    while (c != null && depth < 12) {
-      c match {
-        case _: java.io.FileNotFoundException => return true
-        case a: org.apache.spark.sql.AnalysisException
-            if Option(a.getCondition).exists(_.startsWith("PATH_NOT_FOUND")) =>
-          return true
-        case _ => ()
-      }
-      c = c.getCause
-      depth += 1
-    }
-    false
-  }
 }

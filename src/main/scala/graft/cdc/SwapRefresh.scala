@@ -111,24 +111,20 @@ object SinkTasks {
 
 object SwapRefresh {
 
-  /** Rebuild `livePath` from `fresh`, atomically. Returns row count written.
-    *
-    * `buckets = Some((pk, n))` carries the live sink's bucketed layout onto
-    * the staging copy before the swap — the analog of the reference copying
-    * the live index's settings onto the tmp index (`meili.py:43-49`).
-    * Without it a refresh of a bucketed sink would swap in a FLAT dir; the
-    * next micro-batch's `hasBuckets` probe would then see no layout,
-    * bootstrap an empty state, and silently discard the refreshed rows in
-    * every bucket it touches. */
-  def refresh(fresh: DataFrame, livePath: String,
-              buckets: Option[(String, Int)] = None): Long = {
-    val (staging, n) = stage(fresh, livePath, buckets)
+  /** Rebuild the flat state dir `livePath` from `fresh`, atomically.
+    * Returns row count written. (A bucketed sink rebuilds through
+    * [[ManifestStore.stageFull]]/[[ManifestStore.publishFull]] instead,
+    * which carries the configured layout onto the new version — the
+    * analog of the reference copying the live index's settings onto the
+    * tmp index, `meili.py:43-49`.) */
+  def refresh(fresh: DataFrame, livePath: String): Long = {
+    val (staging, n) = stage(fresh, livePath)
     // the swap commits under the state lock (review r11): unlocked, a
     // live writer's read-merge-swap racing this swap silently drops
     // whichever complete copy loses — the r9 hazard stage()'s own doc
-    // describes. (Pipeline's commitRefreshSwap additionally force-owns
-    // the zone-map marker and records the snapshot floor; this entry
-    // point is the bare data swap for sinks without those sidecars.)
+    // describes. (Pipeline's commitRefreshSwap additionally records the
+    // snapshot floor; this entry point is the bare data swap for sinks
+    // without that sidecar.)
     StateCommit.stateLock(livePath).synchronized {
       StateCommit.atomicSwapDirs(fresh.sparkSession, staging, livePath)
     }
@@ -148,33 +144,13 @@ object SwapRefresh {
     * (r9 review). The swap MOVES the staging dir, so nothing lingers on
     * success; a crashed rebuild strands only its own uniquely-named dir
     * (reaped by the swap janitor after an hour). */
-  def stage(fresh: DataFrame, livePath: String,
-            buckets: Option[(String, Int)] = None): (String, Long) = {
+  def stage(fresh: DataFrame, livePath: String): (String, Long) = {
     val staging = StateCommit.stagingDir(livePath)
     // failure cleanup: a throwing scan/write must drop (and unregister)
     // its partial staging, or it stays janitor-protected forever
     try {
-      buckets match {
-        // init IS the layout-defining write — reusing it keeps refresh's
-        // staging copy from drifting if the bucket layout ever changes
-        case Some((pk, n)) => BucketedUpsertSink.init(fresh, staging, pk, n)
-        case None          => fresh.write.mode("overwrite").parquet(staging)
-      }
-      // count back from the staged files with an EXPLICIT schema (review
-      // r11): an empty snapshot's partitioned write emits no data files
-      // (only _SUCCESS), and inference over zero files throws — an empty
-      // source table must refresh to an empty sink, not crash the rebuild
-      val readBack = buckets match {
-        case Some(_) =>
-          fresh.sparkSession.read
-            .schema(org.apache.spark.sql.types.StructType(
-              fresh.schema.fields :+ org.apache.spark.sql.types.StructField(
-                BucketedUpsertSink.BucketCol,
-                org.apache.spark.sql.types.LongType)))
-            .parquet(staging)
-        case None => fresh.sparkSession.read.parquet(staging)
-      }
-      (staging, readBack.count())
+      fresh.write.mode("overwrite").parquet(staging)
+      (staging, fresh.sparkSession.read.parquet(staging).count())
     } catch {
       case t: Throwable =>
         StateCommit.dropStaging(fresh.sparkSession, staging); throw t
@@ -186,9 +162,8 @@ object SwapRefresh {
     * them with `wait_for_task_timeout`, `meili.py:56-63`). Spark job
     * submission is thread-safe, so the rebuild runs concurrently with the
     * caller; reads of `livePath` see the OLD copy until the atomic swap. */
-  def refreshAsync(fresh: DataFrame, livePath: String,
-                   buckets: Option[(String, Int)] = None): Long =
-    SinkTasks.submit(s"refresh:$livePath") { refresh(fresh, livePath, buckets); () }
+  def refreshAsync(fresh: DataFrame, livePath: String): Long =
+    SinkTasks.submit(s"refresh:$livePath") { refresh(fresh, livePath); () }
 }
 
 /** S5 + `check` command: consistency verification (reference

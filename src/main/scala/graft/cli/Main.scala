@@ -1,7 +1,7 @@
 package graft.cli
 
 import graft.GraftSession
-import graft.cdc.{ParquetCdcSource, Pipeline, StateCommit}
+import graft.cdc.{ParquetCdcSource, Pipeline}
 import graft.model._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -30,14 +30,16 @@ import org.apache.spark.sql.types.StructType
   * insert.size=1000                 # reference insert_size -> per-batch
   *                                  # source admission (maxFilesPerTrigger)
   * monotonic=true                   # cross-batch stale-event suppression
-  * state.buckets=64                 # bucketed sink layout (rewrite only
-  *                                  # touched pk-hash buckets); absent =
-  *                                  # flat state dir + atomic swap
+  * state.buckets=64                 # bucketed manifest sink layout
+  *                                  # (rewrite only touched pk-hash
+  *                                  # buckets, one atomic manifest publish
+  *                                  # per batch); absent = flat state dir
+  *                                  # + atomic swap
   * state.zonemap.cols=score,ts      # bucketed mode only: per-bucket
-  *                                  # min/max/count manifest maintained
-  *                                  # incrementally per micro-batch;
-  *                                  # columns missing from a sync's
-  *                                  # payload are skipped for that sync
+  *                                  # min/max stats that ride each
+  *                                  # manifest commit; columns missing
+  *                                  # from a sync's payload are skipped
+  *                                  # for that sync
   * lease.stale.ms=60000             # single-driver lease heartbeat horizon
   *                                  # (DriverLease): a second driver process
   *                                  # on the same sink.root fails loud while
@@ -78,8 +80,8 @@ object Main {
                   spark: org.apache.spark.sql.SparkSession): Int = {
     val cfg = parseConfig(props)
     // `--json` (check ONLY): machine-readable output — one JSON object per
-    // sync (r11 verdict #6: operator tooling needs counts/lease/marker
-    // state parseable, not screen-scraped). Stripped before table-name
+    // sync (r11 verdict #6: operator tooling needs counts/lease state
+    // parseable, not screen-scraped). Stripped before table-name
     // validation so the flag is never mistaken for a table — but only for
     // check: on any other verb the token still fails loudly as an unknown
     // table instead of being silently swallowed (review r12).
@@ -190,32 +192,14 @@ object Main {
       }
       case "check" => graft.cdc.ErrorReporting.reporting(reporters, "check") {
         var ok = true
-        val zm = pipe.zoneMapStatus()
         val leases = pipe.leaseStatus()
         pipe.check().foreach { case (t, (src, sink)) =>
           if (src != sink) ok = false
           if (jsonMode) {
-            println(checkJsonLine(t, src, sink, zm.getOrElse(t, None),
-              leases.get(t)))
+            println(checkJsonLine(t, src, sink, leases.get(t)))
           } else {
           val status = if (src == sink) "OK" else "MISMATCH"
           println(s"$status $t: source=$src sink=$sink")
-          // operational note, not a failure: pruned reads are falling back
-          // to exact unpruned filters until the marker clears. A negative
-          // owner that persists with no refresh in flight is a crashed
-          // refresh's orphan — the stream self-heals it, or re-run refresh
-          // (ADVICE r9).
-          zm.getOrElse(t, None).foreach { owner =>
-            // Long.MinValue is the TORN sentinel (unreadable marker file,
-            // heal-only), not a real owner id — print it as what it means
-            // instead of a confusing -9223372036854775808 (ADVICE r10)
-            val who =
-              if (owner == Long.MinValue) "torn (heal-only)" else s"owner $owner"
-            println(s"NOTE $t: zone-map pending, $who — pruned " +
-              "reads unpruned until a rebuild clears it (an orphan " +
-              s"self-heals after ${StateCommit.OrphanMarkerHealStreak} live " +
-              "batches over a minute; or re-run refresh)")
-          }
           // lease observability (r10 verdict #7): who holds this sync's
           // state path — the first thing to read when a second driver was
           // just refused
@@ -233,12 +217,9 @@ object Main {
   }
 
   /** One machine-readable `check --json` object per sync (r11 verdict
-    * #6): counts + match verdict, zone-map marker state (pending/torn/
-    * owner), and lease identity + heartbeat age. The torn sentinel
-    * (Long.MinValue) maps to `"torn":true,"owner":null` — the JSON never
-    * leaks the sentinel value a parser would mistake for a real owner. */
+    * #6): counts + match verdict, and lease identity + heartbeat age. */
   private[graft] def checkJsonLine(
-      table: String, src: Long, sink: Long, zmOwner: Option[Long],
+      table: String, src: Long, sink: Long,
       lease: Option[(String, Option[(String, Long)])]): String = {
     def js(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
@@ -246,12 +227,6 @@ object Main {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val zm = zmOwner match {
-      case None => """{"pending":false}"""
-      case Some(o) if o == Long.MinValue =>
-        """{"pending":true,"torn":true,"owner":null}"""
-      case Some(o) => s"""{"pending":true,"torn":false,"owner":$o}"""
-    }
     val ls = lease match {
       case Some((path, Some((id, age)))) =>
         s"""{"path":${js(path)},"holder":${js(id)},"heartbeat_age_ms":$age}"""
@@ -260,7 +235,7 @@ object Main {
       case None => "null"
     }
     s"""{"table":${js(table)},"source":$src,"sink":$sink,""" +
-      s""""match":${src == sink},"zone_map":$zm,"lease":$ls}"""
+      s""""match":${src == sink},"lease":$ls}"""
   }
 
   /** One `check` output line per sync naming the lease path, holder
@@ -338,7 +313,6 @@ object Main {
       },
       zoneMapCols = Option(props.getProperty("state.zonemap.cols")).toSeq
         .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty),
-      manifestSink = props.getProperty("state.manifest") == "true",
       debug = props.getProperty("debug") == "true",
       leaseStaleMs = Option(props.getProperty("lease.stale.ms"))
         .map { v =>

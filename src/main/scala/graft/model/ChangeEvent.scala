@@ -75,26 +75,25 @@ final case class SyncConfig(
 /** Pipeline-level configuration — mirrors reference `Settings`
   * (`settings.py:60-82`): flush triggers and the list of syncs.
   *
-  * Spark addition: `stateBuckets` switches the sink to the bucketed layout
-  * ([[graft.cdc.BucketedUpsertSink]] — each batch rewrites only the pk-hash
-  * buckets it touches) with the given bucket count; None keeps the flat
-  * state dir + atomic swap. `zoneMapCols` (bucketed mode only) keeps a
-  * per-bucket min/max/count manifest incrementally maintained after every
-  * micro-batch ([[graft.ops.Maintenance.refreshZoneMap]]) — the stats a
-  * manifest-driven reader uses to prune bucket dirs at query time. */
+  * Spark addition: `stateBuckets` switches the sink to the bucketed
+  * manifest layout ([[graft.cdc.BucketedUpsertSink]] over
+  * [[graft.cdc.ManifestStore]] — each batch rewrites only the pk-hash
+  * buckets it touches into immutable files and publishes them with one
+  * atomic manifest rename) with the given bucket count; None keeps the
+  * flat state dir + atomic swap. `zoneMapCols` (bucketed mode only) are
+  * the per-bucket min/max stat columns each manifest commit carries
+  * alongside the row counts — the stats
+  * [[graft.cdc.ManifestStore.prunedRead]] uses to prune buckets at query
+  * time. */
 final case class PipelineConfig(
     syncs: Seq[SyncConfig],
     insertSize: Option[Int] = None,
     insertIntervalSecs: Option[Int] = None,
     stateBuckets: Option[Int] = None,
     zoneMapCols: Seq[String] = Seq.empty,
-    /** Bucketed-sink physical layout: false (default) = in-place bucket
-      * partition dirs with dynamic overwrite; true = the manifest-versioned
-      * immutable-file layout ([[graft.cdc.ManifestStore]]) — data files are
-      * never deleted inside the vacuum retention window and each commit
-      * publishes data + per-bucket zone-map stats in ONE atomic manifest
-      * rename, so concurrent readers never hit a vanished pinned file and
-      * no staleness-marker protocol is needed. Requires `stateBuckets`. */
+    /** Ignored: `stateBuckets` alone now selects the manifest layout, the
+      * only bucketed layout. Kept so existing callers still compile. */
+    @deprecated("stateBuckets alone selects the manifest layout", "0.1.0")
     manifestSink: Boolean = false,
     /** The reference's `debug` settings flag (`settings.py:64`,
       * `main.py:35-36,103-104`): log the parsed settings at startup and
@@ -107,9 +106,6 @@ final case class PipelineConfig(
       * mutating call fails loud. Must exceed the trigger interval. */
     leaseStaleMs: Long = graft.cdc.DriverLease.DefaultStaleMs
 ) {
-  require(!manifestSink || stateBuckets.isDefined,
-    "manifestSink (state.manifest=true) requires stateBuckets (state.buckets)")
-
   /** `settings.get_sync(table)` (reference `settings.py:78-82`). */
   def syncFor(table: String): Option[SyncConfig] = syncs.find(_.table == table)
   def tables: Seq[String] = syncs.map(_.table)

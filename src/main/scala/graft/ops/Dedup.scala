@@ -161,8 +161,7 @@ object Dedup {
     * shuffles. Crossover favors this variant as duplication density and
     * document count grow; the bench carries both tiers, measured. */
   def ngramJaccardPrefix(spark: SparkSession, dir: String, threshold: Double = 0.5,
-                         dfCap: Int = 128,
-                         materializePerDoc: Boolean = true): DataFrame = {
+                         dfCap: Int = 128): DataFrame = {
     val s = shingled(spark, dir)
     val posts = s.select(col("doc_id"), col("n_sh"), explode(col("hs")).as("shingle"))
     // document frequency per shingle; stop-shingles (df > cap) leave the
@@ -172,20 +171,10 @@ object Dedup {
       .filter(col("df").between(2, dfCap))
     val eff = posts.join(dfs, "shingle")
     // per-doc effective list sorted rare-first + its verification set.
-    // `materializePerDoc` (default ON, r15) localCheckpoints this frame —
-    // its subtree (scan + shingle explode + df aggregate + join) appears
-    // FOUR times in the static plan (both self-join arms of `prefixes`,
-    // both `sets` verification sides), and AQE's runtime stage reuse only
-    // shares the exchanges that are byte-identical, not the differently-
-    // keyed sets sides. Measured (`Profile prefixab`, same-JVM interleaved
-    // A/B, two batteries): on 1.84/1.95 s floors vs off 1.97/2.08 —
-    // a consistent ~6-8% per adjacent pair. At scale this is the standard
-    // staging point: a production near-dup pipeline materializes the
-    // per-doc signature table before the candidate join anyway.
-    val perDoc0 = eff.groupBy(col("doc_id"), col("n_sh"))
+    // Not materialized: an eager localCheckpoint here took the committed
+    // sweep from 1.65 to 2.01 s, and its blocks were never released.
+    val perDoc = eff.groupBy(col("doc_id"), col("n_sh"))
       .agg(array_sort(collect_list(struct(col("df"), col("shingle")))).as("eord"))
-    val perDoc = (if (materializePerDoc) perDoc0.localCheckpoint(true)
-                  else perDoc0)
       .withColumn("m", size(col("eord")))
       .withColumn("plen",
         col("m") - ceil(col("n_sh") * lit(threshold)).cast("int") + lit(1))

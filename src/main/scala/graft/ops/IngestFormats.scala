@@ -169,8 +169,7 @@ object IngestFormats {
     val schemaV2 = StructType(schemaV1.fields :+ StructField("o_custkey", LongType))
     def run(schema: StructType): Unit = {
       val sync = SyncConfig("orders", pk = "o_orderkey", schema = Some(schema))
-      val cfg = PipelineConfig(Seq(sync), stateBuckets = Some(8),
-        manifestSink = true)
+      val cfg = PipelineConfig(Seq(sync), stateBuckets = Some(8))
       val src = new WireCdcSource(spark, feed, s"$root/tables", "wal2json",
         maxFilesPerTrigger = 64)
       val pipe = new Pipeline(spark, cfg, src, sinkRoot)

@@ -82,9 +82,9 @@ object Maintenance {
     * [[compactionPlan]] only diagnoses): rewrite a shard-partitioned
     * corpus into first-fit bins of at most `targetBytes` (proxy bytes —
     * the same deterministic prefix-sum policy as the plan), each bin ONE
-    * output file, through the staging + atomic-swap protocol, then refresh
-    * the per-bin zone-map manifest (`livePath + ".zonemap"`: bin, files
-    * become prunable by doc_id range again immediately after the swap).
+    * output file, through the staging + atomic-swap protocol, and return
+    * the per-bin zone-map stats (bin, row count, bytes, doc_id range —
+    * bins are prunable by doc_id range the moment the swap lands).
     *
     * Unlike the shard-granular plan, the rewrite also SPLITS oversized
     * shards — what a real OPTIMIZE does when an input file exceeds the
@@ -104,13 +104,9 @@ object Maintenance {
     * bin-keyed repartition so each bin is written by exactly one task (a
     * task may carry several bins; partitionBy still emits one file per
     * bin). A crash between the two renames heals via
-    * [[graft.cdc.UpsertSink]]'s recoverSwap; a crash before the manifest
-    * write leaves the pre-swap manifest pointing at vanished bins, so the
-    * manifest is rewritten FROM the swapped data before anyone reads it
-    * (same call). Returns the manifest stats plus a trailing `n_shards`
-    * audit column (computed in the same post-swap scan that feeds the
-    * zone-map write; the persisted zonemap keeps the manifest columns
-    * only). */
+    * [[graft.cdc.StateCommit.recoverSwap]] on re-run. Returns the stats —
+    * computed FROM the swapped data, so they always describe the live
+    * bins — plus a trailing `n_shards` audit column. */
   def compactApply(spark: SparkSession, livePath: String,
                    targetBytes: Long = 32768): DataFrame = {
     // the documented heal-by-rerun contract (a crash between the two
@@ -118,7 +114,6 @@ object Maintenance {
     // recoverSwap before reading — an eager parquet read of the absent
     // live path throws PATH_NOT_FOUND instead of healing (review r11)
     graft.cdc.StateCommit.recoverSwap(spark, livePath)
-    graft.cdc.StateCommit.recoverSwap(spark, livePath + ".zonemap")
     val state = spark.read.parquet(livePath)
     val sizes = state
       .select(col("shard").cast("long").as("shard"),
@@ -133,28 +128,7 @@ object Maintenance {
     // Partitioned by shard, so the window never funnels the corpus.
     val wIn = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    // write-ahead staleness marker ahead of the data swap (the same
-    // protocol the pipeline uses): a crash anywhere between the data swap
-    // and the manifest swap leaves the OLD manifest pointing at bins that
-    // no longer exist, which a manifest-driven pruned read would silently
-    // turn into dropped rows; while the marker exists readers fall back to
-    // the exact unpruned filter, and re-running compactApply heals it.
-    // A STAGED-WRITE failure (data untouched, old manifest still exact)
-    // un-marks again — a failed rewrite must not degrade reads to
-    // unpruned scans until some later rewrite succeeds (r9 review); a
-    // swap failure keeps the marker (the data may have moved).
-    // a PRE-EXISTING marker means a crashed earlier rewrite whose data
-    // swap may have landed (the documented heal-by-rerun) — the
-    // write-failure path below must then KEEP it: the old manifest may
-    // describe vanished bins, and clearing would hand pruned reads a
-    // stale map (r9 review)
-    val zmPend = new org.apache.hadoop.fs.Path(
-      graft.cdc.StateCommit.markerPath(livePath + ".zonemap"))
-    val markerPreExisting = zmPend
-      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(zmPend)
-    graft.cdc.StateCommit.claimMarker(spark, livePath + ".zonemap", ownerId = -1L)
-    val staging = graft.cdc.StateCommit.stagingDir(livePath)
-    try {
+    graft.cdc.StateCommit.stageSwap(spark, livePath) { staging =>
       // partition discovery reads the shard dir value back as INT; the
       // plan keys on LONG — normalize before the broadcast join
       state.withColumn("shard", col("shard").cast("long"))
@@ -166,53 +140,26 @@ object Maintenance {
         .drop("prefix", "off")
         .repartition(col("bin"))
         .write.mode("overwrite").partitionBy("bin").parquet(staging)
-    } catch {
-      case t: Throwable =>
-        graft.cdc.StateCommit.dropStaging(spark, staging)
-        // un-mark only a marker THIS run minted over untouched data
-        if (!markerPreExisting)
-          graft.cdc.StateCommit.clearMarker(spark, livePath + ".zonemap")
-        throw t
     }
-    try graft.cdc.StateCommit.atomicSwapDirs(spark, staging, livePath)
-    catch {
-      // swap failure: the data may have moved mid-protocol — keep the
-      // marker, but release the staging dir (and its janitor
-      // registration, which would otherwise protect the leak forever)
-      case t: Throwable =>
-        graft.cdc.StateCommit.dropStaging(spark, staging); throw t
-    }
-    // ONE post-swap scan feeds BOTH the zone-map manifest and the caller's
-    // audit (r14, guide §2.4: the audit in compactionApplyQuery re-scanned
-    // the compacted corpus for aggregates this scan already computes —
-    // fusing them drops a full pass over the rewritten data). The combined
-    // stats are O(bins) rows, collected ONCE and returned as a local
-    // relation (ADVICE r14: the previous localCheckpoint(true) was never
-    // unpersisted, so a long-lived driver running periodic compactions
-    // leaked one O(bins) cached RDD per call — and the returned frame
-    // silently depended on checkpoint blocks surviving executor loss,
-    // which localCheckpoint does not guarantee). Bins are bounded by
-    // corpus_bytes / targetBytes — metadata-scale by construction (the
-    // zonemap below is a coalesce(1) write of the same rows). Column
-    // ORDER keeps the documented manifest prefix (bin, n_rows, bytes,
-    // min_doc, max_doc); n_shards rides at the END so positional
-    // consumers are unchanged.
+    // ONE post-swap scan feeds the stats AND the caller's audit (r14, guide
+    // §2.4: the audit in compactionApplyQuery re-scanned the compacted
+    // corpus for aggregates this scan already computes). The stats are
+    // O(bins) rows, collected ONCE and returned as a local relation
+    // (ADVICE r14: a localCheckpoint(true) here was never unpersisted, so
+    // a long-lived driver running periodic compactions leaked one O(bins)
+    // cached RDD per call). Bins are bounded by corpus_bytes / targetBytes
+    // — metadata-scale by construction. Column ORDER keeps the documented
+    // stats prefix (bin, n_rows, bytes, min_doc, max_doc); n_shards rides
+    // at the END so positional consumers are unchanged.
     val statsAgg = spark.read.parquet(livePath)
       .groupBy(col("bin").cast("long").as("bin"))
       .agg(count(lit(1)).as("n_rows"),
         sum(length(col("text")).cast("long")).as("bytes"),
         min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"),
         countDistinct(col("shard")).as("n_shards"))
-    val stats = spark.createDataFrame(
+    spark.createDataFrame(
       java.util.Arrays.asList(statsAgg.collect(): _*), statsAgg.schema)
-    val manifest = stats
-      .select(col("bin"), col("n_rows"), col("bytes"),
-        col("min_doc"), col("max_doc"))
-    graft.cdc.StateCommit.stageSwap(spark, livePath + ".zonemap")(zmTmp =>
-      manifest.orderBy(col("bin")).coalesce(1)
-        .write.mode("overwrite").parquet(zmTmp))
-    graft.cdc.StateCommit.clearMarker(spark, livePath + ".zonemap")
-    stats.orderBy(col("bin"))
+      .orderBy(col("bin"))
   }
 
   /** Driver query for the applied compaction: stage the documents corpus
@@ -247,168 +194,6 @@ object Maintenance {
       .select(col("bin"), col("n_shards"), col("n_rows").as("n_docs"),
         col("bytes"))
       .orderBy(col("bin"))
-  }
-
-  /** Per-bucket zone map over a [[graft.cdc.BucketedUpsertSink]] state
-    * table: bucket -> (row count, min/max of each stat column). With
-    * `buckets` given, the scan is partition-PRUNED to exactly those
-    * bucket dirs — the incremental-maintenance read path. */
-  def bucketZoneMap(spark: SparkSession, statePath: String,
-                    statCols: Seq[String],
-                    buckets: Option[Seq[Long]] = None): DataFrame = {
-    val b = graft.cdc.BucketedUpsertSink.BucketCol
-    val state = spark.read.parquet(statePath)
-    val pruned = buckets match {
-      case Some(bs) if bs.nonEmpty => state.filter(col(b).isin(bs: _*))
-      case Some(_) => state.filter(lit(false))
-      case None => state
-    }
-    val aggs = count(lit(1)).as("n_rows") +:
-      statCols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    // partition discovery reads the bucket dir value back as INT; the
-    // writer's bucketOf is LONG — normalize so the manifest key is stable
-    pruned.groupBy(col(b).cast("long").as("bucket"))
-      .agg(aggs.head, aggs.tail: _*)
-      .orderBy(col("bucket"))
-  }
-
-  /** Incrementally maintain the sink's zone-map manifest after a
-    * micro-batch: recompute stats for the TOUCHED buckets only (a
-    * partition-pruned scan — the cost is proportional to the changed
-    * data, exactly like the sink write itself), splice them over the
-    * prior manifest, and atomically swap the manifest file. Buckets the
-    * batch emptied disappear from the recomputed stats and therefore
-    * from the manifest. The manifest is O(buckets) rows — its rewrite is
-    * free; the point is never rescanning the untouched state. */
-  def refreshZoneMap(spark: SparkSession, statePath: String, zmPath: String,
-                     touched: Seq[Long], statCols: Seq[String]): Unit = {
-    // the fresh stats scan runs OUTSIDE the manifest lock — on a full
-    // rebuild it is an O(state) scan, and holding the lock through it
-    // would stall a live batch's incremental refresh (which arrives
-    // already holding the state lock) for the whole scan (r9 review) —
-    // and is MATERIALIZED so the splice below re-reads blocks, not files
-    val fresh = bucketZoneMap(spark, statePath, statCols, Some(touched))
-      .localCheckpoint(true)
-    // under the manifest's swap lock (reentrant for the inner swap):
-    // overlapping rebuilds for ONE table (Pipeline.rebuildZoneMap) must
-    // not let a peer's swap rename the prior manifest's files out from
-    // under this task's LAZY read mid-write; the prior is materialized
-    // for the same reason (r9 review). The locked section is O(buckets).
-    graft.cdc.StateCommit.swapLock(zmPath).synchronized {
-      // heal a crash INSIDE a previous manifest swap first (review r11):
-      // live absent + complete `.old` would otherwise read as "no prior
-      // manifest", and the replayed batch would publish a touched-buckets-
-      // only manifest and RELEASE the marker — a stale manifest live under
-      // no marker, the exact invariant violation the protocol exists to
-      // prevent (pruned reads silently dropping every untouched bucket)
-      graft.cdc.StateCommit.recoverSwap(spark, zmPath)
-      val fs = new org.apache.hadoop.fs.Path(zmPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val prior =
-        if (fs.exists(new org.apache.hadoop.fs.Path(zmPath)))
-          Some(spark.read.parquet(zmPath).localCheckpoint(true))
-        else None
-      val next = prior match {
-        case Some(p) => p.filter(!col("bucket").isin(touched: _*)).unionByName(fresh)
-        case None => fresh
-      }
-      graft.cdc.StateCommit.stageSwap(spark, zmPath)(tmp =>
-        next.orderBy(col("bucket")).coalesce(1)
-          .write.mode("overwrite").parquet(tmp))
-    }
-  }
-
-  // -------------------------------------------------------------------
-  // Staleness-marker discipline lives in [[graft.cdc.StateCommit]] (r9
-  // verdict #2: the whole commit protocol, with its states×events table,
-  // reads in one module; the historical forwarder names here were retired
-  // in r11 so the protocol has ONE name and grep finds every caller).
-  // Below: the zone-map compute/publish halves the quiesced clear drives.
-  // -------------------------------------------------------------------
-
-  /** The COMPUTE half of a quiesced full rebuild: materialize the whole
-    * manifest from live state WITHOUT publishing it — the publish happens
-    * under [[graft.cdc.StateCommit.quiescedClear]]'s quiesce gate, so a
-    * stale concurrent scan can never land its manifest after a faster
-    * rebuild already cleared the marker (review r10). */
-  def computeFullZoneMap(spark: SparkSession, statePath: String,
-                         statCols: Seq[String]): DataFrame =
-    bucketZoneMap(spark, statePath, statCols).localCheckpoint(true)
-
-  /** The PUBLISH half: atomically swap a materialized manifest live. */
-  def publishZoneMap(spark: SparkSession, zmPath: String,
-                     manifest: DataFrame): Unit =
-    graft.cdc.StateCommit.swapLock(zmPath).synchronized {
-      graft.cdc.StateCommit.stageSwap(spark, zmPath)(tmp =>
-        manifest.orderBy(col("bucket")).coalesce(1)
-          .write.mode("overwrite").parquet(tmp))
-    }
-
-  /** Manifest-driven pruned read: consult the O(buckets) zone map for the
-    * buckets whose [min,max] window on `statCol` intersects
-    * [lo, hi], then read ONLY those bucket partitions and apply the exact
-    * predicate. The manifest is tiny, so the candidate-bucket collect is
-    * O(buckets) — the data scan it saves is the whole point: at 100 TB a
-    * selective range predicate touches a handful of bucket dirs instead
-    * of the full state. Returns exactly what the unpruned filter would.
-    *
-    * The "exactly" contract survives the sink-write → refresh crash
-    * window (the r6 ADVICE finding): the pipeline write-ahead-marks the
-    * manifest pending before each sink write and clears it after the
-    * refresh, and while the marker exists this read skips pruning and
-    * applies the exact filter to the full state — correct, just unpruned —
-    * until the streaming engine's at-least-once replay of the interrupted
-    * batch re-runs the refresh and clears the marker. */
-  def prunedRead(spark: SparkSession, statePath: String, zmPath: String,
-                 statCol: String, lo: Long, hi: Long): DataFrame = {
-    val b = graft.cdc.BucketedUpsertSink.BucketCol
-    // manifest-layout store: stats and data resolve from ONE immutable
-    // versioned manifest — no marker to probe, no swap to heal, and no
-    // file in the plan a concurrent writer can delete inside the vacuum
-    // retention window (the r12 FAILED_READ_FILE retryable class does not
-    // exist here). zmPath is not consulted: the manifest IS the zone map.
-    if (graft.cdc.ManifestStore.isManifestStore(spark, statePath))
-      return graft.cdc.ManifestStore.prunedRead(spark, statePath,
-        org.apache.spark.sql.types.StructType(Nil), statCol, lo, hi)
-    // any-reader heal first (the StateCommit state table's mid-swap-crash
-    // row): an eager read of a mid-swap-absent path would otherwise throw
-    // PATH_NOT_FOUND before even the unpruned fallback (review r11)
-    graft.cdc.StateCommit.recoverSwap(spark, statePath)
-    graft.cdc.StateCommit.recoverSwap(spark, zmPath)
-    val exact = col(statCol) >= lo && col(statCol) <= hi
-    if (graft.cdc.StateCommit.markerExists(spark, zmPath))
-      return spark.read.parquet(statePath).filter(exact).drop(b)
-    val candidates = spark.read.parquet(zmPath)
-      .filter(col(s"max_$statCol") >= lo && col(s"min_$statCol") <= hi)
-      .select(col("bucket")).collect().map(_.getLong(0))
-    if (candidates.isEmpty)
-      return spark.read.parquet(statePath).filter(lit(false))
-        .filter(exact).drop(b)
-    // PIN the candidate buckets' file lists NOW, consistent with the
-    // marker probe and manifest snapshot above (review r11): an isin
-    // filter over a lazy directory scan re-lists at EXECUTION time, so a
-    // sink write committing between this probe and the consumer's action
-    // surfaces new rows to the scan while the stale candidate list
-    // excludes their bucket — silently dropped rows. With pinned files
-    // the result is a consistent snapshot at probe time, and a
-    // concurrent compaction that renames them away fails LOUD (vanished
-    // file) instead of returning wrong rows. O(candidates) listStatus
-    // calls — the same bound as the candidate collect itself.
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = candidates.flatMap { c =>
-      val dir = new org.apache.hadoop.fs.Path(s"$statePath/$b=$c")
-      if (fs.exists(dir))
-        fs.listStatus(dir).map(_.getPath.toString)
-          .filter(_.endsWith(".parquet"))
-      else Array.empty[String]
-    }
-    if (files.isEmpty)
-      return spark.read.parquet(statePath).filter(lit(false))
-        .filter(exact).drop(b)
-    spark.read.option("basePath", statePath)
-      .parquet(scala.collection.immutable.ArraySeq.unsafeWrapArray(files): _*)
-      .filter(exact).drop(b)
   }
 
   /** Driver query for manifest TIME TRAVEL (snapshot reproducibility — the

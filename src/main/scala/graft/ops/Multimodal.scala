@@ -53,15 +53,15 @@ object Multimodal {
       y += 1
     }
     val bos = new java.io.ByteArrayOutputStream()
-    // ImageIO's useCache defaults to TRUE: every write would otherwise
-    // spool through a FileCacheImageOutputStream — a temp FILE created,
-    // written, read back and deleted PER IMAGE (r15; the in-sweep
-    // q_multimodal_decode spikes were this disk churn under load, not the
-    // codec). Memory caching is byte-identical output for these tiny
-    // images. The flag is a global static; setting it per call is a
-    // no-op after the first and keeps every entry path covered.
-    javax.imageio.ImageIO.setUseCache(false)
-    javax.imageio.ImageIO.write(img, "png", bos)
+    // an explicit memory-cached stream: handed a bare OutputStream, ImageIO
+    // (useCache defaults to TRUE) spools through a FileCacheImageOutputStream
+    // — a temp FILE created, written, read back and deleted PER IMAGE (r15;
+    // the in-sweep q_multimodal_decode spikes were this disk churn under
+    // load, not the codec). Wrapping locally keeps the JVM-global useCache
+    // flag untouched; the encoded bytes are identical either way.
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    try javax.imageio.ImageIO.write(img, "png", out)
+    finally out.close() // flushes into bos; bos itself stays open
     bos.toByteArray
   }
 
@@ -99,28 +99,25 @@ object Multimodal {
   private def decodePngRows(rows: Dataset[PngRow]): Dataset[PngMeta] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.mapPartitions { it =>
-      // ImageIO scans for plugins lazily; touching it here keeps codec
-      // discovery once per partition, not per row. useCache OFF (r15):
-      // the default-true flag routes every read through a
-      // FileCacheImageInputStream — one temp file per image decode;
-      // memory caching decodes the same bytes without the disk churn.
-      javax.imageio.ImageIO.setUseCache(false)
-      it.map { r =>
-        val pngOk = isPng(r.payload)
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.payload))
-        require(img != null, s"doc ${r.doc_id}: payload is not a decodable image")
-        val raster = img.getRaster
-        var s = 0L
-        var y = 0
-        while (y < img.getHeight) {
-          var x = 0
-          while (x < img.getWidth) { s += raster.getSample(x, y, 0); x += 1 }
-          y += 1
-        }
-        PngMeta(r.doc_id, pngOk, img.getWidth, img.getHeight, s)
+    rows.map { r =>
+      val pngOk = isPng(r.payload)
+      // memory-cached input stream, for the same reason as encodePng: a
+      // bare InputStream would route every decode through a temp-file
+      // FileCacheImageInputStream under the global default. ImageIO.read
+      // closes the stream it is handed.
+      val img = javax.imageio.ImageIO.read(
+        new javax.imageio.stream.MemoryCacheImageInputStream(
+          new java.io.ByteArrayInputStream(r.payload)))
+      require(img != null, s"doc ${r.doc_id}: payload is not a decodable image")
+      val raster = img.getRaster
+      var s = 0L
+      var y = 0
+      while (y < img.getHeight) {
+        var x = 0
+        while (x < img.getWidth) { s += raster.getSample(x, y, 0); x += 1 }
+        y += 1
       }
+      PngMeta(r.doc_id, pngOk, img.getWidth, img.getHeight, s)
     }
   }
 

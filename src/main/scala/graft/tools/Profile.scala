@@ -340,15 +340,6 @@ object Profile {
           (name, f) => time(s"evolvej-$name") { f(); 0L })
         time("evolvej-final-read")(out.count())
         spark.sparkContext.removeSparkListener(listener)
-      case "prefixab" =>
-        // same-JVM interleaved A/B of the perDoc materialization in the
-        // PPJoin prefix tier (r15)
-        Seq(("warm", true), ("off", false), ("on", true), ("off2", false),
-          ("on2", true), ("off3", false), ("on3", true)).foreach {
-          case (tag, on) =>
-            time(s"prefix-$tag")(graft.ops.Dedup
-              .ngramJaccardPrefix(spark, sfDir, materializePerDoc = on).count())
-        }
       case "trainab" =>
         // same-JVM interleaved A/B of the r14 survivor materialization
         Seq(("warm", true), ("off", false), ("on", true), ("off2", false),
@@ -414,24 +405,6 @@ object Profile {
         StreamLatency.stats(cq).foreach(s => println(
           f"PROFILE cdc-batch-${s.batchId}%-14d ${s.seconds}%8.3f s  " +
             f"rows=${s.inputRows}  ${s.rowsPerSec}%10.0f rows/s"))
-        // layered overhead: the bucketed layout, then incremental zone-map
-        // maintenance on top — each the same feed, so per-batch deltas read
-        // directly as the layer's cost
-        Seq(
-          ("bkt", PipelineConfig(Seq(sync), stateBuckets = Some(16))),
-          ("bktzm", PipelineConfig(Seq(sync), stateBuckets = Some(16),
-            zoneMapCols = Seq("score")))
-        ).foreach { case (tag, cfg) =>
-          val l2 = FeedGen.generate(spark, s"$root/cdc-$tag", nUsers = 2000,
-            nBatches = 8, eventsPerBatch = 400)
-          val p2 = new Pipeline(spark, cfg,
-            new ParquetCdcSource(spark, l2.feedDir, l2.tableDir), l2.sinkRoot)
-          val q2 = p2.start(l2.ckptDir)
-          try q2.processAllAvailable() finally q2.stop()
-          StreamLatency.stats(q2).foreach(s => println(
-            f"PROFILE cdc-$tag-${s.batchId}%-10d ${s.seconds}%8.3f s  " +
-              f"rows=${s.inputRows}  ${s.rowsPerSec}%10.0f rows/s"))
-        }
       case q =>
         time(q)(graft.SparkEntry.queries(q)(spark, sfDir).count())
     }

@@ -399,7 +399,7 @@ object ScaleCurve {
             (col("id") + i).as("score"))
           val t0 = System.nanoTime()
           BucketedUpsertSink.applyBatch(spark, mpath, changes, "id", nb,
-            Some(payload), manifest = true, statCols = Seq("score"))
+            Some(payload), statCols = Seq("score"))
           println(f"MANIFESTBATCH x$fac commit=$i " +
             f"${(System.nanoTime() - t0) / 1e9}%6.3f s in=10000 touched<=8")
         }

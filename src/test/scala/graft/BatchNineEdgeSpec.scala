@@ -142,15 +142,4 @@ class BatchNineEdgeSpec extends SparkSpec {
     assert(norm.length <= raw.length,
       "normalization can only merge raw-exact groups, never split them")
   }
-
-  test("bucket zone map: an explicit empty bucket list returns an empty " +
-    "manifest, not a full scan") {
-    import spark.implicits._
-    val root = tmpDir("zm-edge")
-    val s0 = Seq((1L, 10L)).toDF("id", "score")
-    graft.cdc.BucketedUpsertSink.init(s0, s"$root/state", "id", 4)
-    val empty = Maintenance.bucketZoneMap(spark, s"$root/state",
-      Seq("score"), Some(Seq.empty)).collect()
-    assert(empty.isEmpty)
-  }
 }

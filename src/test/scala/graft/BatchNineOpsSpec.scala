@@ -163,23 +163,36 @@ class BatchNineOpsSpec extends SparkSpec {
 
   // ---------------------------------------------- incremental zone map
 
+  /** A manifest store's per-commit stats: bucket -> (rows, (min, max)). */
+  private def manifestStats(statePath: String) =
+    graft.cdc.ManifestStore.currentManifest(spark, statePath).get
+      .buckets.toSeq.sortBy(_._1)
+      .map { case (b, e) => (b, e.nRows, e.stats("score")) }
+
+  /** The same map recomputed from the store's live rows. */
+  private def fullStats(statePath: String,
+                        schema: org.apache.spark.sql.types.StructType) = {
+    import spark.implicits._
+    graft.cdc.ManifestStore.readState(spark, statePath, schema)
+      .groupBy(col(graft.cdc.BucketedUpsertSink.BucketCol))
+      .agg(count(lit(1)), min(col("score")), max(col("score")))
+      .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
+      .map { case (b, n, lo, hi) => (b, n, (Some(lo), Some(hi))) }
+  }
+
   test("sink zone map: incremental refresh after a micro-batch equals a " +
     "full recompute, and the manifest-driven read prunes to candidate " +
     "buckets while returning the exact unpruned answer") {
-    import graft.cdc.BucketedUpsertSink
+    import graft.cdc.{BucketedUpsertSink, ManifestStore}
     import spark.implicits._
-    val root = tmpDir("graft-zm")
-    val statePath = s"$root/state"
-    val zmPath = s"$root/state.zonemap"
+    val statePath = tmpDir("graft-zm") + "/state"
     val nb = 8
     val s0 = (0L until 200L).map(i => (i, i * 10, s"v$i"))
       .toDF("id", "score", "payload")
-    BucketedUpsertSink.init(s0, statePath, "id", nb)
-    Maintenance.refreshZoneMap(spark, statePath, zmPath, (0L until nb).toSeq,
+    BucketedUpsertSink.applyBatch(spark, statePath,
+      s0.withColumn("op", lit("create")), "id", nb, Some(s0.schema),
       Seq("score"))
-    val full0 = Maintenance.bucketZoneMap(spark, statePath, Seq("score")).collect()
-    val inc0 = spark.read.parquet(zmPath).orderBy("bucket").collect()
-    assert(inc0.map(_.toSeq).toSeq === full0.map(_.toSeq).toSeq)
+    assert(manifestStats(statePath) === fullStats(statePath, s0.schema))
 
     // a micro-batch: update two pks, delete one, insert one far-off score
     val batch = Seq(
@@ -192,25 +205,29 @@ class BatchNineOpsSpec extends SparkSpec {
       .select(BucketedUpsertSink.bucketOf(col("id"), nb)).distinct()
       .collect().map(_.getLong(0)).toSeq
     assert(touched.length < nb, "the batch must not touch every bucket")
+    val before = ManifestStore.currentManifest(spark, statePath).get
     BucketedUpsertSink.applyBatch(spark, statePath, batch, "id", nb)
-    Maintenance.refreshZoneMap(spark, statePath, zmPath, touched, Seq("score"))
-    val full1 = Maintenance.bucketZoneMap(spark, statePath, Seq("score")).collect()
-    val inc1 = spark.read.parquet(zmPath).orderBy("bucket").collect()
-    assert(inc1.map(_.toSeq).toSeq === full1.map(_.toSeq).toSeq,
-      "incremental splice must equal the full recompute")
+    assert(manifestStats(statePath) === fullStats(statePath, s0.schema),
+      "incremental per-commit stats must equal the full recompute")
+    // incremental: untouched buckets' entries carry forward verbatim
+    val after = ManifestStore.currentManifest(spark, statePath).get
+    (0L until nb).filterNot(touched.contains).foreach { b =>
+      assert(after.buckets.get(b) === before.buckets.get(b), s"bucket $b")
+    }
 
     // manifest-driven pruned read: the far-off score lives in one bucket
-    val got = Maintenance.prunedRead(spark, statePath, zmPath,
+    val got = ManifestStore.prunedRead(spark, statePath, s0.schema,
       "score", 99000L, 200000L).orderBy("id").collect()
-    val want = spark.read.parquet(statePath)
+    val want = ManifestStore.readState(spark, statePath, s0.schema)
       .filter(col("score") >= 99000L && col("score") <= 200000L)
       .drop(BucketedUpsertSink.BucketCol).orderBy("id").collect()
     assert(got.map(_.toSeq).toSeq === want.map(_.toSeq).toSeq)
     assert(got.map(_.getLong(0)).toSet === Set(5L, 999L))
     // and the prune really narrowed the candidate set
-    val candidates = spark.read.parquet(zmPath)
-      .filter(col("max_score") >= 99000L && col("min_score") <= 200000L)
-      .count()
+    val candidates = after.buckets.values.count { e =>
+      e.stats("score")._2.exists(_ >= 99000L) &&
+        e.stats("score")._1.exists(_ <= 200000L)
+    }
     assert(candidates < nb, s"zone map must rule out buckets, kept $candidates")
   }
 
@@ -283,49 +300,6 @@ class BatchNineOpsSpec extends SparkSpec {
     assert(pruned.toSeq === exact.toSeq)
     assert(candidates.length < manifest.length,
       "the doc_id zone map must rule out at least one bin")
-  }
-
-  test("sink zone map: the pending marker keeps prunedRead exact through " +
-    "the sink-write -> refresh crash window") {
-    import graft.cdc.BucketedUpsertSink
-    import spark.implicits._
-    val root = tmpDir("graft-zm-crash")
-    val statePath = s"$root/state"
-    val zmPath = s"$root/state.zonemap"
-    val nb = 8
-    val s0 = (0L until 200L).map(i => (i, i * 10, s"v$i"))
-      .toDF("id", "score", "payload")
-    BucketedUpsertSink.init(s0, statePath, "id", nb)
-    Maintenance.refreshZoneMap(spark, statePath, zmPath, (0L until nb).toSeq,
-      Seq("score"))
-    // simulate the crash window: mark pending (the pipeline's write-ahead
-    // step), apply the sink write, and CRASH before the refresh
-    graft.cdc.StateCommit.claimMarker(spark, zmPath, ownerId = 42L)
-    val batch = Seq(("update", 5L, 99999L, "v5b"))
-      .toDF("op", "id", "score", "payload")
-    BucketedUpsertSink.applyBatch(spark, statePath, batch, "id", nb)
-    // the stale manifest alone WOULD drop the moved row (the hazard)...
-    val staleCandidates = spark.read.parquet(zmPath)
-      .filter(col("max_score") >= 99000L && col("min_score") <= 200000L).count()
-    assert(staleCandidates === 0L,
-      "precondition: the stale manifest rules out every bucket for this range")
-    // ...but the marker forces the exact unpruned path
-    val got = Maintenance.prunedRead(spark, statePath, zmPath,
-      "score", 99000L, 200000L).collect()
-    assert(got.map(_.getLong(0)).toSet === Set(5L),
-      "pending marker must make the pruned read fall back to the exact filter")
-    // replay heals: refresh + clear, after which pruning is live again and
-    // still exact
-    Maintenance.refreshZoneMap(spark, statePath, zmPath, Seq(
-      batch.select(BucketedUpsertSink.bucketOf(col("id"), nb))
-        .head().getLong(0)), Seq("score"))
-    graft.cdc.StateCommit.clearMarker(spark, zmPath)
-    val healed = Maintenance.prunedRead(spark, statePath, zmPath,
-      "score", 99000L, 200000L).collect()
-    assert(healed.map(_.getLong(0)).toSet === Set(5L))
-    val freshCandidates = spark.read.parquet(zmPath)
-      .filter(col("max_score") >= 99000L && col("min_score") <= 200000L).count()
-    assert(freshCandidates >= 1L && freshCandidates < nb)
   }
 
   // ------------------------------------------------------------ oov rate
@@ -426,110 +400,37 @@ class BatchNineOpsSpec extends SparkSpec {
       "moments must aggregate two-phase")
   }
 
-  test("zone-map pending marker is ownership-aware: a live batch cannot " +
-    "clear a refresh's marker while the full rebuild is pending, a same-id " +
-    "replay still owns, and a torn marker reads FOREIGN — heal-only, " +
-    "never fresh-claimable (r10 review)") {
-    val zmPath = tmpDir("zm-owner") + "/state.zonemap"
-    val pend = new java.io.File(graft.cdc.StateCommit.markerPath(zmPath))
-    // refresh claims first
-    assert(graft.cdc.StateCommit.claimMarker(spark, zmPath, -101L))
-    // a live batch arriving mid-rebuild does NOT own it...
-    assert(!graft.cdc.StateCommit.claimMarker(spark, zmPath, 7L))
-    // ...so its conditional clear must leave the marker up
-    graft.cdc.StateCommit.releaseMarker(spark, zmPath, 7L)
-    assert(pend.exists(), "a non-owner's clear must not un-mark the manifest")
-    // the same batch id re-marking (at-least-once replay) still owns
-    assert(graft.cdc.StateCommit.claimMarker(spark, zmPath, -101L))
-    graft.cdc.StateCommit.releaseMarker(spark, zmPath, -101L)
-    assert(!pend.exists(), "the owner's clear removes the marker")
-    // a TORN marker reads as FOREIGN, never fresh-claimable (r10 review:
-    // a crash inside forceMarker's overwrite can TRUNCATE an orphan that
-    // guarded real unspliced writes — claiming the remains fresh would
-    // launder that guard into a splice-and-release over stale buckets);
-    // it comes down only via the quiesced heal's unconditional clear
-    assert(pend.getParentFile.mkdirs() || pend.getParentFile.exists())
-    java.nio.file.Files.write(pend.toPath, Array.empty[Byte])
-    assert(!graft.cdc.StateCommit.claimMarker(spark, zmPath, 9L),
-      "a torn marker must not be fresh-claimable")
-    graft.cdc.StateCommit.clearMarker(spark, zmPath)
-    assert(!pend.exists(), "the full-publish clear heals a torn marker")
-  }
-
   test("zone map: two concurrent full refreshes of ONE manifest (the " +
     "overlapping refreshAsync shape) both succeed and a complete copy " +
     "wins — invocation-unique staging, no shared .next dir (r9 review)") {
-    import graft.cdc.BucketedUpsertSink
+    import graft.cdc.{ManifestStore, MemoryCdcSource, Pipeline, SinkTasks}
+    import graft.model.{PipelineConfig, SyncConfig}
     import spark.implicits._
-    val root = tmpDir("graft-zmrace")
-    val statePath = s"$root/state"
-    val zmPath = s"$root/state.zonemap"
-    val nb = 8
-    BucketedUpsertSink.init(
-      (0L until 200L).map(i => (i, i * 10, s"v$i"))
-        .toDF("id", "score", "payload"), statePath, "id", nb)
-    // seed a PRIOR manifest first: the racing refreshes must then read it
-    // while the peer swaps it — the lazy-prior FileNotFound race hides
-    // exactly here, never on a first-ever refresh (r9 review)
-    Maintenance.refreshZoneMap(spark, statePath, zmPath,
-      (0L until nb.toLong).toSeq, Seq("score"))
-    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val threads = (1 to 2).map { _ =>
-      new Thread(() => {
-        try Maintenance.refreshZoneMap(spark, statePath, zmPath,
-          (0L until nb.toLong).toSeq, Seq("score"))
-        catch { case t: Throwable => failed.compareAndSet(null, t); () }
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join(60000))
-    assert(failed.get() === null, s"no refresh may fail: ${failed.get()}")
-    val full = Maintenance.bucketZoneMap(spark, statePath, Seq("score"))
-      .collect().map(_.toSeq).toSeq
-    val manifest = spark.read.parquet(zmPath).orderBy("bucket")
-      .collect().map(_.toSeq).toSeq
-    assert(manifest === full,
-      "whichever complete copy won must equal the full recompute")
-  }
-
-  test("mid-swap crash healing across the maintenance readers (review " +
-    "r11): a manifest stranded at .old is restored before refreshZoneMap's " +
-    "prior probe (no touched-only manifest under a released marker), and " +
-    "prunedRead heals a mid-swap state path instead of throwing") {
-    import graft.cdc.{BucketedUpsertSink, StateCommit}
-    import spark.implicits._
-    val root = tmpDir("graft-zm-heal")
-    val statePath = s"$root/state"
-    val zmPath = s"$root/state.zonemap"
-    val nb = 8
-    val s0 = (0L until 200L).map(i => (i, i * 10, s"v$i"))
+    val sinkRoot = tmpDir("graft-zmrace")
+    val statePath = s"$sinkRoot/t"
+    val rows = (0L until 200L).map(i => (i, i * 10, s"v$i"))
       .toDF("id", "score", "payload")
-    BucketedUpsertSink.init(s0, statePath, "id", nb)
-    Maintenance.refreshZoneMap(spark, statePath, zmPath, (0L until nb).toSeq,
-      Seq("score"))
-    // simulate the crash INSIDE a previous manifest swap: live absent,
-    // the complete prior at .old, the writer's marker still up
-    assert(new java.io.File(zmPath).renameTo(new java.io.File(zmPath + ".old")))
-    assert(StateCommit.claimMarker(spark, zmPath, 5L, "L"))
-    // the replayed batch's incremental refresh: pre-fix the exists probe
-    // read "no prior manifest" and published ONLY the touched bucket
-    val batch = Seq(("update", 5L, 99999L, "v5b")).toDF("op", "id", "score", "payload")
-    val touched = batch.select(BucketedUpsertSink.bucketOf(col("id"), nb))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    BucketedUpsertSink.applyBatch(spark, statePath, batch, "id", nb)
-    Maintenance.refreshZoneMap(spark, statePath, zmPath, touched, Seq("score"))
-    StateCommit.releaseMarker(spark, zmPath, 5L)
-    assert(!StateCommit.markerExists(spark, zmPath))
-    val manifest = spark.read.parquet(zmPath).orderBy("bucket")
-      .collect().map(_.toSeq).toSeq
-    val full = Maintenance.bucketZoneMap(spark, statePath, Seq("score"))
-      .collect().map(_.toSeq).toSeq
-    assert(manifest === full,
-      "the healed prior must carry the untouched buckets through the splice")
-    // prunedRead heals a mid-swap STATE path (live absent + complete .old)
-    assert(new java.io.File(statePath).renameTo(new java.io.File(statePath + ".old")))
-    val got = Maintenance.prunedRead(spark, statePath, zmPath,
-      "score", 99000L, 200000L).collect().map(_.getLong(0)).toSet
-    assert(got === Set(5L), s"prunedRead must heal and answer, got $got")
+    val sync = SyncConfig("t", pk = "id", schema = Some(rows.schema))
+    val pipe = new Pipeline(spark,
+      PipelineConfig(Seq(sync), stateBuckets = Some(8),
+        zoneMapCols = Seq("score")),
+      new MemoryCdcSource(spark, Map("t" -> rows)), sinkRoot)
+    try {
+      // seed a PRIOR version first: the racing refreshes then stage while
+      // a published store exists, never on a first-ever refresh
+      pipe.refresh()
+      val tasks = (1 to 2).map(_ => pipe.refreshAsync()("t"))
+      tasks.foreach { id =>
+        val info = SinkTasks.waitForTask(id, timeoutMs = 120000)
+        assert(info.status === "succeeded", s"no refresh may fail: $info")
+      }
+    } finally pipe.releaseLeases()
+    assert(ManifestStore.currentManifest(spark, statePath).get.version === 3L,
+      "both refreshes must publish their own version")
+    assert(manifestStats(statePath) === fullStats(statePath, rows.schema),
+      "whichever complete copy won must equal the full recompute")
+    assert(ManifestStore.readState(spark, statePath, rows.schema)
+      .select("id").as[Long].collect().sorted.toSeq === (0L until 200L))
   }
 
   test("compactApply heals its own interrupted swap on re-run (review " +

@@ -333,36 +333,27 @@ class CliSpec extends SparkSpec {
     assert(Main.leaseLine("t", path2, holder2) === s"LEASE t: free ($path2)")
   }
 
-  test("check --json emits one parseable object per sync with counts, " +
-    "lease identity+age and marker state (r11 verdict #6); the torn " +
-    "sentinel never leaks as a fake owner id") {
+  test("check --json emits one parseable object per sync with counts and " +
+    "lease identity+age (r11 verdict #6)") {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    // held lease + pending (real-owner) marker, counts mismatched
-    val held = om.readTree(Main.checkJsonLine("users", 10L, 9L, Some(42L),
+    // held lease, counts mismatched
+    val held = om.readTree(Main.checkJsonLine("users", 10L, 9L,
       Some(("/s/t/_lease", Some(("driver-a", 1500L))))))
     assert(held.get("table").asText === "users")
     assert(held.get("source").asLong === 10L && held.get("sink").asLong === 9L)
     assert(!held.get("match").asBoolean)
-    assert(held.get("zone_map").get("pending").asBoolean &&
-      !held.get("zone_map").get("torn").asBoolean &&
-      held.get("zone_map").get("owner").asLong === 42L)
     assert(held.get("lease").get("path").asText === "/s/t/_lease" &&
       held.get("lease").get("holder").asText === "driver-a" &&
       held.get("lease").get("heartbeat_age_ms").asLong === 1500L)
-    // free lease, no marker, counts matching
-    val free = om.readTree(Main.checkJsonLine("t", 5L, 5L, None,
+    // free lease, counts matching
+    val free = om.readTree(Main.checkJsonLine("t", 5L, 5L,
       Some(("/s/t/_lease", None))))
     assert(free.get("match").asBoolean)
-    assert(!free.get("zone_map").get("pending").asBoolean)
     assert(free.get("lease").get("holder").isNull)
-    // TORN marker: owner must be null, never the Long.MinValue sentinel
-    val torn = om.readTree(Main.checkJsonLine("t", 5L, 5L,
-      Some(Long.MinValue), None))
-    assert(torn.get("zone_map").get("torn").asBoolean &&
-      torn.get("zone_map").get("owner").isNull)
-    assert(torn.get("lease").isNull)
+    // no lease entry at all
+    assert(om.readTree(Main.checkJsonLine("t", 5L, 5L, None)).get("lease").isNull)
     // a quote/control char in identity stays valid JSON (escape path)
-    val esc = om.readTree(Main.checkJsonLine("t", 1L, 1L, None,
+    val esc = om.readTree(Main.checkJsonLine("t", 1L, 1L,
       Some(("/p", Some(("we\"ird\nid", 1L))))))
     assert(esc.get("lease").get("holder").asText === "we\"ird\nid")
   }

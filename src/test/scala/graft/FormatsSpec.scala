@@ -155,4 +155,27 @@ class FormatsSpec extends SparkSpec {
         s"doc $id: staged file must decode through the real codec")
     }
   }
+
+  test("PNG encode and decode leave ImageIO's JVM-global cache flag " +
+    "untouched, and the encoded bytes stay identical") {
+    import javax.imageio.ImageIO
+    val prev = ImageIO.getUseCache
+    ImageIO.setUseCache(true)
+    try {
+      val payloads = graft.ops.Multimodal.pngView(spark, sf, maxId = Some(64L))
+        .collect().sortBy(_.doc_id)
+      assert(payloads.length === 64)
+      val decoded = graft.ops.Multimodal.decodePng(spark, sf)
+        .filter(col("doc_id") < 64L).collect()
+      assert(decoded.length === 64 && decoded.forall(_.is_png))
+      assert(ImageIO.getUseCache,
+        "the codec tier must not flip ImageIO's global useCache flag")
+      // MD5 over the concatenated payloads of doc_ids 0..63, pinned from
+      // the encoder's output before the stream wrapping changed
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+      payloads.foreach(r => md5.update(r.payload))
+      assert(md5.digest().map("%02x".format(_)).mkString ===
+        "b23aa7439a3d69cdcf81e9494fc2b33e")
+    } finally ImageIO.setUseCache(prev)
+  }
 }

@@ -162,6 +162,15 @@ class OpsSpec extends SparkSpec {
     assert(pfx9 === base9)
   }
 
+  test("prefix-filtered ngram tier leaves no cached or checkpointed RDD " +
+    "behind") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Dedup.ngramJaccardPrefix(spark, sf).count()
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert(after === before,
+      s"leaked persistent RDDs: ${(after -- before).toSeq.sorted}")
+  }
+
   test("near-dup clusters are consistent with the pair graph") {
     val pairs = Dedup.ngramJaccard(spark, sf).select("doc_a", "doc_b")
       .as[(Long, Long)].collect()

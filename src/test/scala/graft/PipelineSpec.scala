@@ -12,15 +12,25 @@ class PipelineSpec extends SparkSpec {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
-  // ONE comparison discipline for "the manifest equals a full recompute"
-  // (review r11: five inlined copies had already started varying)
-  private def assertManifestMatchesFull(zm: String, statePath: String,
+  // ONE comparison discipline for "the manifest's per-bucket stats equal
+  // a full recompute" (review r11: five inlined copies had already started
+  // varying): bucket -> (row count, min score, max score)
+  private def assertManifestMatchesFull(statePath: String, nb: Int,
                                         clue: String): Unit = {
-    val manifest = spark.read.parquet(zm).orderBy("bucket")
-      .collect().map(_.toSeq).toSeq
-    val full = ops.Maintenance.bucketZoneMap(spark, statePath, Seq("score"))
-      .collect().map(_.toSeq).toSeq
+    import org.apache.spark.sql.functions._
+    val m = ManifestStore.currentManifest(spark, statePath).get
+    val manifest = m.buckets.toSeq.sortBy(_._1).map { case (b, e) =>
+      (b, e.nRows, e.stats("score")._1, e.stats("score")._2) }
+    val full = ManifestStore.readState(spark, statePath,
+        StructType(Seq(StructField("score", LongType))))
+      .groupBy(col(BucketedUpsertSink.BucketCol))
+      .agg(count(lit(1)), min(col("score")), max(col("score")))
+      .collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long]),
+        Option(r.get(3)).map(_.asInstanceOf[Long])))
+      .sortBy(_._1)
     assert(manifest === full, clue)
+    assert(m.nbuckets === nb, clue)
   }
 
   test("A1 mysql scenario: insert syncs with datetime->epoch coercion") {
@@ -249,14 +259,15 @@ class PipelineSpec extends SparkSpec {
       ChangeEvent("delete", "t", 4, ts("2024-01-01 00:01:01"), """{"id": 2}"""))
     val q2 = pipe.start(ckpt); q2.processAllAvailable(); q2.stop()
     assert(pipe.sinkState(sync).collect().toSeq === Seq(Row(1, "a2")))
-    // the state dir really is bucket-partitioned
-    val dirs = new java.io.File(s"$sinkRoot/t").listFiles().map(_.getName)
-    assert(dirs.exists(_.startsWith("_bucket=")), dirs.mkString(","))
+    // the state really is bucketed: a 4-bucket manifest store whose one
+    // live bucket holds the surviving row
+    val m = ManifestStore.currentManifest(spark, s"$sinkRoot/t").get
+    assert(m.nbuckets === 4)
+    assert(m.buckets.values.map(_.nRows).toSeq === Seq(1L), m.buckets)
   }
 
   test("zoneMapCols: the sink's manifest is maintained incrementally per " +
     "micro-batch and always equals a full recompute") {
-    import org.apache.spark.sql.functions.col
     val sinkRoot = tmpDir("sink")
     val ckpt = tmpDir("ckpt")
     val sync = SyncConfig("t", pk = "id", schema = Some(StructType(Seq(
@@ -270,168 +281,29 @@ class PipelineSpec extends SparkSpec {
       ChangeEvent("create", "t", 2, ts("2024-01-01 00:00:01"), """{"id": 2, "score": 20}"""),
       ChangeEvent("create", "t", 3, ts("2024-01-01 00:00:02"), """{"id": 3, "score": 30}"""))
     val q1 = pipe.start(ckpt); q1.processAllAvailable(); q1.stop()
-    val zm = pipe.zoneMapPath(sync)
-    def manifest() = spark.read.parquet(zm).orderBy("bucket").collect().map(_.toSeq).toSeq
-    def full() = ops.Maintenance
-      .bucketZoneMap(spark, s"$sinkRoot/t", Seq("score")).collect().map(_.toSeq).toSeq
-    assert(manifest() === full(), "manifest after the first batch")
+    val statePath = s"$sinkRoot/t"
+    assert(ManifestStore.currentManifest(spark, statePath).get.statCols ===
+      Seq("score"), "a stat column missing from the payload is skipped")
+    assertManifestMatchesFull(statePath, 4, "manifest after the first batch")
     // second batch: update one pk far out of range, delete another
     src.addEvents(
       ChangeEvent("update", "t", 4, ts("2024-01-01 00:01:00"), """{"id": 1, "score": 9999}"""),
       ChangeEvent("delete", "t", 5, ts("2024-01-01 00:01:01"), """{"id": 2}"""))
     val q2 = pipe.start(ckpt); q2.processAllAvailable(); q2.stop()
-    assert(manifest() === full(), "incremental splice equals full recompute")
+    assertManifestMatchesFull(statePath, 4,
+      "incremental per-commit stats equal the full recompute")
     // manifest-driven pruned read returns the exact survivor
-    val got = ops.Maintenance.prunedRead(spark, s"$sinkRoot/t", zm,
+    val got = ManifestStore.prunedRead(spark, statePath, StructType(Nil),
       "score", 1000L, 100000L).collect()
     assert(got.map(_.getLong(1)).toSeq === Seq(9999L))
-  }
-
-  test("zone-map marker lifecycle under a foreign owner: a live batch " +
-    "never clears it (its window rides the pending rebuild's quiesce " +
-    "check), reads stay exact on the unpruned fallback, and the next " +
-    "refresh's quiesced full rebuild heals even an ORPHANED marker " +
-    "(r9 review)") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val sinkRoot = tmpDir("sink")
-    val ckpt = tmpDir("ckpt")
-    val sync = SyncConfig("t", pk = "id", schema = Some(StructType(Seq(
-      StructField("id", IntegerType), StructField("score", LongType)))))
-    val snapshot = Map("t" ->
-      Seq((1, 10L), (2, 20L)).toDF("id", "score"))
-    val src = new MemoryCdcSource(spark, snapshot)
-    val pipe = new Pipeline(spark,
-      PipelineConfig(Seq(sync), stateBuckets = Some(4),
-        zoneMapCols = Seq("score")), src, sinkRoot)
-    src.addEvents(
-      ChangeEvent("create", "t", 1, ts("2024-01-01 00:00:00"),
-        """{"id": 1, "score": 10}"""))
-    val q1 = pipe.start(ckpt); q1.processAllAvailable(); q1.stop()
-    val zm = pipe.zoneMapPath(sync)
-    val pend = new java.io.File(StateCommit.markerPath(zm))
-    // orphan a marker under a crashed foreign owner
-    assert(StateCommit.claimMarker(spark, zm, -999L))
-    // a live batch applies fine but must NOT clear the foreign marker
-    src.addEvents(
-      ChangeEvent("create", "t", 2, ts("2024-01-01 00:00:01"),
-        """{"id": 2, "score": 20}"""))
-    val q2 = pipe.start(ckpt); q2.processAllAvailable(); q2.stop()
-    assert(pend.exists(), "a batch never clears a foreign marker")
-    // marked => prunedRead takes the exact unpruned path: the new row is
-    // visible even though no splice described its bucket
-    val got = ops.Maintenance.prunedRead(spark, s"$sinkRoot/t", zm,
-      "score", 15L, 25L).collect()
-    assert(got.map(_.getLong(1)).toSeq === Seq(20L),
-      "reads stay exact while the manifest is marked stale")
-    // the next refresh's quiesced full rebuild clears ANY marker
-    pipe.refresh()
-    assert(!pend.exists(),
-      "a quiesced full rebuild heals the orphaned marker")
-    assertManifestMatchesFull(zm, s"$sinkRoot/t",
-      "the healed manifest equals a full recompute")
-  }
-
-  test("orphaned refresh marker self-heals: after 3 consecutive batches " +
-    "under a foreign NEGATIVE owner the stream runs a quiesced full " +
-    "rebuild, restoring pruned reads; zoneMapStatus surfaces the owner " +
-    "(ADVICE r10)") {
-    import spark.implicits._
-    val sinkRoot = tmpDir("sink-orphan")
-    val ckpt = tmpDir("ckpt-orphan")
-    val sync = SyncConfig("t", pk = "id", schema = Some(StructType(Seq(
-      StructField("id", IntegerType), StructField("score", LongType)))))
-    val src = new MemoryCdcSource(spark,
-      Map("t" -> Seq((1, 10L)).toDF("id", "score")))
-    val pipe = new Pipeline(spark,
-      PipelineConfig(Seq(sync), stateBuckets = Some(4),
-        zoneMapCols = Seq("score")), src, sinkRoot)
-    // the heal is gated on batch count AND continuous foreign age (a
-    // cadence-independent guard); zero the age gate for the spec
-    val prevHealMs = StateCommit.orphanMarkerHealMinMs
-    StateCommit.orphanMarkerHealMinMs = 0L
-    try {
-    src.addEvents(ChangeEvent("create", "t", 1, ts("2024-01-01 00:00:00"),
-      """{"id": 1, "score": 10}"""))
-    val q0 = pipe.start(ckpt); q0.processAllAvailable(); q0.stop()
-    val zm = pipe.zoneMapPath(sync)
-    val pend = new java.io.File(StateCommit.markerPath(zm))
-    // simulate a refresh that crashed between commitRefreshSwap (which
-    // force-owns the marker with a fresh negative id) and rebuildZoneMap:
-    // the orphan is owned by an id freshOwnerId will never mint again
-    StateCommit.forceMarker(spark, zm, -99999L)
-    assert(pipe.zoneMapStatus() === Map("t" -> Some(-99999L)),
-      "check surfaces the pending owner while the marker is up")
-    // two batches observe the foreign marker: no clear yet
-    for (i <- 2 to 3) {
-      src.addEvents(ChangeEvent("create", "t", i.toLong,
-        ts(s"2024-01-01 00:00:0$i"), s"""{"id": $i, "score": ${i * 10}}"""))
-      val q = pipe.start(ckpt); q.processAllAvailable(); q.stop()
-    }
-    assert(pend.exists(),
-      s"below the ${StateCommit.OrphanMarkerHealStreak}-batch streak the " +
-        "foreign marker must stand")
-    // third consecutive observation: the batch escalates to the quiesced
-    // full rebuild and the orphan clears
-    src.addEvents(ChangeEvent("create", "t", 4, ts("2024-01-01 00:00:04"),
-      """{"id": 4, "score": 40}"""))
-    val q3 = pipe.start(ckpt); q3.processAllAvailable(); q3.stop()
-    assert(!pend.exists(),
-      "the orphaned marker must self-heal after the streak threshold")
-    assert(pipe.zoneMapStatus() === Map("t" -> None))
-    assertManifestMatchesFull(zm, s"$sinkRoot/t",
-      "the healed manifest equals a full recompute")
-    // and pruned reads are pruned again AND exact
-    val got = ops.Maintenance.prunedRead(spark, s"$sinkRoot/t", zm,
-      "score", 25L, 45L).collect().map(_.getLong(1)).sorted.toSeq
-    assert(got === Seq(30L, 40L))
-    } finally StateCommit.orphanMarkerHealMinMs = prevHealMs
-  }
-
-  test("a POSITIVE-id orphan (an abandoned batch marker whose owner never " +
-    "replays) also trips the streak heal through the real pipeline path " +
-    "(r10: the heal was widened beyond negative refresh ids)") {
-    import spark.implicits._
-    val sinkRoot = tmpDir("sink-posorphan")
-    val ckpt = tmpDir("ckpt-posorphan")
-    val sync = SyncConfig("t", pk = "id", schema = Some(StructType(Seq(
-      StructField("id", IntegerType), StructField("score", LongType)))))
-    val src = new MemoryCdcSource(spark,
-      Map("t" -> Seq((1, 10L)).toDF("id", "score")))
-    val pipe = new Pipeline(spark,
-      PipelineConfig(Seq(sync), stateBuckets = Some(4),
-        zoneMapCols = Seq("score")), src, sinkRoot)
-    val prevHealMs = StateCommit.orphanMarkerHealMinMs
-    StateCommit.orphanMarkerHealMinMs = 0L
-    try {
-      src.addEvents(ChangeEvent("create", "t", 1, ts("2024-01-01 00:00:00"),
-        """{"id": 1, "score": 10}"""))
-      val q0 = pipe.start(ckpt); q0.processAllAvailable(); q0.stop()
-      val zm = pipe.zoneMapPath(sync)
-      val pend = new java.io.File(StateCommit.markerPath(zm))
-      // an abandoned-checkpoint batch's marker: POSITIVE id no future
-      // batch of THIS stream will mint (batch ids restart from the
-      // checkpoint, but this simulates a marker from a discarded
-      // checkpoint's high batch id)
-      StateCommit.forceMarker(spark, zm, 987654L)
-      for (i <- 2 to 4) {
-        src.addEvents(ChangeEvent("create", "t", i.toLong,
-          ts(s"2024-01-01 00:00:0$i"), s"""{"id": $i, "score": ${i * 10}}"""))
-        val q = pipe.start(ckpt); q.processAllAvailable(); q.stop()
-      }
-      assert(!pend.exists(),
-        "a positive-id orphan must self-heal via the widened streak")
-      assertManifestMatchesFull(zm, s"$sinkRoot/t",
-        "the healed manifest equals a full recompute")
-    } finally StateCommit.orphanMarkerHealMinMs = prevHealMs
   }
 
   test("refresh of a bucketed sink keeps the bucket layout (settings copy on swap)") {
     // the reference copies the live index's settings onto the tmp index
     // before the swap (meili.py:43-49); the layout analog here is the
-    // bucket partitioning. A flat refresh would make the next batch's
-    // hasBuckets probe miss, bootstrap an empty state, and silently drop
-    // the refreshed rows in every touched bucket.
+    // bucket modulus. A refresh that lost it would make the next batch
+    // merge against the wrong buckets and silently drop the refreshed
+    // rows in every bucket it touches.
     val sinkRoot = tmpDir("sink")
     val ckpt = tmpDir("ckpt")
     val sync = SyncConfig("region", pk = "r_regionkey", full = true,
@@ -445,9 +317,9 @@ class PipelineSpec extends SparkSpec {
       PipelineConfig(Seq(sync), stateBuckets = Some(4)), src, sinkRoot)
     pipe.backfillIfNeeded()
     assert(pipe.refresh()("region") === 5L)
-    val dirs = new java.io.File(s"$sinkRoot/region").listFiles().map(_.getName)
-    assert(dirs.exists(_.startsWith("_bucket=")),
-      s"refresh lost the bucket layout: ${dirs.mkString(",")}")
+    val m = ManifestStore.currentManifest(spark, s"$sinkRoot/region")
+    assert(m.map(_.nbuckets) === Some(4) && m.map(_.version) === Some(2L),
+      s"refresh lost the bucket layout: $m")
     // and the next micro-batch upserts AGAINST the refreshed state instead
     // of bootstrapping empty: the other four regions must survive
     src.addEvents(ChangeEvent("update", "region", 1,
@@ -474,61 +346,5 @@ class PipelineSpec extends SparkSpec {
     assert(pipe.check()("region") === ((5L, 5L)))
     val chk = ConsistencyCheck.check(snapshot("region"), pipe.sinkState(sync))
     assert(chk.ok)
-  }
-
-  test("checkpoint-reset lineage fence (ADVICE r10): a batch id reused " +
-    "against an OLD lineage's orphaned marker reads FOREIGN end-to-end — " +
-    "no splice-and-release over the orphan — while a SAME-lineage crash " +
-    "replay still re-owns and heals instantly") {
-    import spark.implicits._
-    val sinkRoot = tmpDir("sink-lineage")
-    val ckpt = tmpDir("ckpt-lineage")
-    val sync = SyncConfig("t", pk = "id", schema = Some(StructType(Seq(
-      StructField("id", IntegerType), StructField("score", LongType)))))
-    val src = new MemoryCdcSource(spark)
-    val pipe = new Pipeline(spark,
-      PipelineConfig(Seq(sync), stateBuckets = Some(4),
-        zoneMapCols = Seq("score")), src, sinkRoot)
-    val zm = pipe.zoneMapPath(sync)
-    val pend = new java.io.File(StateCommit.markerPath(zm))
-    // an orphan from a DISCARDED checkpoint's crashed batch 0: its marker
-    // records the old lineage. Pre-fix, the fresh checkpoint's batch 0
-    // matched it by id alone, spliced ITS buckets, and released — the old
-    // orphan's unspliced buckets went stale under no marker.
-    assert(StateCommit.claimMarkerDetailed(spark, zm, 0L, "discarded-lineage")
-      === StateCommit.FreshClaim)
-    src.addEvents(ChangeEvent("create", "t", 1, ts("2024-01-01 00:00:00"),
-      """{"id": 1, "score": 10}"""))
-    val q1 = pipe.start(ckpt); q1.processAllAvailable(); q1.stop()
-    assert(pend.exists(),
-      "the new lineage's batch 0 must NOT release the old lineage's orphan")
-    assert(StateCommit.hasForeignWrite(spark, zm),
-      "the denied batch must leave write-ahead sidecar evidence")
-    assert(StateCommit.markerOwner(spark, zm) === Some(0L))
-    // the row itself applied; reads stay exact on the unpruned fallback
-    assert(pipe.sinkState(sync).collect().toSeq === Seq(Row(1, 10L)))
-    assert(ops.Maintenance.prunedRead(spark, s"$sinkRoot/t", zm,
-      "score", 5L, 15L).collect().map(_.getLong(1)).toSeq === Seq(10L))
-    // the quiesced full rebuild (refresh) heals marker + sidecar
-    val snapshotSrc = new MemoryCdcSource(spark,
-      Map("t" -> Seq((1, 10L)).toDF("id", "score")))
-    val pipe2 = new Pipeline(spark,
-      PipelineConfig(Seq(sync), stateBuckets = Some(4),
-        zoneMapCols = Seq("score")), snapshotSrc, sinkRoot)
-    pipe2.refresh()
-    assert(!pend.exists() && !StateCommit.hasForeignWrite(spark, zm))
-    // SAME-lineage crash replay keeps the instant fast path: orphan a
-    // marker carrying THIS checkpoint's lineage and the NEXT batch id (1),
-    // as a crash between that batch's claim and its splice would
-    val lineage = Pipeline.checkpointLineage(spark, ckpt)
-    assert(StateCommit.claimMarkerDetailed(spark, zm, 1L, lineage)
-      === StateCommit.FreshClaim)
-    src.addEvents(ChangeEvent("create", "t", 2, ts("2024-01-01 00:00:01"),
-      """{"id": 2, "score": 20}"""))
-    val q2 = pipe.start(ckpt); q2.processAllAvailable(); q2.stop()
-    assert(!pend.exists(),
-      "a same-id, same-lineage replay must re-own, splice, and release")
-    assertManifestMatchesFull(zm, s"$sinkRoot/t",
-      "the fast-path splice left an exact manifest")
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 /** The full operational journey against ONE state dir (r9 verdict #5):
   * start (backfill + stream) → crash mid-batch → restart (idempotent
   * replay) → poison rows quarantined → operator repair → `replay` (with
-  * both the fresh and the superseded outcome) → `refresh` (staged swap +
+  * both the fresh and the superseded outcome) → `refresh` (staged publish +
   * snapshot floor) → post-refresh stale replay fenced by the floor →
   * `check` — asserting the sink equals the hand-derived oracle state at
   * EVERY stage. The pieces each have their own specs (CkptCrash,
@@ -64,8 +64,9 @@ class SoakSpec extends SparkSpec {
     val q1 = pipe.start(ckpt); q1.processAllAvailable(); q1.stop()
     assert(sinkRows() === Set((1, "a", 11L), (2, "b", 20L), (4, "d", 40L)),
       "stage 1: backfill applied, create/partial-update/delete all landed")
-    assert(pipe.zoneMapStatus() === Map("t" -> None),
-      "stage 1: the manifest is clean after the batch's own splice")
+    assert(ManifestStore.currentManifest(spark, s"$sinkRoot/t")
+      .map(_.rowCount) === Some(3L),
+      "stage 1: the manifest's row counts describe the batch's own commit")
 
     // ---- stage 2: poison batch, then crash INSIDE it and replay ----------
     feed(
@@ -113,18 +114,16 @@ class SoakSpec extends SparkSpec {
     assert(sinkRows() === expectedStage3,
       "stage 3: the fresh repair landed; the stale one did NOT clobber id 4")
 
-    // ---- stage 4: refresh from new source truth (swap + floor) -----------
+    // ---- stage 4: refresh from new source truth (publish + floor) --------
     writeTruth(Seq((1, "a", 100L), (2, "b", 200L), (5, "late", 500L)))
     assert(pipe.refresh() === Map("t" -> 3L))
     assert(sinkRows() === Set((1, "a", 100L), (2, "b", 200L), (5, "late", 500L)),
       "stage 4: the sink equals the refreshed snapshot exactly")
-    assert(pipe.zoneMapStatus() === Map("t" -> None),
-      "stage 4: the quiesced rebuild cleared the marker")
     assert(OffsetWatermark.snapshotFloor(spark, s"$sinkRoot/t") >= 203L,
       "stage 4: the snapshot floor covers every pre-refresh observation")
-    // pruned reads ride the healed manifest and stay exact
-    val pruned = graft.ops.Maintenance.prunedRead(spark, s"$sinkRoot/t",
-      pipe.zoneMapPath(sync), "score", 150L, 600L)
+    // pruned reads ride the refreshed manifest's stats and stay exact
+    val pruned = ManifestStore.prunedRead(spark, s"$sinkRoot/t",
+      StructType(Nil), "score", 150L, 600L)
       .select("id").collect().map(_.getInt(0)).toSet
     assert(pruned === Set(2, 5))
 

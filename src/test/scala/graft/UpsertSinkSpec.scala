@@ -3,6 +3,7 @@ package graft
 import graft.cdc.{StateCommit, Transforms, UpsertSink}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 class UpsertSinkSpec extends SparkSpec {
   import spark.implicits._
@@ -75,18 +76,27 @@ class UpsertSinkSpec extends SparkSpec {
     assert(Files.exists(Paths.get(live))) // healed on disk, not just in-memory
   }
 
+  /** Seed a bucketed (manifest-layout) store with `rows` as creates. */
+  private def seedBucketed(path: String, rows: org.apache.spark.sql.DataFrame,
+                           numBuckets: Int): Unit =
+    graft.cdc.BucketedUpsertSink.applyBatch(spark, path,
+      rows.withColumn("op", lit("create")), "id", numBuckets,
+      schema = Some(rows.schema))
+
   test("bucketed sink rewrites only the touched buckets") {
-    import graft.cdc.BucketedUpsertSink
+    import graft.cdc.{BucketedUpsertSink, ManifestStore}
     val path = tmpDir("bsink") + "/state"
     val s0 = (1 to 200).map(i => (i, s"name$i", s"city$i")).toDF("id", "name", "city")
-    BucketedUpsertSink.init(s0, path, "id", numBuckets = 8)
-    def bucketFiles(): Map[String, Long] = {
+    seedBucketed(path, s0, numBuckets = 8)
+    def dataFiles(): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
       walk(new java.io.File(path)).filter(_.getName.endsWith(".parquet"))
         .map(f => f.getPath -> f.lastModified()).toMap
     }
-    val before = bucketFiles()
+    val before = dataFiles()
+    val m0 = ManifestStore.currentManifest(spark, path).get
+    assert(m0.buckets.size === 8)
     // one update + one delete; both pks land in <= 2 of the 8 buckets
     val batch = changes(("update", 7, "seven", null), ("delete", 8, null, null))
     BucketedUpsertSink.applyBatch(spark, path, batch, "id", numBuckets = 8)
@@ -94,32 +104,37 @@ class UpsertSinkSpec extends SparkSpec {
     assert(state.count() === 199)
     assert(state.filter(col("id") === 7).head() === Row(7, "seven", "city7"))
     assert(state.filter(col("id") === 8).count() === 0)
-    // untouched bucket files are bit-for-bit the same files (same mtime)
-    val after = bucketFiles()
-    val untouchedSurvivors = before.keySet.intersect(after.keySet)
-    assert(untouchedSurvivors.nonEmpty, "expected untouched bucket files to survive")
-    untouchedSurvivors.foreach(p => assert(before(p) === after(p), s"file $p rewritten"))
-    // at least one bucket dir must have survived completely (8 buckets, 2 pks)
-    assert(untouchedSurvivors.size >= before.size / 2, s"${untouchedSurvivors.size}/${before.size}")
+    // only the touched buckets point at new files; every other bucket's
+    // entry carries forward verbatim
+    val m1 = ManifestStore.currentManifest(spark, path).get
+    val rewritten = m0.buckets.keySet.filter(b => !m1.buckets.get(b).contains(m0.buckets(b)))
+    assert(rewritten.nonEmpty && rewritten.size <= 2, s"rewritten buckets: $rewritten")
+    // and no existing file was rewritten or removed (same mtime)
+    val after = dataFiles()
+    before.foreach { case (p, t) =>
+      assert(after.get(p).contains(t), s"file $p rewritten or removed")
+    }
   }
 
   test("bucketed sink: deleting a bucket's last row drops its partition") {
-    import graft.cdc.BucketedUpsertSink
+    import graft.cdc.{BucketedUpsertSink, ManifestStore}
     val path = tmpDir("bsink2") + "/state"
-    BucketedUpsertSink.init(Seq((1, "only", "row")).toDF("id", "name", "city"),
-      path, "id", numBuckets = 4)
-    val schema = Seq((1, "only", "row")).toDF("id", "name", "city").schema
+    val s0 = Seq((1, "only", "row")).toDF("id", "name", "city")
+    seedBucketed(path, s0, numBuckets = 4)
+    assert(ManifestStore.currentManifest(spark, path).get.buckets.size === 1)
     BucketedUpsertSink.applyBatch(spark, path,
       changes(("delete", 1, null, null)), "id", numBuckets = 4)
-    assert(BucketedUpsertSink.currentState(spark, path, schema).count() === 0)
+    assert(BucketedUpsertSink.currentState(spark, path, s0.schema).count() === 0)
+    assert(ManifestStore.currentManifest(spark, path).get.buckets.isEmpty,
+      "the emptied bucket must leave the manifest")
   }
 
   test("bucketed sink is idempotent under batch replay") {
     import graft.cdc.BucketedUpsertSink
     val path = tmpDir("bsink3") + "/state"
-    BucketedUpsertSink.init(
+    seedBucketed(path,
       (1 to 20).map(i => (i, s"n$i", s"c$i")).toDF("id", "name", "city"),
-      path, "id", numBuckets = 4)
+      numBuckets = 4)
     val batch = changes(("update", 3, "three", null), ("create", 21, "new", "here"),
       ("delete", 5, null, null))
     val schema3 = state((0, "x", "y")).schema
@@ -151,15 +166,17 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("bucketed sink: schema evolution rewrites every bucket onto the new schema") {
-    import graft.cdc.BucketedUpsertSink
+    import graft.cdc.{BucketedUpsertSink, ManifestStore}
     val path = tmpDir("bsinkevo") + "/state"
-    BucketedUpsertSink.init(
+    seedBucketed(path,
       (1 to 40).map(i => (i, s"n$i", s"c$i")).toDF("id", "name", "city"),
-      path, "id", numBuckets = 4)
+      numBuckets = 4)
     val batch = Seq(("update", 3, "three", "gold"))
       .toDF("op", "id", "name", "segment")
     BucketedUpsertSink.applyBatch(spark, path, batch, "id", numBuckets = 4)
-    val got = spark.read.parquet(path).drop(BucketedUpsertSink.BucketCol)
+    val evolved = StructType(state().schema.fields :+
+      StructField("segment", StringType))
+    val got = BucketedUpsertSink.currentState(spark, path, evolved)
     assert(got.columns.sorted.toSeq === Seq("city", "id", "name", "segment"))
     assert(got.count() === 40)
     assert(got.filter(col("id") === 3).head().getAs[String]("segment") === "gold")
@@ -168,16 +185,14 @@ class UpsertSinkSpec extends SparkSpec {
       .filter(col("segment").isNotNull).count() === 0)
     // per-DIR footer check (review r11): the null-count assertion above is
     // vacuous under the touched-bucket-only regression — parquet reads a
-    // MISSING column as null too. Each bucket dir's own footer must carry
-    // the evolved column.
-    val bucketDirs = new java.io.File(path).listFiles()
-      .filter(f => f.isDirectory &&
-        f.getName.startsWith(BucketedUpsertSink.BucketCol + "="))
-    assert(bucketDirs.length === 4, bucketDirs.map(_.getName).toSeq)
-    bucketDirs.foreach { d =>
-      val cols = spark.read.parquet(d.getPath).columns.toSet
+    // MISSING column as null too. Each live bucket dir's own footer must
+    // carry the evolved column.
+    val m = ManifestStore.currentManifest(spark, path).get
+    assert(m.buckets.size === 4, m.buckets.keys)
+    m.buckets.values.foreach { e =>
+      val cols = spark.read.parquet(s"$path/${e.relDir}").columns.toSet
       assert(cols.contains("segment"),
-        s"bucket dir ${d.getName} was not rewritten onto the evolved " +
+        s"bucket dir ${e.relDir} was not rewritten onto the evolved " +
           s"schema (footer columns: $cols)")
     }
     // and the incremental per-bucket path resumes on the new schema
@@ -185,7 +200,7 @@ class UpsertSinkSpec extends SparkSpec {
       Seq(("update", 7, "seven", "silver")).toDF("op", "id", "name", "segment"),
       "id", numBuckets = 4)
     val after = BucketedUpsertSink.currentState(spark, path,
-      got.schema).filter(col("id") === 7).head()
+      evolved).filter(col("id") === 7).head()
     assert(after.getAs[String]("segment") === "silver")
   }
 
@@ -205,22 +220,25 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("bucketed sink: interrupted evolution swap heals instead of losing the state") {
-    import graft.cdc.BucketedUpsertSink
+    import graft.cdc.{BucketedUpsertSink, ManifestStore}
     val path = tmpDir("bsinkcrash") + "/state"
-    BucketedUpsertSink.init(
-      (1 to 10).map(i => (i, s"n$i", s"c$i")).toDF("id", "name", "city"),
-      path, "id", numBuckets = 4)
-    // simulate the crash window between the two renames: live moved aside,
-    // next never moved in
+    // a store in the retired in-place bucket-dir layout whose last swap
+    // crashed between the two renames: live moved aside, next never moved
+    // in
+    (1 to 10).map(i => (i, s"n$i", s"c$i")).toDF("id", "name", "city")
+      .withColumn(BucketedUpsertSink.BucketCol,
+        BucketedUpsertSink.bucketOf(col("id"), 4))
+      .write.partitionBy(BucketedUpsertSink.BucketCol).parquet(path)
     import java.nio.file.{Files, Paths}
     Files.move(Paths.get(path), Paths.get(path + ".old"))
     assert(!Files.exists(Paths.get(path)))
-    // the next batch must heal and apply against the FULL pre-crash state,
-    // not bootstrap an empty one
+    // the next batch must heal and migrate the FULL pre-crash state, not
+    // bootstrap an empty one
     val schema = Seq((0, "x", "y")).toDF("id", "name", "city").schema
     BucketedUpsertSink.applyBatch(spark, path,
       changes(("update", 3, "three", null)), "id", numBuckets = 4,
       schema = Some(schema))
+    assert(ManifestStore.isManifestStore(spark, path))
     val state = BucketedUpsertSink.currentState(spark, path, schema)
     assert(state.count() === 10) // nothing lost
     assert(state.filter(col("id") === 3).head().getString(1) === "three")

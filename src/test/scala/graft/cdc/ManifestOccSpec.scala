@@ -47,7 +47,7 @@ class ManifestOccSpec extends SparkSpec {
   private def seed(path: String, rows: (Int, Long)*): Unit =
     BucketedUpsertSink.applyBatch(spark, path,
       rows.toSeq.toDF("id", "score").withColumn("op", lit("create")),
-      "id", N, Some(payload), manifest = true, statCols = Seq("score"))
+      "id", N, Some(payload), Seq("score"))
 
   private def stateRows(path: String): Set[(Int, Long)] =
     ManifestStore.readState(spark, path, payload).drop(B)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The manifest-versioned immutable-file sink layout (r12 verdict #1):
-  * merge semantics identical to the bucket-dir layout, physics different —
+  * merge semantics identical to the flat sink's, physics different —
   * commits only ADD files, one atomic manifest rename publishes data +
   * per-bucket zone-map stats, vacuum retention bounds disk. These specs pin
   * the semantics equality, the immutability contract (the property that
@@ -25,7 +25,7 @@ class ManifestSinkSpec extends SparkSpec {
   private def applyM(path: String, changes: org.apache.spark.sql.DataFrame,
                      n: Int = 4, statCols: Seq[String] = Seq("score")): Unit =
     BucketedUpsertSink.applyBatch(spark, path, changes, "id", n,
-      Some(payload), manifest = true, statCols = statCols)
+      Some(payload), statCols)
 
   private def stateRows(path: String): Set[(Int, Long)] =
     ManifestStore.readState(spark, path, payload)
@@ -47,21 +47,18 @@ class ManifestSinkSpec extends SparkSpec {
   }
 
   test("manifest layout: same batch sequence, same final state as the " +
-    "bucket-dir layout (create / partial update / delete / re-create)") {
+    "flat sink's merge (create / partial update / delete / re-create)") {
     val mPath = tmpDir("mequal") + "/m"
-    val bPath = tmpDir("mequal") + "/b"
     val batches = Seq(
       batchDf(("create", 1, 10L), ("create", 2, 20L), ("create", 3, 30L)),
       batchDf(("update", 1, 11L), ("delete", 2, null)),
       batchDf(("create", 2, 200L), ("update", 3, 33L), ("create", 9, 90L)))
-    batches.foreach { b =>
-      applyM(mPath, b)
-      BucketedUpsertSink.applyBatch(spark, bPath, b, "id", 4, Some(payload))
-    }
-    val fromBucketDirs = spark.read.parquet(bPath)
-      .drop(BucketedUpsertSink.BucketCol)
+    batches.foreach(applyM(mPath, _))
+    val flat = batches.foldLeft(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], payload))(
+        (state, b) => UpsertSink.applyBatch(state, b, "id"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-    assert(stateRows(mPath) === fromBucketDirs)
+    assert(stateRows(mPath) === flat)
     assert(stateRows(mPath) === Set((1, 11L), (2, 200L), (3, 33L), (9, 90L)))
   }
 
@@ -103,8 +100,8 @@ class ManifestSinkSpec extends SparkSpec {
     val m = ManifestStore.currentManifest(spark, path).get
     assert(m.rowCount === 200L)
     val lo = 500L; val hi = 700L
-    val pruned = graft.ops.Maintenance
-      .prunedRead(spark, path, path + ".zonemap-unused", "score", lo, hi)
+    val pruned = ManifestStore
+      .prunedRead(spark, path, payload, "score", lo, hi)
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
     val unpruned = ManifestStore.readState(spark, path, payload)
       .filter(col("score") >= lo && col("score") <= hi)
@@ -123,8 +120,8 @@ class ManifestSinkSpec extends SparkSpec {
       e.stats("score")._2.exists(_ >= 20L) && e.stats("score")._1.exists(_ <= 20L) }
     assert(cands < sm.buckets.size,
       s"a point window should prune some of the ${sm.buckets.size} buckets")
-    val point = graft.ops.Maintenance
-      .prunedRead(spark, sp, sp + ".zm", "score", 20L, 20L)
+    val point = ManifestStore
+      .prunedRead(spark, sp, payload, "score", 20L, 20L)
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
     assert(point === Set((2, 20L)))
   }
@@ -149,8 +146,8 @@ class ManifestSinkSpec extends SparkSpec {
     assert(ids === Set(2))
     // null-score row: pruned read over any range returns nothing, exactly
     // like the unpruned exact filter (null fails every range predicate)
-    val pr = graft.ops.Maintenance
-      .prunedRead(spark, path, path + ".zm", "score", Long.MinValue + 1, Long.MaxValue)
+    val pr = ManifestStore
+      .prunedRead(spark, path, payload, "score", Long.MinValue + 1, Long.MaxValue)
     assert(pr.count() === 0L)
   }
 
@@ -331,8 +328,8 @@ class ManifestSinkSpec extends SparkSpec {
     assert(stateRows(path) === Set((1, 104L), (2, 20L)))
     // everything-pruned read: schema must equal the store's, not collapse
     // to just the stat column (review r13 #3)
-    val pruned = graft.ops.Maintenance
-      .prunedRead(spark, path, path + ".zm", "score", -500L, -400L)
+    val pruned = ManifestStore
+      .prunedRead(spark, path, StructType(Nil), "score", -500L, -400L)
     assert(pruned.count() === 0L)
     assert(pruned.schema.fieldNames.toSet === Set("id", "score"),
       s"pruned-to-zero read lost the store schema: ${pruned.schema}")
@@ -365,7 +362,7 @@ class ManifestSinkSpec extends SparkSpec {
     val path = s"$root/sink/t"
     applyM(path, batchDf(("create", 1, 10L)))
     val sync = SyncConfig("t", pk = "id", schema = Some(payload))
-    val cfg = PipelineConfig(Seq(sync)) // no stateBuckets, no manifestSink
+    val cfg = PipelineConfig(Seq(sync)) // no stateBuckets
     val src = new ParquetCdcSource(spark, s"$root/feed", s"$root/tables")
     new java.io.File(s"$root/feed").mkdirs()
     val pipe = new Pipeline(spark, cfg, src, s"$root/sink")
@@ -388,7 +385,7 @@ class ManifestSinkSpec extends SparkSpec {
     // a batch arrives carrying a column the store lacks
     val evolved = Seq(("create", 3, 30L, "x")).toDF("op", "id", "score", "tag")
     BucketedUpsertSink.applyBatch(spark, path, evolved, "id", 4,
-      None, manifest = true, statCols = Seq("score"))
+      None, Seq("score"))
     val st = ManifestStore.readState(spark, path,
       StructType(payload.fields :+ StructField("tag", StringType)))
       .drop(BucketedUpsertSink.BucketCol)
@@ -401,18 +398,21 @@ class ManifestSinkSpec extends SparkSpec {
   test("legacy bucket-dir store migrates to manifest layout on the first " +
     "manifest-mode batch: one full publish, legacy dirs dropped, rows intact") {
     val path = tmpDir("mmig") + "/t"
-    BucketedUpsertSink.init(Seq((1, 10L), (2, 20L)).toDF("id", "score"),
-      path, "id", numBuckets = 4)
+    // the retired in-place layout, written with plain Spark
+    Seq((1, 10L), (2, 20L)).toDF("id", "score")
+      .withColumn(BucketedUpsertSink.BucketCol,
+        BucketedUpsertSink.bucketOf(col("id"), 4))
+      .write.partitionBy(BucketedUpsertSink.BucketCol).parquet(path)
     applyM(path, batchDf(("update", 1, 11L), ("create", 3, 30L)))
     assert(ManifestStore.isManifestStore(spark, path))
     assert(stateRows(path) === Set((1, 11L), (2, 20L), (3, 30L)))
     val names = new java.io.File(path).listFiles().map(_.getName)
     assert(!names.exists(_.startsWith(BucketedUpsertSink.BucketCol + "=")),
       s"legacy bucket dirs must not linger: ${names.mkString(",")}")
-    // a writer with manifest=false now honors the STORE's layout
-    BucketedUpsertSink.applyBatch(spark, path,
-      batchDf(("update", 3, 33L)), "id", 4, Some(payload))
+    // and the next batch is an ordinary incremental commit
+    applyM(path, batchDf(("update", 3, 33L)))
     assert(stateRows(path) === Set((1, 11L), (2, 20L), (3, 33L)))
+    assert(ManifestStore.currentManifest(spark, path).get.version === 2L)
   }
 
   test("modulus fence: a manifest store laid out at 4 buckets refuses an " +
@@ -435,7 +435,7 @@ class ManifestSinkSpec extends SparkSpec {
     val sinkRoot = s"$root/sink"
     val sync = SyncConfig("t", pk = "id", full = true, schema = Some(payload))
     val cfg = PipelineConfig(Seq(sync), stateBuckets = Some(4),
-      zoneMapCols = Seq("score"), manifestSink = true)
+      zoneMapCols = Seq("score"))
     Seq((1, 10L), (2, 20L)).toDF("id", "score")
       .write.parquet(s"$tableDir/t.parquet")
     def feed(events: ChangeEvent*): Unit =
@@ -464,11 +464,11 @@ class ManifestSinkSpec extends SparkSpec {
     assert(pipe.sinkState(sync).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSet
       === Set((1, 100L), (5, 500L)))
-    // the marker protocol never ran: no .pending was ever created
-    assert(!new java.io.File(
-      StateCommit.markerPath(s"$sinkRoot/t.zonemap")).exists(),
-      "manifest mode must not mint zone-map markers")
-    assert(pipe.zoneMapStatus() === Map("t" -> None))
+    // stats ride the manifest: no zone-map sidecar or marker file was
+    // ever created beside the state
+    val siblings = new java.io.File(sinkRoot).listFiles().map(_.getName)
+    assert(!siblings.exists(_.contains("zonemap")),
+      s"manifest mode must not mint zone-map sidecars: ${siblings.mkString(",")}")
     pipe.releaseLeases()
   }
 }

@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Sink layout transitions (review r11): the bucketed sink must survive
-  * the two config changes a deployment actually makes — flipping
-  * `state.buckets` ON over an existing flat store, and changing the
-  * bucket COUNT — without silently dropping or duplicating rows; and the
-  * refresh staging path must survive an empty source table. */
+  * the config changes a deployment actually makes — flipping
+  * `state.buckets` ON over an existing flat store, upgrading a store in
+  * the retired in-place bucket-dir layout, and changing the bucket COUNT —
+  * without silently dropping or duplicating rows; and the refresh staging
+  * path must survive an empty source table. */
 class SinkLayoutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -34,61 +35,78 @@ class SinkLayoutSpec extends SparkSpec {
       creates((9, "new")).unionByName(
         Seq(("update", 1, "a2")).toDF("op", "id", "v")),
       "id", numBuckets = 4, schema = Some(payload))
-    val state = spark.read.parquet(statePath)
-      .drop(BucketedUpsertSink.BucketCol)
+    def rows() = BucketedUpsertSink.currentState(spark, statePath, payload)
       .orderBy("id").collect().toSeq
+    val state = rows()
     assert(state === Seq(Row(1, "a2"), Row(2, "b"), Row(3, "c"), Row(9, "new")),
       s"the pre-flip rows must survive the migration: $state")
+    // the layout marker of the manifest layout is its manifest, which also
+    // records the modulus
+    assert(ManifestStore.currentManifest(spark, statePath).map(_.nbuckets) ===
+      Some(4), "layout must be bucketed")
     val names = new java.io.File(statePath).listFiles().map(_.getName)
-    assert(names.exists(_.startsWith("_bucket=")), "layout must be bucketed")
     assert(!names.exists(n => n.endsWith(".parquet") && !n.startsWith("_")),
       s"no stranded flat part files: ${names.mkString(",")}")
-    assert(names.contains("_nbuckets-4"), "the modulus marker must be written")
     // and the next incremental batch works against the migrated layout
     BucketedUpsertSink.applyBatch(spark, statePath,
       Seq(("delete", 2, null: String)).toDF("op", "id", "v"),
       "id", numBuckets = 4, schema = Some(payload))
-    assert(spark.read.parquet(statePath).count() === 3L)
+    assert(rows().length === 3)
   }
 
   test("changing the bucket COUNT on an existing bucketed store fails LOUD " +
     "naming refresh (a pruned merge under the new modulus would duplicate " +
-    "pks); a marker-less legacy store adopts the configured modulus") {
-    val statePath = tmpDir("layout-count") + "/t"
-    BucketedUpsertSink.init(Seq((1, "a"), (2, "b")).toDF("id", "v"),
-      statePath, "id", numBuckets = 4)
+    "pks); refresh re-lays the store out under the new modulus") {
+    import graft.model._
+    val sinkRoot = tmpDir("layout-count")
+    val statePath = s"$sinkRoot/t"
+    BucketedUpsertSink.applyBatch(spark, statePath, creates((1, "a"), (2, "b")),
+      "id", numBuckets = 4, schema = Some(payload))
     val e = intercept[IllegalStateException] {
       BucketedUpsertSink.applyBatch(spark, statePath, creates((3, "c")),
         "id", numBuckets = 8, schema = Some(payload))
     }
     assert(e.getMessage.contains("4 buckets") &&
       e.getMessage.contains("refresh"), e.getMessage)
-    // legacy store: strip the marker; the next same-modulus batch adopts it
-    assert(new java.io.File(s"$statePath/_nbuckets-4").delete())
+    // the named repair works: refresh under the new modulus, then batch
+    val sync = SyncConfig("t", pk = "id", schema = Some(payload))
+    val pipe = new Pipeline(spark,
+      PipelineConfig(Seq(sync), stateBuckets = Some(8)),
+      new MemoryCdcSource(spark,
+        Map("t" -> Seq((1, "a"), (2, "b")).toDF("id", "v"))), sinkRoot)
+    try pipe.refresh() finally pipe.releaseLeases()
     BucketedUpsertSink.applyBatch(spark, statePath, creates((3, "c")),
-      "id", numBuckets = 4, schema = Some(payload))
-    assert(new java.io.File(s"$statePath/_nbuckets-4").exists(),
-      "a marker-less store must adopt the configured modulus")
-    assert(spark.read.parquet(statePath).count() === 3L)
+      "id", numBuckets = 8, schema = Some(payload))
+    assert(ManifestStore.currentManifest(spark, statePath).get.nbuckets === 8)
+    assert(BucketedUpsertSink.currentState(spark, statePath, payload)
+      .count() === 3L)
   }
 
   test("a TYPE change in an existing column takes the full-rewrite " +
     "evolution path, not the per-bucket path that would write mixed " +
     "physical types across bucket dirs") {
     val statePath = tmpDir("layout-type") + "/t"
-    BucketedUpsertSink.init(Seq((1, 10), (2, 20)).toDF("id", "v"),
-      statePath, "id", numBuckets = 4)
+    val intPayload = StructType(Seq(
+      StructField("id", IntegerType), StructField("v", IntegerType)))
+    BucketedUpsertSink.applyBatch(spark, statePath,
+      Seq(("create", 1, 10), ("create", 2, 20)).toDF("op", "id", "v"),
+      "id", numBuckets = 4, schema = Some(intPayload))
     // v arrives as LONG now (source widened the column)
     BucketedUpsertSink.applyBatch(spark, statePath,
       Seq(("create", 3, 30L)).toDF("op", "id", "v"),
       "id", numBuckets = 4, schema = None)
-    // every bucket dir must carry ONE consistent physical type: an
-    // unpruned read (no mergeSchema) succeeds and sees all rows
-    val state = spark.read.parquet(statePath)
+    // every bucket dir must carry ONE consistent physical type: a read
+    // over every live dir (no mergeSchema) succeeds and sees all rows
+    val state = ManifestStore.readState(spark, statePath, intPayload)
       .drop(BucketedUpsertSink.BucketCol).orderBy("id")
     assert(state.count() === 3L)
     assert(state.schema("v").dataType === LongType,
       s"the widened type must win everywhere: ${state.schema}")
+    ManifestStore.currentManifest(spark, statePath).get.buckets.values
+      .foreach { e =>
+        assert(spark.read.parquet(s"$statePath/${e.relDir}")
+          .schema("v").dataType === LongType, e.relDir)
+      }
   }
 
   test("the watermark sidecar migrates a changed bucket modulus (full " +
@@ -116,11 +134,74 @@ class SinkLayoutSpec extends SparkSpec {
     val live = tmpDir("layout-empty") + "/t"
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], payload)
-    val (staging, n) = SwapRefresh.stage(empty, live, Some(("id", 4)))
-    assert(n === 0L)
-    StateCommit.dropStaging(spark, staging)
-    // and the full refresh of an empty source swaps an empty sink live
-    assert(SwapRefresh.refresh(empty, live, Some(("id", 4))) === 0L)
+    val staged = ManifestStore.stageFull(spark, live, empty, "id", 4, Nil)
+    assert(staged.count === 0L)
+    StateCommit.dropStaging(spark, staged.commitDirAbs)
+    // and the full refresh of an empty source publishes an empty sink
+    import graft.model._
+    val sinkRoot = tmpDir("layout-empty-refresh")
+    val sync = SyncConfig("t", pk = "id", schema = Some(payload))
+    val pipe = new Pipeline(spark,
+      PipelineConfig(Seq(sync), stateBuckets = Some(4)),
+      new MemoryCdcSource(spark, Map("t" -> empty)), sinkRoot)
+    try assert(pipe.refresh() === Map("t" -> 0L))
+    finally pipe.releaseLeases()
+    assert(ManifestStore.currentManifest(spark, s"$sinkRoot/t")
+      .map(_.rowCount) === Some(0L))
+    assert(pipe.sinkState(sync).count() === 0L)
+  }
+
+  /** A store in the retired in-place layout, written with plain Spark: one
+    * `_bucket=<id>` partition dir per pk-hash bucket plus the empty
+    * `_nbuckets-<n>` modulus file. */
+  private def legacyBucketStore(path: String, rows: Seq[(Int, String)],
+                                n: Int): Unit = {
+    rows.toDF("id", "v")
+      .withColumn(BucketedUpsertSink.BucketCol,
+        BucketedUpsertSink.bucketOf(col("id"), n))
+      .write.partitionBy(BucketedUpsertSink.BucketCol).parquet(path)
+    assert(new java.io.File(s"$path/_nbuckets-$n").createNewFile())
+  }
+
+  private def legacyLeftovers(path: String): Seq[String] =
+    new java.io.File(path).listFiles().map(_.getName).filter(n =>
+      n.startsWith(BucketedUpsertSink.BucketCol + "=") ||
+        n.startsWith("_nbuckets-") || n.endsWith(".parquet")).toSeq
+
+  test("a legacy store upgrades to the manifest layout through the first " +
+    "batch AND through refresh, with no legacy files left behind") {
+    import graft.model._
+    val rows = Seq((1, "a"), (2, "b"), (3, "c"))
+    // first batch over an in-place bucket-dir store
+    val viaBatch = tmpDir("layout-upgrade-batch") + "/t"
+    legacyBucketStore(viaBatch, rows, 4)
+    BucketedUpsertSink.applyBatch(spark, viaBatch,
+      Seq(("update", 1, "a2")).toDF("op", "id", "v"), "id",
+      numBuckets = 4, schema = Some(payload))
+    assert(ManifestStore.isManifestStore(spark, viaBatch))
+    assert(ManifestStore.readState(spark, viaBatch, payload)
+      .drop(BucketedUpsertSink.BucketCol).orderBy("id").collect().toSeq ===
+      Seq(Row(1, "a2"), Row(2, "b"), Row(3, "c")))
+    assert(legacyLeftovers(viaBatch).isEmpty,
+      s"legacy files left after the batch: ${legacyLeftovers(viaBatch)}")
+    // refresh over an in-place bucket-dir store and over a flat store
+    val sync = SyncConfig("t", pk = "id", schema = Some(payload))
+    val snapshot = Seq((1, "x"), (4, "y")).toDF("id", "v")
+    Seq("bucketed", "flat").foreach { legacy =>
+      val sinkRoot = tmpDir(s"layout-upgrade-refresh-$legacy")
+      val statePath = s"$sinkRoot/t"
+      if (legacy == "bucketed") legacyBucketStore(statePath, rows, 4)
+      else rows.toDF("id", "v").write.parquet(statePath)
+      val pipe = new Pipeline(spark,
+        PipelineConfig(Seq(sync), stateBuckets = Some(4)),
+        new MemoryCdcSource(spark, Map("t" -> snapshot)), sinkRoot)
+      try assert(pipe.refresh() === Map("t" -> 2L))
+      finally pipe.releaseLeases()
+      assert(pipe.sinkState(sync).orderBy("id").collect().toSeq ===
+        Seq(Row(1, "x"), Row(4, "y")), legacy)
+      assert(legacyLeftovers(statePath).isEmpty,
+        s"$legacy: legacy files left after refresh: ${legacyLeftovers(statePath)}")
+    }
   }
 
   test("a repaired dead-letter row with a NULL offset fails the replay " +

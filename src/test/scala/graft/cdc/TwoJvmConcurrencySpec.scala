@@ -9,20 +9,17 @@ import org.apache.spark.sql.types._
 /** Two-JVM LIVE concurrency (r11 verdict #4): [[TwoJvmLeaseSpec]] proves
   * refusal and takeover across real process boundaries, but no spec yet
   * ran WORK concurrently. Here a second JVM ([[ConcurrentReaderMain]])
-  * loops operator diagnostics — swap-heal + pruned reads + exact counts +
-  * zone-map marker state, the `check`-shaped read surface — against a
-  * bucketed sink for ≥30 s while THIS JVM streams micro-batches through
-  * the real [[Pipeline]] (marker/splice/watermark writes per batch) and
-  * runs TWO mid-stream `refresh` rebuilds (atomic swap + quiesce-gated
-  * zone-map publish). The reader asserts, every iteration, that it never
-  * observes a row-count REGRESSION (the feed is insert-only and refresh
-  * rebuilds a superset — counts are monotone by construction, so a dip
-  * means a torn read) and never dies on anything except the ONE
-  * documented retryable class: a pinned part file deleted by the
-  * writer's per-bucket overwrite (loud-never-wrong — the r11 pinning's
-  * contract; see [[ConcurrentReaderMain]]). The r11 prunedRead file-list
-  * pinning + any-reader recoverSwap heals are exactly the machinery
-  * under load. Exit codes: 0 clean, 1 crash, 2 regression. */
+  * loops the `check`-shaped read surface — manifest-pruned reads with
+  * exact counts — against a bucketed sink for ≥30 s while THIS JVM streams
+  * micro-batches through the real [[Pipeline]] (manifest commit +
+  * watermark write per batch) and runs TWO mid-stream `refresh` rebuilds
+  * (full manifest publishes). The reader asserts, every iteration, that
+  * it never observes a row-count REGRESSION (the feed is insert-only and
+  * refresh rebuilds a superset — counts are monotone by construction, so
+  * a dip means a torn read), and the run must see ZERO vanished-file
+  * retries: immutable files + a versioned manifest mean a live writer can
+  * never delete a file a reader pinned. Exit codes: 0 clean, 1 crash,
+  * 2 regression. */
 class TwoJvmConcurrencySpec extends SparkSpec {
 
   private def addOpens: Seq[String] = {
@@ -51,21 +48,11 @@ class TwoJvmConcurrencySpec extends SparkSpec {
     if (f.exists()) new String(java.nio.file.Files.readAllBytes(f.toPath),
       "UTF-8") else ""
 
-  test("a reader JVM loops check-shaped diagnostics (heal + pruned reads + " +
-    "marker state) for 30+ s of live load — streamed batches plus two " +
-    "mid-stream refresh swaps — without a crash or a row-count regression") {
-    runLiveConcurrency(manifest = false)
-  }
-
   test("manifest layout (r12 verdict #1): the same 30+ s live-load run — " +
     "streamed batches plus two mid-stream refresh publishes — completes " +
     "with ZERO retryable read failures: immutable files + versioned " +
     "manifest close the FAILED_READ_FILE class entirely") {
-    runLiveConcurrency(manifest = true)
-  }
-
-  private def runLiveConcurrency(manifest: Boolean): Unit = {
-    val scratch = tmpDir(if (manifest) "twojvm-manifest" else "twojvm-live")
+    val scratch = tmpDir("twojvm-manifest")
     val sinkRoot = s"$scratch/sink"
     // full = false: a backfill would load the whole snapshot up front and
     // flatten the "reader sees the load advancing" assertion
@@ -73,7 +60,7 @@ class TwoJvmConcurrencySpec extends SparkSpec {
       schema = Some(StructType(Seq(
         StructField("id", IntegerType), StructField("score", LongType)))))
     val cfg = PipelineConfig(Seq(sync), stateBuckets = Some(8),
-      zoneMapCols = Seq("score"), manifestSink = manifest)
+      zoneMapCols = Seq("score"))
     // the refresh source of truth: the FULL id set — a mid-run rebuild
     // loads a superset of whatever the stream has applied, so counts stay
     // monotone under any interleaving
@@ -84,7 +71,6 @@ class TwoJvmConcurrencySpec extends SparkSpec {
     val source = new MemoryCdcSource(spark, snapshot = Map("t" -> fullDf))
     val pipe = new Pipeline(spark, cfg, source, sinkRoot)
     val statePath = s"$sinkRoot/t"
-    val zm = statePath + ".zonemap"
 
     def events(lo: Int, hi: Int): Seq[ChangeEvent] =
       (lo until hi).map { i =>
@@ -95,13 +81,10 @@ class TwoJvmConcurrencySpec extends SparkSpec {
 
     val q = pipe.start(s"$scratch/ckpt", Trigger.ProcessingTime(200L))
     try {
-      // bootstrap: first batch through; stats visible (zone-map file for
-      // the bucket-dir layout, the first published manifest version for
-      // the manifest layout — where stats ride the data commit itself)
+      // bootstrap: first batch through; stats visible (the first published
+      // manifest version — stats ride the data commit itself)
       source.addEvents(events(0, 500): _*)
-      def statsLive(): Boolean =
-        if (manifest) ManifestStore.liveExists(spark, statePath)
-        else new java.io.File(zm).exists()
+      def statsLive(): Boolean = ManifestStore.liveExists(spark, statePath)
       val bootDeadline = System.currentTimeMillis() + 120000L
       while ((!statsLive() || pipe.sinkState(sync).isEmpty) &&
           System.currentTimeMillis() < bootDeadline) Thread.sleep(200L)
@@ -121,7 +104,7 @@ class TwoJvmConcurrencySpec extends SparkSpec {
       // maxMs hard bound so a wedged parent can never hang the child.
       val stopFile = new java.io.File(scratch, "reader.stop")
       val reader = spawn("graft.cdc.ConcurrentReaderMain",
-        Seq(statePath, zm, "35000", "300000", stopFile.getPath), out)
+        Seq(statePath, "35000", "300000", stopFile.getPath), out)
       try {
         // feed while the reader lives; two refresh rebuilds mid-stream,
         // GATED on observed reader progress — the child's Spark boot takes
@@ -174,17 +157,15 @@ class TwoJvmConcurrencySpec extends SparkSpec {
           .getOrElse(fail(s"no DONE line:\n$log")).split(' ')
         assert(done(1).toLong >= 30000L,
           s"concurrent window only ${done(1)} ms:\n$log")
-        if (manifest) {
-          // THE r13 contract: immutable files + versioned manifest mean a
-          // live writer can never delete a file a reader pinned — the one
-          // retryable class of the bucket-dir layout must not occur at all
-          assert(done(3).toLong === 0L,
-            s"manifest layout must produce ZERO vanished-file retries:\n" +
-              log.linesIterator.filter(_.startsWith("RETRY"))
-                .mkString("\n"))
-          assert(!log.contains("RETRY"),
-            "manifest layout must produce zero RETRY lines")
-        }
+        // THE r13 contract: immutable files + versioned manifest mean a
+        // live writer can never delete a file a reader pinned — the one
+        // retryable class of the bucket-dir layout must not occur at all
+        assert(done(3).toLong === 0L,
+          s"manifest layout must produce ZERO vanished-file retries:\n" +
+            log.linesIterator.filter(_.startsWith("RETRY"))
+              .mkString("\n"))
+        assert(!log.contains("RETRY"),
+          "manifest layout must produce zero RETRY lines")
       } finally { reader.destroyForcibly(); () }
     } finally {
       try q.stop() finally pipe.releaseLeases()
@@ -192,37 +173,22 @@ class TwoJvmConcurrencySpec extends SparkSpec {
   }
 }
 
-/** Reader-JVM main: loop swap-heal + pruned read + exact count + marker
-  * probe against (statePath, zmPath) for at least args(2) ms, then until
-  * the stop file args(4) appears or args(3) ms elapse. Prints one
-  * `READ <i> <n> <marker>` line per iteration; exits 1 on any crash, 2 on
-  * a count regression.
+/** Reader-JVM main: loop a manifest-pruned read + exact count against
+  * statePath args(0) for at least args(1) ms, then until the stop file
+  * args(3) appears or args(2) ms elapse. Prints one `READ <i> <n>` line per
+  * iteration; exits 1 on any crash, 2 on a count regression.
   *
-  * One exception class is RETRYABLE by the pinned read's own contract: a
-  * per-bucket dynamic-partition overwrite from the live writer DELETES
-  * the old part files, so a reader that pinned them mid-batch hits
-  * FAILED_READ_FILE — loud, never wrong (the r11 pinning exists so the
-  * racing alternative, silently dropped rows, cannot happen). Operators
-  * retry; a manifest-versioned data layout is the at-scale answer
-  * (SCALE.md). Every other exception class stays fatal. */
+  * A vanished-file failure (a pinned file deleted under the read) is
+  * counted and printed as a RETRY rather than crashing, so the parent can
+  * report every occurrence: under the manifest layout there must be none.
+  * Every other exception class is fatal. */
 object ConcurrentReaderMain {
   private def vanishedFile(e: Throwable): Boolean = {
     var t: Throwable = e
     while (t != null) {
       if (t.isInstanceOf[java.io.FileNotFoundException] ||
         Option(t.getMessage).exists(m => m.contains("FAILED_READ_FILE") ||
-          m.contains("does not exist") ||
-          // the vanished-DIRECTORY variant of the same race (r14): the
-          // writer's dynamic-partition overwrite can remove a whole
-          // _bucket dir between the reader's listing and its recursive
-          // walk — Hadoop's RawLocalFileSystem reports that as a generic
-          // "Invalid directory or I/O error occurred for dir", not a
-          // FileNotFoundException. Narrowed (ADVICE r14): the same message
-          // covers genuine I/O failures (permissions, disk errors), so
-          // only a failure naming one of the writer's `_bucket=` partition
-          // dirs is the benign race — anything else stays fatal.
-          (m.contains("Invalid directory or I/O error occurred") &&
-            m.contains(graft.cdc.BucketedUpsertSink.BucketCol + "=")))) return true
+          m.contains("does not exist"))) return true
       t = t.getCause
     }
     false
@@ -233,7 +199,7 @@ object ConcurrentReaderMain {
     // assertion meaningful on fast hosts); stopPath: the parent's
     // "both refreshes observed" release signal; maxMs: hard bound so a
     // wedged parent can never hang this JVM (pace-adaptive window, r14)
-    val Array(statePath, zmPath, minMs, maxMs, stopPath) = args
+    val Array(statePath, minMs, maxMs, stopPath) = args
     val spark = graft.GraftSession.get("local[2]", 2)
     val t0 = System.currentTimeMillis()
     val minDeadline = t0 + minMs.toLong
@@ -248,32 +214,11 @@ object ConcurrentReaderMain {
     var retries = 0
     while (keepGoing()) {
       try {
-        // the check-shaped read surface, cross-process: any-reader heal,
-        // marker state, manifest-pruned count over a wide range (falls
-        // back to the exact unpruned filter while a marker stands)
-        val marker = StateCommit.markerOwner(spark, zmPath)
-        def readCount(): Long = graft.ops.Maintenance
-          .prunedRead(spark, statePath, zmPath, "score", 0L, Long.MaxValue / 2)
-          .count()
-        var n = readCount()
-        // The legacy layout's vanished-file race has a THIRD face (r15,
-        // surfaced by a loaded full-suite run): dynamic partition
-        // overwrite deletes a _bucket dir and renames the fresh one in,
-        // and a listing that lands inside that window sees the dir ABSENT
-        // — no exception, just silently fewer files, so the count dips
-        // for one iteration. Distinguish it from a REAL lost update the
-        // same way the r14 narrowing did: re-read once — the listing race
-        // heals instantly (the rename lands in microseconds), a genuine
-        // regression persists and still exits 2. The recount is counted
-        // as a RETRY so the manifest-mode zero-retry assertion stays as
-        // strict as before (immutable files cannot produce this race).
-        if (n < last) {
-          retries += 1
-          println(s"RETRY $retries (bucket dir mid-overwrite: transient " +
-            s"count dip $last -> $n, recounting)")
-          n = readCount()
-        }
-        println(s"READ $i $n ${marker.fold("clear")(_.toString)}")
+        // the check-shaped read surface, cross-process: a manifest-pruned
+        // count over a wide range
+        val n = ManifestStore.prunedRead(spark, statePath, StructType(Nil),
+          "score", 0L, Long.MaxValue / 2).count()
+        println(s"READ $i $n")
         if (n < last) {
           println(s"REGRESS $last -> $n"); Console.out.flush()
           spark.stop(); sys.exit(2)
@@ -283,7 +228,7 @@ object ConcurrentReaderMain {
       } catch {
         case e: Throwable if vanishedFile(e) =>
           retries += 1
-          println(s"RETRY $retries (pinned file overwritten mid-read)")
+          println(s"RETRY $retries (pinned file vanished mid-read)")
         case e: Throwable =>
           println(s"READERR ${e.getClass.getName}: ${e.getMessage}")
           Console.out.flush()
