@@ -19,6 +19,9 @@ import org.apache.spark.sql.functions._
   *    collect is bounded by `numBuckets`, a config, never by data volume.
   *  - idempotent like the flat sink: replaying a batch yields the same
   *    buckets with the same contents.
+  *
+  * Only the sink is bucketed: its per-pk offset watermark
+  * ([[OffsetWatermark]]) is one flat store whatever `state.buckets` says.
   */
 object BucketedUpsertSink {
 
@@ -49,28 +52,6 @@ object BucketedUpsertSink {
 
   def bucketOf(pk: Column, numBuckets: Int): Column =
     pmod(xxhash64(pk), lit(numBuckets.toLong))
-
-  /** Layout-marker file name encoding a bucket-partitioned store's MODULUS
-    * (review r11), used by the watermark sidecar ([[OffsetWatermark]]):
-    * `pmod(hash, n)` decides which dir a pk lives in, so pruning an
-    * n'-bucketed store with a different n would miss existing rows and
-    * write DUPLICATE pk rows. The underscore prefix keeps the marker out of
-    * parquet reads and partition discovery (the _SUCCESS discipline), and
-    * encoding the value in the NAME makes detection ride the directory
-    * listing the layout probe already pays. */
-  private[cdc] def layoutMarkerName(n: Int): String = s"_nbuckets-$n"
-
-  private[cdc] def storedBuckets(names: Array[String]): Option[Int] =
-    names.collectFirst {
-      case m if m.startsWith("_nbuckets-") => m.stripPrefix("_nbuckets-")
-    }.flatMap(_.toIntOption)
-
-  private[cdc] def writeLayoutMarker(spark: SparkSession, dir: String,
-                                     n: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, layoutMarkerName(n))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(p, true).close() // empty file: the NAME is the payload
-  }
 
   private def listNames(spark: SparkSession, statePath: String): Array[String] = {
     // Heal an interrupted legacy swap FIRST (live moved to '.old', next

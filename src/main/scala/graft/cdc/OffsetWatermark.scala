@@ -34,18 +34,26 @@ import org.apache.spark.sql.functions._
   * watermark, a crash-retry interleaved with newer stream writes can no
   * longer re-apply payloads those writes superseded.
   *
-  * Scale posture: one keyed merge + write per batch, the same bound as the
-  * sink apply it shadows — and an EMPTY batch (a multi-sync config where one
-  * table got no events, or a batch whose rows were all quarantined) returns
-  * before touching the store at all: no read, no rewrite, and crucially no
-  * initial empty dynamic-partitioned write, which would leave a file-less
-  * dir (only _SUCCESS) that `spark.read.parquet` cannot infer a schema from
-  * and that would crash every later batch. With `numBuckets` set the store
-  * is partitioned by the SAME pk-hash bucket as [[BucketedUpsertSink]] and a
-  * batch rewrites only the buckets it touches (dynamic partition overwrite,
-  * pruned read) — O(changed buckets), never the whole map. Entries are never
-  * deleted: a deleted pk's watermark still guards against a late stale
-  * replay resurrecting the row.
+  * Scale posture: one layout, a flat store rewritten whole through a staged
+  * swap ([[StateCommit.stageSwap]]) — one keyed merge against the full
+  * narrow (pk, offset, _ridx) map per non-empty batch. An EMPTY batch (a
+  * multi-sync config where one table got no events, or a batch whose rows
+  * were all quarantined) returns before touching the store at all: no read,
+  * no rewrite, no file-less dir (only _SUCCESS) that `spark.read.parquet`
+  * could not infer a schema from. Entries are never deleted: a deleted
+  * pk's watermark still guards against a late stale replay resurrecting
+  * the row.
+  *
+  * The tradeoff: a batch that touches few of a very large store's pks
+  * rewrites the whole map, where a pk-hash-bucketed layout would rewrite
+  * only the touched buckets. The share of such batches in both `perfbench`
+  * workloads is zero: every batch touched 16 of 16 sink buckets, so that
+  * pruning never fired, while the bucketed layout cost two more jobs per
+  * batch (the touched-bucket collect and the pruned read) and rewrote its
+  * buckets in place under concurrent readers. A store written
+  * in that retired `_bucket=` layout still reads (the bucket column is
+  * dropped) and the first non-empty advance swaps it out whole, taking its
+  * `_nbuckets-N` modulus file with it.
   *
   * The per-pk map guards rows the STREAM applied. Rows loaded by a full
   * snapshot rebuild ([[Pipeline.refresh]]/backfill) never pass through
@@ -80,12 +88,9 @@ object OffsetWatermark {
   /** Sidecar file holding the sync-level snapshot floor. */
   def floorPath(statePath: String): String = statePath + ".wm.floor"
 
-  /** One healed listing of the watermark dir's entry names, shared by the
-    * data probe and the layout probe so an advance pays a single
-    * listStatus RPC (review r10: a separate layout listing per batch paid
-    * a second RPC forever to detect a once-per-deployment config flip).
-    * Heals an interrupted atomic swap first (the heal-first discipline of
-    * every swapped store, [[StateCommit.recoverSwap]]). */
+  /** One healed listing of the watermark dir's entry names. Heals an
+    * interrupted atomic swap first (the heal-first discipline of every
+    * swapped store, [[StateCommit.recoverSwap]]). */
   private def entryNames(spark: SparkSession, dir: String): Array[String] = {
     StateCommit.recoverSwap(spark, dir)
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -94,33 +99,23 @@ object OffsetWatermark {
     else fs.listStatus(p).map(_.getPath.getName)
   }
 
-  /** True iff the listing holds actual DATA (bucket partition dirs or
-    * parquet part files) — `_SUCCESS` alone does not count, so a historical
-    * schema-less empty write reads as absent and the next real batch heals
-    * it via the initial-write path. */
+  /** True iff the listing holds actual DATA (parquet part files, or a
+    * legacy store's bucket partition dirs) — `_SUCCESS` alone does not
+    * count, so a historical schema-less empty write reads as absent and
+    * the next real batch heals it via the initial-write path. */
   private def hasData(names: Array[String]): Boolean = names.exists { n =>
     n.startsWith(BucketedUpsertSink.BucketCol + "=") || n.endsWith(".parquet")
   }
-
-  /** True iff the stored sidecar was written in the BUCKETED layout
-    * (`_bucket=` partition dirs). A deployment that flips `state.buckets`
-    * on (or off) after the sidecar exists would otherwise hit an
-    * unresolved-`_bucket` filter (bucketed advance over a flat store) or
-    * silently mix layouts — [[advance]] detects the disagreement and
-    * rewrites the store into the configured layout ONCE (the sidecar is
-    * O(live pks), the same bound as a full-map merge, so a one-time
-    * rewrite is the cheap honest migration; ADVICE r9). */
-  private def layoutBucketed(names: Array[String]): Boolean =
-    names.exists(_.startsWith(BucketedUpsertSink.BucketCol + "="))
 
   /** Current watermark table (pk, [[OffsetCol]], [[RidxCol]]); None if
     * never written. */
   def current(spark: SparkSession, statePath: String): Option[DataFrame] = {
     val dir = path(statePath)
-    // mergeSchema: a partially-migrated bucketed store (dynamic partition
-    // overwrite only rewrites touched buckets) holds pre- and post-_ridx
-    // files side by side; inference from one arbitrary footer would drop
-    // the column. File count is O(buckets), config-bounded.
+    // mergeSchema only matters for a legacy store: a retired `_bucket=`
+    // layout whose buckets were rewritten one at a time can hold pre- and
+    // post-_ridx files side by side, and inference from one arbitrary
+    // footer would drop the column. A flat store is written whole, so
+    // its footers agree.
     if (hasData(entryNames(spark, dir)))
       Some(normalizeStored(spark.read.option("mergeSchema", "true")
         .parquet(dir).drop(BucketedUpsertSink.BucketCol)))
@@ -147,7 +142,7 @@ object OffsetWatermark {
     * empty batch is a full no-op (no store read or rewrite — see the scale
     * notes above). */
   def advance(spark: SparkSession, statePath: String, applied: DataFrame,
-              pk: String, numBuckets: Option[Int]): Unit = {
+              pk: String): Unit = {
     // a null _ridx (an unparseable-array envelope kept by posexplode_outer,
     // later repaired and replayed) is position 0 — coalesce BEFORE the
     // struct max so the null can't skew the lexicographic ordering, and
@@ -160,72 +155,16 @@ object OffsetWatermark {
         col("__m._ridx").as(RidxCol))
     if (batch.isEmpty) return
     val dir = path(statePath)
-    val names = entryNames(spark, dir)
-    val exists = hasData(names)
-    numBuckets match {
-      case Some(n) =>
-        val withBucket = batch.withColumn(BucketedUpsertSink.BucketCol,
-          BucketedUpsertSink.bucketOf(col(pk), n))
-        if (!exists) {
-          withBucket.write.mode("overwrite")
-            .partitionBy(BucketedUpsertSink.BucketCol).parquet(dir)
-          BucketedUpsertSink.writeLayoutMarker(spark, dir, n)
-        } else if (!layoutBucketed(names) ||
-          !BucketedUpsertSink.storedBuckets(names).contains(n)) {
-          // layout migration (ADVICE r9; modulus-aware since review r11):
-          // the sidecar was written FLAT (state.buckets was off when it
-          // was created), with a DIFFERENT modulus (state.buckets changed
-          // and a refresh re-bucketed the sink), or before the modulus
-          // marker existed — in every case the touched-bucket pruned read
-          // below would be wrong (a flat store has no _bucket column; a
-          // re-moduled one keeps each pk in a dir the new ids never probe,
-          // minting DUPLICATE watermark entries that poison splitStale).
-          // Merge against the whole store once and rewrite it in the
-          // configured layout; next batch takes the pruned path.
-          val next = merge(normalizeStored(
-            spark.read.option("mergeSchema", "true").parquet(dir)
-              .drop(BucketedUpsertSink.BucketCol)), batch, pk)
-            .withColumn(BucketedUpsertSink.BucketCol,
-              BucketedUpsertSink.bucketOf(col(pk), n))
-          StateCommit.stageSwap(spark, dir) { tmp =>
-            next.write.mode("overwrite")
-              .partitionBy(BucketedUpsertSink.BucketCol).parquet(tmp)
-            BucketedUpsertSink.writeLayoutMarker(spark, tmp, n)
-          }
-        } else {
-          // prune the stored read to the touched buckets; the distinct
-          // collect is O(buckets) (config-bounded), the house pattern
-          // of BucketedUpsertSink.applyBatch
-          val touched = withBucket.select(BucketedUpsertSink.BucketCol)
-            .distinct().collect().map(_.getLong(0)).sorted
-          val slice = normalizeStored(
-            spark.read.option("mergeSchema", "true").parquet(dir)
-              .filter(col(BucketedUpsertSink.BucketCol).isin(touched: _*))
-              .drop(BucketedUpsertSink.BucketCol))
-          merge(slice, withBucket.drop(BucketedUpsertSink.BucketCol), pk)
-            .withColumn(BucketedUpsertSink.BucketCol,
-              BucketedUpsertSink.bucketOf(col(pk), n))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BucketedUpsertSink.BucketCol)
-            .parquet(dir)
-        }
-      case None =>
-        if (!exists) {
-          batch.write.mode("overwrite").parquet(dir)
-        } else {
-          // the reverse layout migration is this same path (ADVICE r9): a
-          // BUCKETED store read here carries _bucket as a partition column,
-          // merge() projects it away, and the flat rewrite below replaces
-          // the whole dir — one-time, explicit drop for clarity
-          val next = merge(normalizeStored(
-            spark.read.option("mergeSchema", "true").parquet(dir)
-              .drop(BucketedUpsertSink.BucketCol)), batch, pk)
-          // invocation-unique staging with failure cleanup: a live batch's
-          // advance and a replay's can overlap on one sidecar (r9 review)
-          StateCommit.stageSwap(spark, dir)(tmp =>
-            next.write.mode("overwrite").parquet(tmp))
-        }
+    current(spark, statePath) match {
+      case None => batch.write.mode("overwrite").parquet(dir)
+      case Some(stored) =>
+        // a legacy `_bucket=` store reads through current() without its
+        // bucket column, and the swap replaces it whole
+        val next = merge(stored, batch, pk)
+        // invocation-unique staging with failure cleanup: a live batch's
+        // advance and a replay's can overlap on one sidecar (r9 review)
+        StateCommit.stageSwap(spark, dir)(tmp =>
+          next.write.mode("overwrite").parquet(tmp))
     }
   }
 

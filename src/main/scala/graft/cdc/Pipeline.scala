@@ -273,7 +273,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     // replay can detect (and discard) quarantined payloads this batch — or
     // any newer one — has superseded. Idempotent under checkpoint replay.
     OffsetWatermark.advance(spark, statePath(sync),
-      fenced.select(col(pk), col("offset"), col("_ridx")), pk, config.stateBuckets)
+      fenced.select(col(pk), col("offset"), col("_ridx")), pk)
     hooks.postBatch.foreach(_(sync.table, batchId))
     } finally { full.unpersist(); () }
   }
@@ -394,8 +394,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
               .drop("table", "offset", "_ridx")
             writeCompacted(s, compacted)
             OffsetWatermark.advance(spark, statePath(s),
-              fresh.select(col(pk), col("offset"), col("_ridx")), pk,
-              config.stateBuckets)
+              fresh.select(col(pk), col("offset"), col("_ridx")), pk)
           }
           if (nFresh > 0 || nStale > 0) {
             // keep only the still-null rows (superseded rows are resolved —
@@ -514,15 +513,14 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     * any of it. */
   private def observedOffsetCeiling(sync: SyncConfig): Long = {
     // UNDER the state lock (r14): this is the one watermark-store read
-    // that ran outside it (refresh/K3 call it before their long scans), and
-    // a live batch's advance under the lock rewrites touched _bucket dirs
-    // via dynamic partition overwrite — the unlocked mergeSchema read here
-    // listed files a concurrent advance then deleted, crashing refresh
-    // with FILE_NOT_EXIST mid-footer-read (surfaced by
-    // TwoJvmConcurrencySpec under full-suite load). The lock is held for
-    // ONE max-aggregate over the narrow (pk, offset, _ridx) sidecar plus
-    // the dead-letter max — bounded, nothing like the full source scan the
-    // r9 review moved outside the lock; monitors are reentrant so callers
+    // that runs outside a batch (refresh/K3 call it before their long
+    // scans), and a live batch's advance under the lock swaps `.wm` out
+    // whole — its `.wm` -> `.wm.old` rename and the delete of the old copy
+    // can land between this read's file listing and its footer reads,
+    // failing refresh with FILE_NOT_EXIST. The lock is held for ONE
+    // max-aggregate over the narrow (pk, offset, _ridx) sidecar plus the
+    // dead-letter max — bounded, nothing like the full source scan the r9
+    // review moved outside the lock; monitors are reentrant so callers
     // already holding the lock are unaffected.
     StateCommit.stateLock(statePath(sync)).synchronized {
     val wmMax = OffsetWatermark.current(spark, statePath(sync))

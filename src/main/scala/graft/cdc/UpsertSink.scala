@@ -95,37 +95,6 @@ object UpsertSink {
     merged
   }
 
-  /** Streaming form: wire a compacted change stream into `foreachBatch`,
-    * maintaining the state table as parquet at `statePath` (the "index").
-    * Checkpointing (`option("checkpointLocation", ...)`) replaces the
-    * reference's progress store (`progress/file.py`) — offset WAL + commit
-    * log give effectively-exactly-once with this idempotent apply. */
-  def foreachBatchApply(
-      spark: SparkSession,
-      statePath: String,
-      pk: String,
-      payloadSchema: org.apache.spark.sql.types.StructType
-  ): (DataFrame, Long) => Unit = { (batch: DataFrame, _: Long) =>
-    val state = currentState(spark, statePath, payloadSchema)
-    // compact on the envelope, then drop its columns: with schema evolution
-    // in the merge, leaking table/offset/ts/data here would evolve them
-    // INTO the state table (same hazard Pipeline.applySync guards).
-    // _ridx, when the batch carries it, joins the tiebreak: rows of one
-    // multi-row event share (pk, offset) and the LATER row must win
-    // deterministically — the same contract Pipeline.applySync enforces
-    // (r9 review: without it the winner was partition-order nondeterminism
-    // and a replay could flip it).
-    val tiebreak =
-      if (batch.columns.contains("_ridx")) Seq(col("_ridx")) else Seq.empty
-    val compacted = Transforms.lastWriteWins(batch, col(pk), tiebreak)
-      .drop("table", "offset", "ts", "data", "_ridx")
-    val next = applyBatch(state, compacted, pk)
-    // two-phase write: next state to a versioned dir, then pointer swap —
-    // keeps the apply atomic without a table format in the offline harness
-    StateCommit.stageSwap(spark, statePath)(tmp =>
-      next.write.mode("overwrite").parquet(tmp))
-  }
-
   def currentState(
       spark: SparkSession,
       statePath: String,

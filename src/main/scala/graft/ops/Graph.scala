@@ -37,31 +37,6 @@ object Graph {
 
   private val Scale = 1000000000000L // 1e12 micro-units of rank mass
 
-  /** Eager localCheckpoint of `df` hash-partitioned AND sorted by `key`,
-    * with that layout VISIBLE to the planner — the iterative-op exchange
-    * eliminator (r14, guide §2.4): every round's sort-merge join /
-    * aggregate keyed on `key` then consumes the checkpointed blocks in
-    * place, where an unaligned checkpoint re-exchanged and re-sorted the
-    * full edge list once per round. AQE must be OFF while the checkpoint
-    * materializes: under AdaptiveSparkPlan the physical plan's
-    * outputPartitioning is unresolved at checkpoint time and the
-    * LogicalRDD degrades to UnknownPartitioning (measured on this build —
-    * the preserved-partitioning path only fires on a concrete plan). The
-    * momentary toggle affects only the checkpoint's own job; everything
-    * downstream plans under AQE as usual. */
-  private[ops] def alignedCheckpoint(df: DataFrame, key: String): DataFrame = {
-    val spark = df.sparkSession
-    val conf = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(conf)
-    spark.conf.set(conf, "false")
-    try df.repartition(col(key)).sortWithinPartitions(col(key))
-      .localCheckpoint(true)
-    finally prev match {
-      case Some(v) => spark.conf.set(conf, v)
-      case None => spark.conf.unset(conf)
-    }
-  }
-
   /** PageRank (damping 0.85, `iters` fixed power iterations) over the
     * symmetrized eps-neighbor graph [[Dedup.embedDup]] emits — every
     * cosine-similar pair within a (label, sign-cell) block becomes an
@@ -79,8 +54,7 @@ object Graph {
     * 1-row aggregate rather than a driver collect. */
   def pageRank(spark: SparkSession, dir: String, iters: Int = 6,
                threshold: Double = 0.3, blocking: String = "signcell",
-               nCells: Int = Dedup.AutoCells,
-               alignEdges: Boolean = false): DataFrame = {
+               nCells: Int = Dedup.AutoCells): DataFrame = {
     val pairs = blockedPairs(spark, dir, threshold, blocking, nCells)
       .select(col("vec_a"), col("vec_b"))
     val e = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"))
@@ -91,20 +65,7 @@ object Graph {
     // reuse AND leaves no session-lifetime cache entry behind — the
     // blocks are freed when the reference is GC'd, unlike an unreleased
     // persist() which would pin executor memory across later queries.
-    // alignEdges: [[alignedCheckpoint]] pre-partitions + pre-sorts the
-    // edge checkpoint on the iteration key so the six unrolled iterations
-    // consume it in place (plan: 6 fewer Exchange+Sort of the edge list).
-    // Default FALSE — measured SLOWER at gate scale (same-JVM interleaved
-    // A/B at sf0.1: unaligned 3.33/3.95/2.58 s vs aligned 5.10/4.47/4.36):
-    // pinning the edge list to the full fixed partition count makes every
-    // iteration's join/aggregate a 32-task stage, while AQE coalesces the
-    // unaligned plan's tiny shuffles to a couple of tasks — at THIS data
-    // size task-lifecycle overhead outweighs six edge-list shuffles. At
-    // production edge volumes (partitions sized to data, coalescing no
-    // longer collapsing stages) the aligned shape is the right one; the
-    // flag is the deployment dial and `Profile prab` re-runs the A/B.
-    val edges = if (alignEdges) alignedCheckpoint(e.join(deg, "src"), "src")
-                else e.join(deg, "src").localCheckpoint(true)
+    val edges = e.join(deg, "src").localCheckpoint(true)
     // the rank seed derives from the CHECKPOINTED edges (review r11):
     // seeding off deg/nTotal's original lineage re-executed the blocked
     // pair join twice more AFTER the checkpoint already paid for it
@@ -229,23 +190,12 @@ object Graph {
     * iterative-op house rule; no driver-side state at all. */
   def labelProp(spark: SparkSession, dir: String, rounds: Int = 4,
                 threshold: Double = 0.15, blocking: String = "signcell",
-                nCells: Int = Dedup.AutoCells,
-                alignEdges: Boolean = false): DataFrame = {
+                nCells: Int = Dedup.AutoCells): DataFrame = {
     val pairs = blockedPairs(spark, dir, threshold, blocking, nCells)
       .select(col("vec_a"), col("vec_b"))
-    // alignEdges defaults FALSE here — the [[alignedCheckpoint]] trick was
-    // MEASURED SLOWER for this op (same-JVM interleaved A/B at sf0.1:
-    // unaligned 4.94/3.48/2.58 s vs aligned 6.64/5.17/4.23 s): unlike
-    // pageRank's one lazy six-iteration plan, every LPA round materializes
-    // its own checkpoint, so AQE coalesces each round's tiny label
-    // shuffles down to a couple of tasks — while an aligned edge list pins
-    // every round's join to the full fixed partition count. The flag stays
-    // so the A/B (`Profile lpab`) remains re-runnable; a deployment whose
-    // label table is too big to coalesce would flip it on.
     val sym = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"))
       .unionByName(pairs.select(col("vec_b").as("src"), col("vec_a").as("dst")))
-    val edges = if (alignEdges) alignedCheckpoint(sym, "src")
-                else sym.localCheckpoint(true)
+    val edges = sym.localCheckpoint(true)
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node"))
     for (_ <- 1 to rounds) {

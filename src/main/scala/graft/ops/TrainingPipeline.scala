@@ -26,8 +26,7 @@ object TrainingPipeline {
 
   def trainManifest(spark: SparkSession, dir: String, budget: Int = 512,
                     shards: Int = 8, threshold: Double = 0.5,
-                    dfCap: Int = 128,
-                    materializeSurvivors: Boolean = true): DataFrame = {
+                    dfCap: Int = 128): DataFrame = {
     graft.functions.TextFunctions.register(spark)
     val d = Tables(spark, dir, "documents")
       .withColumn("tr", TextAnalysis.splitHash(col("doc_id")) < 80)
@@ -45,15 +44,7 @@ object TrainingPipeline {
     val dropped = pairs.select(col("doc_b").as("doc_id")).distinct()
     val keep2 = keep1.join(dropped, Seq("doc_id"), "left_anti")
 
-    // 3. quality filter (same metrics as the funnel's final stage)
-    val keep3raw = keep2
-      .withColumn("chars", length(col("text")))
-      .withColumn("n_tok", size(split(col("text"), " ")))
-      .withColumn("n_grams", greatest(col("n_tok") - 2, lit(0)))
-      .withColumn("rep", when(col("n_grams") > 0,
-        (col("n_grams") - size(expr("graft_shingle_hashes(text, 3)"))).cast("double") /
-          col("n_grams")).otherwise(lit(0.0)))
-      .filter(col("chars") >= 120 && col("n_tok") >= 30 && col("rep") <= 0.01)
+    // 3. quality filter (same metrics as the funnel's final stage).
     // keep3 has TWO consumers below (the decontamination shingle explode
     // and the final anti-join), and its subtree is the ENTIRE pipeline so
     // far — stages 1-3 including the near-dup pair generation. Without a
@@ -64,8 +55,15 @@ object TrainingPipeline {
     // pipeline — three filters in) makes stages 1-3 run exactly once.
     // At 100 TB this is the standard staging point: a real pipeline
     // writes the filtered survivors before decontamination anyway.
-    val keep3 = if (materializeSurvivors) keep3raw.localCheckpoint(true)
-                else keep3raw
+    val keep3 = keep2
+      .withColumn("chars", length(col("text")))
+      .withColumn("n_tok", size(split(col("text"), " ")))
+      .withColumn("n_grams", greatest(col("n_tok") - 2, lit(0)))
+      .withColumn("rep", when(col("n_grams") > 0,
+        (col("n_grams") - size(expr("graft_shingle_hashes(text, 3)"))).cast("double") /
+          col("n_grams")).otherwise(lit(0.0)))
+      .filter(col("chars") >= 120 && col("n_tok") >= 30 && col("rep") <= 0.01)
+      .localCheckpoint(true)
 
     // 4. decontamination against the FULL test split (not deduped — any
     // leaked n-gram counts); one hash-keyed semi-join each side

@@ -340,30 +340,6 @@ object Profile {
           (name, f) => time(s"evolvej-$name") { f(); 0L })
         time("evolvej-final-read")(out.count())
         spark.sparkContext.removeSparkListener(listener)
-      case "trainab" =>
-        // same-JVM interleaved A/B of the r14 survivor materialization
-        Seq(("warm", true), ("off", false), ("on", true), ("off2", false),
-          ("on2", true), ("off3", false), ("on3", true)).foreach {
-          case (tag, on) =>
-            time(s"train-$tag")(graft.ops.TrainingPipeline
-              .trainManifest(spark, sfDir, materializeSurvivors = on).count())
-        }
-      case "lpab" =>
-        // same-JVM interleaved A/B of the labelProp aligned checkpoint
-        Seq(("warm", true), ("off", false), ("on", true), ("off2", false),
-          ("on2", true), ("off3", false), ("on3", true)).foreach {
-          case (tag, on) =>
-            time(s"lp-$tag")(graft.ops.Graph
-              .labelProp(spark, sfDir, alignEdges = on).count())
-        }
-      case "prab" =>
-        // same-JVM interleaved A/B of the pageRank aligned checkpoint
-        Seq(("warm", true), ("off", false), ("on", true), ("off2", false),
-          ("on2", true), ("off3", false), ("on3", true)).foreach {
-          case (tag, on) =>
-            time(s"pr-$tag")(graft.ops.Graph
-              .pageRank(spark, sfDir, alignEdges = on).count())
-        }
       case "pipeline" =>
         time("pipeline")(graft.SparkEntry.queries("q_dedup_pipeline")(spark, sfDir).count())
       case "streamlat" =>

@@ -36,29 +36,56 @@ class OffsetWatermarkSpec extends SparkSpec {
       _.collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getInt(2)))).toMap)
       .getOrElse(Map.empty)
 
+  /** A watermark store in the retired bucketed layout, written with plain
+    * Spark: `_bucket=<id>` partition dirs plus the `_nbuckets-<n>` modulus
+    * file that layout kept beside them. */
+  private def writeLegacyBucketed(dir: String,
+                                  df: org.apache.spark.sql.DataFrame,
+                                  n: Int): Unit = {
+    df.withColumn(BucketedUpsertSink.BucketCol,
+        BucketedUpsertSink.bucketOf(col("id"), n))
+      .write.partitionBy(BucketedUpsertSink.BucketCol).parquet(dir)
+    assert(new java.io.File(dir, s"_nbuckets-$n").createNewFile())
+  }
+
+  /** Entries of a watermark dir left over from the retired bucketed layout. */
+  private def bucketedLeftovers(statePath: String): Seq[String] =
+    new java.io.File(OffsetWatermark.path(statePath)).listFiles().map(_.getName)
+      .filter(n => n.startsWith(BucketedUpsertSink.BucketCol + "=") ||
+        n.startsWith("_nbuckets-")).toSeq
+
   test("advance: an empty batch is a full no-op — no store created, no " +
     "rewrite — in both the bucketed and flat layouts (r9 review: the empty " +
     "bucketed first write seeded a schema-less dir that crashed current())") {
     val empty = Seq.empty[(Int, Long, Int)].toDF("id", "offset", "_ridx")
     val some = Seq((1, 10L, 0), (2, 20L, 0)).toDF("id", "offset", "_ridx")
-    for (buckets <- Seq(Some(4), None)) {
-      val statePath = tmpDir("wm-empty") + "/state"
-      OffsetWatermark.advance(spark, statePath, empty, "id", buckets)
-      assert(OffsetWatermark.current(spark, statePath).isEmpty,
-        s"empty first batch must not create the store (buckets=$buckets)")
-      assert(!new java.io.File(OffsetWatermark.path(statePath)).exists(),
-        s"no dir at all should appear (buckets=$buckets)")
-      // the store must still bootstrap and read back fine afterwards
-      OffsetWatermark.advance(spark, statePath, some, "id", buckets)
-      assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((20L, 0))))
-      // an empty batch against an EXISTING store: no rewrite (mtimes frozen)
+    def frozen(statePath: String, layout: String): Unit = {
       val dir = new java.io.File(OffsetWatermark.path(statePath))
       val before = dir.listFiles().map(f => f.getName -> f.lastModified).toMap
-      OffsetWatermark.advance(spark, statePath, empty, "id", buckets)
+      OffsetWatermark.advance(spark, statePath, empty, "id")
       val after = dir.listFiles().map(f => f.getName -> f.lastModified).toMap
-      assert(after === before, s"empty batch must not rewrite (buckets=$buckets)")
-      assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((20L, 0))))
+      assert(after === before, s"empty batch must not rewrite ($layout)")
+      assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((20L, 0))), layout)
     }
+    // flat: the store advance itself creates
+    val statePath = tmpDir("wm-empty") + "/state"
+    OffsetWatermark.advance(spark, statePath, empty, "id")
+    assert(OffsetWatermark.current(spark, statePath).isEmpty,
+      "empty first batch must not create the store")
+    assert(!new java.io.File(OffsetWatermark.path(statePath)).exists(),
+      "no dir at all should appear")
+    // the store must still bootstrap and read back fine afterwards
+    OffsetWatermark.advance(spark, statePath, some, "id")
+    assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((20L, 0))))
+    // an empty batch against an EXISTING store: no rewrite (mtimes frozen)
+    frozen(statePath, "flat")
+    // bucketed: an empty batch must not migrate a legacy store
+    val legacyPath = tmpDir("wm-empty-legacy") + "/state"
+    writeLegacyBucketed(OffsetWatermark.path(legacyPath),
+      some.select(col("id"), col("offset").as(OffsetWatermark.OffsetCol),
+        col("_ridx").as(OffsetWatermark.RidxCol)), 4)
+    frozen(legacyPath, "legacy bucketed")
+    assert(bucketedLeftovers(legacyPath).nonEmpty)
   }
 
   test("current: a historical schema-less watermark dir (only _SUCCESS) " +
@@ -70,7 +97,7 @@ class OffsetWatermarkSpec extends SparkSpec {
     assert(OffsetWatermark.current(spark, statePath).isEmpty,
       "_SUCCESS alone must not count as data")
     OffsetWatermark.advance(spark, statePath,
-      Seq((5, 50L, 0)).toDF("id", "offset", "_ridx"), "id", Some(4))
+      Seq((5, 50L, 0)).toDF("id", "offset", "_ridx"), "id")
     assert(wmOf(statePath) === Map(5 -> ((50L, 0))))
   }
 
@@ -80,11 +107,11 @@ class OffsetWatermarkSpec extends SparkSpec {
     val statePath = tmpDir("wm-pair") + "/state"
     OffsetWatermark.advance(spark, statePath,
       Seq((1, 7L, 0), (1, 7L, 3), (2, 4L, 1)).toDF("id", "offset", "_ridx"),
-      "id", None)
+      "id")
     assert(wmOf(statePath) === Map(1 -> ((7L, 3)), 2 -> ((4L, 1))))
     // a later batch with the SAME offset but lower ridx must not regress
     OffsetWatermark.advance(spark, statePath,
-      Seq((1, 7L, 1), (2, 9L, 0)).toDF("id", "offset", "_ridx"), "id", None)
+      Seq((1, 7L, 1), (2, 9L, 0)).toDF("id", "offset", "_ridx"), "id")
     assert(wmOf(statePath) === Map(1 -> ((7L, 3)), 2 -> ((9L, 0))))
   }
 
@@ -250,7 +277,7 @@ class OffsetWatermarkSpec extends SparkSpec {
       StructField("offset", LongType), StructField("_ridx", IntegerType)))
     val row = spark.createDataFrame(
       java.util.Arrays.asList(Row(3, 11L, null)), schema)
-    OffsetWatermark.advance(spark, statePath, row, "id", None)
+    OffsetWatermark.advance(spark, statePath, row, "id")
     assert(wmOf(statePath) === Map(3 -> ((11L, 0))),
       "null _ridx must be stored as position 0, never as null")
     // crash-retry: the same row re-screened against the watermark it itself
@@ -261,7 +288,7 @@ class OffsetWatermarkSpec extends SparkSpec {
       "equal position (11, null==0) must re-read as fresh")
     // a same-offset sibling applied at a HIGHER _ridx supersedes it
     OffsetWatermark.advance(spark, statePath,
-      Seq((3, 11L, 2)).toDF("id", "offset", "_ridx"), "id", None)
+      Seq((3, 11L, 2)).toDF("id", "offset", "_ridx"), "id")
     val (f2, s2) = OffsetWatermark.splitStale(
       row, OffsetWatermark.current(spark, statePath), "id")
     assert(f2.count() === 0L && s2.count() === 1L,
@@ -271,28 +298,21 @@ class OffsetWatermarkSpec extends SparkSpec {
   test("a pre-_ridx watermark store (r9 schema upgrade) reads and merges: " +
     "the first post-upgrade batch neither wedges on column resolution nor " +
     "poisons the position compares, in both layouts (r9 review)") {
-    for (buckets <- Seq(None, Some(4))) {
-      val statePath = tmpDir(s"wm-migrate-${buckets.isDefined}") + "/state"
+    for (bucketed <- Seq(false, true)) {
+      val statePath = tmpDir(s"wm-migrate-$bucketed") + "/state"
       val dir = OffsetWatermark.path(statePath)
       val legacy = Seq((1, 10L), (2, 20L)).toDF("id", OffsetWatermark.OffsetCol)
-      buckets match {
-        case Some(n) => legacy
-          .withColumn(BucketedUpsertSink.BucketCol,
-            BucketedUpsertSink.bucketOf(col("id"), n))
-          .write.partitionBy(BucketedUpsertSink.BucketCol).parquet(dir)
-        case None => legacy.write.parquet(dir)
-      }
+      if (bucketed) writeLegacyBucketed(dir, legacy, 4)
+      else legacy.write.parquet(dir)
       assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((20L, 0))),
-        s"legacy rows read as position (offset, 0) (buckets=$buckets)")
-      // the merge leaves the store PARTIALLY migrated in the bucketed
-      // layout (untouched buckets keep the old schema) — reads must still
-      // see every row's position
+        s"legacy rows read as position (offset, 0) (bucketed=$bucketed)")
       OffsetWatermark.advance(spark, statePath,
-        Seq((1, 10L, 2), (3, 30L, 0)).toDF("id", "offset", "_ridx"),
-        "id", buckets)
+        Seq((1, 10L, 2), (3, 30L, 0)).toDF("id", "offset", "_ridx"), "id")
       assert(wmOf(statePath) ===
         Map(1 -> ((10L, 2)), 2 -> ((20L, 0)), 3 -> ((30L, 0))),
-        s"post-upgrade merge over a legacy store (buckets=$buckets)")
+        s"post-upgrade merge over a legacy store (bucketed=$bucketed)")
+      assert(bucketedLeftovers(statePath).isEmpty,
+        s"the merge must leave the store flat (bucketed=$bucketed)")
     }
   }
 
@@ -457,38 +477,19 @@ class OffsetWatermarkSpec extends SparkSpec {
       "the heal must restore the quarantine dir on disk")
   }
 
-  test("advance: layout migration — a FLAT sidecar under a newly-bucketed " +
-    "config is rewritten bucketed once instead of wedging on the missing " +
-    "_bucket column, and vice versa (ADVICE r9)") {
-    // flat -> bucketed
-    val s1 = tmpDir("wm-mig-fb") + "/state"
-    OffsetWatermark.advance(spark, s1,
-      Seq((1, 10L, 0), (2, 20L, 0)).toDF("id", "offset", "_ridx"), "id", None)
-    OffsetWatermark.advance(spark, s1,
-      Seq((2, 25L, 0), (3, 30L, 0)).toDF("id", "offset", "_ridx"), "id", Some(4))
-    assert(wmOf(s1) === Map(1 -> ((10L, 0)), 2 -> ((25L, 0)), 3 -> ((30L, 0))),
-      "the migrated store must merge old flat entries with the new batch")
-    val dir1 = new java.io.File(OffsetWatermark.path(s1))
-    assert(dir1.listFiles().exists(_.getName.startsWith(
-      BucketedUpsertSink.BucketCol + "=")),
-      "after migration the store must be laid out bucketed")
-    // and the NEXT bucketed batch takes the normal pruned path
-    OffsetWatermark.advance(spark, s1,
-      Seq((1, 40L, 0)).toDF("id", "offset", "_ridx"), "id", Some(4))
-    assert(wmOf(s1) === Map(1 -> ((40L, 0)), 2 -> ((25L, 0)), 3 -> ((30L, 0))))
-
-    // bucketed -> flat
-    val s2 = tmpDir("wm-mig-bf") + "/state"
-    OffsetWatermark.advance(spark, s2,
-      Seq((1, 10L, 0), (2, 20L, 0)).toDF("id", "offset", "_ridx"), "id", Some(4))
-    OffsetWatermark.advance(spark, s2,
-      Seq((2, 25L, 0), (3, 30L, 0)).toDF("id", "offset", "_ridx"), "id", None)
-    assert(wmOf(s2) === Map(1 -> ((10L, 0)), 2 -> ((25L, 0)), 3 -> ((30L, 0))))
-    val dir2 = new java.io.File(OffsetWatermark.path(s2))
-    assert(!dir2.listFiles().exists(_.getName.startsWith(
-      BucketedUpsertSink.BucketCol + "=")),
-      "after migration the store must be laid out flat")
-    assert(OffsetWatermark.current(spark, s2).get.columns.toSet ===
+  test("advance: layout migration — a legacy BUCKETED sidecar (with its " +
+    "_nbuckets-N modulus file) is rewritten flat once, keeping every " +
+    "stored entry (ADVICE r9)") {
+    val statePath = tmpDir("wm-mig-bf") + "/state"
+    writeLegacyBucketed(OffsetWatermark.path(statePath),
+      Seq((1, 10L, 0), (2, 20L, 0)).toDF("id", OffsetWatermark.OffsetCol,
+        OffsetWatermark.RidxCol), 4)
+    OffsetWatermark.advance(spark, statePath,
+      Seq((2, 25L, 0), (3, 30L, 0)).toDF("id", "offset", "_ridx"), "id")
+    assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((25L, 0)), 3 -> ((30L, 0))))
+    assert(bucketedLeftovers(statePath).isEmpty,
+      s"after migration the store must be laid out flat: ${bucketedLeftovers(statePath)}")
+    assert(OffsetWatermark.current(spark, statePath).get.columns.toSet ===
       Set("id", OffsetWatermark.OffsetCol, OffsetWatermark.RidxCol))
   }
 }

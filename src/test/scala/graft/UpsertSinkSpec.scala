@@ -204,21 +204,6 @@ class UpsertSinkSpec extends SparkSpec {
     assert(after.getAs[String]("segment") === "silver")
   }
 
-  test("foreachBatchApply: envelope columns never evolve into the state table") {
-    // with schema evolution in the merge, the raw envelope's table/offset/
-    // ts/data columns would become payload columns unless dropped
-    val root = tmpDir("fba")
-    val statePath = s"$root/state"
-    val schema = Seq.empty[(Int, String)].toDF("id", "name").schema
-    val apply = UpsertSink.foreachBatchApply(spark, statePath, "id", schema)
-    val batch = Seq(("create", 1, "ann", "t", 1L, "{}"))
-      .toDF("op", "id", "name", "table", "offset", "data")
-    apply(batch, 0L)
-    val state = spark.read.parquet(statePath)
-    assert(state.columns.sorted.toSeq === Seq("id", "name"))
-    assert(state.collect().toSeq === Seq(Row(1, "ann")))
-  }
-
   test("bucketed sink: interrupted evolution swap heals instead of losing the state") {
     import graft.cdc.{BucketedUpsertSink, ManifestStore}
     val path = tmpDir("bsinkcrash") + "/state"
@@ -266,25 +251,6 @@ class UpsertSinkSpec extends SparkSpec {
     // update keeps the coalesce fallback (explicit-null unsupported w/o mask)
     val out2 = UpsertSink.applyBatch(s0, changes(("update", 1, "ann2", null)), "id")
     assert(out2.collect().toSeq === Seq(Row(1, "ann2", "nyc")))
-  }
-
-  test("foreachBatchApply: rows of one multi-row event (same pk, same " +
-    "offset) resolve deterministically by _ridx — the later row wins " +
-    "(r9 review: without the tiebreak the winner was partition order)") {
-    val statePath = tmpDir("fba-ridx") + "/state"
-    val schema = Seq((0, "x")).toDF("id", "name").schema
-    val apply = UpsertSink.foreachBatchApply(spark, statePath, "id", schema)
-    val batch = Seq(
-      ("create", 1, 7L, 0, "row-zero"),
-      ("create", 1, 7L, 1, "row-one"))
-      .toDF("op", "id", "offset", "_ridx", "name")
-      .withColumn("table", lit("t"))
-      // many partitions so partition order cannot mask a missing tiebreak
-      .repartition(8)
-    apply(batch, 0L)
-    val got = spark.read.parquet(statePath).collect().toSeq
-    assert(got === Seq(Row(1, "row-one")),
-      "the _ridx-1 row of the offset-7 envelope must win compaction")
   }
 
   test("atomicSwapDirs survives concurrent readers healing mid-swap: " +

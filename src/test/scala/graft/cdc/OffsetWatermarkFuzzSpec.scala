@@ -383,7 +383,7 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
     val b1Typed = Seq((1, 10L, Option(1), "a"), (2, 5L, Option(0), "a"),
       (3, 7L, Option.empty[Int], "a"), (4, 2L, Option(2), "a"))
       .toDF("pk", "offset", "_ridx", "payload")
-    OffsetWatermark.advance(spark, statePath, b1Typed, "pk", None)
+    OffsetWatermark.advance(spark, statePath, b1Typed, "pk")
     // batch 2: pk1 regresses (stays), pk2 same offset higher ridx
     // (advances), pk3 null ridx again at higher offset, pk2 DUPLICATED in
     // one batch (in-batch max first), pk5 new
@@ -391,7 +391,7 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
       (2, 5L, Option(1), "b"), (3, 8L, Option.empty[Int], "b"),
       (5, 1L, Option(0), "b"))
       .toDF("pk", "offset", "_ridx", "payload")
-    OffsetWatermark.advance(spark, statePath, b2, "pk", None)
+    OffsetWatermark.advance(spark, statePath, b2, "pk")
     val stored = OffsetWatermark.current(spark, statePath).get
       .collect().map(r => r.getInt(0) ->
         Pos(r.getLong(1), r.getInt(2))).toMap

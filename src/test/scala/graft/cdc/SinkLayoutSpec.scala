@@ -9,8 +9,9 @@ import org.apache.spark.sql.types._
   * the config changes a deployment actually makes — flipping
   * `state.buckets` ON over an existing flat store, upgrading a store in
   * the retired in-place bucket-dir layout, and changing the bucket COUNT —
-  * without silently dropping or duplicating rows; and the refresh staging
-  * path must survive an empty source table. */
+  * without silently dropping or duplicating rows; a watermark sidecar left
+  * in the retired bucketed layout must go flat without losing an entry;
+  * and the refresh staging path must survive an empty source table. */
 class SinkLayoutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -109,24 +110,50 @@ class SinkLayoutSpec extends SparkSpec {
       }
   }
 
-  test("the watermark sidecar migrates a changed bucket modulus (full " +
-    "merge + rewrite) instead of pruning with new ids over old dirs and " +
-    "minting duplicate pk entries") {
-    val statePath = tmpDir("layout-wm") + "/t"
-    def batch(id: Int, off: Long) =
-      Seq((id, off, 0)).toDF("id", "offset", "_ridx")
-    OffsetWatermark.advance(spark, statePath, batch(1, 10L), "id", Some(4))
-    OffsetWatermark.advance(spark, statePath, batch(1, 20L), "id", Some(8))
-    val wm = OffsetWatermark.current(spark, statePath).get
-      .orderBy("id").collect()
-    assert(wm.length === 1,
-      s"one entry per pk after the modulus migration, got ${wm.toSeq}")
-    assert(wm.head.getAs[Long](OffsetWatermark.OffsetCol) === 20L,
-      "the migrated entry must carry the max position")
-    val names = new java.io.File(OffsetWatermark.path(statePath))
-      .listFiles().map(_.getName)
-    assert(names.contains("_nbuckets-8"),
-      s"the sidecar must record the new modulus: ${names.mkString(",")}")
+  test("a legacy BUCKETED watermark sidecar (any modulus, with its " +
+    "_nbuckets-N file) goes flat on the first batch of a bucketed " +
+    "Pipeline: one entry per pk at the max position, and a superseded " +
+    "repair still replays as stale") {
+    import graft.model._
+    val sinkRoot = tmpDir("layout-wm")
+    val sync = SyncConfig("t", pk = "id", schema = Some(payload))
+    val wmDir = OffsetWatermark.path(s"$sinkRoot/${sync.indexName}")
+    // the retired layout, at a modulus (8) other than the sink's (4)
+    Seq((1, 5L, 0), (2, 6L, 0), (3, 4L, 0))
+      .toDF("id", OffsetWatermark.OffsetCol, OffsetWatermark.RidxCol)
+      .withColumn(BucketedUpsertSink.BucketCol,
+        BucketedUpsertSink.bucketOf(col("id"), 8))
+      .write.partitionBy(BucketedUpsertSink.BucketCol).parquet(wmDir)
+    assert(new java.io.File(wmDir, "_nbuckets-8").createNewFile())
+    val src = new MemoryCdcSource(spark)
+    val pipe = new Pipeline(spark,
+      PipelineConfig(Seq(sync), stateBuckets = Some(4)), src, sinkRoot)
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    src.addEvents(
+      ChangeEvent("create", "t", 7, ts, """{"id": null, "v": "stale"}"""),
+      ChangeEvent("create", "t", 10, ts, """{"id": 1, "v": "a"}"""),
+      ChangeEvent("create", "t", 11, ts, """{"id": 2, "v": "b"}"""))
+    val q = pipe.start(tmpDir("layout-wm-ckpt"))
+    q.processAllAvailable(); q.stop()
+    val wm = OffsetWatermark.current(spark, s"$sinkRoot/${sync.indexName}")
+      .get.orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(wm === Seq((1, 10L, 0), (2, 11L, 0), (3, 4L, 0)),
+      "one entry per pk at the max position, untouched legacy pks kept")
+    val names = new java.io.File(wmDir).listFiles().map(_.getName)
+    assert(!names.exists(n => n.startsWith(BucketedUpsertSink.BucketCol + "=") ||
+      n.startsWith("_nbuckets-")),
+      s"the sidecar must be flat after its first advance: ${names.mkString(",")}")
+    // the quarantined offset-7 envelope repaired to pk 1, which the live
+    // batch already applied at offset 10: superseded, so discarded
+    val dl = pipe.deadLetterPath(sync)
+    val repaired = spark.read.parquet(dl).withColumn("id", lit(1))
+      .localCheckpoint(true)
+    repaired.write.mode("overwrite").parquet(dl)
+    assert(pipe.replayDeadLetters() === Map("t" -> ((0L, 1L, 0L))))
+    assert(pipe.sinkState(sync).orderBy("id").collect().toSeq ===
+      Seq(Row(1, "a"), Row(2, "b")))
+    pipe.releaseLeases()
   }
 
   test("staging an EMPTY snapshot with a bucketed layout returns count 0 " +
