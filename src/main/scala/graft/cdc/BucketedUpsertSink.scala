@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes:
   *  - the batch shuffles once on the pk (inside [[UpsertSink.applyBatch]]);
-  *    the state side reads ONLY the touched buckets' dirs — the touched-set
-  *    collect is bounded by `numBuckets`, a config, never by data volume.
+  *    the state side reads ONLY the touched buckets' dirs. The touched set
+  *    ([[touchedBuckets]]) is one aggregate whose result `numBuckets` bounds
+  *    (a config, never data volume); the pipeline folds it into the probe
+  *    aggregate it already runs over the batch and passes it in.
   *  - idempotent like the flat sink: replaying a batch yields the same
   *    buckets with the same contents.
   *
@@ -52,6 +54,16 @@ object BucketedUpsertSink {
 
   def bucketOf(pk: Column, numBuckets: Int): Column =
     pmod(xxhash64(pk), lit(numBuckets.toLong))
+
+  /** Aggregate column: the set of buckets the non-null values of `pk` land
+    * in (a null pk hashes to a real bucket, so it is masked out). */
+  def touchedBucketsCol(pk: Column, numBuckets: Int): Column =
+    collect_set(when(pk.isNotNull, bucketOf(pk, numBuckets)))
+
+  /** The buckets `changes` touches, sorted — one aggregate job. */
+  def touchedBuckets(changes: DataFrame, pk: String, numBuckets: Int): Seq[Long] =
+    changes.agg(touchedBucketsCol(col(pk), numBuckets)).head()
+      .getSeq[Long](0).sorted
 
   private def listNames(spark: SparkSession, statePath: String): Array[String] = {
     // Heal an interrupted legacy swap FIRST (live moved to '.old', next
@@ -101,11 +113,17 @@ object BucketedUpsertSink {
     * very first batch work against a not-yet-created state (bootstrap
     * without a separate init). `statCols` are the zone-map stat columns the
     * manifest carries per bucket — a property of the store, like the
-    * modulus: empty adopts the store's, different ones fail loud. */
+    * modulus: empty adopts the store's, different ones fail loud.
+    * `touched` is the batch's bucket set when the caller already knows it
+    * (it must be exactly `touchedBuckets(changes, pk, numBuckets)`);
+    * otherwise it is computed here. An empty set publishes nothing, after
+    * the legacy migration and the evolution guard have run. `changes` is
+    * consumed once, by the merge. */
   def applyBatch(spark: SparkSession, statePath: String, changes: DataFrame,
                  pk: String, numBuckets: Int,
                  schema: Option[org.apache.spark.sql.types.StructType] = None,
-                 statCols: Seq[String] = Seq.empty): Unit = {
+                 statCols: Seq[String] = Seq.empty,
+                 touched: Option[Seq[Long]] = None): Unit = {
     val m = ManifestStore.currentManifest(spark, statePath)
     // modulus fence (review r11): `pmod(hash, n)` decides which bucket a pk
     // lives in, so merging under a different modulus would miss existing
@@ -152,18 +170,19 @@ object BucketedUpsertSink {
     // one-time full merge + full publish so no two live bucket dirs ever
     // disagree on physical types. The resolved
     // manifest `m` is threaded through every read and the commit — ONE
-    // manifest parse per batch (review r13 #6). The check itself probes ONE
-    // bucket dir's footer: the invariant this guard enforces is that every
-    // live dir carries the same physical schema, so one dir answers for the
-    // store — a frame over every live dir here cost an O(total buckets)
-    // file listing per batch (the r13 `ScaleCurve manifest` batch measured
-    // it as the only per-commit term that grew with store size; at
-    // object-store scale it is a per-batch LIST storm). An empty manifest
+    // manifest parse per batch (review r13 #6). The check itself reads ONE
+    // bucket dir's footer on the driver, with no job: the invariant this
+    // guard enforces is that every live dir carries the same physical
+    // schema, so one dir answers for the store — a frame over every live
+    // dir here cost an O(total buckets) file listing per batch (the r13
+    // `ScaleCurve manifest` batch measured it as the only per-commit term
+    // that grew with store size; at object-store scale it is a per-batch
+    // LIST storm). An empty manifest
     // has no stored schema to disagree with — nothing to check.
     m.foreach { mm =>
       if (mm.buckets.nonEmpty) {
         val refDir = s"$statePath/${mm.buckets.minBy(_._1)._2.relDir}"
-        val storedTypes = spark.read.parquet(refDir).schema
+        val storedTypes = ParquetFooter.schemaOf(spark, refDir)
           .filterNot(_.name == BucketCol)
           .map(f => f.name -> f.dataType).toMap
         val evolved = changes.schema
@@ -177,23 +196,18 @@ object BucketedUpsertSink {
         }
       }
     }
-    val withBucket = changes.withColumn(BucketCol, bucketOf(col(pk), numBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    try {
-      val touched = withBucket.select(BucketCol).distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq
-      if (touched.isEmpty) return
-      // OPTIMISTIC commit (r13): the merge is a CLOSURE over the base
-      // manifest so a conflicting concurrent commit (an online repair /
-      // backfill landing between our state read and our publish) makes
-      // the loop re-merge against the winner's state instead of silently
-      // clobbering it. The in-pipeline path is lease-serialized, so the
-      // first attempt wins there and this costs one claim-file create.
-      ManifestStore.commitBatchOptimistic(spark, statePath, touched,
-        numBuckets, effStatCols, prev = Some(m))(
-        upsertMergeOf(spark, statePath, payloadSchema, touched,
-          withBucket.drop(BucketCol), pk, numBuckets))
-      ()
-    } finally { withBucket.unpersist(); () }
+    val touchedSet = touched.getOrElse(touchedBuckets(changes, pk, numBuckets))
+    if (touchedSet.isEmpty) return
+    // OPTIMISTIC commit (r13): the merge is a CLOSURE over the base
+    // manifest so a conflicting concurrent commit (an online repair /
+    // backfill landing between our state read and our publish) makes
+    // the loop re-merge against the winner's state instead of silently
+    // clobbering it. The in-pipeline path is lease-serialized, so the
+    // first attempt wins there and this costs one claim-file create.
+    ManifestStore.commitBatchOptimistic(spark, statePath, touchedSet,
+      numBuckets, effStatCols, prev = Some(m))(
+      upsertMergeOf(spark, statePath, payloadSchema, touchedSet, changes, pk,
+        numBuckets))
+    ()
   }
 }

@@ -2,7 +2,9 @@ package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Manifest-versioned IMMUTABLE-FILE layout — the one physical layout of
   * the bucketed upsert sink ([[BucketedUpsertSink]]). It replaced an
@@ -45,8 +47,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * writers; the store no longer depends on it for integrity).
   *
   * 100 TB posture: the manifest is O(buckets) text resolved once per scan
-  * (the Delta `_last_checkpoint` shape); per-commit work is one bounded
-  * stats aggregate plus O(touched buckets) renames; vacuum listing is
+  * (the Delta `_last_checkpoint` shape); per-commit work is the one write
+  * of the touched buckets plus O(touched buckets) renames and footer reads
+  * on the driver (the stats come from the written files' footers, so the
+  * merged data is computed once and runs no stats job); vacuum listing is
   * bounded by the retention window and runs driver-side — at production
   * scale it is the periodic OPTIMIZE/VACUUM job, and running it per commit
   * here only because the retained set stays small.
@@ -546,7 +550,11 @@ object ManifestStore {
     * Data files carry the bucket id as a NORMAL long column ([[BucketCol]]),
     * so no partition-directory inference is ever involved; an empty
     * selection (or no manifest yet) returns an empty frame with
-    * payload-schema + bucket column. Every file this touches is immutable —
+    * payload-schema + bucket column. The schema is the first selected
+    * dir's footer, read on the driver: the footer Spark's own non-merging
+    * inference would read, without the job it runs to read it (every live
+    * dir shares one physical schema — the sink's evolution guard). Every
+    * file this touches is immutable —
     * a concurrent commit can supersede them in a NEWER manifest but never
     * delete them inside the retention window, so the read cannot hit a
     * vanished file. */
@@ -570,61 +578,87 @@ object ManifestStore {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(schema.fields.filterNot(_.name == BucketCol) :+
           StructField(BucketCol, LongType)))
-    else spark.read.parquet(dirs: _*)
+    else spark.read.schema(ParquetFooter.schemaOf(spark, dirs.head))
+      .parquet(dirs: _*)
   }
 
+  private val BpartRe = """_bpart=(\d+)""".r
+
   /** Write one commit's data dir from a bucket-columned frame and return
-    * the per-bucket entries (dir + stats, one bounded aggregate). An empty
-    * frame writes nothing and returns no entries. The input should be
-    * persisted by the caller (it is consumed twice: stats + files). */
+    * the per-bucket entries (dir + stats). The frame is consumed ONCE, by
+    * the write: each bucket's row count and stat bounds come from its
+    * written files' footers on the driver ([[ParquetFooter.integralStats]]).
+    * A frame with no rows leaves no dir and returns no entries. A failed
+    * write drops its staging registration and its partial dir before
+    * rethrowing — an unpublished dir is never referenced, so nothing else
+    * can need it. */
   private def writeCommit(spark: SparkSession, statePath: String,
                           withBucket: DataFrame,
                           statCols: Seq[String]): Map[Long, BucketEntry] = {
-    val statAggs = count(lit(1)).as("__n") +: statCols.flatMap(c => Seq(
-      min(col(c).cast("long")).as(s"__min_$c"),
-      max(col(c).cast("long")).as(s"__max_$c")))
-    val stats = withBucket.groupBy(col(BucketCol))
-      .agg(statAggs.head, statAggs.tail: _*)
-      .collect()
-      .map { r =>
-        val b = r.getLong(r.fieldIndex(BucketCol))
-        val st = statCols.map { c =>
-          def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
-          c -> ((opt(r.fieldIndex(s"__min_$c")), opt(r.fieldIndex(s"__max_$c"))))
-        }.toMap
-        b -> ((r.getLong(r.fieldIndex("__n")), st))
-      }.toMap
-    if (stats.isEmpty) return Map.empty
+    // the footer bounds equal min/max(cast(c as long)) only for integral
+    // columns (the BucketEntry contract): refuse anything else up front
+    statCols.foreach { c =>
+      val t = withBucket.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"zone-map stat column '$c' is $t; stat columns must be integral")
+    }
     val rel = s"$DataDir/c-${System.currentTimeMillis()}-" +
       java.util.UUID.randomUUID().toString.take(8)
     val abs = s"$statePath/$rel"
+    val (fs, absP) = hfs(spark, abs)
     // registered BEFORE any file exists: vacuum must skip this dir for as
     // long as this driver is still staging/publishing it, however slow
     activeStaging.add(abs)
-    // partitionBy gives one dir per bucket but strips the column and names
-    // dirs `_bpart=<id>` — hidden to any Spark listing. Duplicate the
-    // bucket id into a partition-only column, write, then rename each dir
-    // to the plain `bucket-<id>` the manifest references (O(touched
-    // buckets) driver renames; the files inside keep the real BucketCol).
-    withBucket.withColumn("_bpart", col(BucketCol))
-      .repartition(col("_bpart"))
-      .write.mode("overwrite").partitionBy("_bpart").parquet(abs)
-    val (fs, absP) = hfs(spark, abs)
-    val entries = stats.map { case (b, (n, st)) =>
-      val src = new org.apache.hadoop.fs.Path(abs, s"_bpart=$b")
-      val dst = new org.apache.hadoop.fs.Path(abs, f"bucket-$b%05d")
-      if (!fs.rename(src, dst))
-        throw new IllegalStateException(s"commit rename failed: $src -> $dst")
-      b -> BucketEntry(f"$rel%s/bucket-$b%05d", n, st)
+    try {
+      // partitionBy gives one dir per bucket but strips the column and
+      // names dirs `_bpart=<id>` — hidden to any Spark listing. Duplicate
+      // the bucket id into a partition-only column, write, then rename each
+      // dir to the plain `bucket-<id>` the manifest references (O(touched
+      // buckets) driver renames; the files inside keep the real BucketCol).
+      withBucket.withColumn("_bpart", col(BucketCol))
+        .repartition(col("_bpart"))
+        .write.mode("overwrite").partitionBy("_bpart").parquet(abs)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val entries = fs.listStatus(absP).toSeq.map(_.getPath.getName).collect {
+        case BpartRe(id) =>
+          val b = id.toLong
+          val src = new org.apache.hadoop.fs.Path(absP, s"_bpart=$b")
+          val (n, st) = ParquetFooter.integralStats(conf,
+            ParquetFooter.dataFiles(fs, src), statCols)
+          val dst = new org.apache.hadoop.fs.Path(absP, f"bucket-$b%05d")
+          if (!fs.rename(src, dst))
+            throw new IllegalStateException(s"commit rename failed: $src -> $dst")
+          b -> BucketEntry(f"$rel%s/bucket-$b%05d", n, st)
+      }.toMap
+      if (entries.isEmpty) discardStaging(fs, abs)
+      else {
+        // drop the _SUCCESS marker so only bucket dirs remain (cosmetic)
+        try { fs.delete(new org.apache.hadoop.fs.Path(absP, "_SUCCESS"), false); () }
+        catch { case _: java.io.IOException => () }
+      }
+      entries
+    } catch {
+      case t: Throwable =>
+        discardStaging(fs, abs)
+        throw t
     }
-    // drop the _SUCCESS marker so only bucket dirs remain (cosmetic)
-    try { fs.delete(new org.apache.hadoop.fs.Path(absP, "_SUCCESS"), false); () }
-    catch { case _: java.io.IOException => () }
-    entries
   }
 
+  /** Drop one of THIS driver's unpublished commit dirs: its staging
+    * registration and its files. Only for a dir no manifest references. */
+  private def discardStaging(fs: org.apache.hadoop.fs.FileSystem,
+                             abs: String): Unit = {
+    activeStaging.remove(abs)
+    try { fs.delete(new org.apache.hadoop.fs.Path(abs), true); () }
+    catch { case _: java.io.IOException => () }
+  }
+
+  /** Commit dirs of `statePath` this driver is still staging (specs). */
+  private[cdc] def stagingUnder(statePath: String): Set[String] =
+    activeStaging.asScala.filter(_.startsWith(statePath + "/")).toSet
+
   /** Apply one micro-batch commit: `merged` is the NEW full content of the
-    * `touched` buckets (bucket-columned, caller-persisted); untouched
+    * `touched` buckets (bucket-columned, consumed once); untouched
     * buckets carry their prior manifest entries forward unchanged — their
     * files are not read, moved, or rewritten. A touched bucket absent from
     * `merged` (its last row deleted) leaves the manifest. */
@@ -678,14 +712,14 @@ object ManifestStore {
     *
     * `computeMerged(base)` must return the new FULL content of the
     * `touched` buckets given the state `base` describes (bucket-columned;
-    * this method persists/unpersists it around the commit-dir write). The
+    * consumed once, by the commit-dir write). The
     * loop: stage files against the current manifest, attempt a
     * claim-guarded publish of version+1; on contention re-read the latest
     * manifest and either REBASE (interleaved commits touched disjoint
     * buckets — our files are still the correct new content, only the
     * manifest pointer moves: O(1) extra cost) or RECOMPUTE (overlap — the
     * merge was computed against superseded bucket content and must re-run;
-    * the orphaned staged files are reaped by [[vacuum]]'s age floor).
+    * the superseded staged dir was never published, so it is deleted).
     *
     * 100 TB posture: contention cost is proportional to CONFLICTING work,
     * never to store size — a rebase is one manifest render+rename; a
@@ -709,12 +743,8 @@ object ManifestStore {
     val touchedSet = touched.toSet
     def validate(m: Option[Manifest]): Unit =
       validateLayout(statePath, m, nbuckets, statCols)
-    def stage(b: Option[Manifest]): Map[Long, BucketEntry] = {
-      val df = computeMerged(b)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      try writeCommit(spark, statePath, df, statCols)
-      finally { df.unpersist(); () }
-    }
+    def stage(b: Option[Manifest]): Map[Long, BucketEntry] =
+      writeCommit(spark, statePath, computeMerged(b), statCols)
     var base = prev.getOrElse(currentManifest(spark, statePath))
     validate(base)
     var written = stage(base)
@@ -786,7 +816,10 @@ object ManifestStore {
                 base = latest
                 rebases += 1 // staged files still valid: manifest-only retry
               } else {
-                releaseStaging(statePath, written) // orphans; vacuum reaps
+                // our stage lost the publish (VersionTaken: no rename
+                // happened), so no manifest references it
+                written.values.headOption.foreach(e => discardStaging(
+                  hfs(spark, statePath)._1, commitDirOf(statePath, e)))
                 base = latest
                 written = stage(base)
                 recomputes += 1
@@ -817,11 +850,13 @@ object ManifestStore {
       } catch { case _: java.io.IOException => () }
     }
 
+  private def commitDirOf(statePath: String, e: BucketEntry): String =
+    s"$statePath/${e.relDir.substring(0, e.relDir.lastIndexOf('/'))}"
+
   private def releaseStaging(statePath: String,
                              written: Map[Long, BucketEntry]): Unit =
     written.values.headOption.foreach { e =>
-      activeStaging.remove(
-        s"$statePath/${e.relDir.substring(0, e.relDir.lastIndexOf('/'))}")
+      activeStaging.remove(commitDirOf(statePath, e))
       ()
     }
 
@@ -831,19 +866,16 @@ object ManifestStore {
   def stageFull(spark: SparkSession, statePath: String, fresh: DataFrame,
                 pk: String, nbuckets: Int,
                 statCols: Seq[String]): StagedCommit = {
-    val withBucket = fresh
-      .withColumn(BucketCol, BucketedUpsertSink.bucketOf(col(pk), nbuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    try {
-      val entries = writeCommit(spark, statePath, withBucket, statCols)
-      // an EMPTY snapshot stages no files; its abort path must be a unique
-      // no-op target, never the shared data root (aborting it would delete
-      // every commit)
-      val rel = entries.values.headOption
-        .map(e => e.relDir.substring(0, e.relDir.lastIndexOf('/')))
-        .getOrElse(s"$DataDir/empty-${java.util.UUID.randomUUID().toString.take(8)}")
-      StagedCommit(s"$statePath/$rel", entries, nbuckets, statCols)
-    } finally { withBucket.unpersist(); () }
+    val entries = writeCommit(spark, statePath, fresh
+      .withColumn(BucketCol, BucketedUpsertSink.bucketOf(col(pk), nbuckets)),
+      statCols)
+    // an EMPTY snapshot stages no files; its abort path must be a unique
+    // no-op target, never the shared data root (aborting it would delete
+    // every commit)
+    val abs = entries.values.headOption.map(commitDirOf(statePath, _))
+      .getOrElse(s"$statePath/$DataDir/empty-" +
+        java.util.UUID.randomUUID().toString.take(8))
+    StagedCommit(abs, entries, nbuckets, statCols)
   }
 
   /** Publish a staged full snapshot: the next manifest references EXACTLY

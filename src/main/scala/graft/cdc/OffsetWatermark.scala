@@ -2,6 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** Per-pk applied-position high-watermark sidecar for an upsert sink.
   *
@@ -111,15 +112,20 @@ object OffsetWatermark {
     * never written. */
   def current(spark: SparkSession, statePath: String): Option[DataFrame] = {
     val dir = path(statePath)
-    // mergeSchema only matters for a legacy store: a retired `_bucket=`
-    // layout whose buckets were rewritten one at a time can hold pre- and
-    // post-_ridx files side by side, and inference from one arbitrary
-    // footer would drop the column. A flat store is written whole, so
-    // its footers agree.
-    if (hasData(entryNames(spark, dir)))
-      Some(normalizeStored(spark.read.option("mergeSchema", "true")
-        .parquet(dir).drop(BucketedUpsertSink.BucketCol)))
-    else None
+    // The schema is known up front, so the read runs no inference job: one
+    // footer, read on the driver, plus the row index when that footer lacks
+    // it. A retired `_bucket=` layout whose buckets were rewritten one at a
+    // time can hold pre- and post-_ridx files side by side; declared, the
+    // column reads as null in the older files, which normalizeStored maps
+    // to 0 — what the merged schema gave.
+    if (hasData(entryNames(spark, dir))) {
+      val footer = ParquetFooter.schemaOf(spark, dir)
+      val schema =
+        if (footer.fieldNames.contains(RidxCol)) footer
+        else footer.add(RidxCol, IntegerType)
+      Some(normalizeStored(spark.read.schema(schema).parquet(dir)
+        .drop(BucketedUpsertSink.BucketCol)))
+    } else None
   }
 
   /** Normalize a stored watermark read across schema generations: a
@@ -142,7 +148,13 @@ object OffsetWatermark {
     * empty batch is a full no-op (no store read or rewrite — see the scale
     * notes above). */
   def advance(spark: SparkSession, statePath: String, applied: DataFrame,
-              pk: String): Unit = {
+              pk: String): Unit =
+    if (!applied.isEmpty) advanceNonEmpty(spark, statePath, applied, pk)
+
+  /** [[advance]] for a caller that already knows `applied` holds rows (the
+    * pipeline's probe counted them): skips the emptiness job. */
+  private[cdc] def advanceNonEmpty(spark: SparkSession, statePath: String,
+                                   applied: DataFrame, pk: String): Unit = {
     // a null _ridx (an unparseable-array envelope kept by posexplode_outer,
     // later repaired and replayed) is position 0 — coalesce BEFORE the
     // struct max so the null can't skew the lexicographic ordering, and
@@ -153,7 +165,6 @@ object OffsetWatermark {
         coalesce(col("_ridx").cast("int"), lit(0)).as("_ridx"))).as("__m"))
       .select(col(pk), col("__m.offset").as(OffsetCol),
         col("__m._ridx").as(RidxCol))
-    if (batch.isEmpty) return
     val dir = path(statePath)
     current(spark, statePath) match {
       case None => batch.write.mode("overwrite").parquet(dir)

@@ -213,11 +213,35 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   def deadLetterPath(sync: SyncConfig): String =
     s"$sinkRoot/_dead_letter/${sync.indexName}"
 
+  /** One aggregate over a batch view: its pk-less rows, its live rows,
+    * and — when `state.buckets` is set — the buckets its live pks land in
+    * ([[BucketedUpsertSink.touchedBucketsCol]], at most `numBuckets`
+    * ids). */
+  private def probe(view: DataFrame, sync: SyncConfig): Pipeline.BatchProbe = {
+    val pk = col(pkOut(sync))
+    val buckets = config.stateBuckets.toSeq
+      .map(BucketedUpsertSink.touchedBucketsCol(pk, _))
+    val r = view.agg(count(when(pk.isNull, 1)), count(pk) +: buckets: _*).head()
+    Pipeline.BatchProbe(r.getLong(0), r.getLong(1),
+      if (buckets.isEmpty) Nil else r.getSeq[Long](2).sorted)
+  }
+
   /** Apply one micro-batch for one sync: dead-letter split, B1 compaction,
     * then K1 upsert, committed via the sink's atomic publish (or directory
-    * swap for the flat sink). Idempotent — replaying a batch yields the
-    * same state (at-least-once -> effectively exactly-once; dead-letter
-    * rows carry `offset` so replays dedupe there). */
+    * swap for the flat sink). One probe aggregate ([[probe]]) answers what
+    * the batch holds before anything is written: the dead letters are
+    * appended only when it counts any, the sink rewrites exactly the
+    * buckets it names, and a batch with no live rows publishes no version
+    * and leaves the watermark untouched.
+    *
+    * Idempotent — replaying a batch yields the same state (at-least-once
+    * -> effectively exactly-once). A replay decodes the same rows, so its
+    * probe finds the same dead letters (they carry `offset`, so replays
+    * dedupe there) and the same touched set; the touched set is taken
+    * from exactly the rows the merge consumes (after the first-batch
+    * fence, when it runs), so a replay rewrites the same buckets with the
+    * same content and advances the watermark to the same positions, and
+    * a replay whose rows were all fenced as superseded changes nothing. */
   private def applySync(batch: DataFrame, sync: SyncConfig, batchId: Long): Unit =
     StateCommit.stateLock(statePath(sync)).synchronized {
     // fail-loud single-driver fence (see the class scaladoc); also the
@@ -226,17 +250,17 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     val pk = pkOut(sync)
     // Persisted for the batch's lifetime (r15, guide §5): the decoded view
     // (from_json ×2 branches, posexplode, json_object_keys per mapping — the
-    // batch's dominant per-row CPU) feeds THREE actions per batch — the
-    // dead-letter probe, the sink merge, and the watermark advance (plus the
-    // dead-letter append when it fires). Unpersisted, each re-ran the whole
-    // decode over the cached raw batch; serialized cache cuts that to one
-    // decode + cache reads. Batch-sized, freed in the finally below.
+    // batch's dominant per-row CPU) feeds the probe aggregate, the sink
+    // merge and the watermark advance (plus the dead-letter append when it
+    // fires). Unpersisted, each re-ran the whole decode over the cached raw
+    // batch; serialized cache cuts that to one decode + cache reads.
+    // Batch-sized, freed in the finally below.
     val full = hooks.preEvent.foldLeft(syncView(batch, sync))((df, h) => h(sync.table, df))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     try {
-    val dead = full.filter(col(pk).isNull)
-    if (!dead.isEmpty)
-      dead.write.mode("append").parquet(deadLetterPath(sync))
+    val seen = probe(full, sync)
+    if (seen.dead > 0)
+      full.filter(col(pk).isNull).write.mode("append").parquet(deadLetterPath(sync))
     val view = full.filter(col(pk).isNotNull)
     // The FIRST micro-batch of a query run may be a checkpoint REPLAY of a
     // batch whose effects a dead-letter replay or a snapshot refresh
@@ -255,25 +279,30 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     // not sync.table: two syncs may share one source table with different
     // target indexes, and a table-keyed fence would be consumed by the first
     // sync's batch, leaving every other sync's first batch unfenced (ADVICE
-    // r12).
-    val fenced =
+    // r12). The fence drops rows, so the fenced batch is probed again (one
+    // job, once per run): the touched set must be exactly the compacted
+    // batch's buckets.
+    val (fenced, applied) =
       if (replayFencePending.remove(sync.indexName)) {
         val sp = statePath(sync)
-        OffsetWatermark.splitStale(view,
+        val f = OffsetWatermark.splitStale(view,
           OffsetWatermark.current(spark, sp), pk,
           OffsetWatermark.snapshotFloor(spark, sp))._1
-      } else view
+        (f, probe(f, sync))
+      } else (view, seen)
     // compact on the envelope, then hand the sink ONLY op + payload (+ mask):
     // the merge treats every unknown change column as schema evolution, so
     // leaking table/offset/_ridx here would evolve them INTO the sink table
     val compacted = Transforms.lastWriteWins(fenced, col(pk), Seq(col("_ridx")))
       .drop("table", "offset", "_ridx")
-    writeCompacted(sync, compacted)
+    // called even with no live rows: a legacy store still migrates
+    writeCompacted(sync, compacted, Some(applied.touched))
     // advance the per-pk applied-offset watermark so a later dead-letter
     // replay can detect (and discard) quarantined payloads this batch — or
     // any newer one — has superseded. Idempotent under checkpoint replay.
-    OffsetWatermark.advance(spark, statePath(sync),
-      fenced.select(col(pk), col("offset"), col("_ridx")), pk)
+    if (applied.live > 0)
+      OffsetWatermark.advanceNonEmpty(spark, statePath(sync),
+        fenced.select(col(pk), col("offset"), col("_ridx")), pk)
     hooks.postBatch.foreach(_(sync.table, batchId))
     } finally { full.unpersist(); () }
   }
@@ -302,12 +331,15 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     * tail of the live micro-batch path and the dead-letter replay. The
     * manifest layout publishes data and per-bucket zone-map stats in ONE
     * atomic manifest rename, so a batch is either fully visible or not at
-    * all; the flat sink rewrites the whole state through a staged swap. */
-  private def writeCompacted(sync: SyncConfig, compacted: DataFrame): Unit =
+    * all; the flat sink rewrites the whole state through a staged swap.
+    * `touched` is the manifest layout's bucket set when the caller's probe
+    * already has it; the sink computes it otherwise. */
+  private def writeCompacted(sync: SyncConfig, compacted: DataFrame,
+                             touched: Option[Seq[Long]] = None): Unit =
     if (manifestModeFor(sync))
       BucketedUpsertSink.applyBatch(spark, statePath(sync), compacted,
         pkOut(sync), requireBucketsFor(sync), schema = Some(sinkSchema(sync)),
-        statCols = zoneMapColsFor(sync))
+        statCols = zoneMapColsFor(sync), touched = touched)
     else {
       val state = UpsertSink.currentState(spark, statePath(sync), sinkSchema(sync))
       val next = UpsertSink.applyBatch(state, compacted, pkOut(sync))
@@ -393,7 +425,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
               .lastWriteWins(fresh, col(pk), Seq(col("_ridx")))
               .drop("table", "offset", "_ridx")
             writeCompacted(s, compacted)
-            OffsetWatermark.advance(spark, statePath(s),
+            OffsetWatermark.advanceNonEmpty(spark, statePath(s),
               fresh.select(col(pk), col("offset"), col("_ridx")), pk)
           }
           if (nFresh > 0 || nStale > 0) {
@@ -861,6 +893,10 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
 }
 
 object Pipeline {
+
+  /** What [[Pipeline]]'s probe aggregate found in a batch view. */
+  private final case class BatchProbe(dead: Long, live: Long, touched: Seq[Long])
+
   private[cdc] val log = org.slf4j.LoggerFactory.getLogger("graft.pipeline")
 
   // Active streaming queries per state path (this JVM): the lease

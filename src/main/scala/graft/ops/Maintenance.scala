@@ -303,7 +303,7 @@ object Maintenance {
       .agg(max(round(col("o_totalprice"), 2)).as("val"),
         max(col("o_custkey")).as("ck"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // no eager count (r15): stageFull's stats aggregate below is the first
+    // no eager count (r15): stageFull's commit-dir write below is the first
     // action and materializes this cache before anything races — the
     // dedicated count job bought nothing (threads start only after the
     // base publish and the `present` collect, both cache-backed by then)
@@ -405,10 +405,8 @@ object Maintenance {
           when(pmod(col("o_orderkey"), lit(3)) === 1,
             col("ck").cast("double")).otherwise(col("val")).as("val"),
           col(b))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      try ManifestStore.commitBatch(spark, path, merged, touched, n,
+      ManifestStore.commitBatch(spark, path, merged, touched, n,
         Seq("o_orderkey"))
-      finally { merged.unpersist(); () }
       val asOf = ManifestStore.versionAsOf(spark, path, tsAfterV1)
       require(asOf == 1L,
         s"as-of resolution drifted: the anchor between the publishes must " +
