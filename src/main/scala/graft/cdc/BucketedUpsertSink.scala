@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   *    ([[touchedBuckets]]) is one aggregate whose result `numBuckets` bounds
   *    (a config, never data volume); the pipeline folds it into the probe
   *    aggregate it already runs over the batch and passes it in.
-  *  - idempotent like the flat sink: replaying a batch yields the same
-  *    buckets with the same contents.
+  *  - idempotent: replaying a batch yields the same buckets with the same
+  *    contents.
   *
+  * This is the only sink layout: an absent `state.buckets` is one bucket.
   * Only the sink is bucketed: its per-pk offset watermark
   * ([[OffsetWatermark]]) is one flat store whatever `state.buckets` says.
   */
@@ -66,11 +67,11 @@ object BucketedUpsertSink {
       .getSeq[Long](0).sorted
 
   private def listNames(spark: SparkSession, statePath: String): Array[String] = {
-    // Heal an interrupted legacy swap FIRST (live moved to '.old', next
-    // never moved in): without this, a crash in that window makes the state
-    // look absent, the next batch bootstraps an empty table, and once a new
-    // live dir exists the '.old' full state is stranded forever — silent
-    // loss. The flat sink heals through liveExists; this is its equivalent.
+    // Heal an interrupted legacy swap FIRST (a pre-manifest flat store was
+    // swapped whole: live moved to '.old', next never moved in): without
+    // this, a crash in that window makes the state look absent, the next
+    // batch bootstraps an empty table, and once a new live dir exists the
+    // '.old' full state is stranded forever — silent loss.
     StateCommit.recoverSwap(spark, statePath)
     val p = new org.apache.hadoop.fs.Path(statePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -90,21 +91,29 @@ object BucketedUpsertSink {
   private def legacyData(names: Array[String]): Boolean =
     names.exists(n => n.startsWith(BucketCol + "=") || n.endsWith(".parquet"))
 
+  /** True iff the store holds data a reader must see: a published
+    * manifest, or a legacy layout's data that its first batch or refresh
+    * migrates. */
+  def liveExists(spark: SparkSession, statePath: String): Boolean =
+    ManifestStore.isManifestStore(spark, statePath) ||
+      legacyData(listNames(spark, statePath))
+
   /** Current state (without the bucket column). The payload schema makes a
     * fully-emptied or not-yet-created state readable. A legacy store — the
-    * retired in-place bucket-dir layout, or a FLAT store under a bucketed
-    * config (state.buckets flipped on — review r11) — reads as its full
-    * legacy state, never as absent, until its first batch or refresh
-    * migrates it. */
+    * retired in-place bucket-dir layout, or a FLAT store from before the
+    * manifest store was the only layout — reads as its full legacy state,
+    * never as absent, until its first batch or refresh migrates it. */
   def currentState(spark: SparkSession, statePath: String,
-                   schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    if (ManifestStore.isManifestStore(spark, statePath))
-      return ManifestStore.readState(spark, statePath, schema).drop(BucketCol)
-    if (legacyData(listNames(spark, statePath)))
-      spark.read.parquet(statePath).drop(BucketCol)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+                   schema: org.apache.spark.sql.types.StructType): DataFrame =
+    ManifestStore.currentManifest(spark, statePath) match {
+      case m @ Some(_) =>
+        ManifestStore.readStateOf(spark, statePath, m, schema).drop(BucketCol)
+      case None =>
+        if (legacyData(listNames(spark, statePath)))
+          spark.read.parquet(statePath).drop(BucketCol)
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    }
 
   /** Apply one compacted micro-batch: read ONLY the buckets the batch
     * touches, merge with [[UpsertSink.applyBatch]] semantics (presence

@@ -131,17 +131,13 @@ object ManifestStore {
   private def manifestName(v: Long): String = f"manifest-v$v%012d.txt"
 
   /** True iff `statePath` is a manifest-layout store (any published
-    * manifest version exists). The layout is a property of the STORE, like
-    * the bucket modulus: once a store is manifest-versioned, every writer
-    * uses this protocol regardless of its own configuration. */
+    * manifest version exists); a store without one is absent or a legacy
+    * layout its first commit migrates. */
   def isManifestStore(spark: SparkSession, statePath: String): Boolean =
     // NOT cached (r13 fuzz-gate finding): a sticky positive poisoned any
     // path that is wiped and recreated in one JVM (dev scratch roots,
     // tests) — one listStatus per probe is the honest cost
     latestVersion(spark, statePath).isDefined
-
-  def liveExists(spark: SparkSession, statePath: String): Boolean =
-    isManifestStore(spark, statePath)
 
   private def latestVersion(spark: SparkSession, statePath: String): Option[Long] = {
     val (fs, p) = hfs(spark, statePath)
@@ -877,6 +873,11 @@ object ManifestStore {
         java.util.UUID.randomUUID().toString.take(8))
     StagedCommit(abs, entries, nbuckets, statCols)
   }
+
+  /** Abandon a staged full snapshot that will not be published (a failed
+    * or pre-empted refresh/backfill): drop its files and its registration. */
+  def dropStaged(spark: SparkSession, staged: StagedCommit): Unit =
+    discardStaging(hfs(spark, staged.commitDirAbs)._1, staged.commitDirAbs)
 
   /** Publish a staged full snapshot: the next manifest references EXACTLY
     * the staged buckets (a refresh replaces the whole logical table — but

@@ -100,9 +100,10 @@ object PluginHooks {
   * Every concurrency protocol below — the per-path state lock, the swap
   * monitor — serializes writers within ONE driver JVM (refreshAsync
   * tasks, a replay racing a micro-batch). A SECOND driver process mutating the same state path is
-  * outside the contract: the swap machinery would still only ever install
-  * complete copies, but simultaneous cross-process read-merge-writes are
-  * last-copy-wins and silently drop the loser's rows. That premise is
+  * outside the contract: the sink's manifest publish stays safe under
+  * concurrent writers, but the swapped side state (the dead-letter
+  * quarantine, the watermark sidecar) is last-copy-wins across processes
+  * and silently drops the loser's rows. That premise is
   * ENFORCED fail-loud by [[DriverLease]]: every mutating entry point
   * (applySync, refresh/backfill commit, replayDeadLetters) acquires a
   * heartbeat lease on the state path and a second process fails with a
@@ -213,22 +214,25 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   def deadLetterPath(sync: SyncConfig): String =
     s"$sinkRoot/_dead_letter/${sync.indexName}"
 
-  /** One aggregate over a batch view: its pk-less rows, its live rows,
-    * and — when `state.buckets` is set — the buckets its live pks land in
-    * ([[BucketedUpsertSink.touchedBucketsCol]], at most `numBuckets`
+  /** The sink's bucket modulus: `state.buckets`, or one bucket when it is
+    * absent. A store laid out under another modulus fails its next batch
+    * naming `refresh` ([[BucketedUpsertSink.applyBatch]]'s modulus fence). */
+  private val numBuckets: Int = config.stateBuckets.getOrElse(1)
+
+  /** One aggregate over a batch view: its pk-less rows, its live rows and
+    * the buckets its live pks land in
+    * ([[BucketedUpsertSink.touchedBucketsCol]], at most [[numBuckets]]
     * ids). */
   private def probe(view: DataFrame, sync: SyncConfig): Pipeline.BatchProbe = {
     val pk = col(pkOut(sync))
-    val buckets = config.stateBuckets.toSeq
-      .map(BucketedUpsertSink.touchedBucketsCol(pk, _))
-    val r = view.agg(count(when(pk.isNull, 1)), count(pk) +: buckets: _*).head()
-    Pipeline.BatchProbe(r.getLong(0), r.getLong(1),
-      if (buckets.isEmpty) Nil else r.getSeq[Long](2).sorted)
+    val r = view.agg(count(when(pk.isNull, 1)), count(pk),
+      BucketedUpsertSink.touchedBucketsCol(pk, numBuckets)).head()
+    Pipeline.BatchProbe(r.getLong(0), r.getLong(1), r.getSeq[Long](2).sorted)
   }
 
   /** Apply one micro-batch for one sync: dead-letter split, B1 compaction,
-    * then K1 upsert, committed via the sink's atomic publish (or directory
-    * swap for the flat sink). One probe aggregate ([[probe]]) answers what
+    * then K1 upsert, committed via the sink's atomic manifest publish. One
+    * probe aggregate ([[probe]]) answers what
     * the batch holds before anything is written: the dead letters are
     * appended only when it counts any, the sink rewrites exactly the
     * buckets it names, and a batch with no live rows publishes no version
@@ -307,47 +311,17 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     } finally { full.unpersist(); () }
   }
 
-  /** True iff `sync`'s sink uses the bucketed manifest layout
-    * ([[ManifestStore]]) — `state.buckets` is configured, or the store
-    * already IS one (layout is a property of the store; a restarted driver
-    * with a stale config must keep the store's protocol, exactly like the
-    * bucket modulus). */
-  private def manifestModeFor(sync: SyncConfig): Boolean =
-    config.stateBuckets.isDefined ||
-      ManifestStore.isManifestStore(spark, statePath(sync))
-
-  /** Loud config-drift fence (review r13 #5): a manifest-layout store
-    * under a config whose `state.buckets` was removed must fail with the
-    * named repair, not fall through to the flat sink path and die on a
-    * parquet-footer read of manifest text files. */
-  private def requireBucketsFor(sync: SyncConfig): Int =
-    config.stateBuckets.getOrElse(throw new IllegalStateException(
-      s"state at ${statePath(sync)} is manifest-layout " +
-        "but state.buckets is unset — restore state.buckets (the layout " +
-        "requires a bucket modulus; run refresh to re-lay the store out " +
-        "under a different one)"))
-
   /** Commit one compacted change set to the sync's sink — the shared write
     * tail of the live micro-batch path and the dead-letter replay. The
-    * manifest layout publishes data and per-bucket zone-map stats in ONE
+    * manifest store publishes data and per-bucket zone-map stats in ONE
     * atomic manifest rename, so a batch is either fully visible or not at
-    * all; the flat sink rewrites the whole state through a staged swap.
-    * `touched` is the manifest layout's bucket set when the caller's probe
+    * all. `touched` is the batch's bucket set when the caller's probe
     * already has it; the sink computes it otherwise. */
   private def writeCompacted(sync: SyncConfig, compacted: DataFrame,
                              touched: Option[Seq[Long]] = None): Unit =
-    if (manifestModeFor(sync))
-      BucketedUpsertSink.applyBatch(spark, statePath(sync), compacted,
-        pkOut(sync), requireBucketsFor(sync), schema = Some(sinkSchema(sync)),
-        statCols = zoneMapColsFor(sync), touched = touched)
-    else {
-      val state = UpsertSink.currentState(spark, statePath(sync), sinkSchema(sync))
-      val next = UpsertSink.applyBatch(state, compacted, pkOut(sync))
-      // invocation-unique staging with failure cleanup: a live batch and
-      // a dead-letter replay can stage for the same sync concurrently
-      StateCommit.stageSwap(spark, statePath(sync))(tmp =>
-        next.write.mode("overwrite").parquet(tmp))
-    }
+    BucketedUpsertSink.applyBatch(spark, statePath(sync), compacted,
+      pkOut(sync), numBuckets, schema = Some(sinkSchema(sync)),
+      statCols = zoneMapColsFor(sync), touched = touched)
 
   /** Re-apply REPAIRED dead-letter rows (the operational close of the
     * quarantine path [[deadLetterPath]] opens): rows whose pk is now
@@ -448,95 +422,64 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     config.zoneMapCols.filter(have)
   }
 
-  /** A staged-but-uncommitted full snapshot: the swap layout stages a
-    * sibling dir the commit atomically renames live; the manifest layout
-    * stages an UNPUBLISHED commit dir the commit publishes with one
-    * manifest rename. `abortPath` is what a losing/failing commit drops. */
-  private sealed trait StagedSnapshot { def abortPath: String }
-  private final case class StagedSwapDir(dir: String) extends StagedSnapshot {
-    def abortPath: String = dir
-  }
-  private final case class StagedManifest(sc: ManifestStore.StagedCommit)
-      extends StagedSnapshot {
-    def abortPath: String = sc.commitDirAbs
-  }
-
-  /** The EXPENSIVE half of refresh/backfill, outside any lock: materialize
-    * the full scan into the layout-appropriate staging form. */
-  private def stageSnapshot(sync: SyncConfig): (StagedSnapshot, Long) =
-    if (manifestModeFor(sync)) {
-      val sc = ManifestStore.stageFull(spark, statePath(sync),
-        source.fullScan(sync), pkOut(sync), requireBucketsFor(sync),
-        zoneMapColsFor(sync))
-      (StagedManifest(sc), sc.count)
-    } else {
-      val (st, n) = SwapRefresh.stage(source.fullScan(sync), statePath(sync))
-      (StagedSwapDir(st), n)
-    }
+  /** The EXPENSIVE half of refresh/backfill, outside any lock: write the
+    * full scan as an unpublished (invisible) manifest commit dir. */
+  private def stageSnapshot(sync: SyncConfig): ManifestStore.StagedCommit =
+    ManifestStore.stageFull(spark, statePath(sync), source.fullScan(sync),
+      pkOut(sync), numBuckets, zoneMapColsFor(sync))
 
   /** The shared locked COMMIT of every snapshot-rebuild path (refresh,
-    * refreshAsync, backfill): publish the staged manifest (or swap the
-    * staged flat dir) live and record the snapshot floor. One definition
-    * so the three paths cannot drift. */
-  private def commitRefreshSwap(sync: SyncConfig, staged: StagedSnapshot,
-                                floor: Long,
-                                precondition: () => Boolean = () => true): Boolean =
+    * refreshAsync, backfill): publish the staged commit as the next
+    * manifest version and record the snapshot floor. One definition so the
+    * three paths cannot drift. */
+  private def commitSnapshot(sync: SyncConfig,
+                             staged: ManifestStore.StagedCommit, floor: Long,
+                             precondition: () => Boolean = () => true): Boolean =
     StateCommit.stateLock(statePath(sync)).synchronized {
       // ONE failure-cleanup scope (review r10: three copy-pasted
-      // drop-and-rethrow catches invited the next pre-swap step to forget
-      // its fourth): ANY throw out of the commit drops the staged copy —
-      // the staging dir is janitor-REGISTERED, and a leaked registration
-      // protects a full-snapshot-sized dir from reaping for the JVM's
-      // lifetime. After a successful swap the drop is a harmless no-op
-      // (the swap MOVED the dir and deregistered it), so the catch need
-      // not distinguish pre- from post-swap failures.
-      try {
-        // single-driver fence BEFORE any mutation of the live path (the
-        // staged scan needed no lease — it wrote only its own unique dir)
-        DriverLease.acquire(spark, statePath(sync), staleMs = config.leaseStaleMs)
-        // evaluated under the lock (backfill's bootstrap-only re-probe);
-        // losing it drops the staged copy instead of clobbering
-        if (!precondition()) {
-          StateCommit.dropStaging(spark, staged.abortPath)
-          false
-        } else {
-          staged match {
-            case StagedSwapDir(dir) =>
-              StateCommit.atomicSwapDirs(spark, dir, statePath(sync))
-            case StagedManifest(sc) =>
-              ManifestStore.publishFull(spark, statePath(sync), sc)
+      // drop-and-rethrow catches invited the next pre-publish step to
+      // forget its fourth): ANY throw up to the publish drops the staged
+      // commit dir, which no manifest references yet. A failure AFTER the
+      // publish must not: the dir is then the live snapshot.
+      val published =
+        try {
+          // single-driver fence BEFORE any mutation of the live path (the
+          // staged scan needed no lease — it wrote only its own unique dir)
+          DriverLease.acquire(spark, statePath(sync), staleMs = config.leaseStaleMs)
+          // evaluated under the lock (backfill's bootstrap-only re-probe);
+          // losing it drops the staged copy instead of clobbering
+          precondition() && {
+            ManifestStore.publishFull(spark, statePath(sync), staged); true
           }
-          // a floor-record failure AFTER the swap landed leaves the
-          // snapshot live but unfenced: a stale dead-letter replay for a
-          // snapshot-only pk could then apply over the refreshed value
-          // (the r9 hazard the floor exists for). The failure is loud and
-          // names the heal — re-running refresh records the floor — but it
-          // cannot be made atomic with the publish in this harness (a
-          // table format's single commit would carry both).
-          try OffsetWatermark.recordSnapshotFloor(spark, statePath(sync), floor)
-          catch { case t: Throwable =>
-            Pipeline.log.error(
-              s"snapshot floor for ${statePath(sync)} FAILED to record " +
-                s"after the swap committed: stale dead-letter replays " +
-                s"are not fenced for snapshot-only pks until a refresh " +
-                s"succeeds — re-run refresh before replaying (${t.getMessage})")
-            throw t
-          }
-          true
+        } catch { case t: Throwable =>
+          ManifestStore.dropStaged(spark, staged); throw t }
+      if (!published) ManifestStore.dropStaged(spark, staged)
+      else {
+        // a floor-record failure AFTER the publish landed leaves the
+        // snapshot live but unfenced: a stale dead-letter replay for a
+        // snapshot-only pk could then apply over the refreshed value
+        // (the r9 hazard the floor exists for). The failure is loud and
+        // names the heal — re-running refresh records the floor — but it
+        // cannot be made atomic with the publish in this harness (a
+        // table format's single commit would carry both).
+        try OffsetWatermark.recordSnapshotFloor(spark, statePath(sync), floor)
+        catch { case t: Throwable =>
+          Pipeline.log.error(
+            s"snapshot floor for ${statePath(sync)} FAILED to record " +
+              s"after the publish committed: stale dead-letter replays " +
+              s"are not fenced for snapshot-only pks until a refresh " +
+              s"succeeds — re-run refresh before replaying (${t.getMessage})")
+          throw t
         }
-      } catch { case t: Throwable =>
-        StateCommit.dropStaging(spark, staged.abortPath); throw t }
+      }
+      published
     }
 
-  /** Layout-aware sink liveness: in manifest mode the state dir EXISTS as
-    * soon as an (unpublished, invisible) staging commit is written, so
-    * "live" must mean "a manifest version is published" — a dir-existence
-    * probe would make the backfill's own staging defeat its bootstrap
-    * re-probe. */
+  /** A published manifest or a pre-manifest store's data — not the state
+    * dir's existence, which an unpublished staging commit already creates
+    * (the backfill's own staging would defeat its bootstrap re-probe). */
   private def sinkLive(sync: SyncConfig): Boolean =
-    if (manifestModeFor(sync))
-      ManifestStore.liveExists(spark, statePath(sync))
-    else UpsertSink.liveExists(spark, statePath(sync))
+    BucketedUpsertSink.liveExists(spark, statePath(sync))
 
   /** Max source offset this pipeline has OBSERVED for a sync — applied
     * (per-pk watermark) or quarantined (dead-letter envelopes). A full
@@ -583,11 +526,11 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
       // stream first would stall every micro-batch for the whole
       // bootstrap scan — r9 review)
       val floor = observedOffsetCeiling(sync)
-      val (staging, _) = stageSnapshot(sync)
+      val staged = stageSnapshot(sync)
       // re-probe under the lock: a live batch may have bootstrapped the
       // sink during our scan; K3 is bootstrap-only, and the stream is
       // already building on ITS copy — drop our staging, don't clobber
-      commitRefreshSwap(sync, staging, floor,
+      commitSnapshot(sync, staged, floor,
         precondition = () => !sinkLive(sync))
     }
   }
@@ -813,11 +756,13 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
 
   /** `refresh`: atomic rebuild of each sync from a full scan
     * (`main.py:143-176`; offset pinning is the caller's checkpoint). The
-    * configured sink layout (state.buckets) carries onto the rebuilt copy —
-    * the reference's settings-copy-on-refresh (`meili.py:43-49`).
+    * configured sink layout (state.buckets, absent = 1 bucket) carries
+    * onto the rebuilt copy — the reference's settings-copy-on-refresh
+    * (`meili.py:43-49`) — so refresh is also how a store is re-laid out
+    * under a new bucket count.
     *
     * Snapshot-floor ordering (r9 review): the observed-offset ceiling is
-    * captured BEFORE the full scan starts and recorded AFTER the swap
+    * captured BEFORE the full scan starts and recorded AFTER the publish
     * commits. A live stream running concurrently (the refreshAsync shape)
     * can therefore only push real observations ABOVE the recorded floor —
     * their repairs stay replayable (conservative) — never trap a
@@ -830,13 +775,13 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         val floor = observedOffsetCeiling(s)
         // stage (the full-scan materialization) runs OUTSIDE the state
         // lock so a live stream keeps flowing through the long scan; only
-        // the commit — swap + floor record — serializes with applySync.
-        // Unlocked, a batch's read-merge-write racing the swap silently
+        // the commit — publish + floor record — serializes with applySync.
+        // Unlocked, a batch's read-merge-write racing the commit silently
         // dropped whichever complete copy lost while the floor still
         // asserted the snapshot superseded everything below it (r9 review)
-        val (staging, n) = stageSnapshot(s)
-        commitRefreshSwap(s, staging, floor)
-        s.table -> n
+        val staged = stageSnapshot(s)
+        commitSnapshot(s, staged, floor)
+        s.table -> staged.count
       }
       .toMap
 
@@ -853,8 +798,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
           // conservative ordering as the synchronous refresh; commit
           // (publish + floor) under the state lock, scans outside it
           val floor = observedOffsetCeiling(s)
-          val (staging, _) = stageSnapshot(s)
-          commitRefreshSwap(s, staging, floor)
+          commitSnapshot(s, stageSnapshot(s), floor)
           ()
         }
       }
@@ -870,26 +814,19 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         DriverLease.holder(spark, statePath(s))))
     }.toMap
 
-  /** `check`: source count vs sink count per sync (`main.py:179-208`). */
+  /** `check`: source count vs sink count per sync (`main.py:179-208`).
+    * The manifest's per-bucket row counts give the sink count with no
+    * scan; a pre-manifest store not yet migrated is read and counted. */
   def check(): Map[String, (Long, Long)] = config.syncs.map { s =>
-    val sinkCount =
-      if (manifestModeFor(s))
-        // the manifest carries per-bucket row counts published atomically
-        // with the data — the count is O(buckets) text, no scan at all
-        ManifestStore.currentManifest(spark, statePath(s)).fold(0L)(_.rowCount)
-      else if (UpsertSink.liveExists(spark, statePath(s)))
-        spark.read.parquet(statePath(s)).count()
-      else 0L
+    val sinkCount = ManifestStore.currentManifest(spark, statePath(s))
+      .fold(sinkState(s).count())(_.rowCount)
     s.table -> (source.count(s), sinkCount)
   }.toMap
 
-  /** Read one sync's current sink state (test/inspection helper); the
-    * manifest layout's bucket column is internal and dropped. */
+  /** Read one sync's current sink state (test/inspection helper), a
+    * not-yet-migrated legacy store's included. */
   def sinkState(sync: SyncConfig): DataFrame =
-    if (manifestModeFor(sync))
-      ManifestStore.readState(spark, statePath(sync), sinkSchema(sync))
-        .drop(BucketedUpsertSink.BucketCol)
-    else spark.read.parquet(statePath(sync))
+    BucketedUpsertSink.currentState(spark, statePath(sync), sinkSchema(sync))
 }
 
 object Pipeline {

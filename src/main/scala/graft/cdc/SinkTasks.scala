@@ -1,20 +1,7 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** K2: atomic full rebuild — the reference's swap-index refresh
-  * (`meili.py:34-71`, driver `main.py:143-176`): rebuild into a staging
-  * index, atomically swap it live, drop the staging copy. Blue/green for a
-  * table.
-  *
-  * Spark form: batch `spark.read` -> transform -> write staging dir ->
-  * atomic directory pointer swap (no table format in the offline harness;
-  * with Delta/Iceberg this is `CREATE OR REPLACE TABLE`).
-  *
-  * The reference pins the source offset BEFORE copying (`main.py:160-161`)
-  * so changes made during the rebuild replay afterwards — snapshot-then-tail.
-  * [[refresh]] takes the caller's already-captured offset for the same reason.
-  */
 /** Async sink-task surface — the reference's every-write-is-a-task model
   * (`meili.py:20-70`): Meilisearch acknowledges a write by returning a
   * TASK id; the client awaits it with `wait_for_task(timeout_in_ms =
@@ -107,63 +94,6 @@ object SinkTasks {
         s"sink task $id (${s.name}) still ${s.status} after $timeoutMs ms")
     s
   }
-}
-
-object SwapRefresh {
-
-  /** Rebuild the flat state dir `livePath` from `fresh`, atomically.
-    * Returns row count written. (A bucketed sink rebuilds through
-    * [[ManifestStore.stageFull]]/[[ManifestStore.publishFull]] instead,
-    * which carries the configured layout onto the new version — the
-    * analog of the reference copying the live index's settings onto the
-    * tmp index, `meili.py:43-49`.) */
-  def refresh(fresh: DataFrame, livePath: String): Long = {
-    val (staging, n) = stage(fresh, livePath)
-    // the swap commits under the state lock (review r11): unlocked, a
-    // live writer's read-merge-swap racing this swap silently drops
-    // whichever complete copy loses — the r9 hazard stage()'s own doc
-    // describes. (Pipeline's commitRefreshSwap additionally records the
-    // snapshot floor; this entry point is the bare data swap for sinks
-    // without that sidecar.)
-    StateCommit.stateLock(livePath).synchronized {
-      StateCommit.atomicSwapDirs(fresh.sparkSession, staging, livePath)
-    }
-    n
-  }
-
-  /** The EXPENSIVE half of [[refresh]] split out: write the snapshot to an
-    * invocation-unique staging dir and count it, WITHOUT swapping. Lets a
-    * caller run the full-scan materialization outside any state lock and
-    * hold the lock only around the cheap commit (swap + floor record) — a
-    * live micro-batch's read-merge-write racing the swap could otherwise
-    * silently drop whichever complete copy lost (r9 review).
-    *
-    * Invocation-unique staging: two overlapping rebuilds of the same path
-    * (refreshAsync fired twice, or a CLI refresh racing a task) must not
-    * interleave writes in one shared dir and swap a corrupt mix live
-    * (r9 review). The swap MOVES the staging dir, so nothing lingers on
-    * success; a crashed rebuild strands only its own uniquely-named dir
-    * (reaped by the swap janitor after an hour). */
-  def stage(fresh: DataFrame, livePath: String): (String, Long) = {
-    val staging = StateCommit.stagingDir(livePath)
-    // failure cleanup: a throwing scan/write must drop (and unregister)
-    // its partial staging, or it stays janitor-protected forever
-    try {
-      fresh.write.mode("overwrite").parquet(staging)
-      (staging, fresh.sparkSession.read.parquet(staging).count())
-    } catch {
-      case t: Throwable =>
-        StateCommit.dropStaging(fresh.sparkSession, staging); throw t
-    }
-  }
-
-  /** Async [[refresh]]: returns a [[SinkTasks]] id immediately — the shape
-    * the reference's refresh has (fire the rebuild as tasks, then gather
-    * them with `wait_for_task_timeout`, `meili.py:56-63`). Spark job
-    * submission is thread-safe, so the rebuild runs concurrently with the
-    * caller; reads of `livePath` see the OLD copy until the atomic swap. */
-  def refreshAsync(fresh: DataFrame, livePath: String): Long =
-    SinkTasks.submit(s"refresh:$livePath") { refresh(fresh, livePath); () }
 }
 
 /** S5 + `check` command: consistency verification (reference

@@ -8,12 +8,13 @@ import org.apache.spark.sql.SparkSession
   * concurrency protocols must be read — and changed — in one place, and
   * every call site names StateCommit directly so grep finds every caller.
   *
-  * Bucketed sinks are NOT swapped: the manifest store ([[ManifestStore]])
+  * The sink is NOT swapped: the manifest store ([[ManifestStore]])
   * publishes data and per-bucket zone-map stats in one atomic manifest
-  * rename, so it needs none of this beyond [[stateLock]]. What swaps here
-  * is every directory-rewritten state: the flat sink (`stateBuckets =
-  * None`), the dead-letter quarantine, the watermark sidecar, SCD2 and
-  * incremental-dedup state, and compaction's rewrite.
+  * rename, so it needs none of this beyond [[stateLock]] (and
+  * [[recoverSwap]], to heal a pre-manifest flat store caught mid-swap
+  * before its first batch migrates it). What swaps here is every
+  * directory-rewritten state: the dead-letter quarantine, the watermark
+  * sidecar, SCD2 and incremental-dedup state, and compaction's rewrite.
   *
   * ==Swap state machine==
   *
@@ -139,8 +140,8 @@ object StateCommit {
     }
   }
 
-  /** Abandon a staged dir without swapping it (e.g. a backfill that lost
-    * the bootstrap race): delete it and release its janitor registration. */
+  /** Abandon a staged dir without swapping it (its write threw): delete
+    * it and release its janitor registration. */
   def dropStaging(spark: SparkSession, staging: String): Unit = {
     val (fs, p) = hfs(spark, staging)
     try { fs.delete(p, true); () }

@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.model._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** K1: the upsert/delete sink (reference `meili.py:121-151`), re-expressed as
@@ -94,28 +94,4 @@ object UpsertSink {
       }: _*)
     merged
   }
-
-  def currentState(
-      spark: SparkSession,
-      statePath: String,
-      schema: org.apache.spark.sql.types.StructType
-  ): DataFrame =
-    if (liveExists(spark, statePath)) spark.read.parquet(statePath)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Resolve a path against the session's Hadoop conf — works for local,
-    * HDFS, S3A, … (a bare `java.io.File` probe silently treats any remote
-    * sink as absent — ADVICE r01). */
-  private def hfs(spark: SparkSession, p: String) = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-
-  /** True iff the live state dir exists, after healing any interrupted swap. */
-  def liveExists(spark: SparkSession, live: String): Boolean = {
-    StateCommit.recoverSwap(spark, live)
-    val (fs, p) = hfs(spark, live)
-    fs.exists(p)
-  }
-
 }

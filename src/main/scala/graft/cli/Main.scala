@@ -30,16 +30,16 @@ import org.apache.spark.sql.types.StructType
   * insert.size=1000                 # reference insert_size -> per-batch
   *                                  # source admission (maxFilesPerTrigger)
   * monotonic=true                   # cross-batch stale-event suppression
-  * state.buckets=64                 # bucketed manifest sink layout
-  *                                  # (rewrite only touched pk-hash
-  *                                  # buckets, one atomic manifest publish
-  *                                  # per batch); absent = flat state dir
-  *                                  # + atomic swap
-  * state.zonemap.cols=score,ts      # bucketed mode only: per-bucket
-  *                                  # min/max stats that ride each
-  *                                  # manifest commit; columns missing
-  *                                  # from a sync's payload are skipped
-  *                                  # for that sync
+  * state.buckets=64                 # pk-hash bucket count of the manifest
+  *                                  # sink (rewrite only touched buckets,
+  *                                  # one atomic manifest publish per
+  *                                  # batch); absent = 1 bucket; a store
+  *                                  # laid out with another count fails
+  *                                  # loud until `refresh` re-lays it out
+  * state.zonemap.cols=score,ts      # per-bucket min/max stats that
+  *                                  # ride each manifest commit; columns
+  *                                  # missing from a sync's payload are
+  *                                  # skipped for that sync
   * lease.stale.ms=60000             # single-driver lease heartbeat horizon
   *                                  # (DriverLease): a second driver process
   *                                  # on the same sink.root fails loud while

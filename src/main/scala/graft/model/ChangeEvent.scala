@@ -75,13 +75,12 @@ final case class SyncConfig(
 /** Pipeline-level configuration — mirrors reference `Settings`
   * (`settings.py:60-82`): flush triggers and the list of syncs.
   *
-  * Spark addition: `stateBuckets` switches the sink to the bucketed
+  * Spark addition: `stateBuckets` is the bucket count of the sink's
   * manifest layout ([[graft.cdc.BucketedUpsertSink]] over
   * [[graft.cdc.ManifestStore]] — each batch rewrites only the pk-hash
   * buckets it touches into immutable files and publishes them with one
-  * atomic manifest rename) with the given bucket count; None keeps the
-  * flat state dir + atomic swap. `zoneMapCols` (bucketed mode only) are
-  * the per-bucket min/max stat columns each manifest commit carries
+  * atomic manifest rename); None means one bucket. `zoneMapCols` are the
+  * per-bucket min/max stat columns each manifest commit carries
   * alongside the row counts — the stats
   * [[graft.cdc.ManifestStore.prunedRead]] uses to prune buckets at query
   * time. */
@@ -91,9 +90,9 @@ final case class PipelineConfig(
     insertIntervalSecs: Option[Int] = None,
     stateBuckets: Option[Int] = None,
     zoneMapCols: Seq[String] = Seq.empty,
-    /** Ignored: `stateBuckets` alone now selects the manifest layout, the
-      * only bucketed layout. Kept so existing callers still compile. */
-    @deprecated("stateBuckets alone selects the manifest layout", "0.1.0")
+    /** Ignored: the manifest layout is the only sink layout. Kept so
+      * existing callers still compile. */
+    @deprecated("the manifest layout is the only sink layout", "0.1.0")
     manifestSink: Boolean = false,
     /** The reference's `debug` settings flag (`settings.py:64`,
       * `main.py:35-36,103-104`): log the parsed settings at startup and

@@ -1,6 +1,9 @@
 package graft
 
-import graft.cdc.{SinkTasks, SwapRefresh}
+import graft.cdc.{MemoryCdcSource, Pipeline, SinkTasks}
+import graft.model.{PipelineConfig, SyncConfig}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
 
 /** The reference's task-await surface (`meili.py:28,56-63`): every write
   * is a task the client awaits with `wait_for_task(timeout_in_ms)`. Here
@@ -9,17 +12,30 @@ import graft.cdc.{SinkTasks, SwapRefresh}
   * error, and a still-pending task past the deadline fails loud. */
 class SinkTasksSpec extends SparkSpec {
 
+  private val sync = SyncConfig("t", pk = "id",
+    schema = Some(StructType.fromDDL("id INT, v STRING")))
+
+  /** A default-config pipeline (one-bucket manifest sink) whose full scan
+    * of table `t` is `snapshot`. */
+  private def pipeline(sinkRoot: String, snapshot: DataFrame): Pipeline =
+    new Pipeline(spark, PipelineConfig(Seq(sync)),
+      new MemoryCdcSource(spark, Map("t" -> snapshot)), sinkRoot)
+
   test("async refresh: the task id returns immediately, waitForTask " +
     "gathers it, and the rebuilt copy is swapped live") {
     import spark.implicits._
-    val live = s"${tmpDir("sinktasks")}/t"
-    Seq((1, "a"), (2, "b")).toDF("id", "v")
-      .write.parquet(live)
+    val sinkRoot = tmpDir("sinktasks")
+    Seq((1, "a"), (2, "b")).toDF("id", "v").write.parquet(s"$sinkRoot/t")
     val fresh = Seq((1, "a2"), (2, "b2"), (3, "c")).toDF("id", "v")
-    val id = SwapRefresh.refreshAsync(fresh, live)
-    val info = SinkTasks.waitForTask(id, timeoutMs = 120000)
-    assert(info.status === "succeeded", info.toString)
-    assert(spark.read.parquet(live).count() === 3)
+    val pipe = pipeline(sinkRoot, fresh)
+    try {
+      val ids = pipe.refreshAsync()
+      assert(ids.keySet === Set("t"))
+      val info = SinkTasks.waitForTask(ids("t"), timeoutMs = 120000)
+      assert(info.status === "succeeded", info.toString)
+    } finally pipe.releaseLeases()
+    assert(pipe.sinkState(sync).orderBy("id").as[(Int, String)].collect()
+      .toSeq === Seq((1, "a2"), (2, "b2"), (3, "c")))
   }
 
   test("waitForTask fails loud past the deadline, and a later wait on the " +
@@ -83,20 +99,22 @@ class SinkTasksSpec extends SparkSpec {
     "dir: the survivor is a COMPLETE copy, never an interleaved mix " +
     "(r9 review)") {
     import spark.implicits._
-    val live = s"${tmpDir("sinktasks-conc")}/t"
-    Seq((1, "seed")).toDF("id", "v").write.parquet(live)
+    val sinkRoot = tmpDir("sinktasks-conc")
+    Seq((1, "seed")).toDF("id", "v").write.parquet(s"$sinkRoot/t")
     // two rebuilds with DISTINGUISHABLE contents, fired back-to-back; with
     // a shared .staging dir their writes interleaved and the swap could
     // install a mix of the two
-    val freshA = (1 to 50).map(i => (i, "A")).toDF("id", "v")
-    val freshB = (1 to 80).map(i => (i, "B")).toDF("id", "v")
-    val ta = SwapRefresh.refreshAsync(freshA, live)
-    val tb = SwapRefresh.refreshAsync(freshB, live)
-    assert(SinkTasks.waitForTask(ta, timeoutMs = 120000).status === "succeeded")
-    assert(SinkTasks.waitForTask(tb, timeoutMs = 120000).status === "succeeded")
-    val vals = spark.read.parquet(live).select("v").as[String]
-      .collect().toSet
-    val n = spark.read.parquet(live).count()
+    val pipeA = pipeline(sinkRoot, (1 to 50).map(i => (i, "A")).toDF("id", "v"))
+    val pipeB = pipeline(sinkRoot, (1 to 80).map(i => (i, "B")).toDF("id", "v"))
+    try {
+      val ta = pipeA.refreshAsync()("t")
+      val tb = pipeB.refreshAsync()("t")
+      assert(SinkTasks.waitForTask(ta, timeoutMs = 120000).status === "succeeded")
+      assert(SinkTasks.waitForTask(tb, timeoutMs = 120000).status === "succeeded")
+    } finally { pipeA.releaseLeases(); pipeB.releaseLeases() }
+    val live = pipeA.sinkState(sync)
+    val vals = live.select("v").as[String].collect().toSet
+    val n = live.count()
     assert(vals.size === 1, s"mixed copies swapped live: $vals")
     assert((vals.head == "A" && n == 50L) || (vals.head == "B" && n == 80L),
       s"live must be exactly one complete rebuild, got $vals with $n rows")

@@ -70,8 +70,9 @@ class UpsertSinkSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     Files.move(Paths.get(live), Paths.get(live + ".old"))
     assert(!Files.exists(Paths.get(live)))
-    val recovered = UpsertSink.currentState(spark, live,
-      state().schema)
+    // every reader and writer of swapped state heals first
+    StateCommit.recoverSwap(spark, live)
+    val recovered = spark.read.parquet(live)
     assert(recovered.collect().toSeq === Seq(Row(1, "ann", "nyc")))
     assert(Files.exists(Paths.get(live))) // healed on disk, not just in-memory
   }
@@ -262,9 +263,9 @@ class UpsertSinkSpec extends SparkSpec {
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val readerFailed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val reader = new Thread(() => {
-      // liveExists calls recoverSwap — the exact racer the fix addresses
+      // a reader's recoverSwap — the exact racer the fix addresses
       while (!stop.get()) {
-        try { UpsertSink.liveExists(spark, live); () }
+        try { StateCommit.recoverSwap(spark, live) }
         catch { case t: Throwable => readerFailed.set(t); stop.set(true) }
       }
     }, "swap-race-reader")

@@ -62,51 +62,55 @@ class BatchFixedCostSpec extends SparkSpec {
 
   test("a warm, data-bearing micro-batch of a 16-bucket manifest pipeline " +
     "runs at most 12 Spark jobs") {
-    val root = tmpDir("batchjobs")
-    val lay = FeedGen.generate(spark, root, nUsers = 200, nBatches = 4,
-      eventsPerBatch = 40)
-    val sync = SyncConfig("users", pk = "id", full = true,
-      schema = Some(StructType.fromDDL(
-        "id INT, name STRING, score DOUBLE, updated TIMESTAMP")))
-    val pipe = new Pipeline(spark,
-      PipelineConfig(Seq(sync), stateBuckets = Some(16)),
-      new ParquetCdcSource(spark, lay.feedDir, lay.tableDir), lay.sinkRoot)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Integer]()
-    val marker = s"batchjobs-marker-${java.util.UUID.randomUUID()}"
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = e.properties
-        if (p != null) {
-          if (p.getProperty("spark.job.description") == marker) markerSeen = true
-          val q = p.getProperty("sql.streaming.queryId")
-          val b = p.getProperty("streaming.sql.batchId")
-          if (q != null && b != null)
-            jobs.merge((q, b.toLong), 1, (x: Integer, y: Integer) => x + y)
+    // and of the default config, whose absent state.buckets is one bucket
+    Seq(Some(16), None).foreach { buckets =>
+      val root = tmpDir(s"batchjobs-${buckets.getOrElse(1)}")
+      val lay = FeedGen.generate(spark, root, nUsers = 200, nBatches = 4,
+        eventsPerBatch = 40)
+      val sync = SyncConfig("users", pk = "id", full = true,
+        schema = Some(StructType.fromDDL(
+          "id INT, name STRING, score DOUBLE, updated TIMESTAMP")))
+      val pipe = new Pipeline(spark,
+        PipelineConfig(Seq(sync), stateBuckets = buckets),
+        new ParquetCdcSource(spark, lay.feedDir, lay.tableDir), lay.sinkRoot)
+      val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Integer]()
+      val marker = s"batchjobs-marker-${java.util.UUID.randomUUID()}"
+      @volatile var markerSeen = false
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          val p = e.properties
+          if (p != null) {
+            if (p.getProperty("spark.job.description") == marker) markerSeen = true
+            val q = p.getProperty("sql.streaming.queryId")
+            val b = p.getProperty("streaming.sql.batchId")
+            if (q != null && b != null)
+              jobs.merge((q, b.toLong), 1, (x: Integer, y: Integer) => x + y)
+          }
         }
       }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val q = pipe.start(lay.ckptDir) // AvailableNow; one feed file a batch
+        try q.processAllAvailable() finally { q.stop(); pipe.releaseLeases() }
+        // listener events arrive in order: once a job started after the
+        // query is seen, every job of the query has been counted
+        spark.sparkContext.setJobDescription(marker)
+        try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+        val deadline = System.currentTimeMillis() + 30000L
+        while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+        assert(markerSeen, "listener bus did not deliver the marker job")
+        val perBatch = jobs.asScala.collect {
+          case ((qid, b), n) if qid == q.id.toString => b -> n.intValue
+        }.toMap
+        assert(perBatch.keySet === (0L until 4L).toSet, s"$buckets: $perBatch")
+        // batch 0 is the run's replay-fenced cold batch; 1..3 are warm and
+        // each carries 40 events
+        val warm = (1L until 4L).map(perBatch)
+        assert(warm.max <= 12,
+          s"stateBuckets=$buckets: a warm micro-batch ran " +
+            s"${warm.mkString("/")} Spark jobs (all: $perBatch)")
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val q = pipe.start(lay.ckptDir) // AvailableNow; one feed file a batch
-      try q.processAllAvailable() finally q.stop()
-      // listener events arrive in order: once a job started after the
-      // query is seen, every job of the query has been counted
-      spark.sparkContext.setJobDescription(marker)
-      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 30000L
-      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(markerSeen, "listener bus did not deliver the marker job")
-      val perBatch = jobs.asScala.collect {
-        case ((qid, b), n) if qid == q.id.toString => b -> n.intValue
-      }.toMap
-      assert(perBatch.keySet === (0L until 4L).toSet, perBatch)
-      // batch 0 is the run's replay-fenced cold batch; 1..3 are warm and
-      // each carries 40 events
-      val warm = (1L until 4L).map(perBatch)
-      assert(warm.max <= 12,
-        s"a warm micro-batch ran ${warm.mkString("/")} Spark jobs (all: $perBatch)")
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("a batch of only pk-less rows writes exactly those dead letters, " +

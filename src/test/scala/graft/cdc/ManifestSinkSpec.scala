@@ -374,7 +374,11 @@ class ManifestSinkSpec extends SparkSpec {
     val e = intercept[Exception] {
       try q.processAllAvailable() finally { q.stop(); pipe.releaseLeases() }
     }
-    assert(causeChain(e).contains("state.buckets is unset"),
+    // an absent state.buckets is one bucket: the modulus fence refuses
+    // the 4-bucket store and names the repair
+    assert(causeChain(e).contains("laid out with 4 buckets") &&
+      causeChain(e).contains("now says 1") &&
+      causeChain(e).contains("refresh"),
       s"config drift must name the repair, got: ${causeChain(e).take(800)}")
   }
 

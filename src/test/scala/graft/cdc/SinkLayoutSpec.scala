@@ -5,9 +5,9 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Sink layout transitions (review r11): the bucketed sink must survive
-  * the config changes a deployment actually makes — flipping
-  * `state.buckets` ON over an existing flat store, upgrading a store in
+/** Sink layout transitions (review r11): the manifest sink (one bucket
+  * when `state.buckets` is absent) must survive the config changes a
+  * deployment actually makes — upgrading an existing flat store, a store in
   * the retired in-place bucket-dir layout, and changing the bucket COUNT —
   * without silently dropping or duplicating rows; a watermark sidecar left
   * in the retired bucketed layout must go flat without losing an entry;
@@ -163,7 +163,7 @@ class SinkLayoutSpec extends SparkSpec {
       spark.sparkContext.emptyRDD[Row], payload)
     val staged = ManifestStore.stageFull(spark, live, empty, "id", 4, Nil)
     assert(staged.count === 0L)
-    StateCommit.dropStaging(spark, staged.commitDirAbs)
+    ManifestStore.dropStaged(spark, staged)
     // and the full refresh of an empty source publishes an empty sink
     import graft.model._
     val sinkRoot = tmpDir("layout-empty-refresh")
@@ -229,6 +229,99 @@ class SinkLayoutSpec extends SparkSpec {
       assert(legacyLeftovers(statePath).isEmpty,
         s"$legacy: legacy files left after refresh: ${legacyLeftovers(statePath)}")
     }
+  }
+
+  /** A pre-manifest FLAT store written with plain Spark at `sinkRoot/t`. */
+  private def flatStore(sinkRoot: String, rows: Seq[(Int, String)]): Unit =
+    rows.toDF("id", "v").write.parquet(s"$sinkRoot/t")
+
+  private val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+
+  test("with no state.buckets a Pipeline's sink is a ONE-bucket manifest " +
+    "store: the first batch over a flat store migrates it keeping every " +
+    "row, and refresh from the same config also publishes one bucket") {
+    import graft.model._
+    val sinkRoot = tmpDir("layout-default")
+    val statePath = s"$sinkRoot/t"
+    flatStore(sinkRoot, Seq((1, "a"), (2, "b"), (3, "c")))
+    val sync = SyncConfig("t", pk = "id", schema = Some(payload))
+    val src = new MemoryCdcSource(spark,
+      Map("t" -> Seq((1, "x"), (4, "y")).toDF("id", "v")))
+    val pipe = new Pipeline(spark, PipelineConfig(Seq(sync)), src, sinkRoot)
+    try {
+      src.addEvents(
+        ChangeEvent("update", "t", 10, ts0, """{"id": 2, "v": "b2"}"""),
+        ChangeEvent("create", "t", 11, ts0, """{"id": 5, "v": "e"}"""))
+      val q = pipe.start(tmpDir("layout-default-ckpt"))
+      try q.processAllAvailable() finally q.stop()
+      val m = ManifestStore.currentManifest(spark, statePath)
+      assert(m.map(_.nbuckets) === Some(1), s"first batch published $m")
+      assert(pipe.sinkState(sync).orderBy("id").collect().toSeq ===
+        Seq(Row(1, "a"), Row(2, "b2"), Row(3, "c"), Row(5, "e")),
+        "every pre-existing row must survive the migration")
+      val names = new java.io.File(statePath).listFiles().map(_.getName)
+      assert(!names.exists(n => n.endsWith(".parquet") || n == "_SUCCESS"),
+        s"flat files stranded after the first batch: ${names.mkString(",")}")
+      assert(pipe.refresh() === Map("t" -> 2L))
+      assert(ManifestStore.currentManifest(spark, statePath).map(_.nbuckets) ===
+        Some(1), "refresh must keep the one-bucket layout")
+      assert(pipe.sinkState(sync).orderBy("id").collect().toSeq ===
+        Seq(Row(1, "x"), Row(4, "y")))
+    } finally pipe.releaseLeases()
+  }
+
+  test("a flat store not yet migrated reads as its rows, not as absent: " +
+    "check counts them, sinkState returns them, and a full=true backfill " +
+    "leaves them in place") {
+    import graft.model._
+    Seq(None, Some(4)).foreach { buckets =>
+      val sinkRoot = tmpDir(s"layout-premigrate-${buckets.getOrElse(0)}")
+      val statePath = s"$sinkRoot/t"
+      val rows = Seq((1, "a"), (2, "b"), (3, "c"))
+      flatStore(sinkRoot, rows)
+      val sync = SyncConfig("t", pk = "id", full = true, schema = Some(payload))
+      // the source's snapshot differs from the store, so a backfill that
+      // wrongly ran would show
+      val pipe = new Pipeline(spark,
+        PipelineConfig(Seq(sync), stateBuckets = buckets),
+        new MemoryCdcSource(spark, Map("t" -> Seq((9, "z")).toDF("id", "v"))),
+        sinkRoot)
+      try {
+        assert(pipe.check() === Map("t" -> ((1L, 3L))), s"$buckets: check")
+        assert(pipe.sinkState(sync).orderBy("id").collect().toSeq ===
+          rows.map { case (i, v) => Row(i, v) }, s"$buckets: sinkState")
+        pipe.backfillIfNeeded()
+        assert(ManifestStore.currentManifest(spark, statePath).isEmpty,
+          s"$buckets: backfill must not publish over a live legacy store")
+        assert(pipe.sinkState(sync).count() === 3L, s"$buckets: after backfill")
+      } finally pipe.releaseLeases()
+    }
+  }
+
+  test("a snapshot-floor failure AFTER refresh's publish keeps the " +
+    "published snapshot readable instead of deleting its files") {
+    import graft.model._
+    val sinkRoot = tmpDir("layout-floorfail")
+    val statePath = s"$sinkRoot/t"
+    val sync = SyncConfig("t", pk = "id", schema = Some(payload))
+    val pipe = new Pipeline(spark,
+      PipelineConfig(Seq(sync), stateBuckets = Some(4)),
+      new MemoryCdcSource(spark,
+        Map("t" -> Seq((1, "x"), (2, "y")).toDF("id", "v"))), sinkRoot)
+    // a floor file that does not parse makes the floor record throw
+    val floor = new java.io.File(OffsetWatermark.floorPath(statePath))
+    floor.getParentFile.mkdirs()
+    java.nio.file.Files.write(floor.toPath, "torn".getBytes("UTF-8"))
+    try {
+      val e = intercept[IllegalArgumentException](pipe.refresh())
+      assert(e.getMessage.contains("torn snapshot floor"), e.getMessage)
+    } finally pipe.releaseLeases()
+    assert(ManifestStore.currentManifest(spark, statePath).map(_.rowCount) ===
+      Some(2L), "the publish landed before the floor record failed")
+    assert(pipe.sinkState(sync).orderBy("id").collect().toSeq ===
+      Seq(Row(1, "x"), Row(2, "y")),
+      "the published snapshot's files must still be there")
+    assert(ManifestStore.stagingUnder(statePath).isEmpty)
   }
 
   test("a repaired dead-letter row with a NULL offset fails the replay " +

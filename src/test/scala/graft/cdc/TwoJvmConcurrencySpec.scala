@@ -84,7 +84,7 @@ class TwoJvmConcurrencySpec extends SparkSpec {
       // bootstrap: first batch through; stats visible (the first published
       // manifest version — stats ride the data commit itself)
       source.addEvents(events(0, 500): _*)
-      def statsLive(): Boolean = ManifestStore.liveExists(spark, statePath)
+      def statsLive(): Boolean = ManifestStore.isManifestStore(spark, statePath)
       val bootDeadline = System.currentTimeMillis() + 120000L
       while ((!statsLive() || pipe.sinkState(sync).isEmpty) &&
           System.currentTimeMillis() < bootDeadline) Thread.sleep(200L)
