@@ -23,8 +23,10 @@ import org.apache.spark.sql.functions._
   *    contents.
   *
   * This is the only sink layout: an absent `state.buckets` is one bucket.
-  * Only the sink is bucketed: its per-pk offset watermark
-  * ([[OffsetWatermark]]) is one flat store whatever `state.buckets` says.
+  * The per-pk applied-offset watermark lives in the rows themselves
+  * ([[UpsertSink.Reserved]]): the merge that writes a row also advances its
+  * position, and a delete leaves a tombstone, so no second store is read
+  * or rewritten per batch.
   */
 object BucketedUpsertSink {
 
@@ -44,7 +46,7 @@ object BucketedUpsertSink {
       : Option[ManifestStore.Manifest] => DataFrame = base => {
     val state = base match {
       case Some(mm) =>
-        ManifestStore.readStateOf(spark, statePath, Some(mm), payloadSchema,
+        ManifestStore.readPhysicalOf(spark, statePath, Some(mm), payloadSchema,
           Some(touched)).drop(BucketCol)
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], payloadSchema)
@@ -60,6 +62,57 @@ object BucketedUpsertSink {
     * in (a null pk hashes to a real bucket, so it is masked out). */
   def touchedBucketsCol(pk: Column, numBuckets: Int): Column =
     collect_set(when(pk.isNotNull, bucketOf(pk, numBuckets)))
+
+  /** The stored (pk, [[UpsertSink.OffsetCol]], [[UpsertSink.RidxCol]])
+    * positions of a manifest's rows — tombstones included, so a deleted pk
+    * still fences — optionally of a bucket subset; None when no selected
+    * row carries a position, which the footers answer with no job (a store
+    * just loaded by a backfill). Reads only the parquet columns it
+    * selects. */
+  def positions(spark: SparkSession, statePath: String,
+                m: Option[ManifestStore.Manifest], pk: String,
+                onlyBuckets: Option[Seq[Long]] = None): Option[DataFrame] =
+    m.map(mm => mm.copy(buckets = mm.buckets.filter { case (b, _) =>
+        onlyBuckets.forall(_.contains(b)) }))
+      .filter(sel => ManifestStore.maxAppliedOffset(spark, statePath, Some(sel)).isDefined)
+      .map { sel =>
+        ManifestStore.readPhysicalOf(spark, statePath, Some(sel),
+          org.apache.spark.sql.types.StructType(Nil))
+          .filter(col(UpsertSink.OffsetCol).isNotNull)
+          .select(col(pk), col(UpsertSink.OffsetCol), col(UpsertSink.RidxCol))
+      }
+
+  /** Fold stored positions into position-free or positioned rows: each
+    * row keeps the greater of its own position and the one `positions`
+    * holds for its pk, and a pk with a position but no row becomes a
+    * tombstone. With no positions the rows just gain the reserved columns
+    * (null: no change applied yet). This is how a snapshot rebuild keeps
+    * every pk's position and tombstone, and how a legacy `.wm` sidecar is
+    * folded into the rows it guarded. */
+  def foldPositions(rows: DataFrame, positions: Option[DataFrame],
+                    pk: String): DataFrame = {
+    import UpsertSink.{DeletedCol, OffsetCol, RidxCol}
+    def orNull(c: String, t: String) =
+      if (rows.columns.contains(c)) col(s"r.$c") else lit(null).cast(t)
+    val payload = rows.columns.filterNot(UpsertSink.Reserved.contains)
+    val r = rows.alias("r")
+    positions match {
+      case None =>
+        r.select(payload.map(c => col(s"r.$c")) ++ Seq(
+          orNull(OffsetCol, "long").as(OffsetCol), orNull(RidxCol, "int").as(RidxCol),
+          orNull(DeletedCol, "boolean").as(DeletedCol)): _*)
+      case Some(p) =>
+        val pos = greatest(
+          UpsertSink.position(orNull(OffsetCol, "long"), orNull(RidxCol, "int")),
+          UpsertSink.position(col(s"p.$OffsetCol"), col(s"p.$RidxCol")))
+        r.join(p.alias("p"), col(s"r.$pk") === col(s"p.$pk"), "full_outer")
+          .select(payload.map(c =>
+            (if (c == pk) coalesce(col(s"r.$c"), col(s"p.$c")) else col(s"r.$c")).as(c)) ++
+            Seq(pos("o").as(OffsetCol), pos("r").as(RidxCol),
+              when(col(s"r.$pk").isNotNull, orNull(DeletedCol, "boolean"))
+                .otherwise(lit(true)).as(DeletedCol)): _*)
+    }
+  }
 
   /** The buckets `changes` touches, sorted — one aggregate job. */
   def touchedBuckets(changes: DataFrame, pk: String, numBuckets: Int): Seq[Long] =
@@ -98,16 +151,25 @@ object BucketedUpsertSink {
     ManifestStore.isManifestStore(spark, statePath) ||
       legacyData(listNames(spark, statePath))
 
-  /** Current state (without the bucket column). The payload schema makes a
+  /** Current state (live rows, without the bucket or reserved columns).
+    * The payload schema makes a
     * fully-emptied or not-yet-created state readable. A legacy store — the
     * retired in-place bucket-dir layout, or a FLAT store from before the
     * manifest store was the only layout — reads as its full legacy state,
     * never as absent, until its first batch or refresh migrates it. */
   def currentState(spark: SparkSession, statePath: String,
                    schema: org.apache.spark.sql.types.StructType): DataFrame =
-    ManifestStore.currentManifest(spark, statePath) match {
-      case m @ Some(_) =>
-        ManifestStore.readStateOf(spark, statePath, m, schema).drop(BucketCol)
+    UpsertSink.live(storedState(spark, statePath,
+      ManifestStore.currentManifest(spark, statePath), schema))
+
+  /** The stored rows of manifest `m` (or of a legacy store when there is
+    * none), tombstones and positions included, without the bucket column. */
+  private[cdc] def storedState(spark: SparkSession, statePath: String,
+                               m: Option[ManifestStore.Manifest],
+                               schema: org.apache.spark.sql.types.StructType): DataFrame =
+    m match {
+      case Some(_) =>
+        ManifestStore.readPhysicalOf(spark, statePath, m, schema).drop(BucketCol)
       case None =>
         if (legacyData(listNames(spark, statePath)))
           spark.read.parquet(statePath).drop(BucketCol)
@@ -117,7 +179,7 @@ object BucketedUpsertSink {
 
   /** Apply one compacted micro-batch: read ONLY the buckets the batch
     * touches, merge with [[UpsertSink.applyBatch]] semantics (presence
-    * mask, create-replaces, delete-removes), and publish the touched
+    * mask, create-replaces, delete-tombstones when positioned), and publish the touched
     * buckets' new content as the next manifest version. `schema` makes the
     * very first batch work against a not-yet-created state (bootstrap
     * without a separate init). `statCols` are the zone-map stat columns the
@@ -160,7 +222,8 @@ object BucketedUpsertSink {
     }
     val payloadSchema = schema.getOrElse(
       org.apache.spark.sql.types.StructType(changes.schema.fields
-        .filterNot(f => f.name == "op" || f.name == UpsertSink.PresentCol)))
+        .filterNot(f => f.name == "op" || f.name == UpsertSink.PresentCol ||
+          UpsertSink.Reserved.contains(f.name))))
     def fullRewrite(priorState: DataFrame): Unit = {
       val mergedFull = UpsertSink.applyBatch(priorState, changes, pk)
       val staged = ManifestStore.stageFull(spark, statePath, mergedFull, pk,
@@ -194,11 +257,17 @@ object BucketedUpsertSink {
         val storedTypes = ParquetFooter.schemaOf(spark, refDir)
           .filterNot(_.name == BucketCol)
           .map(f => f.name -> f.dataType).toMap
+        // the reserved columns merge by position, not as payload: they are
+        // exempt, except that a store without them gains them once, through
+        // this same full rewrite, when positioned changes first reach it
         val evolved = changes.schema
-          .filterNot(f => f.name == "op" || f.name == UpsertSink.PresentCol)
-          .exists(f => !storedTypes.get(f.name).contains(f.dataType))
+          .filterNot(f => f.name == "op" || f.name == UpsertSink.PresentCol ||
+            UpsertSink.Reserved.contains(f.name))
+          .exists(f => !storedTypes.get(f.name).contains(f.dataType)) ||
+          (changes.columns.contains(UpsertSink.OffsetCol) &&
+            !storedTypes.contains(UpsertSink.OffsetCol))
         if (evolved) {
-          val full = ManifestStore.readStateOf(spark, statePath, Some(mm),
+          val full = ManifestStore.readPhysicalOf(spark, statePath, Some(mm),
             payloadSchema)
           fullRewrite(full.drop(BucketCol))
           return

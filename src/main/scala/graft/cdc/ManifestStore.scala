@@ -28,10 +28,15 @@ import scala.jdk.CollectionConverters._
   *    supersede but never remove from under the pinned scan (vacuum
   *    deletes only what the last `keepVersions` manifests no longer
   *    reference AND is older than `minAgeMs`).
-  *  - the manifest ALSO carries the per-bucket zone-map stats (row count,
-  *    min/max per stat column). Data and stats publish in ONE atomic
-  *    rename, so there is no window in which the stats describe a state
-  *    the data no longer has, and pruned reads need no staleness guard.
+  *  - the manifest ALSO carries the per-bucket zone-map stats (live row
+  *    count, min/max per stat column) and the sync's snapshot floor. Data,
+  *    stats and floor publish in ONE atomic rename, so there is no window
+  *    in which the stats describe a state the data no longer has, pruned
+  *    reads need no staleness guard, and a refresh's floor cannot be lost
+  *    after its snapshot landed.
+  *  - rows may carry the sink's reserved position/tombstone columns
+  *    ([[UpsertSink.Reserved]]); the logical readers ([[readStateOf]] and
+  *    everything built on it) return live rows without them.
   *
   * Crash windows, all self-healing with no recoverSwap analog:
   * a crash before the manifest rename leaves an orphan commit dir (never
@@ -70,24 +75,34 @@ object ManifestStore {
   private val FormatLine = "graft-manifest\t1"
   private val ManifestRe = """manifest-v(\d{12})\.txt""".r
 
-  /** One bucket's live directory + its zone-map stats. Stats are stored as
+  /** One bucket's live directory + its zone-map stats. `nRows` counts live
+    * rows, not tombstones. Stats are stored as
     * LONG bounds (integral stat columns — the pruned-read API contract);
     * None = the bucket's column is all-null (conservatively non-matching,
-    * exactly like the parquet zone map: null rows fail any range predicate). */
+    * exactly like the parquet zone map: null rows fail any range predicate).
+    * A tombstone's payload is null, so only a pk stat column's bounds can
+    * cover a tombstone — conservatively wider, never narrower. */
   final case class BucketEntry(relDir: String, nRows: Long,
                                stats: Map[String, (Option[Long], Option[Long])])
 
+  /** `floor` is the sync's snapshot floor: every change at or below that
+    * source offset was observed before a published snapshot and is
+    * superseded by it (0 = no snapshot ever; see
+    * [[OffsetWatermark.splitStale]]). Batch commits carry it forward;
+    * [[publishFull]] raises it, never lowers it. */
   final case class Manifest(version: Long, nbuckets: Int,
                             statCols: Seq[String],
-                            buckets: Map[Long, BucketEntry]) {
+                            buckets: Map[Long, BucketEntry],
+                            floor: Long = 0L) {
     def rowCount: Long = buckets.valuesIterator.map(_.nRows).sum
   }
 
   /** A staged-but-unpublished full snapshot (refresh/backfill): the data
     * commit dir is written OUTSIDE the state lock (unpublished = invisible),
-    * publish is the cheap locked step. `commitDirAbs` doubles as the abort
-    * path (dropping an unpublished commit dir is always safe). */
-  final case class StagedCommit(commitDirAbs: String,
+    * publish is the cheap locked step. `commitDirs` (one, plus one per
+    * [[restage]]) double as the abort path (dropping an unpublished commit
+    * dir is always safe). */
+  final case class StagedCommit(commitDirs: Seq[String],
                                 buckets: Map[Long, BucketEntry],
                                 nbuckets: Int, statCols: Seq[String]) {
     def count: Long = buckets.valuesIterator.map(_.nRows).sum
@@ -304,14 +319,17 @@ object ManifestStore {
       }.toMap
       f(1).toLong -> BucketEntry(f(2), f(3).toLong, stats)
     }.toMap
-    Manifest(field("version").toLong, field("nbuckets").toInt, statCols, buckets)
+    // a manifest published before the floor field reads as floor 0
+    val floor = kv.find(_.head == "floor").fold(0L)(_(1).toLong)
+    Manifest(field("version").toLong, field("nbuckets").toInt, statCols,
+      buckets, floor)
   }
 
   private def renderManifest(m: Manifest): String = {
     def bound(b: Option[Long]): String = b.fold("-")(_.toString)
     val header = Seq(FormatLine,
       s"version\t${m.version}", s"nbuckets\t${m.nbuckets}",
-      s"statcols\t${m.statCols.mkString(",")}")
+      s"statcols\t${m.statCols.mkString(",")}", s"floor\t${m.floor}")
     val rows = m.buckets.toSeq.sortBy(_._1).map { case (b, e) =>
       (Seq("bucket", b.toString, e.relDir, e.nRows.toString) ++
         m.statCols.flatMap(c => Seq(bound(e.stats(c)._1), bound(e.stats(c)._2))))
@@ -399,13 +417,31 @@ object ManifestStore {
           case _: java.io.IOException if fs.exists(p) => false
         }
       }
-    if (created) {
-      val out = fs.create(p, true)
-      try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    if (created)
+      writeSmallFile(fs, p, token.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        createNew = false)
     created
   }
+
+  /** Write a few bytes of metadata to `p`: `createNew` fails if it exists
+    * (create-exclusive), otherwise an existing file is replaced. On the
+    * `file` scheme this goes through java.nio: Hadoop's local filesystem
+    * without native libraries forks a `chmod` process per `create` (about
+    * 9 ms each, against 0.14 ms for the nio write), and a commit makes two
+    * such writes. Elsewhere it is the filesystem's own create. */
+  private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
+                             p: org.apache.hadoop.fs.Path, bytes: Array[Byte],
+                             createNew: Boolean): Unit =
+    if (fs.getScheme == "file") {
+      import java.nio.file.StandardOpenOption._
+      val opts =
+        if (createNew) Seq(CREATE_NEW, WRITE) else Seq(CREATE, TRUNCATE_EXISTING, WRITE)
+      java.nio.file.Files.write(java.nio.file.Paths.get(p.toUri.getPath), bytes, opts: _*)
+      ()
+    } else {
+      val out = fs.create(p, !createNew)
+      try out.write(bytes) finally out.close()
+    }
 
   /** The filesystem's own clock: the mtime it stamps on a freshly created
     * probe file. Used wherever an AGE is computed from an mtime another
@@ -486,9 +522,9 @@ object ManifestStore {
     val tmp = new org.apache.hadoop.fs.Path(statePath,
       s".manifest-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
     try {
-      val out = fs.create(tmp, false)
-      try out.write(renderManifest(m).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      writeSmallFile(fs, tmp,
+        renderManifest(m).getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        createNew = true)
       occBeforeRenameHook()
       // FENCE: a higher-generation claim means a breaker decided we
       // crashed and owns the version now; a published manifest means the
@@ -560,22 +596,65 @@ object ManifestStore {
       onlyBuckets)
 
   /** As [[readState]] over an ALREADY-resolved manifest — the hot batch
-    * path resolves once and threads it (review r13 #6). */
+    * path resolves once and threads it. Live rows only,
+    * without the reserved position/tombstone columns ([[UpsertSink.live]]). */
   def readStateOf(spark: SparkSession, statePath: String,
                   manifest: Option[Manifest], schema: StructType,
-                  onlyBuckets: Option[Seq[Long]] = None): DataFrame = {
-    val dirs = manifest.toSeq.flatMap { m =>
-      val sel = onlyBuckets.map(_.toSet)
-      m.buckets.toSeq.sortBy(_._1)
-        .filter { case (b, _) => sel.forall(_.contains(b)) }
-        .map { case (_, e) => s"$statePath/${e.relDir}" }
+                  onlyBuckets: Option[Seq[Long]] = None): DataFrame =
+    UpsertSink.live(readPhysicalOf(spark, statePath, manifest, schema, onlyBuckets))
+
+  /** The stored rows themselves, tombstones and positions included: what
+    * the sink's merge reads and rewrites. */
+  private[cdc] def readPhysicalOf(spark: SparkSession, statePath: String,
+                                  manifest: Option[Manifest], schema: StructType,
+                                  onlyBuckets: Option[Seq[Long]] = None): DataFrame =
+    readBuckets(spark, statePath, manifest.fold(Map.empty[Long, BucketEntry])(_.buckets),
+      schema, onlyBuckets)
+
+  /** The physical rows of a staged, unpublished snapshot (of a bucket
+    * subset). */
+  private[cdc] def readStaged(spark: SparkSession, statePath: String,
+                              staged: StagedCommit, schema: StructType,
+                              onlyBuckets: Option[Seq[Long]] = None): DataFrame =
+    readBuckets(spark, statePath, staged.buckets, schema, onlyBuckets)
+
+  /** Every bucket dir of a manifest (or a staged snapshot) shares one
+    * physical schema (the sink's evolution guard), so a read of a bucket
+    * SUBSET — an empty one included — takes it from the lowest bucket's
+    * footer, not from the caller's payload `schema` (used only when there
+    * is no bucket at all). A merge whose buckets are all new then still
+    * writes the columns every other bucket has: a positionless caller
+    * ([[graft.ops.Maintenance.repairUpsert]]) over a positioned store keeps
+    * the reserved columns. */
+  private def readBuckets(spark: SparkSession, statePath: String,
+                          buckets: Map[Long, BucketEntry], schema: StructType,
+                          onlyBuckets: Option[Seq[Long]]): DataFrame = {
+    val sel = onlyBuckets.map(_.toSet)
+    val sorted = buckets.toSeq.sortBy(_._1)
+    val dirs = sorted.collect {
+      case (b, e) if sel.forall(_.contains(b)) => s"$statePath/${e.relDir}" }
+    sorted.headOption.map { case (_, e) =>
+      ParquetFooter.schemaOf(spark, s"$statePath/${e.relDir}") } match {
+      case Some(physical) if dirs.nonEmpty =>
+        spark.read.schema(physical).parquet(dirs: _*)
+      case found =>
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(found.getOrElse(schema).fields.filterNot(_.name == BucketCol) :+
+            StructField(BucketCol, LongType)))
     }
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(schema.fields.filterNot(_.name == BucketCol) :+
-          StructField(BucketCol, LongType)))
-    else spark.read.schema(ParquetFooter.schemaOf(spark, dirs.head))
-      .parquet(dirs: _*)
+  }
+
+  /** The greatest source offset any row of the store carries — the last
+    * change the sink applied — from the live buckets' parquet footers on
+    * the driver, with no job; None when no row carries a position. */
+  def maxAppliedOffset(spark: SparkSession, statePath: String,
+                       manifest: Option[Manifest]): Option[Long] = {
+    val (fs, _) = hfs(spark, statePath)
+    val conf = spark.sparkContext.hadoopConfiguration
+    manifest.toSeq.flatMap(_.buckets.values).flatMap { e =>
+      ParquetFooter.maxOf(conf, ParquetFooter.dataFiles(fs,
+        new org.apache.hadoop.fs.Path(s"$statePath/${e.relDir}")), UpsertSink.OffsetCol)
+    }.maxOption
   }
 
   private val BpartRe = """_bpart=(\d+)""".r
@@ -687,7 +766,8 @@ object ManifestStore {
         version = prev.fold(1L)(_.version + 1L),
         nbuckets = nbuckets, statCols = statCols,
         buckets = prev.fold(Map.empty[Long, BucketEntry])(_.buckets)
-          .removedAll(touched) ++ written)
+          .removedAll(touched) ++ written,
+        floor = prev.fold(0L)(_.floor))
       writeManifest(spark, statePath, next)
     } finally releaseStaging(statePath, written)
     vacuum(spark, statePath)
@@ -766,7 +846,8 @@ object ManifestStore {
           version = base.fold(1L)(_.version + 1L),
           nbuckets = nbuckets, statCols = statCols,
           buckets = base.fold(Map.empty[Long, BucketEntry])(_.buckets)
-            .removedAll(touched) ++ written)
+            .removedAll(touched) ++ written,
+          floor = base.fold(0L)(_.floor))
         tryPublish(spark, statePath, next, claimTakeoverMs) match {
           case Published =>
             releaseStaging(statePath, written)
@@ -871,26 +952,50 @@ object ManifestStore {
     val abs = entries.values.headOption.map(commitDirOf(statePath, _))
       .getOrElse(s"$statePath/$DataDir/empty-" +
         java.util.UUID.randomUUID().toString.take(8))
-    StagedCommit(abs, entries, nbuckets, statCols)
+    StagedCommit(Seq(abs), entries, nbuckets, statCols)
+  }
+
+  /** Rewrite the `buckets` of a staged snapshot through `f` — from those
+    * buckets' physical rows, without the bucket column, to their new rows —
+    * into a fresh staged commit dir; every other bucket keeps its staged
+    * entry. `f` may keep, change or add rows, but only of pks that hash to
+    * `buckets`. The replaced dirs are dropped at once: no manifest
+    * references them. */
+  def restage(spark: SparkSession, statePath: String, staged: StagedCommit,
+              buckets: Seq[Long], pk: String, schema: StructType)
+             (f: DataFrame => DataFrame): StagedCommit = {
+    val fresh = f(readStaged(spark, statePath, staged, schema, Some(buckets))
+      .drop(BucketCol))
+    val entries = writeCommit(spark, statePath, fresh.withColumn(BucketCol,
+      BucketedUpsertSink.bucketOf(col(pk), staged.nbuckets)), staged.statCols)
+    val (fs, _) = hfs(spark, statePath)
+    buckets.flatMap(staged.buckets.get).foreach { e =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/${e.relDir}"), true) }
+    staged.copy(
+      commitDirs = staged.commitDirs ++ entries.values.headOption.map(commitDirOf(statePath, _)),
+      buckets = staged.buckets -- buckets ++ entries)
   }
 
   /** Abandon a staged full snapshot that will not be published (a failed
     * or pre-empted refresh/backfill): drop its files and its registration. */
   def dropStaged(spark: SparkSession, staged: StagedCommit): Unit =
-    discardStaging(hfs(spark, staged.commitDirAbs)._1, staged.commitDirAbs)
+    staged.commitDirs.foreach(d => discardStaging(hfs(spark, d)._1, d))
 
   /** Publish a staged full snapshot: the next manifest references EXACTLY
     * the staged buckets (a refresh replaces the whole logical table — but
     * the superseded files stay readable to concurrent pinned scans until
-    * vacuum retention expires, which is the entire point). */
+    * vacuum retention expires, which is the entire point). `floor` is the
+    * snapshot floor this publish asserts; the published floor is the
+    * greater of it and the previous manifest's, in the same rename. */
   def publishFull(spark: SparkSession, statePath: String,
-                  staged: StagedCommit): Unit = {
+                  staged: StagedCommit, floor: Long = 0L): Unit = {
     val prev = currentManifest(spark, statePath)
     try writeManifest(spark, statePath, Manifest(
       version = prev.fold(1L)(_.version + 1L),
       nbuckets = staged.nbuckets, statCols = staged.statCols,
-      buckets = staged.buckets))
-    finally { activeStaging.remove(staged.commitDirAbs); () }
+      buckets = staged.buckets,
+      floor = math.max(floor, prev.fold(0L)(_.floor))))
+    finally { staged.commitDirs.foreach(activeStaging.remove) }
     if (prev.isEmpty) dropLegacyLayout(spark, statePath)
     vacuum(spark, statePath)
   }
@@ -1070,15 +1175,11 @@ object ManifestStore {
           case (b, e) if e.stats(statCol)._1.exists(_ <= hi) &&
             e.stats(statCol)._2.exists(_ >= lo) => b
         }
-        if (candidates.isEmpty && m.buckets.nonEmpty)
-          // an everything-pruned read must still carry the STORE's schema,
-          // exactly like the unpruned filter would (review r13 #3): plan
-          // over the real files, empty at planning time via lit(false)
-          readStateOf(spark, statePath, Some(m), empSchema)
-            .filter(lit(false)).filter(exact).drop(BucketCol)
-        else
-          readStateOf(spark, statePath, Some(m), empSchema, Some(candidates))
-            .filter(exact).drop(BucketCol)
+        // an everything-pruned read still carries the STORE's schema,
+        // exactly like the unpruned filter would: a subset
+        // read takes it from the store's footer ([[readBuckets]])
+        readStateOf(spark, statePath, Some(m), empSchema, Some(candidates))
+          .filter(exact).drop(BucketCol)
     }
   }
 }

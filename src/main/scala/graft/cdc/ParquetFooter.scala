@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
@@ -13,8 +13,7 @@ import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Driver-side parquet footer reads: the schema and the row/column
-  * statistics the sink and the watermark would otherwise ask a Spark job
-  * for. A footer read is O(files) and runs no job, so a micro-batch's fixed
+  * statistics the sink would otherwise ask a Spark job for. A footer read is O(files) and runs no job, so a micro-batch's fixed
   * cost does not grow with them.
   *
   * Two costs to keep away from: `fs.listFiles`/`listLocatedStatus` on the
@@ -68,12 +67,17 @@ private[cdc] object ParquetFooter {
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
+  private def chunkOf(block: BlockMetaData, c: String): Option[ColumnChunkMetaData] =
+    block.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(c)))
+
   /** Row count and per-column (min, max) of `files`, from their footers'
     * row-group statistics. `cols` are integral top-level columns (the
     * manifest's stat-column contract), so a footer bound is exactly
     * `min/max(cast(c as long))`; a column with no non-null value has bounds
     * (None, None). A column chunk that holds values but carries no
-    * statistics fails loud: it is never read as all-null. */
+    * statistics fails loud: it is never read as all-null. The row count
+    * is of live rows: where a file has the sink's tombstone flag
+    * ([[UpsertSink.DeletedCol]], null on live rows), its null count. */
   def integralStats(conf: Configuration, files: Seq[FileStatus],
                     cols: Seq[String])
       : (Long, Map[String, (Option[Long], Option[Long])]) = {
@@ -82,10 +86,14 @@ private[cdc] object ParquetFooter {
     val hi = scala.collection.mutable.Map.empty[String, Long]
     files.foreach { f =>
       footer(conf, f).getBlocks.asScala.foreach { block =>
-        rows += block.getRowCount
+        rows += chunkOf(block, UpsertSink.DeletedCol).fold(block.getRowCount) { chunk =>
+          val st = chunk.getStatistics
+          if (!st.isNumNullsSet) throw new IllegalStateException(
+            s"${f.getPath}: column '${UpsertSink.DeletedCol}' carries no null count")
+          st.getNumNulls
+        }
         cols.foreach { c =>
-          val chunk = block.getColumns.asScala
-            .find(_.getPath.toArray.sameElements(Array(c)))
+          val chunk = chunkOf(block, c)
             .getOrElse(throw new IllegalStateException(
               s"${f.getPath}: no column chunk for stat column '$c'"))
           val st = chunk.getStatistics
@@ -103,4 +111,19 @@ private[cdc] object ParquetFooter {
     }
     (rows, cols.map(c => c -> ((lo.get(c), hi.get(c)))).toMap)
   }
+
+  /** The greatest value of integral column `c` across `files`, from their
+    * footers; None when no file holds a non-null value of it (or has it).
+    * A chunk that holds values but carries no statistics fails loud, as in
+    * [[integralStats]]. */
+  def maxOf(conf: Configuration, files: Seq[FileStatus], c: String): Option[Long] =
+    files.flatMap { f =>
+      footer(conf, f).getBlocks.asScala.flatMap(chunkOf(_, c)).flatMap { chunk =>
+        val st = chunk.getStatistics
+        if (st.hasNonNullValue) Some(st.genericGetMax.asInstanceOf[Number].longValue)
+        else if (st.isNumNullsSet && st.getNumNulls == chunk.getValueCount) None
+        else throw new IllegalStateException(
+          s"${f.getPath}: column '$c' holds values but its footer carries no statistics")
+      }
+    }.maxOption
 }

@@ -102,8 +102,8 @@ object PluginHooks {
   * tasks, a replay racing a micro-batch). A SECOND driver process mutating the same state path is
   * outside the contract: the sink's manifest publish stays safe under
   * concurrent writers, but the swapped side state (the dead-letter
-  * quarantine, the watermark sidecar) is last-copy-wins across processes
-  * and silently drops the loser's rows. That premise is
+  * quarantine) is last-copy-wins across processes and silently drops the
+  * loser's rows. That premise is
   * ENFORCED fail-loud by [[DriverLease]]: every mutating entry point
   * (applySync, refresh/backfill commit, replayDeadLetters) acquires a
   * heartbeat lease on the state path and a second process fails with a
@@ -122,8 +122,8 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
 
   private def statePath(sync: SyncConfig): String = s"$sinkRoot/${sync.indexName}"
 
-  /** Syncs whose NEXT micro-batch must be fenced against the per-pk
-    * watermark + snapshot floor: exactly the first batch of each query
+  /** Syncs whose NEXT micro-batch must be fenced against the sink's per-pk
+    * positions + snapshot floor: exactly the first batch of each query
     * run — the only batch that can be a checkpoint REPLAY. Re-armed by
     * every [[start]]. See the fence in [[applySync]]. */
   private val replayFencePending =
@@ -235,8 +235,8 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     * probe aggregate ([[probe]]) answers what
     * the batch holds before anything is written: the dead letters are
     * appended only when it counts any, the sink rewrites exactly the
-    * buckets it names, and a batch with no live rows publishes no version
-    * and leaves the watermark untouched.
+    * buckets it names, and a batch with no live rows publishes no version.
+    * The merge that writes a row also advances the row's position.
     *
     * Idempotent — replaying a batch yields the same state (at-least-once
     * -> effectively exactly-once). A replay decodes the same rows, so its
@@ -244,8 +244,8 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     * dedupe there) and the same touched set; the touched set is taken
     * from exactly the rows the merge consumes (after the first-batch
     * fence, when it runs), so a replay rewrites the same buckets with the
-    * same content and advances the watermark to the same positions, and
-    * a replay whose rows were all fenced as superseded changes nothing. */
+    * same content and positions, and a replay whose rows were all fenced
+    * as superseded changes nothing. */
   private def applySync(batch: DataFrame, sync: SyncConfig, batchId: Long): Unit =
     StateCommit.stateLock(statePath(sync)).synchronized {
     // fail-loud single-driver fence (see the class scaladoc); also the
@@ -254,10 +254,10 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     val pk = pkOut(sync)
     // Persisted for the batch's lifetime (r15, guide §5): the decoded view
     // (from_json ×2 branches, posexplode, json_object_keys per mapping — the
-    // batch's dominant per-row CPU) feeds the probe aggregate, the sink
-    // merge and the watermark advance (plus the dead-letter append when it
-    // fires). Unpersisted, each re-ran the whole decode over the cached raw
-    // batch; serialized cache cuts that to one decode + cache reads.
+    // batch's dominant per-row CPU) feeds the probe aggregate and the sink
+    // merge (plus the dead-letter append and the first-batch fence when
+    // they fire). Unpersisted, each re-ran the whole decode over the cached
+    // raw batch; serialized cache cuts that to one decode + cache reads.
     // Batch-sized, freed in the finally below.
     val full = hooks.preEvent.foldLeft(syncView(batch, sync))((df, h) => h(sync.table, df))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
@@ -271,14 +271,15 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     // superseded while the stream was down (r12 OffsetWatermarkFuzzSpec
     // finding: crash -> operator repairs + runs `replay` (or `refresh`) ->
     // stream restarts -> the replayed batch blindly re-upserts the OLD
-    // payload over the newer state, and the already-advanced watermark
+    // payload over the newer state, and the already-advanced position
     // then fences the repair from ever being re-applied — a silent
     // permanent regression). Fence it through the replay path's own
-    // splitStale: rows strictly below their pk's applied watermark, or at
+    // splitStale: rows strictly below their pk's stored position, or at
     // or below the snapshot floor, are superseded and drop; rows AT the
-    // watermark stay (the idempotent re-apply). Later batches of a run
+    // position stay (the idempotent re-apply). Later batches of a run
     // cannot be replays (Spark runs each batchId once per query run), so
-    // steady state pays no watermark read.
+    // steady state reads no positions. The same first batch upgrades a
+    // store that still keeps its watermark in the legacy sidecar.
     // Fence identity is sync.indexName — the SAME identity statePath uses —
     // not sync.table: two syncs may share one source table with different
     // target indexes, and a table-keyed fence would be consumed by the first
@@ -288,27 +289,61 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     // batch's buckets.
     val (fenced, applied) =
       if (replayFencePending.remove(sync.indexName)) {
-        val sp = statePath(sync)
-        val f = OffsetWatermark.splitStale(view,
-          OffsetWatermark.current(spark, sp), pk,
-          OffsetWatermark.snapshotFloor(spark, sp))._1
+        foldLegacyWatermark(sync, discardTornFloor = false)
+        val f = screen(view, sync, Some(seen.touched))._1
         (f, probe(f, sync))
       } else (view, seen)
-    // compact on the envelope, then hand the sink ONLY op + payload (+ mask):
-    // the merge treats every unknown change column as schema evolution, so
-    // leaking table/offset/_ridx here would evolve them INTO the sink table
-    val compacted = Transforms.lastWriteWins(fenced, col(pk), Seq(col("_ridx")))
-      .drop("table", "offset", "_ridx")
     // called even with no live rows: a legacy store still migrates
-    writeCompacted(sync, compacted, Some(applied.touched))
-    // advance the per-pk applied-offset watermark so a later dead-letter
-    // replay can detect (and discard) quarantined payloads this batch — or
-    // any newer one — has superseded. Idempotent under checkpoint replay.
-    if (applied.live > 0)
-      OffsetWatermark.advanceNonEmpty(spark, statePath(sync),
-        fenced.select(col(pk), col("offset"), col("_ridx")), pk)
+    writeCompacted(sync, Pipeline.compact(fenced, pk), Some(applied.touched))
     hooks.postBatch.foreach(_(sync.table, batchId))
     } finally { full.unpersist(); () }
+  }
+
+  /** Split `rows` into (fresh, superseded) against the sink's stored
+    * positions — of `buckets`, or of every bucket — and its snapshot
+    * floor, both from one manifest. */
+  private def screen(rows: DataFrame, sync: SyncConfig,
+                     buckets: Option[Seq[Long]]): (DataFrame, DataFrame) = {
+    val sp = statePath(sync)
+    val m = ManifestStore.currentManifest(spark, sp)
+    OffsetWatermark.splitStale(rows,
+      BucketedUpsertSink.positions(spark, sp, m, pkOut(sync), buckets),
+      pkOut(sync), m.fold(0L)(_.floor))
+  }
+
+  /** Upgrade path for a store whose watermark still lives in the legacy
+    * `.wm` sidecar and `.wm.floor` file: one full rewrite folds the stored
+    * positions into the rows, writes a tombstone for each watermarked pk
+    * that has no row, and publishes the floor in the same manifest; then
+    * both files go. A crash before the deletes re-folds the same values
+    * next time (positions and floor are both monotone). A torn floor file
+    * fails the live batch and the replay loud, naming `refresh`; a refresh
+    * (`discardTornFloor`) discards it — the refresh then publishes its own
+    * ceiling as the floor. */
+  private def foldLegacyWatermark(sync: SyncConfig, discardTornFloor: Boolean): Unit = {
+    val sp = statePath(sync)
+    StateCommit.stateLock(sp).synchronized { if (OffsetWatermark.hasLegacy(spark, sp)) {
+      DriverLease.acquire(spark, sp, staleMs = config.leaseStaleMs)
+      val floor = OffsetWatermark.legacyFloor(spark, sp) match {
+        case Some(Right(v)) => v
+        case Some(Left(torn)) if discardTornFloor =>
+          Pipeline.log.warn(s"$torn: its value is discarded; the refresh " +
+            "records its own observed ceiling as the snapshot floor")
+          0L
+        case Some(Left(torn)) => throw new IllegalStateException(
+          s"$torn — run `refresh` to rebuild the snapshot and its floor, " +
+            "which also completes this store's upgrade")
+        case None => 0L
+      }
+      val m = ManifestStore.currentManifest(spark, sp)
+      val folded = BucketedUpsertSink.foldPositions(
+        BucketedUpsertSink.storedState(spark, sp, m, sinkSchema(sync)),
+        OffsetWatermark.legacyPositions(spark, sp), pkOut(sync))
+      ManifestStore.publishFull(spark, sp, ManifestStore.stageFull(spark, sp, folded,
+        pkOut(sync), m.fold(numBuckets)(_.nbuckets),
+        m.fold(zoneMapColsFor(sync))(_.statCols)), floor)
+      OffsetWatermark.dropLegacy(spark, sp)
+    }}
   }
 
   /** Commit one compacted change set to the sync's sink — the shared write
@@ -339,9 +374,9 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     * source offset it FAILED at, which may predate live batches that have
     * since upserted the same pk — blindly re-applying it would overwrite
     * newer sink state with the stale payload. Repaired rows are therefore
-    * screened against the sink's per-pk applied-offset watermark
-    * ([[OffsetWatermark]], maintained by every live batch): rows whose
-    * (offset, _ridx) position is strictly below the watermark for their pk
+    * screened against the position each sink row (or tombstone) carries
+    * ([[OffsetWatermark]], written by every merge): rows whose
+    * (offset, _ridx) position is strictly below the stored one for their pk
     * are SUPERSEDED — dropped from the quarantine without applying (the
     * live data is newer by construction; the row index matters because a
     * multi-row event's applied sibling at the SAME offset may have won
@@ -351,11 +386,12 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     *
     * Snapshot-loaded rows get the sync-LEVEL guard (r9 review): a full
     * rebuild ([[refresh]]/[[backfillIfNeeded]]) loads the source's current
-    * state WITHOUT advancing the per-pk watermark, so a pk that only ever
-    * appeared in quarantine has no entry and a stale replay would overwrite
-    * its refreshed value. Those rebuilds record the snapshot floor — the
-    * max offset observed (applied or quarantined) at snapshot time — and
-    * replay discards every repaired row at or below it.
+    * state with no position of its own, so a pk that only ever appeared in
+    * quarantine has no position and a stale replay would overwrite its
+    * refreshed value. Those rebuilds publish the snapshot floor — the max
+    * offset observed (applied or quarantined) at snapshot time — in the
+    * snapshot's manifest, and replay discards every repaired row at or
+    * below it.
     *
     * Returns per-table (replayed, superseded, still quarantined). The
     * reference has no analog: it raises `KeyError` and dies on the first
@@ -373,6 +409,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         // `.old`, and probing the main path alone would read every
         // envelope as gone (r9 review)
         StateCommit.recoverSwap(spark, path)
+        foldLegacyWatermark(s, discardTornFloor = false)
         val p = new org.apache.hadoop.fs.Path(path)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (!fs.exists(p)) s.table -> ((0L, 0L, 0L))
@@ -381,27 +418,18 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
           val dl = spark.read.parquet(path)
           val ready = dl.filter(col(pk).isNotNull)
           // a repaired row with a NULL offset cannot be ordered against the
-          // watermark: the three-valued staleness comparison would place it
-          // in NEITHER split and the quarantine rewrite below would DELETE
-          // it unapplied — silent loss. Fail loud instead (review r11).
+          // stored positions: the three-valued staleness comparison would
+          // place it in NEITHER split and the quarantine rewrite below would
+          // DELETE it unapplied — silent loss. Fail loud instead.
           val nullOffset = ready.filter(col("offset").isNull).count()
           require(nullOffset == 0L,
             s"$nullOffset repaired dead-letter row(s) for '${s.table}' have " +
               "a NULL offset — restore the source offset in the quarantine " +
               "before replaying (the staleness screen cannot order them)")
-          val (fresh, stale) = OffsetWatermark.splitStale(
-            ready, OffsetWatermark.current(spark, statePath(s)), pk,
-            OffsetWatermark.snapshotFloor(spark, statePath(s)))
+          val (fresh, stale) = screen(ready, s, None)
           val nFresh = fresh.count()
           val nStale = stale.count()
-          if (nFresh > 0) {
-            val compacted = Transforms
-              .lastWriteWins(fresh, col(pk), Seq(col("_ridx")))
-              .drop("table", "offset", "_ridx")
-            writeCompacted(s, compacted)
-            OffsetWatermark.advanceNonEmpty(spark, statePath(s),
-              fresh.select(col(pk), col("offset"), col("_ridx")), pk)
-          }
+          if (nFresh > 0) writeCompacted(s, Pipeline.compact(fresh, pk))
           if (nFresh > 0 || nStale > 0) {
             // keep only the still-null rows (superseded rows are resolved —
             // newer live data already holds their pk); overwrite via
@@ -422,58 +450,86 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     config.zoneMapCols.filter(have)
   }
 
-  /** The EXPENSIVE half of refresh/backfill, outside any lock: write the
-    * full scan as an unpublished (invisible) manifest commit dir. */
-  private def stageSnapshot(sync: SyncConfig): ManifestStore.StagedCommit =
-    ManifestStore.stageFull(spark, statePath(sync), source.fullScan(sync),
+  /** The EXPENSIVE half of refresh/backfill, outside any lock: write
+    * `snapshot` as an unpublished (invisible) manifest commit dir, with
+    * every pk's position and tombstone carried from the store as `base`
+    * describes it ([[BucketedUpsertSink.foldPositions]]) — a refresh
+    * replaces the rows, never the fence. */
+  private def stageSnapshot(sync: SyncConfig, base: Option[ManifestStore.Manifest],
+                            snapshot: DataFrame): ManifestStore.StagedCommit = {
+    val sp = statePath(sync)
+    ManifestStore.stageFull(spark, sp, BucketedUpsertSink.foldPositions(snapshot,
+      BucketedUpsertSink.positions(spark, sp, base, pkOut(sync)), pkOut(sync)),
       pkOut(sync), numBuckets, zoneMapColsFor(sync))
+  }
 
   /** The shared locked COMMIT of every snapshot-rebuild path (refresh,
-    * refreshAsync, backfill): publish the staged commit as the next
-    * manifest version and record the snapshot floor. One definition so the
-    * three paths cannot drift. */
+    * refreshAsync, backfill): publish the staged commit, with its snapshot
+    * floor, as the next manifest version — one rename. One definition so
+    * the three paths cannot drift. Batches and replays that committed
+    * since the stage read `base` advanced positions the staged copy lacks
+    * ([[refoldSince]]): those are folded in OUTSIDE the lock first, while
+    * the stream keeps flowing, so the locked step folds only what landed
+    * during that catch-up — usually nothing, and then the commit is the
+    * metadata publish alone. */
   private def commitSnapshot(sync: SyncConfig,
-                             staged: ManifestStore.StagedCommit, floor: Long,
-                             precondition: () => Boolean = () => true): Boolean =
-    StateCommit.stateLock(statePath(sync)).synchronized {
-      // ONE failure-cleanup scope (review r10: three copy-pasted
-      // drop-and-rethrow catches invited the next pre-publish step to
-      // forget its fourth): ANY throw up to the publish drops the staged
-      // commit dir, which no manifest references yet. A failure AFTER the
-      // publish must not: the dir is then the live snapshot.
-      val published =
-        try {
-          // single-driver fence BEFORE any mutation of the live path (the
-          // staged scan needed no lease — it wrote only its own unique dir)
-          DriverLease.acquire(spark, statePath(sync), staleMs = config.leaseStaleMs)
-          // evaluated under the lock (backfill's bootstrap-only re-probe);
-          // losing it drops the staged copy instead of clobbering
-          precondition() && {
-            ManifestStore.publishFull(spark, statePath(sync), staged); true
-          }
-        } catch { case t: Throwable =>
-          ManifestStore.dropStaged(spark, staged); throw t }
-      if (!published) ManifestStore.dropStaged(spark, staged)
-      else {
-        // a floor-record failure AFTER the publish landed leaves the
-        // snapshot live but unfenced: a stale dead-letter replay for a
-        // snapshot-only pk could then apply over the refreshed value
-        // (the r9 hazard the floor exists for). The failure is loud and
-        // names the heal — re-running refresh records the floor — but it
-        // cannot be made atomic with the publish in this harness (a
-        // table format's single commit would carry both).
-        try OffsetWatermark.recordSnapshotFloor(spark, statePath(sync), floor)
-        catch { case t: Throwable =>
-          Pipeline.log.error(
-            s"snapshot floor for ${statePath(sync)} FAILED to record " +
-              s"after the publish committed: stale dead-letter replays " +
-              s"are not fenced for snapshot-only pks until a refresh " +
-              s"succeeds — re-run refresh before replaying (${t.getMessage})")
-          throw t
+                             staged: ManifestStore.StagedCommit,
+                             base: Option[ManifestStore.Manifest], floor: Long,
+                             precondition: () => Boolean = () => true): Boolean = {
+    val sp = statePath(sync)
+    var current = staged
+    // ONE failure-cleanup scope (a drop-and-rethrow catch per step invites
+    // the next pre-publish step to forget its own): ANY throw up to the
+    // publish drops the staged commit dirs, which no manifest references
+    // yet.
+    try {
+      val seen = ManifestStore.currentManifest(spark, sp)
+      current = refoldSince(sync, current, base, seen)
+      StateCommit.stateLock(sp).synchronized {
+        // single-driver fence BEFORE any mutation of the live path (the
+        // staged scan needed no lease — it wrote only its own unique dir)
+        DriverLease.acquire(spark, sp, staleMs = config.leaseStaleMs)
+        // evaluated under the lock (backfill's bootstrap-only re-probe);
+        // losing it drops the staged copy instead of clobbering
+        val published = precondition() && {
+          current = refoldSince(sync, current, seen, ManifestStore.currentManifest(spark, sp))
+          ManifestStore.publishFull(spark, sp, current, floor); true
         }
+        if (!published) ManifestStore.dropStaged(spark, current)
+        published
       }
-      published
+    } catch { case t: Throwable =>
+      ManifestStore.dropStaged(spark, current); throw t }
+  }
+
+  /** Fold into a staged snapshot the positions that batches and replays
+    * committed between manifests `base` and `now`: those of the buckets
+    * `now` rewrote, into the staged buckets their pks hash to — the same ids
+    * when the moduli agree (the usual case: the modulus fence keeps
+    * batches on the configured one), every staged bucket otherwise. A
+    * pk's position is the greater of the two, and a pk that gained a
+    * position but has no staged row becomes a tombstone, exactly as
+    * [[stageSnapshot]] folds the base's. The cost is the changed buckets',
+    * not the table's; with nothing changed it is no job at all. */
+  private def refoldSince(sync: SyncConfig, staged: ManifestStore.StagedCommit,
+                          base: Option[ManifestStore.Manifest],
+                          now: Option[ManifestStore.Manifest]): ManifestStore.StagedCommit = {
+    val sp = statePath(sync)
+    val changed = now.toSeq.flatMap { n =>
+      val kept = base.filter(_.nbuckets == n.nbuckets).fold(Set.empty[String])(
+        _.buckets.valuesIterator.map(_.relDir).toSet)
+      n.buckets.collect { case (b, e) if !kept.contains(e.relDir) => b }
+    }.sorted
+    val moved = if (changed.isEmpty) None
+      else BucketedUpsertSink.positions(spark, sp, now, pkOut(sync), Some(changed))
+    moved.fold(staged) { p =>
+      val targets =
+        if (now.exists(_.nbuckets == staged.nbuckets)) changed
+        else (0L until staged.nbuckets.toLong)
+      ManifestStore.restage(spark, sp, staged, targets, pkOut(sync), sinkSchema(sync))(
+        BucketedUpsertSink.foldPositions(_, Some(p), pkOut(sync)))
     }
+  }
 
   /** A published manifest or a pre-manifest store's data — not the state
     * dir's existence, which an unpublished staging commit already creates
@@ -482,42 +538,33 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     BucketedUpsertSink.liveExists(spark, statePath(sync))
 
   /** Max source offset this pipeline has OBSERVED for a sync — applied
-    * (per-pk watermark) or quarantined (dead-letter envelopes). A full
-    * rebuild records this as the snapshot floor: the snapshot's content is
-    * newer than everything observed up to it, so replay must not re-apply
-    * any of it. */
+    * (the greatest position in the sink's rows) or quarantined
+    * (dead-letter envelopes), both from parquet footers, with no job. A
+    * full rebuild records this as the snapshot floor: the snapshot's
+    * content is newer than everything observed up to it, so replay must
+    * not re-apply any of it. */
   private def observedOffsetCeiling(sync: SyncConfig): Long = {
-    // UNDER the state lock (r14): this is the one watermark-store read
-    // that runs outside a batch (refresh/K3 call it before their long
-    // scans), and a live batch's advance under the lock swaps `.wm` out
-    // whole — its `.wm` -> `.wm.old` rename and the delete of the old copy
-    // can land between this read's file listing and its footer reads,
-    // failing refresh with FILE_NOT_EXIST. The lock is held for ONE
-    // max-aggregate over the narrow (pk, offset, _ridx) sidecar plus the
-    // dead-letter max — bounded, nothing like the full source scan the r9
-    // review moved outside the lock; monitors are reentrant so callers
-    // already holding the lock are unaffected.
-    StateCommit.stateLock(statePath(sync)).synchronized {
-    val wmMax = OffsetWatermark.current(spark, statePath(sync))
-      .flatMap(w => Option(
-        w.agg(max(col(OffsetWatermark.OffsetCol))).head.get(0)))
-      .fold(0L)(_.asInstanceOf[Long])
-    // same heal as replayDeadLetters: an interrupted quarantine rewrite
-    // must not read as an empty dead-letter dir and record a too-low floor
-    StateCommit.recoverSwap(spark, deadLetterPath(sync))
-    val dlPath = new org.apache.hadoop.fs.Path(deadLetterPath(sync))
-    val fs = dlPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dlMax =
-      if (!fs.exists(dlPath)) 0L
-      else Option(spark.read.parquet(deadLetterPath(sync))
-        .agg(max(col("offset"))).head.get(0)).fold(0L)(_.asInstanceOf[Long])
-    math.max(wmMax, dlMax)
+    val sp = statePath(sync)
+    val applied = ManifestStore.maxAppliedOffset(spark, sp,
+      ManifestStore.currentManifest(spark, sp)).getOrElse(0L)
+    // the quarantine is a swapped store: read it under the state lock, so
+    // a replay's rewrite cannot swap it out between this read's listing
+    // and its footer reads; and heal an interrupted rewrite first, which
+    // must not read as an empty dir and record a too-low floor
+    val dlMax = StateCommit.stateLock(sp).synchronized {
+      StateCommit.recoverSwap(spark, deadLetterPath(sync))
+      val dlPath = new org.apache.hadoop.fs.Path(deadLetterPath(sync))
+      val fs = dlPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(dlPath)) None
+      else ParquetFooter.maxOf(spark.sparkContext.hadoopConfiguration,
+        ParquetFooter.dataFiles(fs, dlPath), "offset")
     }
+    math.max(applied, dlMax.getOrElse(0L))
   }
 
   /** K3 bootstrap backfill: if `sync.full` and the sink is absent, load the
     * full scan before tailing (`main.py:84-101`). The snapshot floor is
-    * captured BEFORE the scan and recorded AFTER the sink lands — see
+    * captured BEFORE the scan and published with the snapshot — see
     * [[refresh]] for the ordering argument. */
   def backfillIfNeeded(): Unit = config.syncs.foreach { sync =>
     if (sync.full && !sinkLive(sync)) {
@@ -526,11 +573,12 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
       // stream first would stall every micro-batch for the whole
       // bootstrap scan — r9 review)
       val floor = observedOffsetCeiling(sync)
-      val staged = stageSnapshot(sync)
+      val base = ManifestStore.currentManifest(spark, statePath(sync))
+      val staged = stageSnapshot(sync, base, source.fullScan(sync))
       // re-probe under the lock: a live batch may have bootstrapped the
       // sink during our scan; K3 is bootstrap-only, and the stream is
       // already building on ITS copy — drop our staging, don't clobber
-      commitSnapshot(sync, staged, floor,
+      commitSnapshot(sync, staged, base, floor,
         precondition = () => !sinkLive(sync))
     }
   }
@@ -762,28 +810,34 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     * under a new bucket count.
     *
     * Snapshot-floor ordering (r9 review): the observed-offset ceiling is
-    * captured BEFORE the full scan starts and recorded AFTER the publish
-    * commits. A live stream running concurrently (the refreshAsync shape)
-    * can therefore only push real observations ABOVE the recorded floor —
+    * captured BEFORE the full scan starts and published WITH the snapshot.
+    * A live stream running concurrently (the refreshAsync shape) can
+    * therefore only push real observations ABOVE the published floor —
     * their repairs stay replayable (conservative) — never trap a
     * post-snapshot quarantine below it (which would silently discard a
-    * legitimate repair). */
+    * legitimate repair). Every pk's position and tombstone survive the
+    * rebuild ([[stageSnapshot]]). */
   def refresh(tables: Seq[String] = Seq.empty): Map[String, Long] =
     config.syncs
       .filter(s => tables.isEmpty || tables.contains(s.table))
-      .map { s =>
-        val floor = observedOffsetCeiling(s)
-        // stage (the full-scan materialization) runs OUTSIDE the state
-        // lock so a live stream keeps flowing through the long scan; only
-        // the commit — publish + floor record — serializes with applySync.
-        // Unlocked, a batch's read-merge-write racing the commit silently
-        // dropped whichever complete copy lost while the floor still
-        // asserted the snapshot superseded everything below it (r9 review)
-        val staged = stageSnapshot(s)
-        commitSnapshot(s, staged, floor)
-        s.table -> staged.count
-      }
+      .map(s => s.table -> rebuild(s))
       .toMap
+
+  /** One sync's snapshot rebuild; returns the snapshot's row count. */
+  private def rebuild(sync: SyncConfig): Long = {
+    foldLegacyWatermark(sync, discardTornFloor = true)
+    val floor = observedOffsetCeiling(sync)
+    val base = ManifestStore.currentManifest(spark, statePath(sync))
+    // stage (the full-scan materialization) runs OUTSIDE the state lock
+    // so a live stream keeps flowing through the long scan; only the
+    // commit serializes with applySync. Unlocked, a batch's
+    // read-merge-write racing the commit silently dropped whichever
+    // complete copy lost while the floor still asserted the snapshot
+    // superseded everything below it
+    val staged = stageSnapshot(sync, base, source.fullScan(sync))
+    commitSnapshot(sync, staged, base, floor)
+    staged.count
+  }
 
   /** Async [[refresh]]: fire each sync's rebuild as a [[SinkTasks]] task
     * and return the ids — the reference's fire-then-gather refresh
@@ -794,12 +848,8 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
       .filter(s => tables.isEmpty || tables.contains(s.table))
       .map { s =>
         s.table -> SinkTasks.submit(s"refresh:${s.table}") {
-          // ceiling captured inside the task but BEFORE its scan — same
-          // conservative ordering as the synchronous refresh; commit
-          // (publish + floor) under the state lock, scans outside it
-          val floor = observedOffsetCeiling(s)
-          commitSnapshot(s, stageSnapshot(s), floor)
-          ()
+          // the same rebuild as the synchronous refresh, inside the task
+          rebuild(s); ()
         }
       }
       .toMap
@@ -815,12 +865,22 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     }.toMap
 
   /** `check`: source count vs sink count per sync (`main.py:179-208`).
-    * The manifest's per-bucket row counts give the sink count with no
+    * The manifest's per-bucket live-row counts give the sink count with no
     * scan; a pre-manifest store not yet migrated is read and counted. */
   def check(): Map[String, (Long, Long)] = config.syncs.map { s =>
     val sinkCount = ManifestStore.currentManifest(spark, statePath(s))
       .fold(sinkState(s).count())(_.rowCount)
     s.table -> (source.count(s), sinkCount)
+  }.toMap
+
+  /** Lineage per sync, for `check`: the greatest source offset the sink
+    * has applied (`applied_offset`, from the live buckets' footers, with no
+    * job) and the snapshot floor (`snapshot_floor`), both of the current
+    * manifest; 0 when there is none. */
+  def lineage(): Map[String, (Long, Long)] = config.syncs.map { s =>
+    val m = ManifestStore.currentManifest(spark, statePath(s))
+    s.table -> ((ManifestStore.maxAppliedOffset(spark, statePath(s), m).getOrElse(0L),
+      m.fold(0L)(_.floor)))
   }.toMap
 
   /** Read one sync's current sink state (test/inspection helper), a
@@ -830,6 +890,20 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
 }
 
 object Pipeline {
+
+  /** B1 compaction of one sync's rows (the live batch or repaired dead
+    * letters), handing the sink ONLY op + payload (+ mask) and the winning
+    * change's position as [[UpsertSink.OffsetCol]]/[[UpsertSink.RidxCol]]:
+    * the merge treats every other unknown column as schema evolution, so
+    * leaking table/offset/_ridx would evolve them INTO the sink table. The
+    * rows hold one table, so the window partitions by the pk alone and the
+    * merge's join on the pk reuses its exchange. */
+  private[cdc] def compact(rows: DataFrame, pk: String): DataFrame =
+    Transforms.lastWriteWinsByPk(rows, col(pk), Seq(col("_ridx")))
+      .drop("table")
+      .withColumnRenamed("offset", UpsertSink.OffsetCol)
+      .withColumn(UpsertSink.RidxCol, coalesce(col("_ridx").cast("int"), lit(0)))
+      .drop("_ridx")
 
   /** What [[Pipeline]]'s probe aggregate found in a batch view. */
   private final case class BatchProbe(dead: Long, live: Long, touched: Seq[Long])

@@ -13,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   * rename, so it needs none of this beyond [[stateLock]] (and
   * [[recoverSwap]], to heal a pre-manifest flat store caught mid-swap
   * before its first batch migrates it). What swaps here is every
-  * directory-rewritten state: the dead-letter quarantine, the watermark
-  * sidecar, SCD2 and incremental-dedup state, and compaction's rewrite.
+  * directory-rewritten state: the dead-letter quarantine, SCD2 and
+  * incremental-dedup state, and compaction's rewrite.
   *
   * ==Swap state machine==
   *
@@ -45,8 +45,8 @@ import org.apache.spark.sql.SparkSession
   * apply makes the replay safe.
   *
   * LOCK ORDER (deadlock discipline): [[stateLock]] is the OUTERMOST —
-  * holders may take [[swapLock]] (via swap/heal), OffsetWatermark's
-  * floorLock, and [[DriverLease]]'s per-path lock (via acquire); none of
+  * holders may take [[swapLock]] (via swap/heal) and [[DriverLease]]'s
+  * per-path lock (via acquire); none of
   * those ever takes stateLock or each other. Keep any new acquisition
   * consistent with that order.
   *
@@ -60,9 +60,9 @@ object StateCommit {
   // ---------------------------------------------------------------- locks
 
   // Per-state-path mutation lock: a live micro-batch and a dead-letter
-  // replay both read-merge-write the same sink state and watermark sidecar;
-  // unserialized, two concurrent read-merge-writes each swap a COMPLETE
-  // copy and the winner silently drops the loser's rows (r9 review).
+  // replay both read-merge-write the same sink state and dead-letter
+  // quarantine; unserialized, two concurrent read-merge-writes each swap a
+  // COMPLETE copy and the winner silently drops the loser's rows.
   private val stateLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   def stateLock(statePath: String): Object =

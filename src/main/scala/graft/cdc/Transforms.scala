@@ -77,8 +77,19 @@ object Transforms {
     * multi-row binlog event, minus its rows[0]-only bug — `mysql.py:110-116`
     * drops rows 1..n entirely, SURVEY.md §2.3). */
   def lastWriteWins(events: DataFrame, pkCol: Column,
-                    tiebreak: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(col("table"), pkCol)
+                    tiebreak: Seq[Column]): DataFrame =
+    latestPer(events, Seq(col("table"), pkCol), tiebreak)
+
+  /** [[lastWriteWins]] over a view already filtered to ONE table: the
+    * window partitions by the pk alone, so a following join or merge keyed
+    * on the pk reuses its exchange instead of shuffling again. */
+  def lastWriteWinsByPk(events: DataFrame, pkCol: Column,
+                        tiebreak: Seq[Column]): DataFrame =
+    latestPer(events, Seq(pkCol), tiebreak)
+
+  private def latestPer(events: DataFrame, keys: Seq[Column],
+                        tiebreak: Seq[Column]): DataFrame = {
+    val w = Window.partitionBy(keys: _*)
       .orderBy(col("offset").desc +: tiebreak.map(_.desc): _*)
     events.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)

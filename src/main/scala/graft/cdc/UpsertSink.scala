@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.model._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** K1: the upsert/delete sink (reference `meili.py:121-151`), re-expressed as
@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   *    untouched columns of an existing row are preserved (Meilisearch
   *    `update_documents` semantics; Mongo update events carry only changed
   *    fields — `mongo.py:64`). This is the column-wise coalesce merge.
-  *  - delete -> remove by pk (`meili.py:137`)
+  *  - delete -> remove by pk (`meili.py:137`); a delete that carries a
+  *    position leaves a tombstone that every logical reader drops (see
+  *    [[Reserved]])
   *  - applying the same batch twice yields the same table (idempotence — the
   *    reference is at-least-once, SURVEY.md §2.3, so replays must be safe).
   *
@@ -30,6 +32,39 @@ object UpsertSink {
     * only genuinely absent fields keep the old value. */
   val PresentCol = "_present"
 
+  /** Reserved sink columns: the (offset, _ridx) POSITION of the change that
+    * last wrote the row — the per-pk applied-offset watermark, kept in the
+    * row it guards — and the tombstone flag. A delete leaves a tombstone
+    * (pk, position, [[DeletedCol]] = true, every payload column null)
+    * instead of removing the row, so a deleted pk still fences a stale
+    * dead-letter repair ([[OffsetWatermark.splitStale]]). Live rows carry
+    * [[DeletedCol]] NULL, so a file's live-row count is that column's null
+    * count in its footer. Logical readers ([[ManifestStore.readStateOf]])
+    * drop tombstones and all three columns. */
+  val OffsetCol = "_wm_offset"
+  val RidxCol = "_wm_ridx"
+  val DeletedCol = "_wm_deleted"
+  val Reserved: Seq[String] = Seq(OffsetCol, RidxCol, DeletedCol)
+
+  /** The logical view of a physical sink frame: live rows only, without
+    * the reserved columns. A frame without them (a store no positioned
+    * change ever wrote) is already logical. */
+  def live(physical: DataFrame): DataFrame =
+    (if (physical.columns.contains(DeletedCol)) physical.filter(col(DeletedCol).isNull)
+     else physical).drop(Reserved: _*)
+
+  /** A position as an orderable (offset, ridx) struct — lexicographic,
+    * exactly the position order — or NULL when there is no offset. A null
+    * row index is 0, the first row of its envelope. */
+  private[cdc] def position(offset: Column, ridx: Column): Column =
+    when(offset.isNotNull, struct(offset.cast("long").as("o"),
+      coalesce(ridx.cast("int"), lit(0)).as("r")))
+
+  private def positionOf(df: DataFrame, alias: String): Column =
+    if (!df.columns.contains(OffsetCol)) lit(null)
+    else position(col(s"$alias.$OffsetCol"),
+      if (df.columns.contains(RidxCol)) col(s"$alias.$RidxCol") else lit(0))
+
   /** Apply one micro-batch of per-pk-compacted change rows to the current
     * state table.
     *
@@ -41,6 +76,12 @@ object UpsertSink {
     *                updates are then unsupported — the coalesce fallback).
     * @param pk      primary-key column name
     * @return        new state
+    *
+    * Positions: when either side carries [[OffsetCol]], every output row
+    * carries the greatest of its stored and incoming (offset, _ridx)
+    * positions, and a delete leaves a tombstone holding that position. A
+    * delete with no position on either side (a positionless direct caller)
+    * removes the row.
     */
   def applyBatch(state: DataFrame, changes: DataFrame, pk: String): DataFrame = {
     // Schema evolution, both directions (the reference is SCHEMALESS —
@@ -56,9 +97,12 @@ object UpsertSink {
     val newCols = changes.columns
       .filterNot(n => n == "op" || n == PresentCol)
       .filterNot(state.columns.contains)
-    val payloadCols = state.columns.toSeq ++ newCols
+    // the reserved columns are not payload: they merge by position below
+    val payloadCols = (state.columns.toSeq ++ newCols).filterNot(Reserved.contains)
     require(state.columns.contains(pk), s"state table has no pk column '$pk'")
     val hasMask = changes.columns.contains(PresentCol)
+    val positioned =
+      state.columns.contains(OffsetCol) || changes.columns.contains(OffsetCol)
 
     val s = state.alias("s")
     val c = changes.alias("c")
@@ -69,6 +113,8 @@ object UpsertSink {
     def cCol(name: String) =
       if (changeTypes.contains(name)) col(s"c.$name")
       else lit(null).cast(state.schema(name).dataType)
+    val pos = greatest(positionOf(state, "s"), positionOf(changes, "c"))
+    val isDelete = col("c.op") === Op.Delete
 
     // Row survives unless the change for its pk is a delete; column-wise:
     // a `create` replaces the whole document (reference add_documents,
@@ -76,22 +122,42 @@ object UpsertSink {
     // create coalesce with stored state would leak a deleted-then-recreated
     // row's old fields into the new document (r9 review) — while an
     // `update` overwrites exactly the fields the event carried (mask) /
-    // the non-null fields (no mask), keeping the rest.
-    val merged = joined
-      .filter(col("c.op").isNull || col("c.op") =!= Op.Delete)
-      .select(payloadCols.map { name =>
-        val applied =
-          if (hasMask)
-            when(col("c.op") === Op.Create, cCol(name))
-              .otherwise(when(array_contains(col(s"c.$PresentCol"), name), cCol(name))
-                .otherwise(sCol(name)))
-          else
-            when(col("c.op") === Op.Create, cCol(name))
-              .otherwise(coalesce(cCol(name), sCol(name)))
-        when(col("c.op").isNull, sCol(name))                 // unchanged row
-          .otherwise(applied)
-          .as(name)
-      }: _*)
+    // the non-null fields (no mask), keeping the rest. A tombstone's
+    // payload is all null, so an update over it reads as over an absent
+    // row.
+    val kept = joined.filter(col("c.op").isNull || !isDelete ||
+      (if (positioned) pos.isNotNull else lit(false)))
+    val payload = payloadCols.map { name =>
+      val applied =
+        if (hasMask)
+          when(col("c.op") === Op.Create, cCol(name))
+            .otherwise(when(array_contains(col(s"c.$PresentCol"), name), cCol(name))
+              .otherwise(sCol(name)))
+        else
+          when(col("c.op") === Op.Create, cCol(name))
+            .otherwise(coalesce(cCol(name), sCol(name)))
+      val tombstone =
+        if (name == pk) coalesce(cCol(name), sCol(name))
+        else lit(null).cast(
+          if (state.columns.contains(name)) state.schema(name).dataType
+          else changeTypes(name))
+      when(col("c.op").isNull, sCol(name))                 // unchanged row
+        .when(isDelete, tombstone)
+        .otherwise(applied)
+        .as(name)
+    }
+    val reserved =
+      if (!positioned) Nil
+      else {
+        val sDeleted =
+          if (state.columns.contains(DeletedCol)) col(s"s.$DeletedCol")
+          else lit(null).cast("boolean")
+        Seq(pos("o").as(OffsetCol), pos("r").as(RidxCol),
+          when(col("c.op").isNull, sDeleted)
+            .when(isDelete, lit(true))
+            .otherwise(lit(null).cast("boolean")).as(DeletedCol))
+      }
+    val merged = kept.select(payload ++ reserved: _*)
     merged
   }
 }

@@ -193,13 +193,17 @@ object Main {
       case "check" => graft.cdc.ErrorReporting.reporting(reporters, "check") {
         var ok = true
         val leases = pipe.leaseStatus()
+        val lineage = pipe.lineage()
         pipe.check().foreach { case (t, (src, sink)) =>
           if (src != sink) ok = false
           if (jsonMode) {
-            println(checkJsonLine(t, src, sink, leases.get(t)))
+            println(checkJsonLine(t, src, sink, leases.get(t), lineage.get(t)))
           } else {
           val status = if (src == sink) "OK" else "MISMATCH"
           println(s"$status $t: source=$src sink=$sink")
+          lineage.get(t).foreach { case (applied, floor) =>
+            println(Main.lineageLine(t, applied, floor))
+          }
           // lease observability (r10 verdict #7): who holds this sync's
           // state path — the first thing to read when a second driver was
           // just refused
@@ -217,10 +221,13 @@ object Main {
   }
 
   /** One machine-readable `check --json` object per sync (r11 verdict
-    * #6): counts + match verdict, and lease identity + heartbeat age. */
+    * #6): counts + match verdict, lease identity + heartbeat age, and the
+    * sync's lineage (`applied_offset`, `snapshot_floor` — null when
+    * unknown). */
   private[graft] def checkJsonLine(
       table: String, src: Long, sink: Long,
-      lease: Option[(String, Option[(String, Long)])]): String = {
+      lease: Option[(String, Option[(String, Long)])],
+      lineage: Option[(Long, Long)] = None): String = {
     def js(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -234,9 +241,17 @@ object Main {
         s"""{"path":${js(path)},"holder":null,"heartbeat_age_ms":null}"""
       case None => "null"
     }
+    val (applied, floor) = lineage.fold(("null", "null")) { case (a, f) =>
+      (a.toString, f.toString) }
     s"""{"table":${js(table)},"source":$src,"sink":$sink,""" +
-      s""""match":${src == sink},"lease":$ls}"""
+      s""""match":${src == sink},"lease":$ls,""" +
+      s""""applied_offset":$applied,"snapshot_floor":$floor}"""
   }
+
+  /** One `check` output line per sync with its lineage: the greatest
+    * source offset the sink has applied, and its snapshot floor. */
+  private[graft] def lineageLine(table: String, applied: Long, floor: Long): String =
+    s"LINEAGE $table: applied_offset=$applied snapshot_floor=$floor"
 
   /** One `check` output line per sync naming the lease path, holder
     * identity and heartbeat age — or `free` (r10 verdict #7). */

@@ -358,6 +358,48 @@ class CliSpec extends SparkSpec {
     assert(esc.get("lease").get("holder").asText === "we\"ird\nid")
   }
 
+  test("check reports each sync's lineage: applied_offset is the sink's " +
+    "greatest applied position and snapshot_floor the manifest's floor, in " +
+    "both the text line and --json") {
+    import graft.cdc._
+    import graft.model._
+    import org.apache.spark.sql.types._
+    val sinkRoot = tmpDir("sink-lineage")
+    val sync = SyncConfig("t", pk = "id", schema = Some(StructType(Seq(
+      StructField("id", IntegerType), StructField("name", StringType)))))
+    import spark.implicits._
+    val src = new MemoryCdcSource(spark,
+      Map("t" -> Seq((1, "ann")).toDF("id", "name")))
+    val pipe = new Pipeline(spark, PipelineConfig(Seq(sync)), src, sinkRoot)
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val ckpt = tmpDir("ckpt-lineage")
+    try {
+      assert(pipe.lineage() === Map("t" -> ((0L, 0L))), "no manifest yet")
+      // applied up to offset 1; a pk-less payload at offset 4 is quarantined
+      src.addEvents(
+        ChangeEvent("create", "t", 1, ts, """{"id": 1, "name": "ann"}"""),
+        ChangeEvent("create", "t", 4, ts, """{"id": null, "name": "q"}"""))
+      val q1 = pipe.start(ckpt)
+      q1.processAllAvailable(); q1.stop()
+      assert(pipe.lineage() === Map("t" -> ((1L, 0L))))
+      // the refresh's floor is everything observed, the quarantine included
+      pipe.refresh()
+      src.addEvents(ChangeEvent("create", "t", 6, ts, """{"id": 2, "name": "bo"}"""))
+      val q2 = pipe.start(ckpt)
+      q2.processAllAvailable(); q2.stop()
+      val lineage = pipe.lineage()
+      assert(lineage === Map("t" -> ((6L, 4L))))
+      assert(Main.lineageLine("t", 6L, 4L) ===
+        "LINEAGE t: applied_offset=6 snapshot_floor=4")
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      val js = om.readTree(Main.checkJsonLine("t", 1L, 2L, None, lineage.get("t")))
+      assert(js.get("applied_offset").asLong === 6L &&
+        js.get("snapshot_floor").asLong === 4L)
+      val unknown = om.readTree(Main.checkJsonLine("t", 1L, 2L, None))
+      assert(unknown.get("applied_offset").isNull && unknown.get("snapshot_floor").isNull)
+    } finally pipe.releaseLeases()
+  }
+
   test("config guards fail at PARSE time, naming themselves (review r11): " +
     "state.buckets <= 0, a two-colon fields entry, an empty fields entry") {
     def props(k: String, v: String) = {

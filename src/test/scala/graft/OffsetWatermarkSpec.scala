@@ -6,15 +6,14 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The r9 review findings on the offset-watermark sidecar: empty-batch
-  * no-op (a first empty dynamic-partitioned write used to leave a
-  * schema-less dir that crashed every later batch), the snapshot floor
-  * (refresh/backfill never advance the per-pk map, so pre-snapshot
-  * quarantined rows used to replay over refreshed state; the floor is
-  * captured BEFORE the scan and survives a torn write), the (offset, _ridx)
-  * position order (a repaired row must lose to an applied same-offset
-  * sibling with a higher row index), and the bounded probe broadcast in
-  * splitStale. */
+/** The per-pk offset watermark's hazards, now that it lives in
+  * the sink's rows: the snapshot floor (snapshot rows carry no position, so
+  * pre-snapshot quarantined rows used to replay over refreshed state; the
+  * floor is captured BEFORE the scan and published with it, monotone), the
+  * (offset, _ridx) position order (a repaired row must lose to an applied
+  * same-offset sibling with a higher row index), the bounded probe
+  * broadcast in splitStale, and the upgrade of a store whose watermark
+  * still sits in the legacy `.wm` sidecar and `.wm.floor` file. */
 class OffsetWatermarkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,12 +30,30 @@ class OffsetWatermarkSpec extends SparkSpec {
     repaired // still materialized — callers may re-stage it (crash-retry)
   }
 
+  /** Every stored position of the store at `statePath`, tombstones
+    * included: pk -> (offset, _ridx). */
   private def wmOf(statePath: String): Map[Int, (Long, Int)] =
-    OffsetWatermark.current(spark, statePath).map(
+    BucketedUpsertSink.positions(spark, statePath,
+      ManifestStore.currentManifest(spark, statePath), "id").map(
       _.collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getInt(2)))).toMap)
       .getOrElse(Map.empty)
 
-  /** A watermark store in the retired bucketed layout, written with plain
+  private val payload = StructType(Seq(
+    StructField("id", IntegerType), StructField("name", StringType)))
+
+  /** One compacted, positioned change batch applied straight to the sink:
+    * (op, id, name, offset, ridx) rows. */
+  private def applyPositioned(statePath: String,
+                              rows: Seq[(String, Int, String, Long, Integer)],
+                              numBuckets: Int = 4): Unit =
+    BucketedUpsertSink.applyBatch(spark, statePath,
+      spark.createDataFrame(java.util.Arrays.asList(rows.map { case (op, id, n, o, r) =>
+        Row(op, id, n, o, r) }: _*), StructType(Seq(StructField("op", StringType)) ++
+        payload.fields ++ Seq(StructField(UpsertSink.OffsetCol, LongType),
+          StructField(UpsertSink.RidxCol, IntegerType)))),
+      "id", numBuckets, schema = Some(payload))
+
+  /** A watermark sidecar in the retired bucketed layout, written with plain
     * Spark: `_bucket=<id>` partition dirs plus the `_nbuckets-<n>` modulus
     * file that layout kept beside them. */
   private def writeLegacyBucketed(dir: String,
@@ -48,70 +65,77 @@ class OffsetWatermarkSpec extends SparkSpec {
     assert(new java.io.File(dir, s"_nbuckets-$n").createNewFile())
   }
 
-  /** Entries of a watermark dir left over from the retired bucketed layout. */
-  private def bucketedLeftovers(statePath: String): Seq[String] =
-    new java.io.File(OffsetWatermark.path(statePath)).listFiles().map(_.getName)
-      .filter(n => n.startsWith(BucketedUpsertSink.BucketCol + "=") ||
-        n.startsWith("_nbuckets-")).toSeq
+  private val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+  private val sync = SyncConfig("t", pk = "id", schema = Some(payload))
+
+  /** One pipeline run over `events` against `sinkRoot` (the run's first
+    * batch folds any legacy sidecar). */
+  private def runOnce(sinkRoot: String, events: ChangeEvent*): Pipeline = {
+    val src = new MemoryCdcSource(spark)
+    val pipe = new Pipeline(spark, PipelineConfig(Seq(sync), stateBuckets = Some(4)),
+      src, sinkRoot)
+    src.addEvents(events: _*)
+    val q = pipe.start(tmpDir("wm-ckpt"))
+    try q.processAllAvailable() finally { q.stop(); pipe.releaseLeases() }
+    pipe
+  }
+
+  private def legacyLeft(statePath: String): Seq[String] =
+    new java.io.File(statePath).getParentFile.listFiles().map(_.getName)
+      .filter(_.startsWith(new java.io.File(OffsetWatermark.path(statePath)).getName))
+      .toSeq
 
   test("advance: an empty batch is a full no-op — no store created, no " +
     "rewrite — in both the bucketed and flat layouts (r9 review: the empty " +
     "bucketed first write seeded a schema-less dir that crashed current())") {
-    val empty = Seq.empty[(Int, Long, Int)].toDF("id", "offset", "_ridx")
-    val some = Seq((1, 10L, 0), (2, 20L, 0)).toDF("id", "offset", "_ridx")
-    def frozen(statePath: String, layout: String): Unit = {
-      val dir = new java.io.File(OffsetWatermark.path(statePath))
-      val before = dir.listFiles().map(f => f.getName -> f.lastModified).toMap
-      OffsetWatermark.advance(spark, statePath, empty, "id")
-      val after = dir.listFiles().map(f => f.getName -> f.lastModified).toMap
-      assert(after === before, s"empty batch must not rewrite ($layout)")
-      assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((20L, 0))), layout)
+    // positions advance inside the sink's merge, so the sink's empty-batch
+    // contract is the watermark's: in the one-bucket and the bucketed layout
+    for (n <- Seq(1, 4)) {
+      val statePath = tmpDir(s"wm-empty-$n") + "/state"
+      applyPositioned(statePath, Nil, n)
+      assert(ManifestStore.currentManifest(spark, statePath).isEmpty,
+        s"empty first batch must not create the store ($n buckets)")
+      assert(!new java.io.File(statePath).exists(), s"no dir at all should appear ($n)")
+      applyPositioned(statePath, Seq(("create", 1, "a", 10L, 0), ("create", 2, "b", 20L, 0)), n)
+      assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((20L, 0))))
+      // an empty batch against an EXISTING store: no rewrite (mtimes frozen)
+      def files = java.nio.file.Files.walk(java.nio.file.Paths.get(statePath)).toArray
+        .map(_.asInstanceOf[java.nio.file.Path]).map(f => f.toString -> f.toFile.lastModified).toMap
+      val before = files
+      applyPositioned(statePath, Nil, n)
+      assert(files === before, s"empty batch must not rewrite ($n buckets)")
+      assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((20L, 0))))
     }
-    // flat: the store advance itself creates
-    val statePath = tmpDir("wm-empty") + "/state"
-    OffsetWatermark.advance(spark, statePath, empty, "id")
-    assert(OffsetWatermark.current(spark, statePath).isEmpty,
-      "empty first batch must not create the store")
-    assert(!new java.io.File(OffsetWatermark.path(statePath)).exists(),
-      "no dir at all should appear")
-    // the store must still bootstrap and read back fine afterwards
-    OffsetWatermark.advance(spark, statePath, some, "id")
-    assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((20L, 0))))
-    // an empty batch against an EXISTING store: no rewrite (mtimes frozen)
-    frozen(statePath, "flat")
-    // bucketed: an empty batch must not migrate a legacy store
-    val legacyPath = tmpDir("wm-empty-legacy") + "/state"
-    writeLegacyBucketed(OffsetWatermark.path(legacyPath),
-      some.select(col("id"), col("offset").as(OffsetWatermark.OffsetCol),
-        col("_ridx").as(OffsetWatermark.RidxCol)), 4)
-    frozen(legacyPath, "legacy bucketed")
-    assert(bucketedLeftovers(legacyPath).nonEmpty)
   }
 
   test("current: a historical schema-less watermark dir (only _SUCCESS) " +
     "reads as absent and the next real batch heals it") {
-    val statePath = tmpDir("wm-heal") + "/state"
+    val sinkRoot = tmpDir("wm-heal")
+    val statePath = s"$sinkRoot/t"
     val dir = new java.io.File(OffsetWatermark.path(statePath))
     assert(dir.mkdirs())
     assert(new java.io.File(dir, "_SUCCESS").createNewFile())
-    assert(OffsetWatermark.current(spark, statePath).isEmpty,
+    assert(OffsetWatermark.legacyPositions(spark, statePath).isEmpty,
       "_SUCCESS alone must not count as data")
-    OffsetWatermark.advance(spark, statePath,
-      Seq((5, 50L, 0)).toDF("id", "offset", "_ridx"), "id")
+    runOnce(sinkRoot, ChangeEvent("create", "t", 50, ts0, """{"id": 5, "name": "e"}"""))
     assert(wmOf(statePath) === Map(5 -> ((50L, 0))))
+    assert(legacyLeft(statePath).isEmpty, legacyLeft(statePath))
   }
 
   test("advance: the watermark is the max (offset, _ridx) PAIR, not the " +
     "max offset — a multi-row event's later row wins, and the merge is " +
     "monotone on the pair") {
-    val statePath = tmpDir("wm-pair") + "/state"
-    OffsetWatermark.advance(spark, statePath,
-      Seq((1, 7L, 0), (1, 7L, 3), (2, 4L, 1)).toDF("id", "offset", "_ridx"),
-      "id")
+    val sinkRoot = tmpDir("wm-pair")
+    val statePath = s"$sinkRoot/t"
+    val pipe = runOnce(sinkRoot,
+      ChangeEvent("create", "t", 4, ts0, """[{"id": 2, "name": "b0"}, {"id": 2, "name": "b1"}]"""),
+      ChangeEvent("create", "t", 7, ts0,
+        """[{"id": 1, "name": "r0"}, {"id": 1, "name": "r1"}, {"id": 1, "name": "r2"}, {"id": 1, "name": "r3"}]"""))
     assert(wmOf(statePath) === Map(1 -> ((7L, 3)), 2 -> ((4L, 1))))
+    assert(pipe.sinkState(sync).orderBy("id").collect().toSeq ===
+      Seq(Row(1, "r3"), Row(2, "b1")))
     // a later batch with the SAME offset but lower ridx must not regress
-    OffsetWatermark.advance(spark, statePath,
-      Seq((1, 7L, 1), (2, 9L, 0)).toDF("id", "offset", "_ridx"), "id")
+    applyPositioned(statePath, Seq(("update", 1, "late", 7L, 1), ("update", 2, "b9", 9L, 0)))
     assert(wmOf(statePath) === Map(1 -> ((7L, 3)), 2 -> ((9L, 0))))
   }
 
@@ -123,7 +147,7 @@ class OffsetWatermarkSpec extends SparkSpec {
       (1, 7L, 5, "later-row-of-same-event"))
       .toDF("id", "offset", "_ridx", "tag")
     val wm = Seq((1, 7L, 3))
-      .toDF("id", OffsetWatermark.OffsetCol, OffsetWatermark.RidxCol)
+      .toDF("id", UpsertSink.OffsetCol, UpsertSink.RidxCol)
     val (f, s) = OffsetWatermark.splitStale(ready, Some(wm), "id")
     assert(f.select("tag").as[String].collect().toSet ===
       Set("is-the-applied-row", "later-row-of-same-event"),
@@ -137,7 +161,7 @@ class OffsetWatermarkSpec extends SparkSpec {
       (1, 5L, 0, "keep-at-wm"), (1, 3L, 0, "stale"), (2, 9L, 0, "newer"),
       (3, 1L, 0, "no-wm-entry")).toDF("id", "offset", "_ridx", "tag")
     val wm = Seq((1, 5L, 0), (2, 7L, 0))
-      .toDF("id", OffsetWatermark.OffsetCol, OffsetWatermark.RidxCol)
+      .toDF("id", UpsertSink.OffsetCol, UpsertSink.RidxCol)
     def run(maxBroadcast: Long): (Set[String], Set[String]) = {
       val (f, s) = OffsetWatermark.splitStale(ready, Some(wm), "id",
         floor = 0L, maxBroadcastProbes = maxBroadcast)
@@ -168,22 +192,35 @@ class OffsetWatermarkSpec extends SparkSpec {
 
   test("snapshot floor survives a torn swap: crash after the old floor is " +
     "deleted but before the temp renames in is healed at read time") {
-    val statePath = tmpDir("wm-floor") + "/state"
-    assert(OffsetWatermark.snapshotFloor(spark, statePath) === 0L)
-    OffsetWatermark.recordSnapshotFloor(spark, statePath, 41L)
-    assert(OffsetWatermark.snapshotFloor(spark, statePath) === 41L)
-    // overwrite works (second refresh)
-    OffsetWatermark.recordSnapshotFloor(spark, statePath, 55L)
-    assert(OffsetWatermark.snapshotFloor(spark, statePath) === 55L)
-    // simulate the crash window: temp fully written, main deleted, rename
-    // never ran — the read must complete the swap, not report 0
-    val main = new java.io.File(OffsetWatermark.floorPath(statePath))
-    val tmp = new java.io.File(OffsetWatermark.floorPath(statePath) + ".next")
-    java.nio.file.Files.write(tmp.toPath, "77".getBytes("UTF-8"))
-    assert(main.delete())
-    assert(OffsetWatermark.snapshotFloor(spark, statePath) === 77L,
-      "an interrupted floor swap must heal to the NEW floor")
-    assert(main.exists() && !tmp.exists(), "the swap must be completed on disk")
+    // the legacy floor protocol's crash window: the temp fully written,
+    // main deleted, rename never ran — the upgrade must carry the NEW
+    // floor into the manifest, not read 0
+    val sinkRoot = tmpDir("wm-floor")
+    val statePath = s"$sinkRoot/t"
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(OffsetWatermark.floorPath(statePath) + ".next"),
+      "77".getBytes("UTF-8"))
+    assert(OffsetWatermark.legacyFloor(spark, statePath) === Some(Right(77L)))
+    runOnce(sinkRoot, ChangeEvent("create", "t", 80, ts0, """{"id": 1, "name": "a"}"""))
+    assert(ManifestStore.currentManifest(spark, statePath).map(_.floor) === Some(77L),
+      "an interrupted floor swap must carry the NEW floor")
+    assert(legacyLeft(statePath).isEmpty, legacyLeft(statePath))
+  }
+
+  test("the upgrade deletes only the legacy protocols' own files: a " +
+    "sibling sync's state named like `<index>.wm.v2` survives it") {
+    val sinkRoot = tmpDir("wm-sibling")
+    val statePath = s"$sinkRoot/t"
+    val sibling = new java.io.File(OffsetWatermark.path(statePath) + ".v2")
+    assert(sibling.mkdirs())
+    assert(new java.io.File(sibling, "keep.parquet").createNewFile())
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(OffsetWatermark.floorPath(statePath)), "5".getBytes("UTF-8"))
+    runOnce(sinkRoot, ChangeEvent("create", "t", 9, ts0, """{"id": 1, "name": "a"}"""))
+    assert(ManifestStore.currentManifest(spark, statePath).map(_.floor) === Some(5L))
+    assert(legacyLeft(statePath) === Seq(sibling.getName),
+      "the floor file is gone and the sibling's dir is not")
+    assert(new java.io.File(sibling, "keep.parquet").exists())
   }
 
   test("refresh fences replays: a pre-snapshot quarantined row repaired to " +
@@ -212,8 +249,8 @@ class OffsetWatermarkSpec extends SparkSpec {
     // the floor covers everything observed so far (wm max 1, quarantine
     // max 2 => floor 2)
     assert(pipe.refresh() === Map("t" -> 2L))
-    assert(OffsetWatermark.snapshotFloor(
-      spark, s"$sinkRoot/${sync.indexName}") === 2L)
+    assert(ManifestStore.currentManifest(spark, s"$sinkRoot/${sync.indexName}")
+      .map(_.floor) === Some(2L))
     assert(pipe.sinkState(sync).collect().map(r =>
       (r.getInt(0), r.getString(1))).toSet ===
       Set((1, "ann-live"), (7, "bob-current")))
@@ -273,24 +310,22 @@ class OffsetWatermarkSpec extends SparkSpec {
     "is position 0: advance stores 0 and a crash-retried splitStale reads " +
     "the row as FRESH instead of dropping it from BOTH splits (r9 review)") {
     val statePath = tmpDir("wm-nullridx") + "/state"
-    val schema = StructType(Seq(StructField("id", IntegerType),
-      StructField("offset", LongType), StructField("_ridx", IntegerType)))
-    val row = spark.createDataFrame(
-      java.util.Arrays.asList(Row(3, 11L, null)), schema)
-    OffsetWatermark.advance(spark, statePath, row, "id")
+    applyPositioned(statePath, Seq(("create", 3, "c", 11L, null)))
     assert(wmOf(statePath) === Map(3 -> ((11L, 0))),
       "null _ridx must be stored as position 0, never as null")
-    // crash-retry: the same row re-screened against the watermark it itself
-    // advanced — the idempotent fresh case, NOT a three-valued vanish
-    val (fresh, stale) = OffsetWatermark.splitStale(
-      row, OffsetWatermark.current(spark, statePath), "id")
+    val row = spark.createDataFrame(java.util.Arrays.asList(Row(3, 11L, null)),
+      StructType(Seq(StructField("id", IntegerType),
+        StructField("offset", LongType), StructField("_ridx", IntegerType))))
+    def positions = BucketedUpsertSink.positions(spark, statePath,
+      ManifestStore.currentManifest(spark, statePath), "id")
+    // crash-retry: the same row re-screened against the position it itself
+    // wrote — the idempotent fresh case, NOT a three-valued vanish
+    val (fresh, stale) = OffsetWatermark.splitStale(row, positions, "id")
     assert(fresh.count() === 1L && stale.count() === 0L,
       "equal position (11, null==0) must re-read as fresh")
     // a same-offset sibling applied at a HIGHER _ridx supersedes it
-    OffsetWatermark.advance(spark, statePath,
-      Seq((3, 11L, 2)).toDF("id", "offset", "_ridx"), "id")
-    val (f2, s2) = OffsetWatermark.splitStale(
-      row, OffsetWatermark.current(spark, statePath), "id")
+    applyPositioned(statePath, Seq(("update", 3, "c2", 11L, 2)))
+    val (f2, s2) = OffsetWatermark.splitStale(row, positions, "id")
     assert(f2.count() === 0L && s2.count() === 1L,
       "null==0 must lose to the applied _ridx-2 sibling")
   }
@@ -299,20 +334,25 @@ class OffsetWatermarkSpec extends SparkSpec {
     "the first post-upgrade batch neither wedges on column resolution nor " +
     "poisons the position compares, in both layouts (r9 review)") {
     for (bucketed <- Seq(false, true)) {
-      val statePath = tmpDir(s"wm-migrate-$bucketed") + "/state"
+      val sinkRoot = tmpDir(s"wm-migrate-$bucketed")
+      val statePath = s"$sinkRoot/t"
       val dir = OffsetWatermark.path(statePath)
-      val legacy = Seq((1, 10L), (2, 20L)).toDF("id", OffsetWatermark.OffsetCol)
+      val legacy = Seq((1, 10L), (2, 20L)).toDF("id", UpsertSink.OffsetCol)
       if (bucketed) writeLegacyBucketed(dir, legacy, 4)
       else legacy.write.parquet(dir)
-      assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((20L, 0))),
+      assert(OffsetWatermark.legacyPositions(spark, statePath).get.collect()
+        .map(r => r.getInt(0) -> ((r.getLong(1), r.getInt(2)))).toMap ===
+        Map(1 -> ((10L, 0)), 2 -> ((20L, 0))),
         s"legacy rows read as position (offset, 0) (bucketed=$bucketed)")
-      OffsetWatermark.advance(spark, statePath,
-        Seq((1, 10L, 2), (3, 30L, 0)).toDF("id", "offset", "_ridx"), "id")
+      runOnce(sinkRoot,
+        ChangeEvent("create", "t", 10, ts0,
+          """[{"id": 9, "name": "x"}, {"id": 9, "name": "y"}, {"id": 1, "name": "a"}]"""),
+        ChangeEvent("create", "t", 30, ts0, """{"id": 3, "name": "c"}"""))
       assert(wmOf(statePath) ===
-        Map(1 -> ((10L, 2)), 2 -> ((20L, 0)), 3 -> ((30L, 0))),
+        Map(1 -> ((10L, 2)), 2 -> ((20L, 0)), 3 -> ((30L, 0)), 9 -> ((10L, 1))),
         s"post-upgrade merge over a legacy store (bucketed=$bucketed)")
-      assert(bucketedLeftovers(statePath).isEmpty,
-        s"the merge must leave the store flat (bucketed=$bucketed)")
+      assert(legacyLeft(statePath).isEmpty,
+        s"the upgrade must remove the sidecar (bucketed=$bucketed): ${legacyLeft(statePath)}")
     }
   }
 
@@ -320,19 +360,25 @@ class OffsetWatermarkSpec extends SparkSpec {
     "recomputed ceiling (a replay purged the quarantine since) cannot " +
     "re-open the fence (r9 review)") {
     val statePath = tmpDir("wm-floormax") + "/state"
-    OffsetWatermark.recordSnapshotFloor(spark, statePath, 70L)
-    OffsetWatermark.recordSnapshotFloor(spark, statePath, 50L)
-    assert(OffsetWatermark.snapshotFloor(spark, statePath) === 70L,
-      "a lower floor must not regress the committed one")
-    OffsetWatermark.recordSnapshotFloor(spark, statePath, 90L)
-    assert(OffsetWatermark.snapshotFloor(spark, statePath) === 90L)
+    def publish(floor: Long): Long = {
+      ManifestStore.publishFull(spark, statePath, ManifestStore.stageFull(spark,
+        statePath, Seq((1, "a")).toDF("id", "name"), "id", 4, Nil), floor)
+      ManifestStore.currentManifest(spark, statePath).get.floor
+    }
+    assert(publish(70L) === 70L)
+    assert(publish(50L) === 70L, "a lower floor must not regress the published one")
+    assert(publish(90L) === 90L)
+    // a batch commit carries the floor forward
+    applyPositioned(statePath, Seq(("update", 1, "b", 95L, 0)))
+    assert(ManifestStore.currentManifest(spark, statePath).get.floor === 90L)
   }
 
   test("floor heal: main absent with several crash temps installs the " +
     "max-valued COMPLETE temp; an empty in-flight temp is skipped, not " +
     "resurrected (r9 review: a reader renaming a writer's visible empty " +
     "temp live crashed both sides)") {
-    val statePath = tmpDir("wm-floorheal") + "/state"
+    val sinkRoot = tmpDir("wm-floorheal")
+    val statePath = s"$sinkRoot/t"
     val base = OffsetWatermark.floorPath(statePath)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(base + ".next.111-aaaa"), "60".getBytes("UTF-8"))
@@ -340,28 +386,11 @@ class OffsetWatermarkSpec extends SparkSpec {
       java.nio.file.Paths.get(base + ".next.222-bbbb"), "75".getBytes("UTF-8"))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(base + ".next.333-cccc"), Array.empty[Byte])
-    assert(OffsetWatermark.snapshotFloor(spark, statePath) === 75L,
-      "heal must install the max-valued complete temp")
-    assert(new java.io.File(base).exists(), "main must exist after the heal")
-    assert(new java.io.File(base + ".next.333-cccc").exists(),
-      "an in-flight empty temp belongs to its writer and is left alone")
-  }
-
-  test("concurrent floor writers (the refreshAsync overlap) serialize: " +
-    "interleaved recordSnapshotFloor calls never tear, erase, or regress " +
-    "the fence — the committed floor is the max of all writers") {
-    val statePath = tmpDir("wm-floorrace") + "/state"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val floors = scala.util.Random.shuffle((1 to 40).map(_ * 10L).toList)
-    val futures = floors.map { f =>
-      pool.submit(new Runnable {
-        def run(): Unit = OffsetWatermark.recordSnapshotFloor(spark, statePath, f)
-      })
-    }
-    pool.shutdown()
-    futures.foreach(_.get()) // surface any writer exception
-    assert(pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS))
-    assert(OffsetWatermark.snapshotFloor(spark, statePath) === 400L)
+    assert(OffsetWatermark.legacyFloor(spark, statePath) === Some(Right(75L)),
+      "the max-valued complete temp is the floor; the empty one carries nothing")
+    runOnce(sinkRoot, ChangeEvent("create", "t", 80, ts0, """{"id": 1, "name": "a"}"""))
+    assert(ManifestStore.currentManifest(spark, statePath).map(_.floor) === Some(75L))
+    assert(legacyLeft(statePath).isEmpty, legacyLeft(statePath))
   }
 
   test("a repaired UNPARSEABLE-payload row replays as fresh and a " +
@@ -475,21 +504,5 @@ class OffsetWatermarkSpec extends SparkSpec {
     assert(new java.io.File(dl).exists() &&
       !new java.io.File(dl + ".old").exists(),
       "the heal must restore the quarantine dir on disk")
-  }
-
-  test("advance: layout migration — a legacy BUCKETED sidecar (with its " +
-    "_nbuckets-N modulus file) is rewritten flat once, keeping every " +
-    "stored entry (ADVICE r9)") {
-    val statePath = tmpDir("wm-mig-bf") + "/state"
-    writeLegacyBucketed(OffsetWatermark.path(statePath),
-      Seq((1, 10L, 0), (2, 20L, 0)).toDF("id", OffsetWatermark.OffsetCol,
-        OffsetWatermark.RidxCol), 4)
-    OffsetWatermark.advance(spark, statePath,
-      Seq((2, 25L, 0), (3, 30L, 0)).toDF("id", "offset", "_ridx"), "id")
-    assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((25L, 0)), 3 -> ((30L, 0))))
-    assert(bucketedLeftovers(statePath).isEmpty,
-      s"after migration the store must be laid out flat: ${bucketedLeftovers(statePath)}")
-    assert(OffsetWatermark.current(spark, statePath).get.columns.toSet ===
-      Set("id", OffsetWatermark.OffsetCol, OffsetWatermark.RidxCol))
   }
 }

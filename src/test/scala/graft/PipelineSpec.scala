@@ -14,17 +14,18 @@ class PipelineSpec extends SparkSpec {
 
   // ONE comparison discipline for "the manifest's per-bucket stats equal
   // a full recompute" (review r11: five inlined copies had already started
-  // varying): bucket -> (row count, min score, max score)
+  // varying): bucket -> (live row count, min score, max score), recomputed
+  // over every stored row — a bucket may hold only tombstones (0 live rows)
   private def assertManifestMatchesFull(statePath: String, nb: Int,
                                         clue: String): Unit = {
     import org.apache.spark.sql.functions._
     val m = ManifestStore.currentManifest(spark, statePath).get
     val manifest = m.buckets.toSeq.sortBy(_._1).map { case (b, e) =>
       (b, e.nRows, e.stats("score")._1, e.stats("score")._2) }
-    val full = ManifestStore.readState(spark, statePath,
-        StructType(Seq(StructField("score", LongType))))
+    val full = spark.read.parquet(m.buckets.values.map(e => s"$statePath/${e.relDir}").toSeq: _*)
       .groupBy(col(BucketedUpsertSink.BucketCol))
-      .agg(count(lit(1)), min(col("score")), max(col("score")))
+      .agg(count(when(col(UpsertSink.DeletedCol).isNull, 1)),
+        min(col("score")), max(col("score")))
       .collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long]),
         Option(r.get(3)).map(_.asInstanceOf[Long])))
@@ -260,10 +261,11 @@ class PipelineSpec extends SparkSpec {
     val q2 = pipe.start(ckpt); q2.processAllAvailable(); q2.stop()
     assert(pipe.sinkState(sync).collect().toSeq === Seq(Row(1, "a2")))
     // the state really is bucketed: a 4-bucket manifest store whose one
-    // live bucket holds the surviving row
+    // live bucket holds the surviving row (the deleted pk's bucket keeps
+    // only its tombstone: no live row)
     val m = ManifestStore.currentManifest(spark, s"$sinkRoot/t").get
     assert(m.nbuckets === 4)
-    assert(m.buckets.values.map(_.nRows).toSeq === Seq(1L), m.buckets)
+    assert(m.buckets.values.map(_.nRows).filter(_ > 0).toSeq === Seq(1L), m.buckets)
   }
 
   test("zoneMapCols: the sink's manifest is maintained incrementally per " +

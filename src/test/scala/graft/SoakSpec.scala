@@ -119,7 +119,7 @@ class SoakSpec extends SparkSpec {
     assert(pipe.refresh() === Map("t" -> 3L))
     assert(sinkRows() === Set((1, "a", 100L), (2, "b", 200L), (5, "late", 500L)),
       "stage 4: the sink equals the refreshed snapshot exactly")
-    assert(OffsetWatermark.snapshotFloor(spark, s"$sinkRoot/t") >= 203L,
+    assert(ManifestStore.currentManifest(spark, s"$sinkRoot/t").get.floor >= 203L,
       "stage 4: the snapshot floor covers every pre-refresh observation")
     // pruned reads ride the refreshed manifest's stats and stay exact
     val pruned = ManifestStore.prunedRead(spark, s"$sinkRoot/t",

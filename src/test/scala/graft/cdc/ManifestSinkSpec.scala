@@ -163,7 +163,9 @@ class ManifestSinkSpec extends SparkSpec {
     assert(filesV1.subsetOf(dataFiles(path)),
       "nothing younger than the age floor may be deleted")
     // then: keep=1 at age 0 drops every file only the superseded manifests
-    // reference — and the current state still reads back exactly
+    // reference — and the current state still reads back exactly (the age
+    // gate keeps anything published in the current millisecond)
+    Thread.sleep(5)
     ManifestStore.vacuum(spark, path, keepVersions = 1, minAgeMs = 0L)
     val m = ManifestStore.currentManifest(spark, path).get
     val referenced = m.buckets.values.map(e => s"$path/${e.relDir}").toSet
@@ -191,6 +193,8 @@ class ManifestSinkSpec extends SparkSpec {
     assert(staged.mkdirs())
     val stagedFile = new java.io.File(staged, "part-00000-x.snappy.parquet")
     java.nio.file.Files.write(stagedFile.toPath, Array[Byte](1, 2, 3))
+    // the age gate keeps anything published in the current millisecond
+    Thread.sleep(5)
     ManifestStore.vacuum(spark, path, keepVersions = 1, minAgeMs = 0L)
     // superseded PUBLISHED data reaps at the plain supersession gate...
     val m = ManifestStore.currentManifest(spark, path).get
@@ -284,6 +288,9 @@ class ManifestSinkSpec extends SparkSpec {
     applyM(path, batchDf(("update", 1, 11L)))
     Thread.sleep(5)
     applyM(path, batchDf(("update", 1, 12L)))
+    // the age gate keeps anything published in the current millisecond,
+    // even at minAgeMs = 0: let version 3 age past it
+    Thread.sleep(5)
     ManifestStore.vacuum(spark, path, keepVersions = 1, minAgeMs = 0L)
     val gone = intercept[IllegalStateException] {
       ManifestStore.manifestAt(spark, path, 1L)

@@ -6,31 +6,31 @@ import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
 /** Seeded schedule FUZZER for the dead-letter replay fence (r11 verdict
-  * #3): the per-pk (offset, _ridx) watermark, the sync-level snapshot
-  * floor, and the quarantine repair/replay loop — the other deep protocol
-  * beside [[StateCommit]], until now verified by scenario specs only
-  * ([[graft.OffsetWatermarkSpec]], SoakSpec).
+  * #3): the per-pk (offset, _ridx) positions the sink's rows carry, the
+  * sync-level snapshot floor, and the quarantine repair/replay loop — the
+  * other deep protocol beside [[StateCommit]], until now verified by
+  * scenario specs only ([[graft.OffsetWatermarkSpec]], SoakSpec).
   *
   * Structure mirrors [[StateCommitFuzzSpec]]: to make 1,000+ schedules fit
   * in CI seconds the SINK data plane is an in-memory model, while the
-  * floor protocol is the REAL thing ([[OffsetWatermark.recordSnapshotFloor]]
-  * / [[OffsetWatermark.snapshotFloor]] / the crash-temp heal, against real
-  * files). The model's position algebra is not assumed: the battery test
-  * below pins the model comparator against the REAL Spark
-  * [[OffsetWatermark.splitStale]] and [[OffsetWatermark.advance]] on an
-  * exhaustive (offset × ridx × watermark × floor) grid, so the fuzz
-  * layer's model is a CHECKED mirror, not a parallel reimplementation
-  * taken on faith.
+  * floor is the REAL thing: a manifest field published by
+  * [[ManifestStore.publishFull]] in the snapshot's own rename, read back
+  * from the real manifest files. The model's position algebra is not
+  * assumed: the battery tests below pin the model comparator against the
+  * REAL Spark [[OffsetWatermark.splitStale]] on an exhaustive (offset ×
+  * ridx × watermark × floor) grid, and the model's max against the REAL
+  * compaction + sink merge, so the fuzz layer's model is a CHECKED
+  * mirror, not a parallel reimplementation taken on faith.
   *
   * Atoms (the verdict's list): live ingest batch, crash-replay of the
   * last batch, quarantine (inside ingest), operator repair, dead-letter
-  * replay (fresh and superseded), snapshot refresh + floor record, and a
-  * crashed floor writer (complete temp, main deleted — the heal-forward
-  * state). Invariant after EVERY atom: the model sink equals the
-  * HAND-DERIVED oracle — last-write-wins over the applied-event history,
-  * where a replayed repair counts as applied iff no strictly newer
-  * position was applied for its pk and its offset is above the floor —
-  * and the real on-disk floor equals the oracle floor.
+  * replay (fresh and superseded), snapshot refresh + floor publish, and a
+  * refresh that crashes on either side of its publish rename (before: no
+  * snapshot and no floor; after: both). Invariant after EVERY atom: the
+  * model sink equals the HAND-DERIVED oracle — last-write-wins over the
+  * applied-event history, where a replayed repair counts as applied iff no
+  * strictly newer position was applied for its pk and its offset is above
+  * the floor — and the real published floor equals the oracle floor.
   *
   * A failure prints its seed and atom script. The mutation test reruns
   * the schedules with the model's _ridx tiebreak REVERTED (offset-only
@@ -54,9 +54,9 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
     (floor > 0L && p.off <= floor) ||
       wm.exists(w => if (mutated) p.off < w.off else posOrd.lt(p, w))
 
-  // ---- the world: model mechanics + real floor files + oracle ---------
+  // ---- the world: model mechanics + real manifest floor + oracle -------
   private final class World(val statePath: String, val mutated: Boolean) {
-    // model (pipeline mechanics): sink, per-pk watermark, quarantine
+    // model (pipeline mechanics): sink, per-pk positions, quarantine
     val sink = mutable.Map[Int, String]()
     val wm = mutable.Map[Int, Pos]()
     val quarantine = mutable.Map[(Int, Pos), String]()
@@ -85,8 +85,8 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
   private case class Change(pk: Int, pos: Pos, payload: String,
                             quarantined: Boolean)
 
-  /** Live ingest: applied rows hit the sink and advance the watermark;
-    * undecodable rows land in quarantine (watermark NOT advanced — the
+  /** Live ingest: applied rows hit the sink and advance their positions;
+    * undecodable rows land in quarantine (no position advanced — the
     * premise the replay fence exists for). */
   private def liveBatch(w: World, changes: Seq[Change]): Unit = {
     changes.foreach { c =>
@@ -97,8 +97,8 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
   }
 
   /** A checkpoint-replayed restart batch runs the production FIRST-BATCH
-    * fence (Pipeline.applySyncLocked, r12): rows strictly below their
-    * pk's watermark, or at/below the floor, are superseded and drop — a
+    * fence (Pipeline.applySync, r12): rows strictly below their
+    * pk's position, or at/below the floor, are superseded and drop — a
     * dead-letter replay or snapshot refresh that landed while the stream
     * was down can no longer be overwritten by the restart. */
   private def crashReplay(w: World, changes: Seq[Change]): Unit =
@@ -106,8 +106,7 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
 
   private def applyBatch(w: World, changes: Seq[Change],
                          fence: Boolean): Unit = {
-    val fl =
-      if (fence) OffsetWatermark.snapshotFloor(spark, w.statePath) else 0L
+    val fl = if (fence) publishedFloor(w) else 0L
     changes.sortBy(_.pos)(posOrd).foreach { c =>
       if (c.quarantined) {
         // a crash-replay overwrites a still-quarantined repair with the
@@ -136,13 +135,13 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
 
   /** Dead-letter replay of a selected quarantine subset. Decisions are
     * computed against the PRE-replay state for every row (the production
-    * shape: one splitStale over the stored watermark), then fresh rows
+    * shape: one splitStale over the stored positions), then fresh rows
     * apply LWW and re-advance; superseded rows are dropped. The model
     * decides by its (battery-pinned) rule; the ORACLE decides by the
     * hand-derived applied-history rule — if they ever disagree the sinks
     * diverge and the invariant fails. */
   private def replay(w: World, keys: Seq[(Int, Pos)]): Unit = {
-    val fl = OffsetWatermark.snapshotFloor(spark, w.statePath)
+    val fl = publishedFloor(w)
     val present = keys.filter(w.quarantine.contains)
     val modelDecision = present.map { k =>
       k -> staleRule(k._2, w.wm.get(k._1), fl, w.mutated)
@@ -164,56 +163,55 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
     }
   }
 
+  /** The snapshot floor of the world's real manifest (0 before any). */
+  private def publishedFloor(w: World): Long =
+    ManifestStore.currentManifest(spark, w.statePath).fold(0L)(_.floor)
+
+  /** Publish a snapshot through the REAL manifest rename. The snapshot's
+    * rows live in the model, so the staged commit holds no data files and
+    * the publish is pure metadata: the manifest and its floor. */
+  private def publishSnapshot(w: World, floor: Long): Unit =
+    ManifestStore.publishFull(spark, w.statePath, ManifestStore.StagedCommit(
+      Seq(s"${w.statePath}/${ManifestStore.DataDir}/empty-${java.util.UUID.randomUUID()}"),
+      Map.empty, 1, Nil), floor)
+
   /** Snapshot refresh: the sink becomes source truth, and the floor (max
-    * offset OBSERVED, captured before the scan) commits through the REAL
-    * file protocol. Watermark entries persist (snapshot rows never pass
-    * advance — the documented contract). */
+    * offset OBSERVED, captured before the scan) is published in the same
+    * REAL manifest rename. Positions persist (snapshot rows never advance
+    * them — the documented contract). */
   private def refresh(w: World): Unit = {
     val floorVal = w.maxEmittedOffset
     val truth = w.sourceTruth
+    publishSnapshot(w, floorVal)
     w.sink.clear()
     w.appliedOracle.clear()
     truth.foreach { case (pk, (pos, payload)) =>
       w.sink(pk) = payload
       w.appliedOracle((pk, pos)) = payload
     }
-    OffsetWatermark.recordSnapshotFloor(spark, w.statePath, floorVal)
     w.floorOracle = math.max(w.floorOracle, floorVal)
   }
 
-  /** A floor writer that crashed between the old main's delete and the
-    * temp's rename: a COMPLETE temp stands, main is gone. Per the
-    * protocol, any standing temp carries >= the old main's value (the
-    * writer computes max(existing, floor) BEFORE deleting), so the heal
-    * can only move the fence forward. */
-  private def floorCrash(w: World, v: Long): Unit = {
-    // a recorded floor is a max-observed-offset some refresh computed, so
-    // it can never exceed the emitted history — clamp the seed draw
-    val target = math.max(w.floorOracle,
-      math.min(v, math.max(1L, w.maxEmittedOffset)))
-    val main = new java.io.File(OffsetWatermark.floorPath(w.statePath))
-    Option(main.getParentFile).foreach(_.mkdirs())
-    val tmp = new java.io.File(
-      OffsetWatermark.floorPath(w.statePath) + ".next.fuzz-" + target)
-    java.nio.file.Files.write(tmp.toPath,
-      target.toString.getBytes("UTF-8"))
-    if (main.exists()) main.delete()
-    w.floorOracle = target
-  }
+  /** A refresh that crashes at its commit. Before the manifest rename
+    * nothing is published: the snapshot and its floor are both absent, so
+    * sink and floor stay as they were. After the rename both landed — the
+    * floor can no longer be lost once its snapshot is live. */
+  private def refreshCrash(w: World, afterRename: Boolean): Unit =
+    if (afterRename) refresh(w)
 
   private def checkInvariants(w: World, ctx: String): Unit = {
     assert(w.sink.toMap === w.oracleSink,
       s"$ctx: model sink diverged from the hand-derived oracle " +
         s"(model=${w.sink.toMap}, oracle=${w.oracleSink})")
-    val fl = OffsetWatermark.snapshotFloor(spark, w.statePath)
+    val fl = publishedFloor(w)
     assert(fl === w.floorOracle,
-      s"$ctx: on-disk floor $fl != oracle floor ${w.floorOracle}")
-    // watermark sanity: never past the emitted history
+      s"$ctx: published floor $fl != oracle floor ${w.floorOracle}")
+    // position sanity: never past the emitted history
     w.wm.foreach { case (pk, p) =>
       val maxEmitted = w.emitted.keys.collect { case (`pk`, q) => q }
         .reduceOption((a: Pos, b: Pos) => posOrd.max(a, b))
       assert(maxEmitted.exists(posOrd.gteq(_, p)),
-        s"$ctx: watermark for pk $pk at $p passed the emitted history")
+        s"$ctx: position for pk $pk at $p passed the emitted history")
     }
   }
 
@@ -269,8 +267,9 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
           // floor check supersedes the replayed batch's pre-snapshot rows
           atoms += Atom(s"refresh$i", () => refresh(w))
         case 9 =>
-          atoms += Atom(s"floorCrash$i",
-            () => floorCrash(w, (rnd.nextInt(20) + 1).toLong))
+          val after = rnd.nextBoolean()
+          atoms += Atom(s"refreshCrash${if (after) "After" else "Before"}$i",
+            () => refreshCrash(w, after))
       }
     }
     atoms.result()
@@ -305,6 +304,8 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
     "repair, replay, refresh+floor, crashed floor writer} keep the sink " +
     "equal to the hand-derived oracle and the real on-disk floor equal to " +
     "the oracle floor after every atom (failing seed printed)") {
+    // the crashed floor writer is a refresh crashing on either side of the
+    // manifest rename that publishes its snapshot and floor together
     val base = tmpDir("wm-fuzz")
     val (totalAtoms, _, replays) = runSchedules(1 to Seeds, mutated = false, base)
     info(s"$Seeds schedules, $totalAtoms atoms, $replays replay atoms")
@@ -343,7 +344,7 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
     val ready = combos.map { case (pk, off, rx, _) => (pk, off, rx, s"pl$pk") }
       .toDF("pk", "offset", "_ridx", "payload")
     val wmDf = combos.collect { case (pk, _, _, Some(w)) => (pk, w.off, w.ridx) }
-      .toDF("pk", OffsetWatermark.OffsetCol, OffsetWatermark.RidxCol)
+      .toDF("pk", UpsertSink.OffsetCol, UpsertSink.RidxCol)
     for (floor <- Seq(0L, 2L)) {
       val (fresh, stale) =
         OffsetWatermark.splitStale(ready, Some(wmDf), "pk", floor)
@@ -379,20 +380,27 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
     "duplicate in-batch pks, null _ridx, and regressing positions never " +
     "move the stored watermark backwards") {
     import spark.implicits._
+    // the real path: the pipeline's compaction, then the sink's merge
     val statePath = tmpDir("wm-fuzz-adv") + "/t"
-    val b1Typed = Seq((1, 10L, Option(1), "a"), (2, 5L, Option(0), "a"),
+    val payloadSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      "pk INT, payload STRING")
+    def advance(rows: org.apache.spark.sql.DataFrame): Unit =
+      BucketedUpsertSink.applyBatch(spark, statePath,
+        Pipeline.compact(rows.withColumn("op", lit("update"))
+          .withColumn("table", lit("t")), "pk"),
+        "pk", 4, schema = Some(payloadSchema))
+    advance(Seq((1, 10L, Option(1), "a"), (2, 5L, Option(0), "a"),
       (3, 7L, Option.empty[Int], "a"), (4, 2L, Option(2), "a"))
-      .toDF("pk", "offset", "_ridx", "payload")
-    OffsetWatermark.advance(spark, statePath, b1Typed, "pk")
+      .toDF("pk", "offset", "_ridx", "payload"))
     // batch 2: pk1 regresses (stays), pk2 same offset higher ridx
     // (advances), pk3 null ridx again at higher offset, pk2 DUPLICATED in
     // one batch (in-batch max first), pk5 new
-    val b2 = Seq((1, 9L, Option(0), "b"), (2, 5L, Option(2), "b"),
+    advance(Seq((1, 9L, Option(0), "b"), (2, 5L, Option(2), "b"),
       (2, 5L, Option(1), "b"), (3, 8L, Option.empty[Int], "b"),
       (5, 1L, Option(0), "b"))
-      .toDF("pk", "offset", "_ridx", "payload")
-    OffsetWatermark.advance(spark, statePath, b2, "pk")
-    val stored = OffsetWatermark.current(spark, statePath).get
+      .toDF("pk", "offset", "_ridx", "payload"))
+    val stored = BucketedUpsertSink.positions(spark, statePath,
+      ManifestStore.currentManifest(spark, statePath), "pk").get
       .collect().map(r => r.getInt(0) ->
         Pos(r.getLong(1), r.getInt(2))).toMap
     val model = mutable.Map[Int, Pos]()
@@ -405,6 +413,6 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
     adv(Seq((1, 9L, Some(0)), (2, 5L, Some(2)), (2, 5L, Some(1)),
       (3, 8L, None), (5, 1L, Some(0))))
     assert(stored === model.toMap,
-      s"stored watermark diverged from the model merge: $stored vs $model")
+      s"stored positions diverged from the model merge: $stored vs $model")
   }
 }

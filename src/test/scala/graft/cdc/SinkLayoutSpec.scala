@@ -9,9 +9,10 @@ import org.apache.spark.sql.types._
   * when `state.buckets` is absent) must survive the config changes a
   * deployment actually makes — upgrading an existing flat store, a store in
   * the retired in-place bucket-dir layout, and changing the bucket COUNT —
-  * without silently dropping or duplicating rows; a watermark sidecar left
-  * in the retired bucketed layout must go flat without losing an entry;
-  * and the refresh staging path must survive an empty source table. */
+  * without silently dropping or duplicating rows; a legacy watermark
+  * sidecar (any of its layouts) and floor file must fold into the rows and
+  * the manifest without losing an entry; and the refresh staging path must
+  * survive an empty source table. */
 class SinkLayoutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -111,16 +112,17 @@ class SinkLayoutSpec extends SparkSpec {
   }
 
   test("a legacy BUCKETED watermark sidecar (any modulus, with its " +
-    "_nbuckets-N file) goes flat on the first batch of a bucketed " +
-    "Pipeline: one entry per pk at the max position, and a superseded " +
-    "repair still replays as stale") {
+    "_nbuckets-N file) folds into the rows on the first batch of a bucketed " +
+    "Pipeline: one position per pk at the max, a tombstone for a pk with no " +
+    "row, and a superseded repair still replays as stale") {
     import graft.model._
     val sinkRoot = tmpDir("layout-wm")
     val sync = SyncConfig("t", pk = "id", schema = Some(payload))
-    val wmDir = OffsetWatermark.path(s"$sinkRoot/${sync.indexName}")
+    val statePath = s"$sinkRoot/${sync.indexName}"
+    val wmDir = OffsetWatermark.path(statePath)
     // the retired layout, at a modulus (8) other than the sink's (4)
     Seq((1, 5L, 0), (2, 6L, 0), (3, 4L, 0))
-      .toDF("id", OffsetWatermark.OffsetCol, OffsetWatermark.RidxCol)
+      .toDF("id", UpsertSink.OffsetCol, UpsertSink.RidxCol)
       .withColumn(BucketedUpsertSink.BucketCol,
         BucketedUpsertSink.bucketOf(col("id"), 8))
       .write.partitionBy(BucketedUpsertSink.BucketCol).parquet(wmDir)
@@ -135,15 +137,15 @@ class SinkLayoutSpec extends SparkSpec {
       ChangeEvent("create", "t", 11, ts, """{"id": 2, "v": "b"}"""))
     val q = pipe.start(tmpDir("layout-wm-ckpt"))
     q.processAllAvailable(); q.stop()
-    val wm = OffsetWatermark.current(spark, s"$sinkRoot/${sync.indexName}")
-      .get.orderBy("id").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getInt(2))).toSeq
-    assert(wm === Seq((1, 10L, 0), (2, 11L, 0), (3, 4L, 0)),
-      "one entry per pk at the max position, untouched legacy pks kept")
-    val names = new java.io.File(wmDir).listFiles().map(_.getName)
-    assert(!names.exists(n => n.startsWith(BucketedUpsertSink.BucketCol + "=") ||
-      n.startsWith("_nbuckets-")),
-      s"the sidecar must be flat after its first advance: ${names.mkString(",")}")
+    val m = ManifestStore.currentManifest(spark, statePath)
+    val stored = ManifestStore.readPhysicalOf(spark, statePath, m, payload)
+      .orderBy("id").collect()
+      .map(r => (r.getAs[Int]("id"), r.getAs[Long](UpsertSink.OffsetCol),
+        r.getAs[Int](UpsertSink.RidxCol), r.getAs[Any](UpsertSink.DeletedCol))).toSeq
+    assert(stored === Seq((1, 10L, 0, null), (2, 11L, 0, null), (3, 4L, 0, true)),
+      "one position per pk at the max; the legacy-only pk is a tombstone")
+    assert(m.get.rowCount === 2L, "the tombstone is not a live row")
+    assert(!new java.io.File(wmDir).exists(), "the sidecar must be gone")
     // the quarantined offset-7 envelope repaired to pk 1, which the live
     // batch already applied at offset 10: superseded, so discarded
     val dl = pipe.deadLetterPath(sync)
@@ -298,29 +300,41 @@ class SinkLayoutSpec extends SparkSpec {
     }
   }
 
-  test("a snapshot-floor failure AFTER refresh's publish keeps the " +
-    "published snapshot readable instead of deleting its files") {
+  test("a torn legacy floor file fails a live batch's upgrade naming " +
+    "refresh; refresh over it publishes, records its own ceiling as the " +
+    "floor in the manifest and removes the legacy files") {
     import graft.model._
-    val sinkRoot = tmpDir("layout-floorfail")
+    val sinkRoot = tmpDir("layout-tornfloor")
     val statePath = s"$sinkRoot/t"
     val sync = SyncConfig("t", pk = "id", schema = Some(payload))
+    val src = new MemoryCdcSource(spark,
+      Map("t" -> Seq((1, "x"), (2, "y")).toDF("id", "v")))
     val pipe = new Pipeline(spark,
-      PipelineConfig(Seq(sync), stateBuckets = Some(4)),
-      new MemoryCdcSource(spark,
-        Map("t" -> Seq((1, "x"), (2, "y")).toDF("id", "v"))), sinkRoot)
-    // a floor file that does not parse makes the floor record throw
+      PipelineConfig(Seq(sync), stateBuckets = Some(4)), src, sinkRoot)
+    val ckpt = tmpDir("layout-tornfloor-ckpt")
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    src.addEvents(ChangeEvent("create", "t", 5, ts, """{"id": 1, "v": "a"}"""))
+    val q1 = pipe.start(ckpt)
+    q1.processAllAvailable(); q1.stop()
+    // a floor file that does not parse
     val floor = new java.io.File(OffsetWatermark.floorPath(statePath))
-    floor.getParentFile.mkdirs()
     java.nio.file.Files.write(floor.toPath, "torn".getBytes("UTF-8"))
     try {
-      val e = intercept[IllegalArgumentException](pipe.refresh())
-      assert(e.getMessage.contains("torn snapshot floor"), e.getMessage)
+      src.addEvents(ChangeEvent("create", "t", 9, ts, """{"id": 3, "v": "c"}"""))
+      val q2 = pipe.start(ckpt)
+      val e = intercept[Exception](q2.processAllAvailable())
+      q2.stop()
+      assert(causeChain(e).contains("torn snapshot floor") &&
+        causeChain(e).contains("refresh"), causeChain(e))
+      assert(pipe.refresh() === Map("t" -> 2L))
     } finally pipe.releaseLeases()
-    assert(ManifestStore.currentManifest(spark, statePath).map(_.rowCount) ===
-      Some(2L), "the publish landed before the floor record failed")
+    val m = ManifestStore.currentManifest(spark, statePath).get
+    assert(m.floor === 5L, "the refresh's own ceiling (the applied offset 5)")
+    assert(m.rowCount === 2L)
+    assert(!floor.exists(), "the torn floor file must be removed")
     assert(pipe.sinkState(sync).orderBy("id").collect().toSeq ===
-      Seq(Row(1, "x"), Row(2, "y")),
-      "the published snapshot's files must still be there")
+      Seq(Row(1, "x"), Row(2, "y")))
+    assert(pipe.lineage() === Map("t" -> ((5L, 5L))))
     assert(ManifestStore.stagingUnder(statePath).isEmpty)
   }
 
