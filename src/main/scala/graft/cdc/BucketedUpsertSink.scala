@@ -26,7 +26,9 @@ import org.apache.spark.sql.functions._
   * The per-pk applied-offset watermark lives in the rows themselves
   * ([[UpsertSink.Reserved]]): the merge that writes a row also advances its
   * position, and a delete leaves a tombstone, so no second store is read
-  * or rewritten per batch.
+  * or rewritten per batch. The same merge enforces the staleness rule
+  * ([[OffsetWatermark.superseded]]) against those positions and the
+  * manifest's snapshot floor: this sink is where per-pk ordering holds.
   */
 object BucketedUpsertSink {
 
@@ -35,10 +37,12 @@ object BucketedUpsertSink {
   /** The optimistic merge closure shared by the sink's batch path,
     * [[graft.ops.Maintenance.repairUpsert]], and the OCC spec: given a base
     * manifest, read the CURRENT state of the `touched` buckets, LWW-merge
-    * the op-columned `changes` into it, and re-bucket — the new full
-    * content of exactly those buckets. One definition, so the merge
-    * semantics (op handling, empty-state fallback, bucket-column plumbing)
-    * cannot silently diverge between the stream and the repair path. */
+    * the op-columned `changes` into it under the base's snapshot floor (a
+    * superseded positioned change is absent — [[UpsertSink.applyBatch]]),
+    * and re-bucket — the new full content of exactly those buckets. One
+    * definition, so the merge semantics (op handling, staleness, empty-state
+    * fallback, bucket-column plumbing) cannot silently diverge between the
+    * stream and the repair path. */
   def upsertMergeOf(spark: SparkSession, statePath: String,
                     payloadSchema: org.apache.spark.sql.types.StructType,
                     touched: Seq[Long], changes: DataFrame, pk: String,
@@ -51,7 +55,7 @@ object BucketedUpsertSink {
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], payloadSchema)
     }
-    UpsertSink.applyBatch(state, changes, pk)
+    UpsertSink.applyBatch(state, changes, pk, base.fold(0L)(_.floor))
       .withColumn(BucketCol, bucketOf(col(pk), nbuckets))
   }
 
@@ -86,8 +90,10 @@ object BucketedUpsertSink {
     * row keeps the greater of its own position and the one `positions`
     * holds for its pk, and a pk with a position but no row becomes a
     * tombstone. With no positions the rows just gain the reserved columns
-    * (null: no change applied yet). This is how a snapshot rebuild keeps
-    * every pk's position and tombstone, and how a legacy `.wm` sidecar is
+    * (null: no change applied yet) — a snapshot rebuild stages its rows
+    * so, since its floor fences every position it could carry. With
+    * positions, this is how a rebuild takes in the positions applied
+    * above its floor while its scan ran, and how a legacy `.wm` sidecar is
     * folded into the rows it guarded. */
   def foldPositions(rows: DataFrame, positions: Option[DataFrame],
                     pk: String): DataFrame = {
@@ -179,8 +185,9 @@ object BucketedUpsertSink {
 
   /** Apply one compacted micro-batch: read ONLY the buckets the batch
     * touches, merge with [[UpsertSink.applyBatch]] semantics (presence
-    * mask, create-replaces, delete-tombstones when positioned), and publish the touched
-    * buckets' new content as the next manifest version. `schema` makes the
+    * mask, create-replaces, delete-tombstones when positioned, superseded
+    * changes absent under the store's snapshot floor), and publish the
+    * touched buckets' new content as the next manifest version. `schema` makes the
     * very first batch work against a not-yet-created state (bootstrap
     * without a separate init). `statCols` are the zone-map stat columns the
     * manifest carries per bucket — a property of the store, like the
@@ -225,7 +232,8 @@ object BucketedUpsertSink {
         .filterNot(f => f.name == "op" || f.name == UpsertSink.PresentCol ||
           UpsertSink.Reserved.contains(f.name))))
     def fullRewrite(priorState: DataFrame): Unit = {
-      val mergedFull = UpsertSink.applyBatch(priorState, changes, pk)
+      val mergedFull = UpsertSink.applyBatch(priorState, changes, pk,
+        m.fold(0L)(_.floor))
       val staged = ManifestStore.stageFull(spark, statePath, mergedFull, pk,
         numBuckets, effStatCols)
       ManifestStore.publishFull(spark, statePath, staged)

@@ -562,9 +562,10 @@ object ManifestStore {
     Published
   }
 
-  /** Single-writer publish (the in-pipeline path, serialized by
-    * [[DriverLease]]): one claim-guarded attempt; contention here means the
-    * single-driver contract was violated, so it fails LOUD — and with the
+  /** Single-writer publish of a full snapshot ([[publishFull]], serialized
+    * by the state lock and [[DriverLease]]): one claim-guarded attempt;
+    * contention here means the single-driver contract was violated, so it
+    * fails LOUD — and with the
     * claim protocol that loudness now actually holds on POSIX filesystems,
     * where a bare rename would silently last-write-win. */
   private def writeManifest(spark: SparkSession, statePath: String,
@@ -732,46 +733,14 @@ object ManifestStore {
   private[cdc] def stagingUnder(statePath: String): Set[String] =
     activeStaging.asScala.filter(_.startsWith(statePath + "/")).toSet
 
-  /** Apply one micro-batch commit: `merged` is the NEW full content of the
-    * `touched` buckets (bucket-columned, consumed once); untouched
-    * buckets carry their prior manifest entries forward unchanged — their
-    * files are not read, moved, or rewritten. A touched bucket absent from
-    * `merged` (its last row deleted) leaves the manifest. */
-  def commitBatch(spark: SparkSession, statePath: String, merged: DataFrame,
-                  touched: Seq[Long], nbuckets: Int,
-                  statCols: Seq[String]): Unit =
-    commitBatch(spark, statePath, merged, touched, nbuckets, statCols,
-      currentManifest(spark, statePath))
-
-  /** As above with the prior manifest ALREADY resolved (review r13 #6 —
-    * the batch path resolves once for the modulus fence, evolution check,
-    * state read, and this commit). */
   /** The layout (modulus, stat columns) is a property of the STORE: a
-    * writer configured differently must refresh, not write. Shared by the
-    * single-writer and optimistic commit paths. */
+    * writer configured differently must refresh, not write. */
   private def validateLayout(statePath: String, m: Option[Manifest],
                              nbuckets: Int, statCols: Seq[String]): Unit =
     m.foreach(mm => require(mm.nbuckets == nbuckets && mm.statCols == statCols,
       s"manifest store at $statePath has (nbuckets=${mm.nbuckets}, " +
         s"statCols=${mm.statCols}); the writer was configured " +
         s"($nbuckets, $statCols) — run `refresh` to re-lay the store out"))
-
-  def commitBatch(spark: SparkSession, statePath: String, merged: DataFrame,
-                  touched: Seq[Long], nbuckets: Int, statCols: Seq[String],
-                  prev: Option[Manifest]): Unit = {
-    validateLayout(statePath, prev, nbuckets, statCols)
-    val written = writeCommit(spark, statePath, merged, statCols)
-    try {
-      val next = Manifest(
-        version = prev.fold(1L)(_.version + 1L),
-        nbuckets = nbuckets, statCols = statCols,
-        buckets = prev.fold(Map.empty[Long, BucketEntry])(_.buckets)
-          .removedAll(touched) ++ written,
-        floor = prev.fold(0L)(_.floor))
-      writeManifest(spark, statePath, next)
-    } finally releaseStaging(statePath, written)
-    vacuum(spark, statePath)
-  }
 
   /** Outcome of one [[commitBatchOptimistic]]: the published version plus
     * how the race went — `rebases` are cheap manifest-only retries (the
@@ -788,7 +757,10 @@ object ManifestStore {
     *
     * `computeMerged(base)` must return the new FULL content of the
     * `touched` buckets given the state `base` describes (bucket-columned;
-    * consumed once, by the commit-dir write). The
+    * consumed once, by the commit-dir write); untouched buckets carry their
+    * entries forward unchanged, and a touched bucket absent from the merge
+    * (its last row deleted) leaves the manifest. An empty `touched` set
+    * publishes the base's buckets as the next version. The
     * loop: stage files against the current manifest, attempt a
     * claim-guarded publish of version+1; on contention re-read the latest
     * manifest and either REBASE (interleaved commits touched disjoint
@@ -815,7 +787,6 @@ object ManifestStore {
                             claimTakeoverMs: Long = ClaimTakeoverMs,
                             backoffMs: Long = 25L)
                            (computeMerged: Option[Manifest] => DataFrame): OccResult = {
-    require(touched.nonEmpty, "optimistic commit with no touched buckets")
     val touchedSet = touched.toSet
     def validate(m: Option[Manifest]): Unit =
       validateLayout(statePath, m, nbuckets, statCols)

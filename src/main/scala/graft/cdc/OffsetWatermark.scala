@@ -4,20 +4,27 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
-/** The per-pk applied-position fence of an upsert sink, and the upgrade of
-  * the sidecar store it used to live in.
+/** The per-pk applied-position fence of an upsert sink — its one
+  * staleness rule ([[superseded]]) — and the upgrade of the sidecar store
+  * it used to live in.
   *
-  * Why it exists: the dead-letter replay path ([[Pipeline.replayDeadLetters]])
-  * re-applies operator-repaired quarantined rows through the live upsert
-  * tail. Those rows carry the SOURCE position they were quarantined at,
-  * which may be far in the past by replay time — live batches may have
-  * applied newer changes to the same pk since. Upserting a repaired row by
-  * pk alone would overwrite that newer state with the stale quarantined
-  * payload (the r8 ADVICE medium finding). Every sink row therefore carries
-  * the position of the change that last wrote it, and a deleted pk keeps a
-  * tombstone with its position ([[UpsertSink.Reserved]]); [[splitStale]]
-  * DISCARDS any repaired row whose position is below the one its pk's row
-  * holds (superseded by live data).
+  * Every sink row carries the position of the change that last wrote it,
+  * and a deleted pk keeps a tombstone with its position
+  * ([[UpsertSink.Reserved]]). The rule is enforced where rows are written:
+  * the sink's merge ([[UpsertSink.applyBatch]]) treats a superseded change
+  * as absent, so no path — a live batch, a checkpoint replay, an
+  * out-of-order source's late event, a repaired dead letter — can put an
+  * older payload over a newer one. [[splitStale]] applies the same rule
+  * ahead of the merge where a caller needs the split itself: the dead-letter
+  * replay ([[Pipeline.replayDeadLetters]]) counts and discards its
+  * superseded rows, and a run's first batch is fenced so that a replay the
+  * sink fully supersedes publishes nothing.
+  *
+  * Why it exists: a repaired dead letter carries the SOURCE position it
+  * was quarantined at, which may be far in the past by replay time — live
+  * batches may have applied newer changes to the same pk since, and
+  * upserting it by pk alone would overwrite that newer state with the stale
+  * payload (the r8 ADVICE medium finding).
   *
   * Position = (offset, _ridx), compared lexicographically: one multi-row
   * envelope expands to several changes at ONE offset, ordered by `_ridx`
@@ -36,11 +43,11 @@ import org.apache.spark.sql.types.IntegerType
   * carry no position of their own, so they get a sync-LEVEL guard: the
   * snapshot floor ([[ManifestStore.Manifest.floor]]) — the max source
   * offset observed (applied or quarantined) when the snapshot was taken,
-  * captured BEFORE the snapshot scan so concurrent stream progress can only
+  * read BEFORE the snapshot scan so concurrent stream progress can only
   * leave it conservatively low, and published in the same manifest rename
   * as the snapshot. A snapshot holds the source's then-current state, so it
-  * supersedes EVERY payload observed before it; [[splitStale]] discards
-  * repaired rows at or below the floor even when their pk has no position.
+  * supersedes EVERY change observed before it: a position at or below the
+  * floor fences nothing the floor does not, and a rebuild stores none.
   *
   * Upgrade: a store written before positions lived in the rows keeps them
   * in a `.wm` sidecar ([[path]]) and the floor in a `.wm.floor` file
@@ -141,20 +148,41 @@ object OffsetWatermark {
     legacyEntries(spark, statePath).foreach(fs.delete(_, true))
   }
 
-  /** Split repaired dead-letter rows into (fresh, superseded) against the
-    * sink's stored positions and the snapshot floor: a row is superseded
-    * iff the sink has already applied a STRICTLY newer (offset, _ridx)
-    * position for its pk, OR a snapshot rebuild observed the row's offset
-    * (offset <= floor — the snapshot holds the source's state from a later
-    * point, whether or not the pk has a position). Rows at the stored
-    * position exactly are fresh — re-applying them is the idempotent
-    * at-least-once case. `positions` is (pk, [[UpsertSink.OffsetCol]],
-    * [[UpsertSink.RidxCol]]) ([[BucketedUpsertSink.positions]]); it is
-    * pruned to the replay's pks before the join — via broadcast when the
-    * probe list is small ([[MaxBroadcastProbes]], established by a
-    * LIMIT-bounded count, not a full aggregation), via a shuffle join on a
-    * bulk repair — so the stored map is never shuffled wholesale for an
-    * ordinary replay and a huge one cannot OOM the driver. */
+  /** THE staleness rule, the one definition shared by the sink's merge
+    * ([[UpsertSink.applyBatch]]) and [[splitStale]]: a positioned change is
+    * SUPERSEDED iff its offset is at or below the snapshot `floor` (a
+    * snapshot rebuild observed it — the snapshot holds the source's state
+    * from a later point, whether or not the pk has a position; floor 0
+    * means "no snapshot ever" and fences nothing, even for a source whose
+    * offsets start at 0), or its position is STRICTLY below the one its
+    * pk's row stores (a newer change was applied). A change AT the stored
+    * position is fresh — re-applying it is the idempotent at-least-once
+    * case. A NULL row index reads as 0, the first row of its envelope, as
+    * the sink stores it; a change without an offset (a positionless
+    * caller) is never superseded, and the result is never NULL: a
+    * three-valued rule would drop a row from both the fresh and the
+    * superseded split. Plain comparisons, no struct per row: the merge
+    * evaluates this on every row of every touched bucket. */
+  def superseded(offset: Column, ridx: Column, storedOffset: Column,
+                 storedRidx: Column, floor: Long): Column = {
+    val belowFloor = if (floor > 0L) offset <= lit(floor) else lit(false)
+    val belowStored = offset < storedOffset || (offset === storedOffset &&
+      coalesce(ridx.cast("int"), lit(0)) < coalesce(storedRidx.cast("int"), lit(0)))
+    coalesce(belowFloor || (storedOffset.isNotNull && belowStored), lit(false))
+  }
+
+  /** Split repaired dead-letter rows (or a restarted run's first batch)
+    * into (fresh, superseded) by [[superseded]], against the sink's stored
+    * positions and the snapshot floor. `positions` is (pk,
+    * [[UpsertSink.OffsetCol]], [[UpsertSink.RidxCol]])
+    * ([[BucketedUpsertSink.positions]]); it is pruned to the rows' pks
+    * before the join — via broadcast when the probe list is small
+    * ([[MaxBroadcastProbes]], established by a LIMIT-bounded count, not a
+    * full aggregation), via a shuffle join on a bulk repair — so the stored
+    * map is never shuffled wholesale for an ordinary replay and a huge one
+    * cannot OOM the driver. A row's NULL `_ridx` (a repaired row from an
+    * unparseable-array envelope, posexplode_outer) reads as 0, as the sink
+    * stores it. */
   def splitStale(ready: DataFrame, positions: Option[DataFrame], pk: String,
                  floor: Long = 0L,
                  maxBroadcastProbes: Long = MaxBroadcastProbes)
@@ -174,22 +202,7 @@ object OffsetWatermark {
           else wmNamed.join(probes, Seq(pk))
         ready.join(slice, Seq(pk), "left").localCheckpoint()
     }
-    // floor == 0 means "no snapshot ever" and fences nothing, even for a
-    // source whose offsets happen to start at 0
-    val floorCond: Column =
-      if (floor > 0L) col("offset") <= lit(floor) else lit(false)
-    // coalesce both row indexes: a repaired row from an unparseable-array
-    // envelope carries _ridx = NULL (posexplode_outer), and NULL < NULL is
-    // NULL — a three-valued staleCond would drop the row from BOTH the
-    // fresh and stale splits, stranding it in quarantine forever on a
-    // crash-retry. NULL reads as position 0, as the sink
-    // stores it.
-    val staleCond = floorCond ||
-      (col("__wmo").isNotNull &&
-        (col("offset") < col("__wmo") ||
-          (col("offset") === col("__wmo") &&
-            coalesce(col("_ridx").cast("int"), lit(0)) <
-              coalesce(col("__wmr"), lit(0)))))
+    val staleCond = superseded(col("offset"), col("_ridx"), col("__wmo"), col("__wmr"), floor)
     (j.filter(!staleCond).drop("__wmo", "__wmr"),
       j.filter(staleCond).drop("__wmo", "__wmr"))
   }

@@ -231,7 +231,9 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   }
 
   /** Apply one micro-batch for one sync: dead-letter split, B1 compaction,
-    * then K1 upsert, committed via the sink's atomic manifest publish. One
+    * then K1 upsert (which ignores stale changes —
+    * [[OffsetWatermark.superseded]]), committed via the sink's atomic
+    * manifest publish. One
     * probe aggregate ([[probe]]) answers what
     * the batch holds before anything is written: the dead letters are
     * appended only when it counts any, the sink rewrites exactly the
@@ -270,16 +272,16 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     // batch whose effects a dead-letter replay or a snapshot refresh
     // superseded while the stream was down (r12 OffsetWatermarkFuzzSpec
     // finding: crash -> operator repairs + runs `replay` (or `refresh`) ->
-    // stream restarts -> the replayed batch blindly re-upserts the OLD
-    // payload over the newer state, and the already-advanced position
-    // then fences the repair from ever being re-applied — a silent
-    // permanent regression). Fence it through the replay path's own
-    // splitStale: rows strictly below their pk's stored position, or at
-    // or below the snapshot floor, are superseded and drop; rows AT the
-    // position stay (the idempotent re-apply). Later batches of a run
-    // cannot be replays (Spark runs each batchId once per query run), so
-    // steady state reads no positions. The same first batch upgrades a
-    // store that still keeps its watermark in the legacy sidecar.
+    // stream restarts -> the replayed batch re-upserts the OLD payload).
+    // The sink's merge ignores every such superseded row by itself
+    // (OffsetWatermark.superseded); the fence runs the same rule ahead of
+    // it, through splitStale, so the touched set is exact: a replay the
+    // sink fully supersedes rewrites no bucket and publishes nothing. Rows
+    // AT their stored position stay (the idempotent re-apply). Later
+    // batches of a run cannot be replays (Spark runs each batchId once per
+    // query run), so steady state reads no positions ahead of the merge.
+    // The same first batch upgrades a store that still keeps its
+    // watermark in the legacy sidecar.
     // Fence identity is sync.indexName — the SAME identity statePath uses —
     // not sync.table: two syncs may share one source table with different
     // target indexes, and a table-keyed fence would be consumed by the first
@@ -451,24 +453,26 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   }
 
   /** The EXPENSIVE half of refresh/backfill, outside any lock: write
-    * `snapshot` as an unpublished (invisible) manifest commit dir, with
-    * every pk's position and tombstone carried from the store as `base`
-    * describes it ([[BucketedUpsertSink.foldPositions]]) — a refresh
-    * replaces the rows, never the fence. */
-  private def stageSnapshot(sync: SyncConfig, base: Option[ManifestStore.Manifest],
-                            snapshot: DataFrame): ManifestStore.StagedCommit = {
-    val sp = statePath(sync)
-    ManifestStore.stageFull(spark, sp, BucketedUpsertSink.foldPositions(snapshot,
-      BucketedUpsertSink.positions(spark, sp, base, pkOut(sync)), pkOut(sync)),
+    * `snapshot` as an unpublished (invisible) manifest commit dir, its rows
+    * without positions ([[BucketedUpsertSink.foldPositions]] with none).
+    * No stored position or tombstone is carried: the snapshot floor the
+    * commit publishes ([[observedOffsetCeiling]]) is at least every
+    * position the store held when the scan started, so it fences all of
+    * them; positions applied since are folded in at the commit
+    * ([[refoldSince]]). */
+  private def stageSnapshot(sync: SyncConfig,
+                            snapshot: DataFrame): ManifestStore.StagedCommit =
+    ManifestStore.stageFull(spark, statePath(sync),
+      BucketedUpsertSink.foldPositions(snapshot, None, pkOut(sync)),
       pkOut(sync), numBuckets, zoneMapColsFor(sync))
-  }
 
   /** The shared locked COMMIT of every snapshot-rebuild path (refresh,
     * refreshAsync, backfill): publish the staged commit, with its snapshot
     * floor, as the next manifest version — one rename. One definition so
     * the three paths cannot drift. Batches and replays that committed
-    * since the stage read `base` advanced positions the staged copy lacks
-    * ([[refoldSince]]): those are folded in OUTSIDE the lock first, while
+    * since `base` (the manifest `floor` was read from) advanced positions
+    * above the floor that the staged copy lacks ([[refoldSince]]): those
+    * are folded in OUTSIDE the lock first, while
     * the stream keeps flowing, so the locked step folds only what landed
     * during that catch-up — usually nothing, and then the commit is the
     * metadata publish alone. */
@@ -484,7 +488,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     // yet.
     try {
       val seen = ManifestStore.currentManifest(spark, sp)
-      current = refoldSince(sync, current, base, seen)
+      current = refoldSince(sync, current, base, seen, floor)
       StateCommit.stateLock(sp).synchronized {
         // single-driver fence BEFORE any mutation of the live path (the
         // staged scan needed no lease — it wrote only its own unique dir)
@@ -492,7 +496,8 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         // evaluated under the lock (backfill's bootstrap-only re-probe);
         // losing it drops the staged copy instead of clobbering
         val published = precondition() && {
-          current = refoldSince(sync, current, seen, ManifestStore.currentManifest(spark, sp))
+          current = refoldSince(sync, current, seen,
+            ManifestStore.currentManifest(spark, sp), floor)
           ManifestStore.publishFull(spark, sp, current, floor); true
         }
         if (!published) ManifestStore.dropStaged(spark, current)
@@ -502,18 +507,20 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
       ManifestStore.dropStaged(spark, current); throw t }
   }
 
-  /** Fold into a staged snapshot the positions that batches and replays
-    * committed between manifests `base` and `now`: those of the buckets
-    * `now` rewrote, into the staged buckets their pks hash to — the same ids
-    * when the moduli agree (the usual case: the modulus fence keeps
-    * batches on the configured one), every staged bucket otherwise. A
-    * pk's position is the greater of the two, and a pk that gained a
-    * position but has no staged row becomes a tombstone, exactly as
-    * [[stageSnapshot]] folds the base's. The cost is the changed buckets',
-    * not the table's; with nothing changed it is no job at all. */
+  /** Fold into a staged snapshot the positions above `floor` that batches
+    * and replays committed between manifests `base` and `now`: those of
+    * the buckets `now` rewrote, into the staged buckets their pks hash to —
+    * the same ids when the moduli agree (the usual case: the modulus fence
+    * keeps batches on the configured one), every staged bucket otherwise.
+    * A pk's position is the greater of the two, and a pk that gained a
+    * position but has no staged row becomes a tombstone
+    * ([[BucketedUpsertSink.foldPositions]]). Positions at or below the
+    * floor are left out: the floor fences them. The cost is the changed
+    * buckets', not the table's; with nothing changed it is no job at all. */
   private def refoldSince(sync: SyncConfig, staged: ManifestStore.StagedCommit,
                           base: Option[ManifestStore.Manifest],
-                          now: Option[ManifestStore.Manifest]): ManifestStore.StagedCommit = {
+                          now: Option[ManifestStore.Manifest],
+                          floor: Long): ManifestStore.StagedCommit = {
     val sp = statePath(sync)
     val changed = now.toSeq.flatMap { n =>
       val kept = base.filter(_.nbuckets == n.nbuckets).fold(Set.empty[String])(
@@ -522,6 +529,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     }.sorted
     val moved = if (changed.isEmpty) None
       else BucketedUpsertSink.positions(spark, sp, now, pkOut(sync), Some(changed))
+        .map(_.filter(col(UpsertSink.OffsetCol) > floor))
     moved.fold(staged) { p =>
       val targets =
         if (now.exists(_.nbuckets == staged.nbuckets)) changed
@@ -537,16 +545,21 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   private def sinkLive(sync: SyncConfig): Boolean =
     BucketedUpsertSink.liveExists(spark, statePath(sync))
 
-  /** Max source offset this pipeline has OBSERVED for a sync — applied
-    * (the greatest position in the sink's rows) or quarantined
-    * (dead-letter envelopes), both from parquet footers, with no job. A
-    * full rebuild records this as the snapshot floor: the snapshot's
-    * content is newer than everything observed up to it, so replay must
-    * not re-apply any of it. */
-  private def observedOffsetCeiling(sync: SyncConfig): Long = {
+  /** Max source offset this pipeline has OBSERVED for a sync up to manifest
+    * `base` — applied (the greatest position in its rows, or its floor,
+    * which fences every position a rebuild dropped) or quarantined
+    * (dead-letter envelopes), from parquet footers, with no job. A full
+    * rebuild records this as the snapshot floor: the snapshot's content is
+    * newer than everything observed up to it, so no stale change may
+    * re-apply any of it. It is taken from `base` itself, the manifest the
+    * rebuild's [[refoldSince]] starts from, so a batch that lands after it
+    * is re-folded and one before it is under the floor — never neither. */
+  private def observedOffsetCeiling(sync: SyncConfig,
+                                    base: Option[ManifestStore.Manifest]): Long = {
     val sp = statePath(sync)
-    val applied = ManifestStore.maxAppliedOffset(spark, sp,
-      ManifestStore.currentManifest(spark, sp)).getOrElse(0L)
+    val applied = math.max(
+      ManifestStore.maxAppliedOffset(spark, sp, base).getOrElse(0L),
+      base.fold(0L)(_.floor))
     // the quarantine is a swapped store: read it under the state lock, so
     // a replay's rewrite cannot swap it out between this read's listing
     // and its footer reads; and heal an interrupted rewrite first, which
@@ -572,9 +585,9 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
       // scan must not hold the state lock (a caller that started the
       // stream first would stall every micro-batch for the whole
       // bootstrap scan — r9 review)
-      val floor = observedOffsetCeiling(sync)
       val base = ManifestStore.currentManifest(spark, statePath(sync))
-      val staged = stageSnapshot(sync, base, source.fullScan(sync))
+      val floor = observedOffsetCeiling(sync, base)
+      val staged = stageSnapshot(sync, source.fullScan(sync))
       // re-probe under the lock: a live batch may have bootstrapped the
       // sink during our scan; K3 is bootstrap-only, and the stream is
       // already building on ITS copy — drop our staging, don't clobber
@@ -597,13 +610,11 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   /** `start`: bootstrap + one streaming query applying all syncs per
     * micro-batch. Returns the running query (caller stops it).
     *
-    * @param monotonic when true, the envelope stream first passes through
-    *   [[graft.streaming.KeyedLastWrite.latestPerKey]]: per-(table, pk)
-    *   offset high-water marks in keyed state suppress stale events that
-    *   arrive in a LATER micro-batch than a newer event they were reordered
-    *   past (SURVEY.md §7 hard part 1 — within-batch reordering is already
-    *   handled by B1 compaction; this closes the cross-batch case at the
-    *   cost of keyed state proportional to live keys).
+    * Out-of-order events need no keyed state in front of the sink: within
+    * a batch B1 compaction keeps the newest position per pk, and across
+    * batches the sink's merge ignores a change below its row's stored
+    * position (SURVEY.md §7 hard part 1; [[OffsetWatermark.superseded]]).
+    *
     * @param progress optional EXTERNAL progress store (the reference's
     *   file/redis `Progress` backends): committed batch positions are
     *   published through [[ProgressPublisher]] for other applications to
@@ -611,7 +622,6 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     */
   def start(checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow(),
-            monotonic: Boolean = false,
             progress: Option[ProgressStore] = None): StreamingQuery = {
     // reference main.py:35-36: `if settings.debug: logger.debug(settings)`
     if (config.debug) DebugLog.record(s"settings: $config")
@@ -627,7 +637,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     config.syncs.foreach(s => DriverLease.locked(statePath(s)) {
       Pipeline.streamRefCount(statePath(s)).incrementAndGet(); ()
     })
-    try startRegistered(checkpointDir, trigger, monotonic, progress)
+    try startRegistered(checkpointDir, trigger, progress)
     catch { case t: Throwable =>
       // startRegistered stops any query it started before throwing (ADVICE
       // r10) — by here no stream is running, so deregister-and-release is
@@ -638,28 +648,11 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   }
 
   private def startRegistered(checkpointDir: String, trigger: Trigger,
-                              monotonic: Boolean,
                               progress: Option[ProgressStore]): StreamingQuery = {
     backfillIfNeeded()
-    // arm the first-batch replay fence for every sync (see applySyncLocked)
+    // arm the first-batch replay fence for every sync (see applySync)
     config.syncs.foreach(s => replayFencePending.add(s.indexName))
-    val changes =
-      if (!monotonic) source.changes
-      else {
-        implicit val sp: SparkSession = spark
-        import sp.implicits._
-        // None (unknown table / missing / unparseable pk) => the event passes
-        // through un-suppressed rather than sharing a keyed-state channel
-        // with every other pk-less event (ADVICE r01: "" collapsed them all)
-        val pkOfEvent: ChangeEvent => Option[String] = {
-          val pkByTable = config.syncs.map(s => s.table -> s.pk).toMap
-          e => pkByTable.get(e.table)
-            .flatMap(pk => Pipeline.jsonField(e.data, pk))
-        }
-        graft.streaming.KeyedLastWrite
-          .latestPerKey(source.changes.as[ChangeEvent], pkOfEvent).toDF()
-      }
-    val q = changes.writeStream
+    val q = source.changes.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -810,13 +803,15 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     * under a new bucket count.
     *
     * Snapshot-floor ordering (r9 review): the observed-offset ceiling is
-    * captured BEFORE the full scan starts and published WITH the snapshot.
-    * A live stream running concurrently (the refreshAsync shape) can
-    * therefore only push real observations ABOVE the published floor —
-    * their repairs stay replayable (conservative) — never trap a
-    * post-snapshot quarantine below it (which would silently discard a
-    * legitimate repair). Every pk's position and tombstone survive the
-    * rebuild ([[stageSnapshot]]). */
+    * captured BEFORE the full scan starts, from the manifest the rebuild
+    * starts from, and published WITH the snapshot. A live stream running
+    * concurrently (the refreshAsync shape) can therefore only push real
+    * observations ABOVE the published floor — their repairs stay
+    * replayable (conservative) — never trap a post-snapshot quarantine
+    * below it (which would silently discard a legitimate repair). The
+    * rebuilt store keeps no position or tombstone at or below its floor,
+    * which fences them all; positions applied above it while the scan ran
+    * are carried ([[stageSnapshot]], [[commitSnapshot]]). */
   def refresh(tables: Seq[String] = Seq.empty): Map[String, Long] =
     config.syncs
       .filter(s => tables.isEmpty || tables.contains(s.table))
@@ -826,15 +821,15 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   /** One sync's snapshot rebuild; returns the snapshot's row count. */
   private def rebuild(sync: SyncConfig): Long = {
     foldLegacyWatermark(sync, discardTornFloor = true)
-    val floor = observedOffsetCeiling(sync)
     val base = ManifestStore.currentManifest(spark, statePath(sync))
+    val floor = observedOffsetCeiling(sync, base)
     // stage (the full-scan materialization) runs OUTSIDE the state lock
     // so a live stream keeps flowing through the long scan; only the
     // commit serializes with applySync. Unlocked, a batch's
     // read-merge-write racing the commit silently dropped whichever
     // complete copy lost while the floor still asserted the snapshot
     // superseded everything below it
-    val staged = stageSnapshot(sync, base, source.fullScan(sync))
+    val staged = stageSnapshot(sync, source.fullScan(sync))
     commitSnapshot(sync, staged, base, floor)
     staged.count
   }
@@ -874,13 +869,16 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
   }.toMap
 
   /** Lineage per sync, for `check`: the greatest source offset the sink
-    * has applied (`applied_offset`, from the live buckets' footers, with no
-    * job) and the snapshot floor (`snapshot_floor`), both of the current
-    * manifest; 0 when there is none. */
+    * has applied (`applied_offset`: the greatest position in the live
+    * buckets' footers, with no job, or the snapshot floor when that is
+    * higher — a rebuild holds everything up to its floor and stores no
+    * position at or below it) and the snapshot floor (`snapshot_floor`),
+    * both of the current manifest; 0 when there is none. */
   def lineage(): Map[String, (Long, Long)] = config.syncs.map { s =>
     val m = ManifestStore.currentManifest(spark, statePath(s))
-    s.table -> ((ManifestStore.maxAppliedOffset(spark, statePath(s), m).getOrElse(0L),
-      m.fold(0L)(_.floor)))
+    val floor = m.fold(0L)(_.floor)
+    s.table -> ((math.max(
+      ManifestStore.maxAppliedOffset(spark, statePath(s), m).getOrElse(0L), floor), floor))
   }.toMap
 
   /** Read one sync's current sink state (test/inspection helper), a
@@ -978,18 +976,5 @@ object Pipeline {
         catch { case scala.util.control.NonFatal(_) => false }
       } else false
     } finally l.unlock()
-  }
-
-  /** Extract a top-level field from a JSON object string as a stable string
-    * key (executor-side; uses Spark's shaded-in Jackson). */
-  private[cdc] def jsonField(json: String, field: String): Option[String] = {
-    try {
-      val node = JsonMapper.mapper.readTree(json).get(field)
-      if (node == null || node.isNull) None else Some(node.asText())
-    } catch { case _: Exception => None }
-  }
-
-  private object JsonMapper {
-    lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   }
 }

@@ -18,6 +18,10 @@ import org.apache.spark.sql.functions._
   *    [[Reserved]])
   *  - applying the same batch twice yields the same table (idempotence — the
   *    reference is at-least-once, SURVEY.md §2.3, so replays must be safe).
+  *  - a positioned change that is stale — strictly below the position its
+  *    row stores, or at or below the snapshot floor — is ignored
+  *    ([[OffsetWatermark.superseded]]): cross-batch ordering holds here, in
+  *    the merge, with no keyed operator state in front of it.
   *
   * Scale posture: one shuffle on the pk (the join); the current-state side
   * streams through a shuffled hash / sort-merge join — no driver-side
@@ -37,7 +41,8 @@ object UpsertSink {
     * row it guards — and the tombstone flag. A delete leaves a tombstone
     * (pk, position, [[DeletedCol]] = true, every payload column null)
     * instead of removing the row, so a deleted pk still fences a stale
-    * dead-letter repair ([[OffsetWatermark.splitStale]]). Live rows carry
+    * change — a late event, a replay, a dead-letter repair
+    * ([[OffsetWatermark.superseded]]). Live rows carry
     * [[DeletedCol]] NULL, so a file's live-row count is that column's null
     * count in its footer. Logical readers ([[ManifestStore.readStateOf]])
     * drop tombstones and all three columns. */
@@ -60,11 +65,6 @@ object UpsertSink {
     when(offset.isNotNull, struct(offset.cast("long").as("o"),
       coalesce(ridx.cast("int"), lit(0)).as("r")))
 
-  private def positionOf(df: DataFrame, alias: String): Column =
-    if (!df.columns.contains(OffsetCol)) lit(null)
-    else position(col(s"$alias.$OffsetCol"),
-      if (df.columns.contains(RidxCol)) col(s"$alias.$RidxCol") else lit(0))
-
   /** Apply one micro-batch of per-pk-compacted change rows to the current
     * state table.
     *
@@ -75,15 +75,22 @@ object UpsertSink {
     *                it, null fields are treated as absent (explicit-NULL
     *                updates are then unsupported — the coalesce fallback).
     * @param pk      primary-key column name
+    * @param floor   the snapshot floor of the store `state` was read from
+    *                ([[ManifestStore.Manifest.floor]]; 0 = none)
     * @return        new state
     *
     * Positions: when either side carries [[OffsetCol]], every output row
     * carries the greatest of its stored and incoming (offset, _ridx)
     * positions, and a delete leaves a tombstone holding that position. A
     * delete with no position on either side (a positionless direct caller)
-    * removes the row.
+    * removes the row. A positioned change that [[OffsetWatermark.superseded]]
+    * names stale — at or below `floor`, or strictly below its row's stored
+    * position — is treated as absent: the row, tombstone or not, and its
+    * position stay as stored, and with no stored row nothing is written.
+    * Positionless changes are never stale.
     */
-  def applyBatch(state: DataFrame, changes: DataFrame, pk: String): DataFrame = {
+  def applyBatch(state: DataFrame, changes: DataFrame, pk: String,
+                 floor: Long = 0L): DataFrame = {
     // Schema evolution, both directions (the reference is SCHEMALESS —
     // `data: dict`, whatever the connector decodes flows through, so fields
     // appear and disappear mid-stream):
@@ -106,17 +113,34 @@ object UpsertSink {
 
     val s = state.alias("s")
     val c = changes.alias("c")
-    val joined = s.join(c, col(s"s.$pk") === col(s"c.$pk"), "full_outer")
     def sCol(name: String) =
       if (state.columns.contains(name)) col(s"s.$name")
       else lit(null).cast(changeTypes(name))
     def cCol(name: String) =
       if (changeTypes.contains(name)) col(s"c.$name")
       else lit(null).cast(state.schema(name).dataType)
-    val pos = greatest(positionOf(state, "s"), positionOf(changes, "c"))
-    val isDelete = col("c.op") === Op.Delete
+    def orNull(df: DataFrame, alias: String, name: String, t: String) =
+      if (df.columns.contains(name)) col(s"$alias.$name").cast(t) else lit(null).cast(t)
+    val sOff = orNull(state, "s", OffsetCol, "long")
+    val sRidx = orNull(state, "s", RidxCol, "int")
+    val cOff = orNull(changes, "c", OffsetCol, "long")
+    val cRidx = orNull(changes, "c", RidxCol, "int")
+    // The effective op, computed once per row: a superseded change reads as
+    // no change at all
+    val joined = s.join(c, col(s"s.$pk") === col(s"c.$pk"), "full_outer")
+      .withColumn("__op", when(!OffsetWatermark.superseded(cOff, cRidx, sOff, sRidx, floor),
+        col("c.op")))
+    val op = col("__op")
+    val isDelete = op === Op.Delete
+    // the row's position: an applied positioned change's (never below the
+    // stored one, or it would be superseded), else the stored one
+    val takeChange = op.isNotNull && cOff.isNotNull
+    val offset = when(takeChange, cOff).otherwise(sOff)
+    val ridx = when(takeChange, coalesce(cRidx, lit(0)))
+      .when(sOff.isNotNull, coalesce(sRidx, lit(0)))
 
-    // Row survives unless the change for its pk is a delete; column-wise:
+    // Row survives unless the change for its pk is a delete (or a superseded
+    // change with no stored row to keep); column-wise:
     // a `create` replaces the whole document (reference add_documents,
     // `meili.py:129`) — in BOTH branches: without the mask, letting a
     // create coalesce with stored state would leak a deleted-then-recreated
@@ -125,23 +149,25 @@ object UpsertSink {
     // the non-null fields (no mask), keeping the rest. A tombstone's
     // payload is all null, so an update over it reads as over an absent
     // row.
-    val kept = joined.filter(col("c.op").isNull || !isDelete ||
-      (if (positioned) pos.isNotNull else lit(false)))
+    val kept = joined.filter(
+      when(op.isNull, col(s"s.$pk").isNotNull)
+        .when(isDelete, if (positioned) offset.isNotNull else lit(false))
+        .otherwise(lit(true)))
     val payload = payloadCols.map { name =>
       val applied =
         if (hasMask)
-          when(col("c.op") === Op.Create, cCol(name))
+          when(op === Op.Create, cCol(name))
             .otherwise(when(array_contains(col(s"c.$PresentCol"), name), cCol(name))
               .otherwise(sCol(name)))
         else
-          when(col("c.op") === Op.Create, cCol(name))
+          when(op === Op.Create, cCol(name))
             .otherwise(coalesce(cCol(name), sCol(name)))
       val tombstone =
         if (name == pk) coalesce(cCol(name), sCol(name))
         else lit(null).cast(
           if (state.columns.contains(name)) state.schema(name).dataType
           else changeTypes(name))
-      when(col("c.op").isNull, sCol(name))                 // unchanged row
+      when(op.isNull, sCol(name))                         // unchanged row
         .when(isDelete, tombstone)
         .otherwise(applied)
         .as(name)
@@ -152,12 +178,11 @@ object UpsertSink {
         val sDeleted =
           if (state.columns.contains(DeletedCol)) col(s"s.$DeletedCol")
           else lit(null).cast("boolean")
-        Seq(pos("o").as(OffsetCol), pos("r").as(RidxCol),
-          when(col("c.op").isNull, sDeleted)
+        Seq(offset.as(OffsetCol), ridx.as(RidxCol),
+          when(op.isNull, sDeleted)
             .when(isDelete, lit(true))
             .otherwise(lit(null).cast("boolean")).as(DeletedCol))
       }
-    val merged = kept.select(payload ++ reserved: _*)
-    merged
+    kept.select(payload ++ reserved: _*)
   }
 }

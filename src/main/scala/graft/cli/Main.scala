@@ -29,7 +29,6 @@ import org.apache.spark.sql.types.StructType
   * insert.interval.seconds=10       # reference insert_interval (B2 flush)
   * insert.size=1000                 # reference insert_size -> per-batch
   *                                  # source admission (maxFilesPerTrigger)
-  * monotonic=true                   # cross-batch stale-event suppression
   * state.buckets=64                 # pk-hash bucket count of the manifest
   *                                  # sink (rewrite only touched buckets,
   *                                  # one atomic manifest publish per
@@ -152,7 +151,6 @@ object Main {
         // window on a CLEAN shutdown
         try {
           val q = pipe.start(props.getProperty("checkpoint.dir"), trigger,
-            monotonic = props.getProperty("monotonic") == "true",
             progress = progress)
           q.awaitTermination()
         } finally pipe.releaseLeases()

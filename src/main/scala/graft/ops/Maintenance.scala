@@ -405,8 +405,8 @@ object Maintenance {
           when(pmod(col("o_orderkey"), lit(3)) === 1,
             col("ck").cast("double")).otherwise(col("val")).as("val"),
           col(b))
-      ManifestStore.commitBatch(spark, path, merged, touched, n,
-        Seq("o_orderkey"))
+      ManifestStore.commitBatchOptimistic(spark, path, touched, n,
+        Seq("o_orderkey"))(_ => merged)
       val asOf = ManifestStore.versionAsOf(spark, path, tsAfterV1)
       require(asOf == 1L,
         s"as-of resolution drifted: the anchor between the publishes must " +

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import graft.model.{ChangeEvent, Op}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event-time streaming semantics — the category the reference lacks
   * entirely (SURVEY.md §2.2: processing is arrival-ordered, no watermarks,
@@ -59,128 +57,5 @@ object EventTime {
       col("p_user") === col("s_user") &&
         col("p_ts") >= col("s_ts") &&
         col("p_ts") <= col("s_ts") + expr(s"INTERVAL $horizon"))
-  }
-}
-
-/** Cross-batch keyed state: last-write-wins that survives events for one pk
-  * arriving out of order ACROSS micro-batches — the reference's
-  * `EventCollection` dedup (B1, `event.py:10-13`) only holds within one
-  * buffer; this is the hard part flagged in SURVEY.md §7. Implemented with
-  * `flatMapGroupsWithState`: per (table, pk) we keep the highest offset
-  * applied and emit only events that advance it, with processing-time
-  * eviction so state stays bounded.
-  */
-object KeyedLastWrite {
-
-  final case class Keyed(key: String, event: ChangeEvent)
-  final case class MaxOffset(offset: Long)
-
-  /** Group key for events whose pk can't be extracted: such events PASS
-    * THROUGH un-suppressed (no keyed state) instead of being collapsed into
-    * one shared channel where distinct rows would suppress each other — the
-    * reference raises `KeyError` on a missing pk (`event.py:11`); silently
-    * dropping data is the one behavior this operator must never have. */
-  private[streaming] val Passthrough = "\u0000nopk"
-
-  /** Emit each event only if its offset advances its key's high-water mark.
-    * Downstream sees a monotone per-key stream, so a stale update replayed
-    * late can never clobber a newer value. Events where `pkOf` yields None
-    * are emitted unchanged (see [[Passthrough]]).
-    *
-    * @param evictAfter optional idle-key eviction (processing-time timeout)
-    *   to bound state at scale. Off by default: with a timeout configured,
-    *   the micro-batch engine keeps firing empty batches to evaluate
-    *   timeouts, which busy-loops under the default trigger — production
-    *   deployments enable it together with a real `Trigger.ProcessingTime`.
-    */
-  def latestPerKey(events: Dataset[ChangeEvent], pkOf: ChangeEvent => Option[String],
-                   evictAfter: Option[String] = None)
-                  (implicit spark: org.apache.spark.sql.SparkSession): Dataset[ChangeEvent] = {
-    import spark.implicits._
-    val timeoutConf =
-      if (evictAfter.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(e => pkOf(e).map(pk => s"${e.table}/$pk").getOrElse(Passthrough))
-      .flatMapGroupsWithState[MaxOffset, ChangeEvent](OutputMode.Append, timeoutConf) {
-        (key: String, it: Iterator[ChangeEvent], state: GroupState[MaxOffset]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else if (key == Passthrough) it // no suppression, no state
-          else {
-            val seen = state.getOption.map(_.offset).getOrElse(Long.MinValue)
-            val fresh = it.filter(_.offset > seen).toSeq
-            if (fresh.nonEmpty) {
-              val top = fresh.maxBy(_.offset)
-              state.update(MaxOffset(top.offset))
-              evictAfter.foreach(state.setTimeoutDuration) // bounded state
-              Iterator.single(top)
-            } else {
-              // re-arm on stale-only traffic too (r9 review): a key kept
-              // "active" only by at-least-once redeliveries must not be
-              // evicted mid-stream — the next redelivery after eviction
-              // would pass as fresh and clobber the newer value, the one
-              // behavior this operator exists to prevent
-              if (state.exists) evictAfter.foreach(state.setTimeoutDuration)
-              Iterator.empty
-            }
-          }
-      }
-  }
-}
-
-/** The same cross-batch last-write-wins contract on Spark 4's
-  * `transformWithState` — the successor API to `flatMapGroupsWithState`:
-  * typed named state (`ValueState`) with native per-state TTL instead of a
-  * hand-rolled timeout protocol, and a state layout served by the RocksDB
-  * state store (required by the API; config set by the caller/spec). Kept
-  * alongside [[KeyedLastWrite]] rather than replacing it: the old API runs
-  * on the default HDFS-backed store and remains the broadest-deployed
-  * path, while this is the layout a new 100 TB deployment would pick —
-  * RocksDB keeps hot state off-heap and snapshots incrementally, so state
-  * size is bounded by disk, not executor heap. The spec proves the two
-  * implementations emit identical streams over the same out-of-order
-  * replay. */
-object KeyedLastWriteTws {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-
-  final class LastWriteProcessor(ttl: Option[java.time.Duration])
-      extends StatefulProcessor[String, ChangeEvent, ChangeEvent] {
-    @transient private var maxOffset: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      maxOffset = getHandle.getValueState[Long]("maxOffset", Encoders.scalaLong,
-        ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-
-    override def handleInputRows(key: String, rows: Iterator[ChangeEvent],
-                                 timerValues: TimerValues): Iterator[ChangeEvent] =
-      if (key == KeyedLastWrite.Passthrough) rows // no suppression, no state
-      else {
-        val seen = if (maxOffset.exists()) maxOffset.get() else Long.MinValue
-        val fresh = rows.filter(_.offset > seen).toSeq
-        if (fresh.nonEmpty) {
-          val top = fresh.maxBy(_.offset)
-          maxOffset.update(top.offset)
-          Iterator.single(top)
-        } else {
-          // TTL is per-write: rewrite the unchanged value so stale-only
-          // traffic refreshes it (the FMGWS variant's re-arm, same r9
-          // review reasoning)
-          if (maxOffset.exists()) maxOffset.update(seen)
-          Iterator.empty
-        }
-      }
-  }
-
-  /** As [[KeyedLastWrite.latestPerKey]]; `ttl` bounds idle-key state via the
-    * state store's native TTL (requires `TimeMode.ProcessingTime`). */
-  def latestPerKey(events: Dataset[ChangeEvent], pkOf: ChangeEvent => Option[String],
-                   ttl: Option[java.time.Duration] = None)
-                  (implicit spark: org.apache.spark.sql.SparkSession): Dataset[ChangeEvent] = {
-    import spark.implicits._
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    events
-      .groupByKey(e => pkOf(e).map(pk => s"${e.table}/$pk").getOrElse(KeyedLastWrite.Passthrough))
-      .transformWithState(new LastWriteProcessor(ttl), timeMode, OutputMode.Append())
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.Encoders
   *
   * State layout: the stream is keyed by a bounded SHARD (`hash(key) %
   * shards`), and each shard keeps a `MapState[key -> count]` — the
-  * map-typed state primitive (vs [[KeyedLastWriteTws]]'s `ValueState`):
+  * map-typed state primitive (vs a single `ValueState` per key):
   * per-entry point lookups and updates without deserializing the whole
   * shard's map, which is exactly what RocksDB's prefix-keyed layout
   * provides. Keying by shard instead of by raw key bounds the stateful

@@ -8,9 +8,7 @@ import org.apache.spark.sql.Encoders
 
 /** Timer-based sessionization on `transformWithState` — the event-time
   * TIMER primitive ([[StatefulProcessorHandle.registerTimer]]) plus
-  * `ListState`, completing the custom-state API surface next to
-  * `ValueState` ([[KeyedLastWriteTws]]) and `MapState`
-  * ([[StreamHeavyHitters]]). The
+  * `ListState`, next to `MapState` ([[StreamHeavyHitters]]). The
   * built-in `session_window` aggregation ([[EventTime.sessionCounts]])
   * covers windowed COUNTS; the processor form is what you write when a
   * session CLOSE must trigger arbitrary logic (emit a summary row, fire a

@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger}
 
 /** Trailing-event-log materialization on `transformWithState` with
-  * `ListState` — the fourth and last custom-state primitive (after
-  * ValueState, MapState, and event-time timers), each now carried by an
-  * oracle-graded checkpointed run. The op maintains each key's most recent k
+  * `ListState` — a custom-state primitive next to MapState and event-time
+  * timers, each carried by an oracle-graded checkpointed run. The op maintains each key's most recent k
   * events across micro-batches — the online feature-store pattern ("last
   * 5 purchases per user") where the serving row must be ready at lookup
   * time, not recomputed from the event log.

@@ -111,7 +111,6 @@ object FeedGen {
          |table.dir=${lay.tableDir}
          |sink.root=${lay.sinkRoot}
          |checkpoint.dir=${lay.ckptDir}
-         |monotonic=true
          |sync.users.pk=id
          |sync.users.full=true
          |sync.users.schema=id INT, name STRING, score DOUBLE, updated TIMESTAMP

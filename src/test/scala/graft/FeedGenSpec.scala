@@ -26,7 +26,7 @@ class FeedGenSpec extends SparkSpec {
       maxFilesPerTrigger = 1)
     val pipe = new Pipeline(spark, cfg, src, lay.sinkRoot)
     pipe.backfillIfNeeded()
-    val q = pipe.start(lay.ckptDir, monotonic = true)
+    val q = pipe.start(lay.ckptDir)
     q.processAllAvailable(); q.stop()
 
     val state = pipe.sinkState(sync)
@@ -57,7 +57,7 @@ class FeedGenSpec extends SparkSpec {
     def drain(src: graft.cdc.CdcSource, sinkRoot: String, ckpt: String) = {
       val pipe = new Pipeline(spark, cfg, src, sinkRoot)
       pipe.backfillIfNeeded()
-      val q = pipe.start(ckpt, monotonic = true)
+      val q = pipe.start(ckpt)
       q.processAllAvailable(); q.stop()
       pipe.sinkState(sync).orderBy("id").collect().toSeq
     }

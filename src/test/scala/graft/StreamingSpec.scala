@@ -100,76 +100,4 @@ class StreamingSpec extends SparkSpec {
     val seen = spark.table("dd").as[ChangeEvent].collect().map(_.data).sorted.toSeq
     assert(seen === Seq("k1", "k2", "k3"))
   }
-
-  test("KeyedLastWrite: stale cross-batch replays never clobber newer state") {
-    implicit val s = spark
-    val mem = MemoryStream[ChangeEvent](spark)
-    val out = KeyedLastWrite.latestPerKey(mem.toDS(), pkOf = e => Some(e.data))
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("lww").start()
-    mem.addData(ChangeEvent("update", "t", 10, ts("2024-01-01 00:00:10"), "k1"))
-    q.processAllAvailable()
-    // batch 2: a STALE event (offset 5 < 10) and a fresh one
-    mem.addData(
-      ChangeEvent("update", "t", 5, ts("2024-01-01 00:00:05"), "k1"),
-      ChangeEvent("update", "t", 20, ts("2024-01-01 00:00:20"), "k2"))
-    q.processAllAvailable(); q.stop()
-    val emitted = spark.table("lww").as[ChangeEvent].collect()
-    assert(emitted.map(_.offset).sorted.toSeq === Seq(10L, 20L)) // 5 suppressed
-  }
-
-  test("KeyedLastWrite: events with no extractable pk pass through un-suppressed") {
-    // ADVICE r01: keying pk-less events on "" collapsed distinct rows into
-    // one channel where they suppressed each other (silent data loss)
-    implicit val s = spark
-    val mem = MemoryStream[ChangeEvent](spark)
-    val out = KeyedLastWrite.latestPerKey(mem.toDS(),
-      pkOf = e => if (e.data.startsWith("k")) Some(e.data) else None)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("lww_nopk").start()
-    mem.addData(
-      ChangeEvent("update", "t", 30, ts("2024-01-01 00:00:30"), "row-a"),
-      ChangeEvent("update", "t", 10, ts("2024-01-01 00:00:10"), "row-b"))
-    q.processAllAvailable()
-    // a lower-offset pk-less event in a LATER batch must still come through
-    mem.addData(ChangeEvent("update", "t", 5, ts("2024-01-01 00:00:05"), "row-c"))
-    q.processAllAvailable(); q.stop()
-    val emitted = spark.table("lww_nopk").as[ChangeEvent].collect()
-    assert(emitted.map(_.data).sorted.toSeq === Seq("row-a", "row-b", "row-c"))
-  }
-
-  test("KeyedLastWriteTws (transformWithState) emits the same stream as the old API") {
-    implicit val s = spark
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    // transformWithState requires the RocksDB state store; scope it to this
-    // test so the flatMapGroupsWithState suites keep the default provider
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[ChangeEvent](spark)
-      val out = KeyedLastWriteTws.latestPerKey(mem.toDS(),
-        pkOf = e => if (e.data.startsWith("k")) Some(e.data) else None)
-      val q = out.writeStream.outputMode("append").format("memory")
-        .queryName("lww_tws").start()
-      mem.addData(ChangeEvent("update", "t", 10, ts("2024-01-01 00:00:10"), "k1"))
-      q.processAllAvailable()
-      // the same out-of-order replay the old-API spec uses, plus a pk-less
-      // passthrough row: stale k1@5 suppressed, fresh k2@20 emitted,
-      // "row-x" passes through untouched
-      mem.addData(
-        ChangeEvent("update", "t", 5, ts("2024-01-01 00:00:05"), "k1"),
-        ChangeEvent("update", "t", 20, ts("2024-01-01 00:00:20"), "k2"),
-        ChangeEvent("update", "t", 3, ts("2024-01-01 00:00:03"), "row-x"))
-      q.processAllAvailable(); q.stop()
-      val emitted = spark.table("lww_tws").as[ChangeEvent].collect()
-      assert(emitted.map(e => (e.data, e.offset)).sorted.toSeq ===
-        Seq(("k1", 10L), ("k2", 20L), ("row-x", 3L)))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
-  }
 }

@@ -97,8 +97,7 @@ class WireReplaySpec extends SparkSpec {
     pipe.sinkState(sync).orderBy("id").collect().toSeq
   }
 
-  private def runWithCrash(feed: String, format: String, root: String,
-                           monotonic: Boolean = false): Seq[Row] = {
+  private def runWithCrash(feed: String, format: String, root: String): Seq[Row] = {
     val ckpt = s"$root/ckpt_crash"
     val mkPipe = () => new Pipeline(spark, PipelineConfig(Seq(sync)),
       new WireCdcSource(spark, feed, root, format), s"$root/sink_crash")
@@ -107,7 +106,7 @@ class WireReplaySpec extends SparkSpec {
     // try/finally on BOTH phases (review r11): an awaitCommits timeout or
     // a failed drain would otherwise leak a busy-triggering query into
     // the rest of the shared-session suite run
-    val q1 = mkPipe().start(ckpt, Trigger.ProcessingTime(0L), monotonic = monotonic)
+    val q1 = mkPipe().start(ckpt, Trigger.ProcessingTime(0L))
     try CkptCrash.awaitCommits(ckpt, 2)
     finally q1.stop()
     // crash window: rewind to mid-batch-k — batch k's sink effects may
@@ -116,7 +115,7 @@ class WireReplaySpec extends SparkSpec {
     CkptCrash.simulateCrashAtLastCommit(spark, ckpt)
     // phase 2: resume from the same checkpoint and drain what's left
     val p2 = mkPipe()
-    val q2 = p2.start(ckpt, Trigger.AvailableNow(), monotonic = monotonic)
+    val q2 = p2.start(ckpt, Trigger.AvailableNow())
     try q2.processAllAvailable()
     finally q2.stop()
     p2.sinkState(sync).orderBy("id").collect().toSeq
@@ -137,18 +136,5 @@ class WireReplaySpec extends SparkSpec {
       val resumed = runWithCrash(feed, format, root)
       assert(resumed === uninterrupted)
     }
-  }
-
-  test("wal2json + monotonic keyed state: the same crash converges " +
-    "(state store rolls back with the checkpoint)") {
-    // monotonic mode carries KeyedLastWrite offset high-water marks in the
-    // state store; a replayed batch must see the PRE-batch state version,
-    // or the replay's events would all be suppressed as stale and the sink
-    // would lose the crash-window writes
-    val root = tmpDir("wirereplay_monotonic")
-    val feed = s"$root/feed"
-    writeFeed(feed, wal2jsonFeed)
-    val resumed = runWithCrash(feed, "wal2json", root, monotonic = true)
-    assert(resumed === expected)
   }
 }

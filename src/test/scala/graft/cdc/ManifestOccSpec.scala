@@ -25,8 +25,9 @@ import org.apache.spark.sql.types._
   *  - token fencing: a claimant whose claim is stolen mid-publish (the
   *    test seam stalls it between the token re-read and the rename)
   *    aborts instead of double-publishing;
-  *  - the single-writer publish path (commitBatch under [[DriverLease]])
-  *    now fails genuinely LOUD on contention.
+  *  - the single-writer publish path (a refresh's
+  *    [[ManifestStore.publishFull]] under [[DriverLease]]) fails genuinely
+  *    LOUD on contention.
   */
 class ManifestOccSpec extends SparkSpec {
   import spark.implicits._
@@ -246,14 +247,13 @@ class ManifestOccSpec extends SparkSpec {
     val path = tmpDir("occloud") + "/state"
     seed(path, 1 -> 1L)
     writeForeignClaim(path, 2L, ageMs = 0L)
-    val merged = Seq((2, 2L)).toDF("id", "score")
-      .withColumn(B, BucketedUpsertSink.bucketOf(col("id"), N)).persist()
-    val touched = merged.select(col(B)).distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val staged = ManifestStore.stageFull(spark, path,
+      Seq((2, 2L)).toDF("id", "score"), "id", N, Seq("score"))
     val e = intercept[IllegalStateException] {
-      ManifestStore.commitBatch(spark, path, merged, touched, N, Seq("score"))
+      ManifestStore.publishFull(spark, path, staged)
     }
-    merged.unpersist()
+    ManifestStore.dropStaged(spark, staged)
+    assert(stateRows(path) == Set((1, 1L)), "the lost publish changed nothing")
     assert(e.getMessage.contains("single-driver contract"))
     assert(e.getMessage.contains("commitBatchOptimistic"),
       "the diagnostic must name the concurrent-writer-safe alternative")

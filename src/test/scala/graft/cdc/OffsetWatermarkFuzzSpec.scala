@@ -177,12 +177,15 @@ class OffsetWatermarkFuzzSpec extends SparkSpec {
 
   /** Snapshot refresh: the sink becomes source truth, and the floor (max
     * offset OBSERVED, captured before the scan) is published in the same
-    * REAL manifest rename. Positions persist (snapshot rows never advance
-    * them — the documented contract). */
+    * REAL manifest rename. Snapshot rows never advance positions, and the
+    * rebuilt store keeps none at or below the published floor, which
+    * fences them all (the production refresh drops them). */
   private def refresh(w: World): Unit = {
     val floorVal = w.maxEmittedOffset
     val truth = w.sourceTruth
     publishSnapshot(w, floorVal)
+    val published = publishedFloor(w)
+    w.wm.filterInPlace { case (_, p) => p.off > published }
     w.sink.clear()
     w.appliedOracle.clear()
     truth.foreach { case (pk, (pos, payload)) =>

@@ -9,8 +9,10 @@ import org.apache.spark.sql.types._
 /** The per-pk watermark lives in the sink's rows: every row carries the
   * position of the change that last wrote it, and a delete leaves a
   * tombstone. Tombstones and position columns must never surface through
-  * a logical reader, while they keep fencing stale dead-letter repairs —
-  * across a repair through the optimistic path and across a refresh. */
+  * a logical reader, while they keep fencing stale changes — late events,
+  * replays and dead-letter repairs — across a repair through the
+  * optimistic path. A refresh stores none at or below its floor, which
+  * fences them instead. */
 class TombstoneSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,13 +31,22 @@ class TombstoneSpec extends SparkSpec {
   private def rows(df: DataFrame): Set[(Int, Long)] =
     df.select(col("id"), col("score")).as[(Int, Long)].collect().toSet
 
-  /** pk -> (offset, _ridx, tombstone?) of every stored row. */
+  /** pk -> (offset, _ridx, tombstone?) of every stored row that carries a
+    * position. */
   private def stored(statePath: String): Map[Int, (Long, Int, Boolean)] =
-    ManifestStore.readPhysicalOf(spark, statePath,
-      ManifestStore.currentManifest(spark, statePath), payload).collect().map { r =>
+    physical(statePath).filter(col(UpsertSink.OffsetCol).isNotNull).collect().map { r =>
       r.getAs[Int]("id") -> ((r.getAs[Long](UpsertSink.OffsetCol),
         r.getAs[Int](UpsertSink.RidxCol), !r.isNullAt(r.fieldIndex(UpsertSink.DeletedCol))))
     }.toMap
+
+  /** The stored pks that carry no position (snapshot-loaded rows). */
+  private def unpositioned(statePath: String): Set[Int] =
+    physical(statePath).filter(col(UpsertSink.OffsetCol).isNull)
+      .select(col("id")).as[Int].collect().toSet
+
+  private def physical(statePath: String): DataFrame =
+    ManifestStore.readPhysicalOf(spark, statePath,
+      ManifestStore.currentManifest(spark, statePath), payload)
 
   private def noReserved(df: DataFrame, clue: String): Unit =
     assert(df.columns.intersect(UpsertSink.Reserved).isEmpty, s"$clue: ${df.columns.toSeq}")
@@ -171,9 +182,9 @@ class TombstoneSpec extends SparkSpec {
     } finally pipe.releaseLeases()
   }
 
-  test("a refresh keeps every pk's position and tombstone, including a " +
-    "position applied while its scan ran: a repair below it is still " +
-    "discarded") {
+  test("a refresh stores no position or tombstone at or below its floor " +
+    "and keeps one applied above it while its scan ran: repairs below " +
+    "either are discarded") {
     val sinkRoot = tmpDir("tomb-refresh")
     val statePath = s"$sinkRoot/t"
     val inner = new MemoryCdcSource(spark,
@@ -208,9 +219,10 @@ class TombstoneSpec extends SparkSpec {
       assert(ManifestStore.currentManifest(spark, statePath).get.floor === 3L)
       assert(rows(pipe.sinkState(sync)) === Set((1, 100L), (2, 200L)),
         "the snapshot's rows")
-      assert(stored(statePath) ===
-        Map(1 -> ((1L, 0, false)), 2 -> ((10L, 0, false)), 3 -> ((3L, 0, true))),
-        "every position and tombstone survives, the window's included")
+      assert(stored(statePath) === Map(2 -> ((10L, 0, false))),
+        "only the window's position, above the floor, is stored: pk 1's " +
+          "position and pk 3's tombstone (both at or below 3) are gone")
+      assert(unpositioned(statePath) === Set(1))
       // the commit re-folded only the bucket the window's batch rewrote:
       // every other bucket is still the scan's staged dir
       val commitDir = ManifestStore.currentManifest(spark, statePath).get.buckets
@@ -220,13 +232,127 @@ class TombstoneSpec extends SparkSpec {
       val others = commitDir.collect { case (b, d) if b != b2 => d }.toSet
       assert(others.size <= 1 && !others.contains(commitDir(b2)), commitDir)
       q.stop()
+      // the offset-7 payload repaired to pk 2 (below its stored position 10)
+      // and the offset-2 one to the deleted pk 3 (its tombstone dropped,
+      // but offset 2 is below the floor)
       val dl = pipe.deadLetterPath(sync)
       spark.read.parquet(dl)
-        .withColumn("id", when(col("offset") === 7L, lit(2)).otherwise(col("id")))
+        .withColumn("id", when(col("offset") === 7L, lit(2)).otherwise(lit(3)))
         .localCheckpoint(true).write.mode("overwrite").parquet(dl)
-      assert(pipe.replayDeadLetters() === Map("t" -> ((0L, 1L, 1L))),
-        "the offset-7 repair is below pk 2's position 10: superseded")
-      assert(rows(pipe.sinkState(sync)) === Set((1, 100L), (2, 200L)))
+      assert(pipe.replayDeadLetters() === Map("t" -> ((0L, 2L, 0L))),
+        "both repairs are superseded")
+      assert(rows(pipe.sinkState(sync)) === Set((1, 100L), (2, 200L)),
+        "pk 3 stays deleted")
     } finally { q.stop(); pipe.releaseLeases() }
+  }
+
+  test("a later batch of the same run carrying a stale single-row update, a " +
+    "stale multi-row event and a stale delete leaves every row and its " +
+    "position as it was") {
+    val sinkRoot = tmpDir("tomb-stale")
+    val statePath = s"$sinkRoot/t"
+    val src = new MemoryCdcSource(spark)
+    val pipe = new Pipeline(spark, PipelineConfig(Seq(sync), stateBuckets = Some(4)),
+      src, sinkRoot)
+    // one continuing run: the stale events reach a warm batch, which no
+    // first-batch fence screens — only the sink's merge
+    val q = pipe.start(tmpDir("tomb-stale-ckpt"),
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    try {
+      src.addEvents(ev("create", 10,
+        """[{"id": 1, "score": 10}, {"id": 2, "score": 20}, {"id": 3, "score": 30}]"""))
+      q.processAllAvailable()
+      val before = stored(statePath)
+      assert(before === Map(1 -> ((10L, 0, false)), 2 -> ((10L, 1, false)),
+        3 -> ((10L, 2, false))))
+      src.addEvents(ev("update", 5, """{"id": 1, "score": 11}"""),
+        ev("create", 6, """[{"id": 2, "score": 21}, {"id": 2, "score": 22}]"""),
+        ev("delete", 7, """{"id": 3}"""))
+      q.processAllAvailable()
+      assert(rows(pipe.sinkState(sync)) === Set((1, 10L), (2, 20L), (3, 30L)))
+      assert(stored(statePath) === before, "every row keeps its position")
+    } finally { q.stop(); pipe.releaseLeases() }
+  }
+
+  test("after a refresh, a later batch's event at or below the floor is " +
+    "ignored for a pk whose position the refresh dropped, and a deleted " +
+    "pk's late create there stays deleted") {
+    val sinkRoot = tmpDir("tomb-floor")
+    val statePath = s"$sinkRoot/t"
+    val src = new MemoryCdcSource(spark,
+      Map("t" -> Seq((1, 100L), (4, 400L)).toDF("id", "score")))
+    val pipe = new Pipeline(spark, PipelineConfig(Seq(sync), stateBuckets = Some(4)),
+      src, sinkRoot)
+    val q = pipe.start(tmpDir("tomb-floor-ckpt"),
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    try {
+      src.addEvents(ev("create", 1, """{"id": 1, "score": 10}"""),
+        ev("create", 2, """{"id": 2, "score": 20}"""),
+        ev("delete", 3, """{"id": 2}"""),
+        ev("create", 5, """{"id": 4, "score": 40}"""))
+      q.processAllAvailable()
+      assert(pipe.refresh() === Map("t" -> 2L))
+      assert(ManifestStore.currentManifest(spark, statePath).get.floor === 5L)
+      assert(stored(statePath).isEmpty && unpositioned(statePath) === Set(1, 4),
+        "no position and no tombstone survives at or below the floor")
+      // a warm batch of the same run: no first-batch fence screens it
+      src.addEvents(ev("update", 4, """{"id": 1, "score": 11}"""),
+        ev("create", 5, """{"id": 2, "score": 22}"""),
+        ev("update", 6, """{"id": 4, "score": 44}"""))
+      q.processAllAvailable()
+      assert(rows(pipe.sinkState(sync)) === Set((1, 100L), (4, 44L)))
+      assert(stored(statePath) === Map(4 -> ((6L, 0, false))) &&
+        unpositioned(statePath) === Set(1))
+    } finally { q.stop(); pipe.releaseLeases() }
+  }
+
+  test("a refresh of a positioned 4-bucket store stages its snapshot with " +
+    "one shuffle Exchange, the bucket repartition: no join carries " +
+    "positions onto it") {
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // shuffle exchanges of an executed plan: AQE's final plan, its query
+    // stages and a write command's physical plan included
+    def shuffles(p: SparkPlan): Int =
+      (if (p.isInstanceOf[ShuffleExchangeLike]) 1 else 0) + (p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+        case _ => p.children
+      }).map(shuffles).sum
+    val sinkRoot = tmpDir("tomb-refresh-plan")
+    val src = new MemoryCdcSource(spark,
+      Map("t" -> (1 to 40).map(i => (i, i * 10L)).toDF("id", "score")))
+    val pipe = new Pipeline(spark, PipelineConfig(Seq(sync), stateBuckets = Some(4)),
+      src, sinkRoot)
+    try {
+      src.addEvents((1 to 20).map(i => ev("update", i, s"""{"id": $i, "score": $i}""")) :+
+        ev("delete", 21, """{"id": 30}"""): _*)
+      runOnce(pipe, tmpDir("tomb-refresh-plan-ckpt"))
+      assert(stored(s"$sinkRoot/t").size === 21, "a positioned store")
+      val marker = s"refresh_plan_marker_${java.util.UUID.randomUUID().toString.take(8)}"
+      val perQuery = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      @volatile var markerSeen = false
+      val listener = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (qe.analyzed.output.exists(_.name == marker)) markerSeen = true
+          else if (!markerSeen) { perQuery.add(shuffles(qe.executedPlan)); () }
+        def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        assert(pipe.refresh() === Map("t" -> 40L))
+        // listener events arrive in order: once the marker query is seen,
+        // every query the refresh ran has been counted
+        spark.range(1).select(lit(1).as(marker)).collect()
+        val deadline = System.currentTimeMillis() + 30000L
+        while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+        assert(markerSeen, "listener bus did not deliver the marker query")
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      assert(perQuery.asScala.sum === 1, s"shuffle exchanges per query: $perQuery")
+    } finally pipe.releaseLeases()
   }
 }
