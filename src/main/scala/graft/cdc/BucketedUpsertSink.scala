@@ -93,8 +93,7 @@ object BucketedUpsertSink {
     * (null: no change applied yet) — a snapshot rebuild stages its rows
     * so, since its floor fences every position it could carry. With
     * positions, this is how a rebuild takes in the positions applied
-    * above its floor while its scan ran, and how a legacy `.wm` sidecar is
-    * folded into the rows it guarded. */
+    * above its floor while its scan ran. */
   def foldPositions(rows: DataFrame, positions: Option[DataFrame],
                     pk: String): DataFrame = {
     import UpsertSink.{DeletedCol, OffsetCol, RidxCol}
@@ -125,63 +124,12 @@ object BucketedUpsertSink {
     changes.agg(touchedBucketsCol(col(pk), numBuckets)).head()
       .getSeq[Long](0).sorted
 
-  private def listNames(spark: SparkSession, statePath: String): Array[String] = {
-    // Heal an interrupted legacy swap FIRST (a pre-manifest flat store was
-    // swapped whole: live moved to '.old', next never moved in): without
-    // this, a crash in that window makes the state look absent, the next
-    // batch bootstraps an empty table, and once a new live dir exists the
-    // '.old' full state is stranded forever — silent loss.
-    StateCommit.recoverSwap(spark, statePath)
-    val p = new org.apache.hadoop.fs.Path(statePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Array.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-  }
-
-  /** Entry names of a pre-manifest layout at a store's root: the retired
-    * in-place layout's `_bucket=<id>` dirs and `_nbuckets-<n>` modulus
-    * file, or a flat store's parquet part files, plus their `_SUCCESS`. */
-  private[cdc] def isLegacyEntry(name: String): Boolean =
-    name.startsWith(BucketCol + "=") || name.endsWith(".parquet") ||
-      name.startsWith("_nbuckets-") || name == "_SUCCESS"
-
-  /** True iff a root listing holds legacy DATA (bucket dirs or part
-    * files) — `_SUCCESS` or a modulus file alone does not count. */
-  private def legacyData(names: Array[String]): Boolean =
-    names.exists(n => n.startsWith(BucketCol + "=") || n.endsWith(".parquet"))
-
-  /** True iff the store holds data a reader must see: a published
-    * manifest, or a legacy layout's data that its first batch or refresh
-    * migrates. */
-  def liveExists(spark: SparkSession, statePath: String): Boolean =
-    ManifestStore.isManifestStore(spark, statePath) ||
-      legacyData(listNames(spark, statePath))
-
-  /** Current state (live rows, without the bucket or reserved columns).
-    * The payload schema makes a
-    * fully-emptied or not-yet-created state readable. A legacy store — the
-    * retired in-place bucket-dir layout, or a FLAT store from before the
-    * manifest store was the only layout — reads as its full legacy state,
-    * never as absent, until its first batch or refresh migrates it. */
+  /** Current state (live rows, without the bucket or reserved columns);
+    * empty, with the payload `schema`, when no manifest is published. */
   def currentState(spark: SparkSession, statePath: String,
                    schema: org.apache.spark.sql.types.StructType): DataFrame =
-    UpsertSink.live(storedState(spark, statePath,
-      ManifestStore.currentManifest(spark, statePath), schema))
-
-  /** The stored rows of manifest `m` (or of a legacy store when there is
-    * none), tombstones and positions included, without the bucket column. */
-  private[cdc] def storedState(spark: SparkSession, statePath: String,
-                               m: Option[ManifestStore.Manifest],
-                               schema: org.apache.spark.sql.types.StructType): DataFrame =
-    m match {
-      case Some(_) =>
-        ManifestStore.readPhysicalOf(spark, statePath, m, schema).drop(BucketCol)
-      case None =>
-        if (legacyData(listNames(spark, statePath)))
-          spark.read.parquet(statePath).drop(BucketCol)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    ManifestStore.readStateOf(spark, statePath,
+      ManifestStore.currentManifest(spark, statePath), schema).drop(BucketCol)
 
   /** Apply one compacted micro-batch: read ONLY the buckets the batch
     * touches, merge with [[UpsertSink.applyBatch]] semantics (presence
@@ -195,14 +143,16 @@ object BucketedUpsertSink {
     * `touched` is the batch's bucket set when the caller already knows it
     * (it must be exactly `touchedBuckets(changes, pk, numBuckets)`);
     * otherwise it is computed here. An empty set publishes nothing, after
-    * the legacy migration and the evolution guard have run. `changes` is
-    * consumed once, by the merge. */
+    * the evolution guard has run. `changes` is consumed once, by the merge.
+    * A store's first batch fails on a root that holds data of a retired
+    * pre-manifest layout ([[ManifestStore.requireNoPreManifestData]]). */
   def applyBatch(spark: SparkSession, statePath: String, changes: DataFrame,
                  pk: String, numBuckets: Int,
                  schema: Option[org.apache.spark.sql.types.StructType] = None,
                  statCols: Seq[String] = Seq.empty,
                  touched: Option[Seq[Long]] = None): Unit = {
     val m = ManifestStore.currentManifest(spark, statePath)
+    if (m.isEmpty) ManifestStore.requireNoPreManifestData(spark, statePath)
     // modulus fence (review r11): `pmod(hash, n)` decides which bucket a pk
     // lives in, so merging under a different modulus would miss existing
     // rows and duplicate pks — the store's layout wins
@@ -231,21 +181,6 @@ object BucketedUpsertSink {
       org.apache.spark.sql.types.StructType(changes.schema.fields
         .filterNot(f => f.name == "op" || f.name == UpsertSink.PresentCol ||
           UpsertSink.Reserved.contains(f.name))))
-    def fullRewrite(priorState: DataFrame): Unit = {
-      val mergedFull = UpsertSink.applyBatch(priorState, changes, pk,
-        m.fold(0L)(_.floor))
-      val staged = ManifestStore.stageFull(spark, statePath, mergedFull, pk,
-        numBuckets, effStatCols)
-      ManifestStore.publishFull(spark, statePath, staged)
-    }
-    // one-time migration from a legacy layout (in-place bucket-dir or flat
-    // store, no manifest yet): full merge + full publish; the publish drops
-    // the superseded legacy files (ManifestStore.publishFull — the same
-    // cutover a refresh or backfill over a legacy store takes)
-    if (m.isEmpty && legacyData(listNames(spark, statePath))) {
-      fullRewrite(spark.read.parquet(statePath).drop(BucketCol))
-      return
-    }
     // schema-evolution guard: a new column or a changed type pays a
     // one-time full merge + full publish so no two live bucket dirs ever
     // disagree on physical types. The resolved
@@ -276,8 +211,10 @@ object BucketedUpsertSink {
             !storedTypes.contains(UpsertSink.OffsetCol))
         if (evolved) {
           val full = ManifestStore.readPhysicalOf(spark, statePath, Some(mm),
-            payloadSchema)
-          fullRewrite(full.drop(BucketCol))
+            payloadSchema).drop(BucketCol)
+          ManifestStore.publishFull(spark, statePath, ManifestStore.stageFull(spark,
+            statePath, UpsertSink.applyBatch(full, changes, pk, mm.floor), pk,
+            numBuckets, effStatCols))
           return
         }
       }

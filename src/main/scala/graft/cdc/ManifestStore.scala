@@ -146,8 +146,7 @@ object ManifestStore {
   private def manifestName(v: Long): String = f"manifest-v$v%012d.txt"
 
   /** True iff `statePath` is a manifest-layout store (any published
-    * manifest version exists); a store without one is absent or a legacy
-    * layout its first commit migrates. */
+    * manifest version exists); a store without one reads as empty. */
   def isManifestStore(spark: SparkSession, statePath: String): Boolean =
     // NOT cached (r13 fuzz-gate finding): a sticky positive poisoned any
     // path that is wiped and recreated in one JVM (dev scratch roots,
@@ -319,10 +318,8 @@ object ManifestStore {
       }.toMap
       f(1).toLong -> BucketEntry(f(2), f(3).toLong, stats)
     }.toMap
-    // a manifest published before the floor field reads as floor 0
-    val floor = kv.find(_.head == "floor").fold(0L)(_(1).toLong)
     Manifest(field("version").toLong, field("nbuckets").toInt, statCols,
-      buckets, floor)
+      buckets, field("floor").toLong)
   }
 
   private def renderManifest(m: Manifest): String = {
@@ -957,36 +954,41 @@ object ManifestStore {
     * the superseded files stay readable to concurrent pinned scans until
     * vacuum retention expires, which is the entire point). `floor` is the
     * snapshot floor this publish asserts; the published floor is the
-    * greater of it and the previous manifest's, in the same rename. */
+    * greater of it and the previous manifest's, in the same rename. A
+    * store's first publish fails, publishing nothing, on a root that holds
+    * pre-manifest data ([[requireNoPreManifestData]]). */
   def publishFull(spark: SparkSession, statePath: String,
                   staged: StagedCommit, floor: Long = 0L): Unit = {
     val prev = currentManifest(spark, statePath)
-    try writeManifest(spark, statePath, Manifest(
-      version = prev.fold(1L)(_.version + 1L),
-      nbuckets = staged.nbuckets, statCols = staged.statCols,
-      buckets = staged.buckets,
-      floor = math.max(floor, prev.fold(0L)(_.floor))))
-    finally { staged.commitDirs.foreach(activeStaging.remove) }
-    if (prev.isEmpty) dropLegacyLayout(spark, statePath)
+    try {
+      if (prev.isEmpty) requireNoPreManifestData(spark, statePath)
+      writeManifest(spark, statePath, Manifest(
+        version = prev.fold(1L)(_.version + 1L),
+        nbuckets = staged.nbuckets, statCols = staged.statCols,
+        buckets = staged.buckets,
+        floor = math.max(floor, prev.fold(0L)(_.floor))))
+    } finally { staged.commitDirs.foreach(activeStaging.remove) }
     vacuum(spark, statePath)
   }
 
-  /** The upgrade cutover of a pre-manifest store (the retired in-place
-    * `_bucket=` layout, or flat parquet): once the first manifest is
-    * published over it — by the first batch's migration, a refresh or a
-    * backfill — the legacy files are superseded and invisible to manifest
-    * readers, so drop them rather than leak disk. A reader pinned to the
-    * legacy layout across the cutover retries, once. A crash between the
-    * publish and these deletes leaves the legacy files behind harmlessly
-    * (manifest readers never touch them) until an operator removes them. */
-  private def dropLegacyLayout(spark: SparkSession, statePath: String): Unit = {
+  /** Fail if the root of a store with no manifest holds data of a retired
+    * pre-manifest layout — the in-place layout's `_bucket=<id>` dirs or a
+    * flat store's parquet part files — or, with no root, a flat store's
+    * `.old` copy from a crashed swap. Those formats are not read: a first
+    * manifest published over them would hide their rows. */
+  def requireNoPreManifestData(spark: SparkSession, statePath: String): Unit = {
     val (fs, root) = hfs(spark, statePath)
-    fs.listStatus(root).map(_.getPath)
-      .filter(p => BucketedUpsertSink.isLegacyEntry(p.getName))
-      .foreach { p =>
-        try { fs.delete(p, true); () }
-        catch { case _: java.io.IOException => () }
-      }
+    val found =
+      try fs.listStatus(root).map(_.getPath).filter(p =>
+        p.getName.startsWith(BucketCol + "=") || p.getName.endsWith(".parquet")).toSeq
+      catch { case _: java.io.FileNotFoundException =>
+        Seq(new org.apache.hadoop.fs.Path(statePath + ".old")).filter(fs.exists) }
+    if (found.nonEmpty)
+      throw new IllegalStateException(
+        s"$statePath holds data of a retired pre-manifest sink layout " +
+          s"(${found.take(3).mkString(", ")}${if (found.size > 3) ", ..." else ""}), " +
+          "which is no longer read — move it aside and run `refresh` to " +
+          "rebuild the store from the source")
   }
 
   /** Delete data no retained manifest references. The reader-safety rule

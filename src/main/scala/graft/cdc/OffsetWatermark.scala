@@ -2,11 +2,9 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
 
 /** The per-pk applied-position fence of an upsert sink — its one
-  * staleness rule ([[superseded]]) — and the upgrade of the sidecar store
-  * it used to live in.
+  * staleness rule ([[superseded]]).
   *
   * Every sink row carries the position of the change that last wrote it,
   * and a deleted pk keeps a tombstone with its position
@@ -49,11 +47,9 @@ import org.apache.spark.sql.types.IntegerType
   * supersedes EVERY change observed before it: a position at or below the
   * floor fences nothing the floor does not, and a rebuild stores none.
   *
-  * Upgrade: a store written before positions lived in the rows keeps them
-  * in a `.wm` sidecar ([[path]]) and the floor in a `.wm.floor` file
-  * ([[floorPath]]). The pipeline folds both into the store once
-  * ([[legacyPositions]], [[legacyFloor]], [[dropLegacy]]) and never writes
-  * them again.
+  * Stores that kept positions in the retired `.wm` sidecar ([[path]]) and
+  * the floor in a `.wm.floor` file are not read: [[requireNoSidecar]]
+  * fails on any file those protocols wrote.
   */
 object OffsetWatermark {
 
@@ -65,87 +61,31 @@ object OffsetWatermark {
     * mmrRerank/contextPack require guards. */
   val MaxBroadcastProbes = 1000000L
 
-  /** The legacy per-pk watermark sidecar of a state path. */
+  /** The retired per-pk watermark sidecar of a state path. */
   def path(statePath: String): String = statePath + ".wm"
 
-  /** The legacy snapshot-floor file of a state path. */
-  def floorPath(statePath: String): String = statePath + ".wm.floor"
-
-  private def fsOf(spark: SparkSession, p: String) = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-
-  /** Every legacy entry beside the state path, by the exact names the
-    * retired protocols wrote: the sidecar (`.wm`, and its `.wm.old` and
-    * `.wm.next-*` swap copies) and the floor file (`.wm.floor`, and its
-    * `.wm.floor.next.*` temps). A sibling sync's state (an index named,
-    * say, `t.wm.v2`) is never one of them. */
-  private def legacyEntries(spark: SparkSession, statePath: String)
-      : Seq[org.apache.hadoop.fs.Path] = {
-    val (fs, wm) = fsOf(spark, path(statePath))
+  /** Fail if any entry the retired `.wm` protocols wrote sits beside the
+    * state path, by the exact names they used: the sidecar (`.wm`, and its
+    * `.wm.old` and `.wm.next-*` swap copies) and the floor file
+    * (`.wm.floor`, and its `.wm.floor.next.*` temps). The positions they
+    * hold are not read; a sibling sync's state (an index named, say,
+    * `t.wm.v2`) is never one of them. */
+  def requireNoSidecar(spark: SparkSession, statePath: String): Unit = {
+    val wm = new org.apache.hadoop.fs.Path(path(statePath))
+    val fs = wm.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parent = wm.getParent
     val w = wm.getName
-    def legacy(n: String): Boolean =
+    def retired(n: String): Boolean =
       n == w || n == s"$w.old" || n.startsWith(s"$w.next-") ||
         n == s"$w.floor" || n.startsWith(s"$w.floor.next")
-    if (parent == null || !fs.exists(parent)) Nil
-    else fs.listStatus(parent).map(_.getPath).filter(p => legacy(p.getName)).toSeq
-  }
-
-  /** True iff a legacy sidecar or floor file is still on disk. */
-  def hasLegacy(spark: SparkSession, statePath: String): Boolean =
-    legacyEntries(spark, statePath).nonEmpty
-
-  /** The legacy sidecar's (pk, [[UpsertSink.OffsetCol]],
-    * [[UpsertSink.RidxCol]]) positions — any of its past layouts: flat, the
-    * `_bucket=` partitioned one, or from before the row index (read as 0) —
-    * after healing an interrupted swap; None without data. */
-  def legacyPositions(spark: SparkSession, statePath: String): Option[DataFrame] = {
-    val dir = path(statePath)
-    StateCommit.recoverSwap(spark, dir)
-    val (fs, p) = fsOf(spark, dir)
-    val hasData = fs.exists(p) && fs.listStatus(p).map(_.getPath.getName).exists(n =>
-      n.startsWith(BucketedUpsertSink.BucketCol + "=") || n.endsWith(".parquet"))
-    if (!hasData) None
-    else {
-      val footer = ParquetFooter.schemaOf(spark, dir)
-      val schema =
-        if (footer.fieldNames.contains(UpsertSink.RidxCol)) footer
-        else footer.add(UpsertSink.RidxCol, IntegerType)
-      val stored = spark.read.schema(schema).parquet(dir).drop(BucketedUpsertSink.BucketCol)
-      Some(stored.withColumn(UpsertSink.RidxCol,
-        coalesce(col(UpsertSink.RidxCol).cast("int"), lit(0))))
-    }
-  }
-
-  /** The legacy snapshot floor: None when no floor was recorded, Left when
-    * the floor file does not parse (torn, or edited outside the protocol).
-    * A floor writer that crashed between deleting the old floor and
-    * renaming its temp in left only a COMPLETE temp, whose value is the
-    * floor; an empty or unparseable temp belonged to a writer still in
-    * flight and carries nothing. */
-  def legacyFloor(spark: SparkSession, statePath: String): Option[Either[String, Long]] = {
-    val (fs, main) = fsOf(spark, floorPath(statePath))
-    def parse(p: org.apache.hadoop.fs.Path): Option[Long] = {
-      val in = fs.open(p)
-      val text = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      text.toLongOption
-    }
-    if (fs.exists(main))
-      Some(parse(main).toRight(s"torn snapshot floor at $main"))
-    else legacyEntries(spark, statePath)
-      .filter(_.getName.startsWith(main.getName + ".next"))
-      .flatMap(parse).maxOption.map(Right(_))
-  }
-
-  /** Delete the legacy sidecar and floor files, once the manifest carries
-    * what they held. The sidecar goes first: a crash in between leaves only
-    * the floor, whose re-fold is a no-op (the manifest floor is monotone). */
-  def dropLegacy(spark: SparkSession, statePath: String): Unit = {
-    val (fs, wm) = fsOf(spark, path(statePath))
-    fs.delete(wm, true)
-    legacyEntries(spark, statePath).foreach(fs.delete(_, true))
+    val found =
+      try fs.listStatus(parent).map(_.getPath).filter(p => retired(p.getName)).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    if (found.nonEmpty)
+      throw new IllegalStateException(
+        s"$statePath has a watermark sidecar from a retired format " +
+          s"(${found.mkString(", ")}), which is no longer read — move it " +
+          "aside and run `refresh` to rebuild the store from the source")
   }
 
   /** THE staleness rule, the one definition shared by the sink's merge
@@ -182,7 +122,8 @@ object OffsetWatermark {
     * map is never shuffled wholesale for an ordinary replay and a huge one
     * cannot OOM the driver. A row's NULL `_ridx` (a repaired row from an
     * unparseable-array envelope, posexplode_outer) reads as 0, as the sink
-    * stores it. */
+    * stores it. Both splits are lazy: a caller that runs more than one job
+    * over a split persists it and releases it when done. */
   def splitStale(ready: DataFrame, positions: Option[DataFrame], pk: String,
                  floor: Long = 0L,
                  maxBroadcastProbes: Long = MaxBroadcastProbes)
@@ -200,7 +141,7 @@ object OffsetWatermark {
         val slice =
           if (small) wmNamed.join(broadcast(probes), Seq(pk))
           else wmNamed.join(probes, Seq(pk))
-        ready.join(slice, Seq(pk), "left").localCheckpoint()
+        ready.join(slice, Seq(pk), "left")
     }
     val staleCond = superseded(col("offset"), col("_ridx"), col("__wmo"), col("__wmr"), floor)
     (j.filter(!staleCond).drop("__wmo", "__wmr"),

@@ -280,8 +280,8 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     // AT their stored position stay (the idempotent re-apply). Later
     // batches of a run cannot be replays (Spark runs each batchId once per
     // query run), so steady state reads no positions ahead of the merge.
-    // The same first batch upgrades a store that still keeps its
-    // watermark in the legacy sidecar.
+    // The same first batch refuses a store whose watermark is still in the
+    // retired sidecar (OffsetWatermark.requireNoSidecar).
     // Fence identity is sync.indexName — the SAME identity statePath uses —
     // not sync.table: two syncs may share one source table with different
     // target indexes, and a table-keyed fence would be consumed by the first
@@ -289,63 +289,34 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     // r12). The fence drops rows, so the fenced batch is probed again (one
     // job, once per run): the touched set must be exactly the compacted
     // batch's buckets.
-    val (fenced, applied) =
-      if (replayFencePending.remove(sync.indexName)) {
-        foldLegacyWatermark(sync, discardTornFloor = false)
-        val f = screen(view, sync, Some(seen.touched))._1
-        (f, probe(f, sync))
-      } else (view, seen)
-    // called even with no live rows: a legacy store still migrates
-    writeCompacted(sync, Pipeline.compact(fenced, pk), Some(applied.touched))
+    if (replayFencePending.remove(sync.indexName)) {
+      OffsetWatermark.requireNoSidecar(spark, statePath(sync))
+      screened(view, sync, Some(seen.touched)) { (fenced, _) =>
+        writeCompacted(sync, Pipeline.compact(fenced, pk),
+          Some(probe(fenced, sync).touched))
+      }
+    } else writeCompacted(sync, Pipeline.compact(view, pk), Some(seen.touched))
     hooks.postBatch.foreach(_(sync.table, batchId))
     } finally { full.unpersist(); () }
   }
 
   /** Split `rows` into (fresh, superseded) against the sink's stored
     * positions — of `buckets`, or of every bucket — and its snapshot
-    * floor, both from one manifest. */
-  private def screen(rows: DataFrame, sync: SyncConfig,
-                     buckets: Option[Seq[Long]]): (DataFrame, DataFrame) = {
+    * floor, both from one manifest, and run `use` on the split. A fresh
+    * split joined with stored positions is persisted for `use`, which reads
+    * it more than once, and released after it. */
+  private def screened[A](rows: DataFrame, sync: SyncConfig, buckets: Option[Seq[Long]])
+                         (use: (DataFrame, DataFrame) => A): A = {
     val sp = statePath(sync)
     val m = ManifestStore.currentManifest(spark, sp)
-    OffsetWatermark.splitStale(rows,
-      BucketedUpsertSink.positions(spark, sp, m, pkOut(sync), buckets),
+    val positions = BucketedUpsertSink.positions(spark, sp, m, pkOut(sync), buckets)
+    val (fresh, stale) = OffsetWatermark.splitStale(rows, positions,
       pkOut(sync), m.fold(0L)(_.floor))
-  }
-
-  /** Upgrade path for a store whose watermark still lives in the legacy
-    * `.wm` sidecar and `.wm.floor` file: one full rewrite folds the stored
-    * positions into the rows, writes a tombstone for each watermarked pk
-    * that has no row, and publishes the floor in the same manifest; then
-    * both files go. A crash before the deletes re-folds the same values
-    * next time (positions and floor are both monotone). A torn floor file
-    * fails the live batch and the replay loud, naming `refresh`; a refresh
-    * (`discardTornFloor`) discards it — the refresh then publishes its own
-    * ceiling as the floor. */
-  private def foldLegacyWatermark(sync: SyncConfig, discardTornFloor: Boolean): Unit = {
-    val sp = statePath(sync)
-    StateCommit.stateLock(sp).synchronized { if (OffsetWatermark.hasLegacy(spark, sp)) {
-      DriverLease.acquire(spark, sp, staleMs = config.leaseStaleMs)
-      val floor = OffsetWatermark.legacyFloor(spark, sp) match {
-        case Some(Right(v)) => v
-        case Some(Left(torn)) if discardTornFloor =>
-          Pipeline.log.warn(s"$torn: its value is discarded; the refresh " +
-            "records its own observed ceiling as the snapshot floor")
-          0L
-        case Some(Left(torn)) => throw new IllegalStateException(
-          s"$torn — run `refresh` to rebuild the snapshot and its floor, " +
-            "which also completes this store's upgrade")
-        case None => 0L
-      }
-      val m = ManifestStore.currentManifest(spark, sp)
-      val folded = BucketedUpsertSink.foldPositions(
-        BucketedUpsertSink.storedState(spark, sp, m, sinkSchema(sync)),
-        OffsetWatermark.legacyPositions(spark, sp), pkOut(sync))
-      ManifestStore.publishFull(spark, sp, ManifestStore.stageFull(spark, sp, folded,
-        pkOut(sync), m.fold(numBuckets)(_.nbuckets),
-        m.fold(zoneMapColsFor(sync))(_.statCols)), floor)
-      OffsetWatermark.dropLegacy(spark, sp)
-    }}
+    if (positions.isEmpty) use(fresh, stale)
+    else {
+      val kept = fresh.persist()
+      try use(kept, stale) finally { kept.unpersist(); () }
+    }
   }
 
   /** Commit one compacted change set to the sync's sink — the shared write
@@ -411,7 +382,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
         // `.old`, and probing the main path alone would read every
         // envelope as gone (r9 review)
         StateCommit.recoverSwap(spark, path)
-        foldLegacyWatermark(s, discardTornFloor = false)
+        OffsetWatermark.requireNoSidecar(spark, statePath(s))
         val p = new org.apache.hadoop.fs.Path(path)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (!fs.exists(p)) s.table -> ((0L, 0L, 0L))
@@ -428,10 +399,11 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
             s"$nullOffset repaired dead-letter row(s) for '${s.table}' have " +
               "a NULL offset — restore the source offset in the quarantine " +
               "before replaying (the staleness screen cannot order them)")
-          val (fresh, stale) = screen(ready, s, None)
-          val nFresh = fresh.count()
-          val nStale = stale.count()
-          if (nFresh > 0) writeCompacted(s, Pipeline.compact(fresh, pk))
+          val (nFresh, nStale) = screened(ready, s, None) { (fresh, stale) =>
+            val counts = (fresh.count(), stale.count())
+            if (counts._1 > 0) writeCompacted(s, Pipeline.compact(fresh, pk))
+            counts
+          }
           if (nFresh > 0 || nStale > 0) {
             // keep only the still-null rows (superseded rows are resolved —
             // newer live data already holds their pk); overwrite via
@@ -539,11 +511,11 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
     }
   }
 
-  /** A published manifest or a pre-manifest store's data — not the state
-    * dir's existence, which an unpublished staging commit already creates
-    * (the backfill's own staging would defeat its bootstrap re-probe). */
+  /** A published manifest — not the state dir's existence, which an
+    * unpublished staging commit already creates (the backfill's own
+    * staging would defeat its bootstrap re-probe). */
   private def sinkLive(sync: SyncConfig): Boolean =
-    BucketedUpsertSink.liveExists(spark, statePath(sync))
+    ManifestStore.isManifestStore(spark, statePath(sync))
 
   /** Max source offset this pipeline has OBSERVED for a sync up to manifest
     * `base` — applied (the greatest position in its rows, or its floor,
@@ -820,7 +792,7 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
 
   /** One sync's snapshot rebuild; returns the snapshot's row count. */
   private def rebuild(sync: SyncConfig): Long = {
-    foldLegacyWatermark(sync, discardTornFloor = true)
+    OffsetWatermark.requireNoSidecar(spark, statePath(sync))
     val base = ManifestStore.currentManifest(spark, statePath(sync))
     val floor = observedOffsetCeiling(sync, base)
     // stage (the full-scan materialization) runs OUTSIDE the state lock
@@ -861,10 +833,10 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
 
   /** `check`: source count vs sink count per sync (`main.py:179-208`).
     * The manifest's per-bucket live-row counts give the sink count with no
-    * scan; a pre-manifest store not yet migrated is read and counted. */
+    * scan; a store with no manifest counts 0. */
   def check(): Map[String, (Long, Long)] = config.syncs.map { s =>
     val sinkCount = ManifestStore.currentManifest(spark, statePath(s))
-      .fold(sinkState(s).count())(_.rowCount)
+      .fold(0L)(_.rowCount)
     s.table -> (source.count(s), sinkCount)
   }.toMap
 
@@ -881,8 +853,8 @@ final class Pipeline(spark: SparkSession, config: PipelineConfig,
       ManifestStore.maxAppliedOffset(spark, statePath(s), m).getOrElse(0L), floor), floor))
   }.toMap
 
-  /** Read one sync's current sink state (test/inspection helper), a
-    * not-yet-migrated legacy store's included. */
+  /** Read one sync's current sink state (test/inspection helper); empty
+    * when no manifest is published. */
   def sinkState(sync: SyncConfig): DataFrame =
     BucketedUpsertSink.currentState(spark, statePath(sync), sinkSchema(sync))
 }

@@ -10,10 +10,8 @@ import org.apache.spark.sql.SparkSession
   *
   * The sink is NOT swapped: the manifest store ([[ManifestStore]])
   * publishes data and per-bucket zone-map stats in one atomic manifest
-  * rename, so it needs none of this beyond [[stateLock]] (and
-  * [[recoverSwap]], to heal a pre-manifest flat store caught mid-swap
-  * before its first batch migrates it). What swaps here is every
-  * directory-rewritten state: the dead-letter quarantine, SCD2 and
+  * rename, so it needs none of this beyond [[stateLock]]. What swaps here
+  * is every directory-rewritten state: the dead-letter quarantine, SCD2 and
   * incremental-dedup state, and compaction's rewrite.
   *
   * ==Swap state machine==

@@ -12,8 +12,7 @@ import org.apache.spark.sql.types._
   * floor is captured BEFORE the scan and published with it, monotone), the
   * (offset, _ridx) position order (a repaired row must lose to an applied
   * same-offset sibling with a higher row index), the bounded probe
-  * broadcast in splitStale, and the upgrade of a store whose watermark
-  * still sits in the legacy `.wm` sidecar and `.wm.floor` file. */
+  * broadcast in splitStale. */
 class OffsetWatermarkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,23 +52,10 @@ class OffsetWatermarkSpec extends SparkSpec {
           StructField(UpsertSink.RidxCol, IntegerType)))),
       "id", numBuckets, schema = Some(payload))
 
-  /** A watermark sidecar in the retired bucketed layout, written with plain
-    * Spark: `_bucket=<id>` partition dirs plus the `_nbuckets-<n>` modulus
-    * file that layout kept beside them. */
-  private def writeLegacyBucketed(dir: String,
-                                  df: org.apache.spark.sql.DataFrame,
-                                  n: Int): Unit = {
-    df.withColumn(BucketedUpsertSink.BucketCol,
-        BucketedUpsertSink.bucketOf(col("id"), n))
-      .write.partitionBy(BucketedUpsertSink.BucketCol).parquet(dir)
-    assert(new java.io.File(dir, s"_nbuckets-$n").createNewFile())
-  }
-
   private val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
   private val sync = SyncConfig("t", pk = "id", schema = Some(payload))
 
-  /** One pipeline run over `events` against `sinkRoot` (the run's first
-    * batch folds any legacy sidecar). */
+  /** One pipeline run over `events` against `sinkRoot`. */
   private def runOnce(sinkRoot: String, events: ChangeEvent*): Pipeline = {
     val src = new MemoryCdcSource(spark)
     val pipe = new Pipeline(spark, PipelineConfig(Seq(sync), stateBuckets = Some(4)),
@@ -79,11 +65,6 @@ class OffsetWatermarkSpec extends SparkSpec {
     try q.processAllAvailable() finally { q.stop(); pipe.releaseLeases() }
     pipe
   }
-
-  private def legacyLeft(statePath: String): Seq[String] =
-    new java.io.File(statePath).getParentFile.listFiles().map(_.getName)
-      .filter(_.startsWith(new java.io.File(OffsetWatermark.path(statePath)).getName))
-      .toSeq
 
   test("advance: an empty batch is a full no-op — no store created, no " +
     "rewrite — in both the bucketed and flat layouts (r9 review: the empty " +
@@ -106,20 +87,6 @@ class OffsetWatermarkSpec extends SparkSpec {
       assert(files === before, s"empty batch must not rewrite ($n buckets)")
       assert(wmOf(statePath) === Map(1 -> ((10L, 0)), 2 -> ((20L, 0))))
     }
-  }
-
-  test("current: a historical schema-less watermark dir (only _SUCCESS) " +
-    "reads as absent and the next real batch heals it") {
-    val sinkRoot = tmpDir("wm-heal")
-    val statePath = s"$sinkRoot/t"
-    val dir = new java.io.File(OffsetWatermark.path(statePath))
-    assert(dir.mkdirs())
-    assert(new java.io.File(dir, "_SUCCESS").createNewFile())
-    assert(OffsetWatermark.legacyPositions(spark, statePath).isEmpty,
-      "_SUCCESS alone must not count as data")
-    runOnce(sinkRoot, ChangeEvent("create", "t", 50, ts0, """{"id": 5, "name": "e"}"""))
-    assert(wmOf(statePath) === Map(5 -> ((50L, 0))))
-    assert(legacyLeft(statePath).isEmpty, legacyLeft(statePath))
   }
 
   test("advance: the watermark is the max (offset, _ridx) PAIR, not the " +
@@ -188,39 +155,6 @@ class OffsetWatermarkSpec extends SparkSpec {
     assert(f2.select("tag").as[String].collect().toSet === Set("post-snapshot"))
     assert(s2.select("tag").as[String].collect().toSet ===
       Set("pre-snapshot", "offset-zero"))
-  }
-
-  test("snapshot floor survives a torn swap: crash after the old floor is " +
-    "deleted but before the temp renames in is healed at read time") {
-    // the legacy floor protocol's crash window: the temp fully written,
-    // main deleted, rename never ran — the upgrade must carry the NEW
-    // floor into the manifest, not read 0
-    val sinkRoot = tmpDir("wm-floor")
-    val statePath = s"$sinkRoot/t"
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(OffsetWatermark.floorPath(statePath) + ".next"),
-      "77".getBytes("UTF-8"))
-    assert(OffsetWatermark.legacyFloor(spark, statePath) === Some(Right(77L)))
-    runOnce(sinkRoot, ChangeEvent("create", "t", 80, ts0, """{"id": 1, "name": "a"}"""))
-    assert(ManifestStore.currentManifest(spark, statePath).map(_.floor) === Some(77L),
-      "an interrupted floor swap must carry the NEW floor")
-    assert(legacyLeft(statePath).isEmpty, legacyLeft(statePath))
-  }
-
-  test("the upgrade deletes only the legacy protocols' own files: a " +
-    "sibling sync's state named like `<index>.wm.v2` survives it") {
-    val sinkRoot = tmpDir("wm-sibling")
-    val statePath = s"$sinkRoot/t"
-    val sibling = new java.io.File(OffsetWatermark.path(statePath) + ".v2")
-    assert(sibling.mkdirs())
-    assert(new java.io.File(sibling, "keep.parquet").createNewFile())
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(OffsetWatermark.floorPath(statePath)), "5".getBytes("UTF-8"))
-    runOnce(sinkRoot, ChangeEvent("create", "t", 9, ts0, """{"id": 1, "name": "a"}"""))
-    assert(ManifestStore.currentManifest(spark, statePath).map(_.floor) === Some(5L))
-    assert(legacyLeft(statePath) === Seq(sibling.getName),
-      "the floor file is gone and the sibling's dir is not")
-    assert(new java.io.File(sibling, "keep.parquet").exists())
   }
 
   test("refresh fences replays: a pre-snapshot quarantined row repaired to " +
@@ -330,32 +264,6 @@ class OffsetWatermarkSpec extends SparkSpec {
       "null==0 must lose to the applied _ridx-2 sibling")
   }
 
-  test("a pre-_ridx watermark store (r9 schema upgrade) reads and merges: " +
-    "the first post-upgrade batch neither wedges on column resolution nor " +
-    "poisons the position compares, in both layouts (r9 review)") {
-    for (bucketed <- Seq(false, true)) {
-      val sinkRoot = tmpDir(s"wm-migrate-$bucketed")
-      val statePath = s"$sinkRoot/t"
-      val dir = OffsetWatermark.path(statePath)
-      val legacy = Seq((1, 10L), (2, 20L)).toDF("id", UpsertSink.OffsetCol)
-      if (bucketed) writeLegacyBucketed(dir, legacy, 4)
-      else legacy.write.parquet(dir)
-      assert(OffsetWatermark.legacyPositions(spark, statePath).get.collect()
-        .map(r => r.getInt(0) -> ((r.getLong(1), r.getInt(2)))).toMap ===
-        Map(1 -> ((10L, 0)), 2 -> ((20L, 0))),
-        s"legacy rows read as position (offset, 0) (bucketed=$bucketed)")
-      runOnce(sinkRoot,
-        ChangeEvent("create", "t", 10, ts0,
-          """[{"id": 9, "name": "x"}, {"id": 9, "name": "y"}, {"id": 1, "name": "a"}]"""),
-        ChangeEvent("create", "t", 30, ts0, """{"id": 3, "name": "c"}"""))
-      assert(wmOf(statePath) ===
-        Map(1 -> ((10L, 2)), 2 -> ((20L, 0)), 3 -> ((30L, 0)), 9 -> ((10L, 1))),
-        s"post-upgrade merge over a legacy store (bucketed=$bucketed)")
-      assert(legacyLeft(statePath).isEmpty,
-        s"the upgrade must remove the sidecar (bucketed=$bucketed): ${legacyLeft(statePath)}")
-    }
-  }
-
   test("snapshot floor is MONOTONE: a later rebuild with a lower " +
     "recomputed ceiling (a replay purged the quarantine since) cannot " +
     "re-open the fence (r9 review)") {
@@ -371,26 +279,6 @@ class OffsetWatermarkSpec extends SparkSpec {
     // a batch commit carries the floor forward
     applyPositioned(statePath, Seq(("update", 1, "b", 95L, 0)))
     assert(ManifestStore.currentManifest(spark, statePath).get.floor === 90L)
-  }
-
-  test("floor heal: main absent with several crash temps installs the " +
-    "max-valued COMPLETE temp; an empty in-flight temp is skipped, not " +
-    "resurrected (r9 review: a reader renaming a writer's visible empty " +
-    "temp live crashed both sides)") {
-    val sinkRoot = tmpDir("wm-floorheal")
-    val statePath = s"$sinkRoot/t"
-    val base = OffsetWatermark.floorPath(statePath)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(base + ".next.111-aaaa"), "60".getBytes("UTF-8"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(base + ".next.222-bbbb"), "75".getBytes("UTF-8"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(base + ".next.333-cccc"), Array.empty[Byte])
-    assert(OffsetWatermark.legacyFloor(spark, statePath) === Some(Right(75L)),
-      "the max-valued complete temp is the floor; the empty one carries nothing")
-    runOnce(sinkRoot, ChangeEvent("create", "t", 80, ts0, """{"id": 1, "name": "a"}"""))
-    assert(ManifestStore.currentManifest(spark, statePath).map(_.floor) === Some(75L))
-    assert(legacyLeft(statePath).isEmpty, legacyLeft(statePath))
   }
 
   test("a repaired UNPARSEABLE-payload row replays as fresh and a " +

@@ -21,11 +21,18 @@ class SinkTasksSpec extends SparkSpec {
     new Pipeline(spark, PipelineConfig(Seq(sync)),
       new MemoryCdcSource(spark, Map("t" -> snapshot)), sinkRoot)
 
+  /** A live sink at `sinkRoot` holding `snapshot`, published by a refresh. */
+  private def seed(sinkRoot: String, snapshot: DataFrame): Unit = {
+    val pipe = pipeline(sinkRoot, snapshot)
+    try pipe.refresh() finally pipe.releaseLeases()
+    ()
+  }
+
   test("async refresh: the task id returns immediately, waitForTask " +
     "gathers it, and the rebuilt copy is swapped live") {
     import spark.implicits._
     val sinkRoot = tmpDir("sinktasks")
-    Seq((1, "a"), (2, "b")).toDF("id", "v").write.parquet(s"$sinkRoot/t")
+    seed(sinkRoot, Seq((1, "a"), (2, "b")).toDF("id", "v"))
     val fresh = Seq((1, "a2"), (2, "b2"), (3, "c")).toDF("id", "v")
     val pipe = pipeline(sinkRoot, fresh)
     try {
@@ -100,7 +107,7 @@ class SinkTasksSpec extends SparkSpec {
     "(r9 review)") {
     import spark.implicits._
     val sinkRoot = tmpDir("sinktasks-conc")
-    Seq((1, "seed")).toDF("id", "v").write.parquet(s"$sinkRoot/t")
+    seed(sinkRoot, Seq((1, "seed")).toDF("id", "v"))
     // two rebuilds with DISTINGUISHABLE contents, fired back-to-back; with
     // a shared .staging dir their writes interleaved and the swap could
     // install a mix of the two

@@ -205,31 +205,6 @@ class UpsertSinkSpec extends SparkSpec {
     assert(after.getAs[String]("segment") === "silver")
   }
 
-  test("bucketed sink: interrupted evolution swap heals instead of losing the state") {
-    import graft.cdc.{BucketedUpsertSink, ManifestStore}
-    val path = tmpDir("bsinkcrash") + "/state"
-    // a store in the retired in-place bucket-dir layout whose last swap
-    // crashed between the two renames: live moved aside, next never moved
-    // in
-    (1 to 10).map(i => (i, s"n$i", s"c$i")).toDF("id", "name", "city")
-      .withColumn(BucketedUpsertSink.BucketCol,
-        BucketedUpsertSink.bucketOf(col("id"), 4))
-      .write.partitionBy(BucketedUpsertSink.BucketCol).parquet(path)
-    import java.nio.file.{Files, Paths}
-    Files.move(Paths.get(path), Paths.get(path + ".old"))
-    assert(!Files.exists(Paths.get(path)))
-    // the next batch must heal and migrate the FULL pre-crash state, not
-    // bootstrap an empty one
-    val schema = Seq((0, "x", "y")).toDF("id", "name", "city").schema
-    BucketedUpsertSink.applyBatch(spark, path,
-      changes(("update", 3, "three", null)), "id", numBuckets = 4,
-      schema = Some(schema))
-    assert(ManifestStore.isManifestStore(spark, path))
-    val state = BucketedUpsertSink.currentState(spark, path, schema)
-    assert(state.count() === 10) // nothing lost
-    assert(state.filter(col("id") === 3).head().getString(1) === "three")
-  }
-
   test("create -> update -> delete on one pk within a batch nets to absence") {
     // reference event.py:10-13 last-write-wins, then delete applies
     val evs = Seq(

@@ -12,8 +12,9 @@ import scala.jdk.CollectionConverters._
 
 /** The fixed cost of a micro-batch and the driver-side answers that keep it
   * small: one probe aggregate finds the dead letters, the live rows and the
-  * touched buckets; bucket stats come from the written files' footers; a
-  * commit dir that fails to write leaves nothing behind. */
+  * touched buckets; a restarted run's fenced first batch is bounded too and
+  * frees what it persists; bucket stats come from the written files'
+  * footers; a commit dir that fails to write leaves nothing behind. */
 class BatchFixedCostSpec extends SparkSpec {
   import spark.implicits._
 
@@ -60,6 +61,45 @@ class BatchFixedCostSpec extends SparkSpec {
       clue)
   }
 
+  /** Spark jobs per batch id of one streaming run of `pipe` from `ckpt`
+    * (AvailableNow, drained, then stopped), counted by a listener. */
+  private def jobsPerBatch(pipe: Pipeline, ckpt: String): Map[Long, Int] = {
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Integer]()
+    val marker = s"batchjobs-marker-${java.util.UUID.randomUUID()}"
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        if (p != null) {
+          if (p.getProperty("spark.job.description") == marker) markerSeen = true
+          val q = p.getProperty("sql.streaming.queryId")
+          val b = p.getProperty("streaming.sql.batchId")
+          if (q != null && b != null)
+            jobs.merge((q, b.toLong), 1, (x: Integer, y: Integer) => x + y)
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = pipe.start(ckpt) // AvailableNow; one feed file a batch
+      try q.processAllAvailable() finally { q.stop(); pipe.releaseLeases() }
+      // listener events arrive in order: once a job started after the
+      // query is seen, every job of the query has been counted
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(markerSeen, "listener bus did not deliver the marker job")
+      jobs.asScala.collect {
+        case ((qid, b), n) if qid == q.id.toString => b -> n.intValue
+      }.toMap
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private val usersSync = SyncConfig("users", pk = "id", full = true,
+    schema = Some(StructType.fromDDL(
+      "id INT, name STRING, score DOUBLE, updated TIMESTAMP")))
+
   test("a warm, data-bearing micro-batch of a 16-bucket manifest pipeline " +
     "runs at most 8 Spark jobs") {
     // and of the default config, whose absent state.buckets is one bucket
@@ -67,50 +107,78 @@ class BatchFixedCostSpec extends SparkSpec {
       val root = tmpDir(s"batchjobs-${buckets.getOrElse(1)}")
       val lay = FeedGen.generate(spark, root, nUsers = 200, nBatches = 4,
         eventsPerBatch = 40)
-      val sync = SyncConfig("users", pk = "id", full = true,
-        schema = Some(StructType.fromDDL(
-          "id INT, name STRING, score DOUBLE, updated TIMESTAMP")))
       val pipe = new Pipeline(spark,
-        PipelineConfig(Seq(sync), stateBuckets = buckets),
+        PipelineConfig(Seq(usersSync), stateBuckets = buckets),
         new ParquetCdcSource(spark, lay.feedDir, lay.tableDir), lay.sinkRoot)
-      val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Integer]()
-      val marker = s"batchjobs-marker-${java.util.UUID.randomUUID()}"
-      @volatile var markerSeen = false
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = {
-          val p = e.properties
-          if (p != null) {
-            if (p.getProperty("spark.job.description") == marker) markerSeen = true
-            val q = p.getProperty("sql.streaming.queryId")
-            val b = p.getProperty("streaming.sql.batchId")
-            if (q != null && b != null)
-              jobs.merge((q, b.toLong), 1, (x: Integer, y: Integer) => x + y)
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val q = pipe.start(lay.ckptDir) // AvailableNow; one feed file a batch
-        try q.processAllAvailable() finally { q.stop(); pipe.releaseLeases() }
-        // listener events arrive in order: once a job started after the
-        // query is seen, every job of the query has been counted
-        spark.sparkContext.setJobDescription(marker)
-        try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-        val deadline = System.currentTimeMillis() + 30000L
-        while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
-        assert(markerSeen, "listener bus did not deliver the marker job")
-        val perBatch = jobs.asScala.collect {
-          case ((qid, b), n) if qid == q.id.toString => b -> n.intValue
-        }.toMap
-        assert(perBatch.keySet === (0L until 4L).toSet, s"$buckets: $perBatch")
-        // batch 0 is the run's replay-fenced cold batch; 1..3 are warm and
-        // each carries 40 events
-        val warm = (1L until 4L).map(perBatch)
-        assert(warm.max <= 8,
-          s"stateBuckets=$buckets: a warm micro-batch ran " +
-            s"${warm.mkString("/")} Spark jobs (all: $perBatch)")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val perBatch = jobsPerBatch(pipe, lay.ckptDir)
+      assert(perBatch.keySet === (0L until 4L).toSet, s"$buckets: $perBatch")
+      // batch 0 is the run's replay-fenced cold batch; 1..3 are warm and
+      // each carries 40 events
+      val warm = (1L until 4L).map(perBatch)
+      assert(warm.max <= 8,
+        s"stateBuckets=$buckets: a warm micro-batch ran " +
+          s"${warm.mkString("/")} Spark jobs (all: $perBatch)")
     }
+  }
+
+  test("a restarted run's replay-fenced first batch over a positioned store " +
+    "runs at most 16 Spark jobs") {
+    Seq(Some(16), None).foreach { buckets =>
+      val root = tmpDir(s"fencedjobs-${buckets.getOrElse(1)}")
+      val lay = FeedGen.generate(spark, root, nUsers = 200, nBatches = 4,
+        eventsPerBatch = 40)
+      // hold the last feed file back, so the restart has a batch to run
+      val feed = new java.io.File(lay.feedDir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).maxBy(_.lastModified)
+      val held = new java.io.File(root, feed.getName)
+      assert(feed.renameTo(held))
+      def pipe() = new Pipeline(spark,
+        PipelineConfig(Seq(usersSync), stateBuckets = buckets),
+        new ParquetCdcSource(spark, lay.feedDir, lay.tableDir), lay.sinkRoot)
+      assert(jobsPerBatch(pipe(), lay.ckptDir).keySet === (0L until 3L).toSet)
+      assert(held.renameTo(feed))
+      val restarted = jobsPerBatch(pipe(), lay.ckptDir)
+      assert(restarted.keySet === Set(3L), s"$buckets: $restarted")
+      assert(restarted(3L) <= 16,
+        s"stateBuckets=$buckets: the fenced first batch of a restarted run " +
+          s"ran ${restarted(3L)} Spark jobs")
+    }
+  }
+
+  test("the first-batch fence and a dead-letter replay over a positioned " +
+    "store release every block they persist") {
+    val sinkRoot = tmpDir("fencepersist")
+    val ckpt = tmpDir("ckpt")
+    val sync = SyncConfig("t", pk = "id", schema = Some(StructType(Seq(
+      StructField("id", IntegerType), StructField("score", LongType)))))
+    val src = new MemoryCdcSource(spark)
+    val pipe = new Pipeline(spark, PipelineConfig(Seq(sync), stateBuckets = Some(4)),
+      src, sinkRoot)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      src.addEvents(
+        ChangeEvent("create", "t", 1, ts("2024-01-01 00:00:00"), """{"id": 1, "score": 10}"""),
+        ChangeEvent("create", "t", 2, ts("2024-01-01 00:00:01"), """{"score": 20}"""))
+      val q1 = pipe.start(ckpt); q1.processAllAvailable(); q1.stop()
+      // a restarted run: its first batch is fenced against the stored
+      // positions
+      src.addEvents(
+        ChangeEvent("update", "t", 3, ts("2024-01-01 00:00:02"), """{"id": 1, "score": 11}"""),
+        ChangeEvent("create", "t", 4, ts("2024-01-01 00:00:03"), """{"id": 5, "score": 50}"""))
+      val beforeRun = persisted
+      val q2 = pipe.start(ckpt); q2.processAllAvailable(); q2.stop()
+      assert(persisted === beforeRun, "the fenced first batch left blocks persisted")
+      // a replay of the repaired envelope, screened against those positions
+      val dl = pipe.deadLetterPath(sync)
+      val repaired = spark.read.parquet(dl).withColumn("id", lit(2))
+        .localCheckpoint(true)
+      repaired.write.mode("overwrite").parquet(dl)
+      val beforeReplay = persisted
+      assert(pipe.replayDeadLetters() === Map("t" -> ((1L, 0L, 0L))))
+      assert(persisted === beforeReplay, "the replay left blocks persisted")
+      assert(pipe.sinkState(sync).as[(Int, Long)].collect().toSet ===
+        Set((1, 11L), (2, 20L), (5, 50L)))
+    } finally pipe.releaseLeases()
   }
 
   test("a batch of only pk-less rows writes exactly those dead letters, " +

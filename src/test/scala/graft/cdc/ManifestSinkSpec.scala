@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * per-bucket zone-map stats, vacuum retention bounds disk. These specs pin
   * the semantics equality, the immutability contract (the property that
   * closes the FAILED_READ_FILE retryable class), pruning exactness, the
-  * legacy-layout migration, and the vacuum referenced-set rules. */
+  * manifest's required fields, and the vacuum referenced-set rules. */
 class ManifestSinkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -406,24 +406,23 @@ class ManifestSinkSpec extends SparkSpec {
       "pre-evolution rows read null for the new column")
   }
 
-  test("legacy bucket-dir store migrates to manifest layout on the first " +
-    "manifest-mode batch: one full publish, legacy dirs dropped, rows intact") {
-    val path = tmpDir("mmig") + "/t"
-    // the retired in-place layout, written with plain Spark
-    Seq((1, 10L), (2, 20L)).toDF("id", "score")
-      .withColumn(BucketedUpsertSink.BucketCol,
-        BucketedUpsertSink.bucketOf(col("id"), 4))
-      .write.partitionBy(BucketedUpsertSink.BucketCol).parquet(path)
-    applyM(path, batchDf(("update", 1, 11L), ("create", 3, 30L)))
-    assert(ManifestStore.isManifestStore(spark, path))
-    assert(stateRows(path) === Set((1, 11L), (2, 20L), (3, 30L)))
-    val names = new java.io.File(path).listFiles().map(_.getName)
-    assert(!names.exists(_.startsWith(BucketedUpsertSink.BucketCol + "=")),
-      s"legacy bucket dirs must not linger: ${names.mkString(",")}")
-    // and the next batch is an ordinary incremental commit
-    applyM(path, batchDf(("update", 3, 33L)))
-    assert(stateRows(path) === Set((1, 11L), (2, 20L), (3, 33L)))
-    assert(ManifestStore.currentManifest(spark, path).get.version === 2L)
+  test("a manifest text without its floor line fails to parse, naming the " +
+    "field, as one without version or nbuckets does") {
+    val path = tmpDir("mfloor") + "/t"
+    applyM(path, batchDf(("create", 1, 10L)))
+    val file = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("manifest-v")).head
+    val text = new String(java.nio.file.Files.readAllBytes(file.toPath), "UTF-8")
+    assert(ManifestStore.parseManifest(text, file.toString) ===
+      ManifestStore.currentManifest(spark, path).get)
+    Seq("floor", "version", "nbuckets").foreach { field =>
+      val without = text.split("\n", -1).filterNot(_.startsWith(field + "\t"))
+        .mkString("\n")
+      val e = intercept[IllegalStateException](
+        ManifestStore.parseManifest(without, file.toString))
+      assert(e.getMessage.contains(s"missing manifest field '$field'") &&
+        e.getMessage.contains(file.toString), e.getMessage)
+    }
   }
 
   test("modulus fence: a manifest store laid out at 4 buckets refuses an " +
